@@ -196,18 +196,7 @@ _TOUCHED = {
     #   first() aggs through the dedup exchange),
     "dedup_simhash": 15,
     "dedup_simhash64": 15,
-    "dedup_simhash64_incremental": 15,
-    "dedup_image_phash": 15,
-    "dedup_image_phash_incremental": 15,
-    "dedup_image_phash_bandpairs": 15,
-    "dedup_image_phash_incremental_bandpairs": 15,
-    "dedup_audio_fingerprint": 15,
-    "dedup_audio_fingerprint_incremental": 15,
-    "dedup_audio_fingerprint_bandpairs": 15,
-    "dedup_audio_fingerprint_incremental_bandpairs": 15,
     "simhash_rollover_report": 15,
-    "multimodal_method_agreement": 15,
-    "multimodal_dup_clusters": 15,
     # - the memoized jaccard index metadata (hot-shingle list, per-doc
     #   sizes) shared by the df-capped candidate machinery,
     "dedup_ngram_jaccard": 15,
@@ -227,6 +216,29 @@ _TOUCHED = {
     "minhash_recall_audit": 15,
     "band_salting_policy": 15,
     "candidate_volume_census": 15,
+    # r17: the hamming families moved onto the one banded-pair core
+    # (operators/banding.py). Two-tree normalized plan diff
+    # (tools/plan_hashes.py, sf0.01, PYTHONHASHSEED=0): these plans
+    # differ from the r16 tree only by the signature aliases p1/p2 ->
+    # s1/s2; dedup_simhash64_incremental also drops the d1 != d2
+    # predicate its ingest filter implies and orders one projection
+    # (d2, s2, new2). Apart from that join predicate, no Exchange, Join
+    # or Aggregate node changed; oracles hash-match.
+    "dedup_simhash64_incremental": 16,
+    "dedup_image_phash": 16,
+    "dedup_image_phash_incremental": 16,
+    "dedup_image_phash_bandpairs": 16,
+    "dedup_image_phash_incremental_bandpairs": 16,
+    "dedup_audio_fingerprint": 16,
+    "dedup_audio_fingerprint_incremental": 16,
+    "dedup_audio_fingerprint_bandpairs": 16,
+    "dedup_audio_fingerprint_incremental_bandpairs": 16,
+    "multimodal_method_agreement": 16,
+    "multimodal_dup_clusters": 16,
+    "phash_banding_sweep": 16,
+    "afp_banding_sweep": 16,
+    "phash_band_layout_audit": 16,
+    "phash_blocking_scheme_audit": 16,
 }
 # Round-15 window note / entry ordering (VERDICT r14 items 1 and 6):
 # registry growth is ZERO new queries (the growth-event matrix is

@@ -22,6 +22,14 @@ from qucosa_fcrepo_reportingdb_spark.memo import (
     cut_lineage,
     session_memo,
 )
+from qucosa_fcrepo_reportingdb_spark.operators.banding import (
+    Layout,
+    band_exprs,
+    band_join,
+    band_rows_sql,
+    banded_pairs_sql,
+    explode_bands,
+)
 from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
     DEDUP_JACCARD_SQL,
     INCREMENTAL_MOD,
@@ -3753,29 +3761,19 @@ def multimodal_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _multimodal_clusters_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        PHASH_BAND_BITS,
+        ORACLE_BANDS56,
         PHASH_HAMMING_MAX,
-        PHASH_N_BANDS,
-        _phash_band,
     )
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         PHASH_ORACLE_CTES,
     )
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, phash, {bi} AS band_idx, "
-        f"{_phash_band('phash', bi, PHASH_BAND_BITS, 'duck')} AS band_val "
-        f"FROM ph"
-        for bi in range(PHASH_N_BANDS))
     return f"""
 WITH RECURSIVE
 {PHASH_ORACLE_CTES.strip()},
-pbands AS ({band_rows}),
+{banded_pairs_sql('ph', 'phash', ORACLE_BANDS56)},
 image_pairs AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM pbands a JOIN pbands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.phash, b.phash)) <= {PHASH_HAMMING_MAX}),
+  SELECT DISTINCT d1, d2 FROM cand
+  WHERE {H.hamming('s1', 's2', 'duck')} <= {PHASH_HAMMING_MAX}),
 text_pairs AS (SELECT d1, d2 FROM ({DEDUP_JACCARD_SQL}) jp),
 pairs AS (SELECT d1, d2 FROM text_pairs
           UNION SELECT d1, d2 FROM image_pairs),
@@ -5924,66 +5922,6 @@ def _lsh_sign_frame_arrow(spark: SparkSession, frame: DataFrame,
                                  "bits array<bigint>")))
 
 
-def _lsh_rescore_arrow(cand: DataFrame) -> DataFrame:
-    """OPT-IN Arrow/numpy twin of the rescore expression in
-    lsh_screen_frame (VERDICT r14 item 7 stretch): same
-    (vec_id, s_vec, cosine) rows as the zip_with fold over the banded
-    candidate join, one vectorized pass per Arrow batch.
-
-    The rescore is FLOAT arithmetic, so unlike the signing twin the
-    accumulation ORDER is load-bearing: numpy's sum()/dot()/matmul use
-    pairwise (blocked) summation, which does NOT reproduce the SQL
-    fold's left-to-right IEEE adds — that is the exactness trap the
-    r14 verdict flagged. The twin therefore never calls a numpy
-    reduction. The elementwise product V * SV performs the same single
-    IEEE multiply per element as zip_with's lambda; the accumulator
-    loop ``acc += prod[:, d]`` for d = 0..dim-1 then performs, for
-    every candidate row simultaneously, exactly the fold's binary adds
-    in exactly the fold's order (acc_0 = 0; acc_{d+1} = acc_d + p_d) —
-    dim vectorized instructions, bit-identical per row to the
-    interpreted fold BY CONSTRUCTION, with the equality pytest
-    checking the claim against real data. The final division uses the
-    frame's own nrm/snrm (never recomputed) — one identical IEEE op —
-    and unmatched candidates (NULL sv from the left band join) pass
-    through as NULL cosine exactly like the SQL ``when``.
-
-    NOT used by any registry plan (the no-Python-outside-codecs
-    invariant). Scale caveat a deployment must weigh before opting in:
-    unlike signing — where each vector ships to Python once — the
-    candidate seam ships BOTH arrays per candidate PAIR across Arrow,
-    so at candidate-volume-dominant walls the transfer can dominate
-    the fold it replaces; SCALING.md round-15 records the measured
-    verdict at the A/B probe's 95M-dot shape."""
-    import numpy as np
-
-    def rescore_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf[["vec_id", "s_vec"]].copy()
-            matched = pdf["snrm"].notna().to_numpy()
-            cos = np.empty(len(pdf), dtype=object)
-            cos[:] = None
-            if matched.any():
-                sub = pdf[matched]
-                v = np.array([np.asarray(x, dtype=np.float64)
-                              for x in sub["v"]])
-                sv = np.array([np.asarray(x, dtype=np.float64)
-                               for x in sub["sv"]])
-                prod = v * sv
-                acc = np.zeros(len(sub), dtype=np.float64)
-                for d in range(prod.shape[1]):
-                    acc += prod[:, d]
-                cos[matched] = acc / (sub["nrm"].to_numpy(np.float64)
-                                      * sub["snrm"].to_numpy(np.float64))
-            out["cosine"] = cos
-            yield out
-
-    return (cand.select("vec_id", "s_vec", "v", "sv", "nrm", "snrm")
-            .mapInPandas(rescore_batches,
-                         schema="vec_id long, s_vec long, cosine double"))
-
-
 def _lsh_band_frame(signed: DataFrame) -> DataFrame:
     """(vec_id, v, nrm, band_id, band_val) from a signed frame —
     SEMANTIC_LSH_BANDS rows per vector, each band value the packed
@@ -6646,22 +6584,13 @@ def _sig56_scored(corpus: DataFrame, suite: DataFrame,
     verified in the same projection — (doc_id, s_doc, hamming), with
     one null-hamming row per candidate-less corpus asset so the
     roll-ups need no second corpus join."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        _prod_band56,
-    )
-    def band_arr(col: str) -> F.Column:
-        return F.array(*[
-            F.expr(_prod_band56(col, bi, n_bands, "spark"))
-            for bi in range(n_bands)])
-    suite_bands = suite.select(
-        "s_doc", "s_sig",
-        F.posexplode(band_arr("s_sig")).alias("band_idx", "band_val"))
-    corpus_bands = corpus.select(
-        "doc_id", "sig",
-        F.posexplode(band_arr("sig")).alias("band_idx", "band_val"))
+    layout = Layout("strided", n_bands)
+    suite_bands = explode_bands(suite, band_exprs("s_sig", layout, "spark"),
+                                "s_doc", "s_sig")
+    corpus_bands = explode_bands(corpus, band_exprs("sig", layout, "spark"),
+                                 "doc_id", "sig")
     return (
-        corpus_bands.join(F.broadcast(suite_bands),
-                          ["band_idx", "band_val"], "left")
+        band_join(corpus_bands, F.broadcast(suite_bands), how="left")
         .select("doc_id", "s_doc",
                 F.when(F.col("s_sig").isNotNull(),
                        F.expr(H.hamming("sig", "s_sig", "spark")))
@@ -6683,55 +6612,43 @@ def decontaminate_phash_incremental(spark: SparkSession,
         spark, sf_dir, (F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW)
 
 
-def _phash_screen_oracle(incoming_only: bool = False,
-                         refresh: bool = False) -> str:
+def _sig56_screen_oracle(ctes: str, src: str, sig: str, hamming_max: int,
+                         new_id: int, incoming_only: bool,
+                         refresh: bool) -> str:
+    """Oracle of _sig56_screen_frame over table ``src`` (doc_id, ``sig``);
+    ``new_id`` is the family's doc_id % 4 ingest residue. Contiguous
+    banding (the verified-pair oracle convention, see banding.py): the
+    output only carries HITS, identical under any exact banding."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        PHASH_BAND_BITS,
-        PHASH_HAMMING_MAX,
-        PHASH_INCREMENTAL_NEW,
-        PHASH_N_BANDS,
-        _phash_band,
+        ORACLE_BANDS56,
     )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        PHASH_ORACLE_CTES,
-    )
-    # Contiguous banding in the oracle (the family convention for
-    # verified-pair-set oracles): the output only carries HITS
-    # (hamming <= max), where pigeonhole exactness makes it identical
-    # under any banding — the strided/contiguous choice is a candidate-
-    # volume optimization, not a semantics change.
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, phash, is_suite, {bi} AS band_idx, "
-        f"{_phash_band('phash', bi, PHASH_BAND_BITS, 'duck')} AS band_val "
-        f"FROM fl"
-        for bi in range(PHASH_N_BANDS))
-    ham = H.hamming("c.phash", "s.phash", "duck")
-    inc = (f"AND c.doc_id % 4 = {PHASH_INCREMENTAL_NEW} "
-           if incoming_only else "")
-    inc_tail = (f"AND f.doc_id % 4 = {PHASH_INCREMENTAL_NEW} "
-                if incoming_only else "")
+    band_rows = band_rows_sql("fl", sig, ORACLE_BANDS56,
+                              ["doc_id", sig, "is_suite"])
+    ham = H.hamming(f"c.{sig}", f"s.{sig}", "duck")
+    inc = f"AND c.doc_id % 4 = {new_id} " if incoming_only else ""
+    inc_tail = f"AND f.doc_id % 4 = {new_id} " if incoming_only else ""
     new_hits = (f"CAST(SUM(CASE WHEN s_doc % {INCREMENTAL_MOD} >= "
                 f"{INCREMENTAL_NEW} THEN 1 ELSE 0 END) AS BIGINT) "
                 "AS n_hits_new_suite,"
                 if refresh else "")
-    phase = (f"CASE WHEN f.doc_id % 4 = {PHASH_INCREMENTAL_NEW} "
+    phase = (f"CASE WHEN f.doc_id % 4 = {new_id} "
              "THEN 'ingest' ELSE 'backfill' END AS phase,"
              if refresh else "")
     new_tail = ("CAST(COALESCE(h.n_hits_new_suite, 0) AS BIGINT) "
                 "AS n_hits_new_suite,"
                 if refresh else "")
     return f"""
-WITH {PHASH_ORACLE_CTES},
+WITH {ctes},
 fl AS (
-  SELECT doc_id, phash, {key_hash('doc_id')} < {BENCH_RATE} AS is_suite
-  FROM ph),
+  SELECT doc_id, {sig}, {key_hash('doc_id')} < {BENCH_RATE} AS is_suite
+  FROM {src}),
 bands AS ({band_rows}),
 pairs AS (
   SELECT DISTINCT c.doc_id, s.doc_id AS s_doc, {ham} AS hamming
   FROM bands c JOIN bands s
     ON s.band_idx = c.band_idx AND s.band_val = c.band_val
    AND s.is_suite AND NOT c.is_suite
-  WHERE {ham} <= {PHASH_HAMMING_MAX} {inc}),
+  WHERE {ham} <= {hamming_max} {inc}),
 hits AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits, {new_hits}
          MIN(hamming) AS min_hamming
@@ -6745,6 +6662,20 @@ FROM fl f LEFT JOIN hits h ON h.doc_id = f.doc_id
 WHERE NOT f.is_suite {inc_tail}
 ORDER BY f.doc_id
 """
+
+
+def _phash_screen_oracle(incoming_only: bool = False,
+                         refresh: bool = False) -> str:
+    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        PHASH_HAMMING_MAX,
+        PHASH_INCREMENTAL_NEW,
+    )
+    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
+        PHASH_ORACLE_CTES,
+    )
+    return _sig56_screen_oracle(PHASH_ORACLE_CTES, "ph", "phash",
+                                PHASH_HAMMING_MAX, PHASH_INCREMENTAL_NEW,
+                                incoming_only, refresh)
 
 
 def decontaminate_phash_suite_refresh(spark: SparkSession,
@@ -6824,60 +6755,15 @@ def _afp_screen_verdicts(spark: SparkSession, sf_dir: str,
 def _afp_screen_oracle(incoming_only: bool = False,
                        refresh: bool = False) -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        AFP_BAND_BITS,
         AFP_HAMMING_MAX,
         AFP_INCREMENTAL_NEW,
-        AFP_N_BANDS,
-        _phash_band,
     )
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         AFP_ORACLE_CTES,
     )
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, afp, is_suite, {bi} AS band_idx, "
-        f"{_phash_band('afp', bi, AFP_BAND_BITS, 'duck')} AS band_val "
-        f"FROM fl"
-        for bi in range(AFP_N_BANDS))
-    ham = H.hamming("c.afp", "s.afp", "duck")
-    inc = (f"AND c.doc_id % 4 = {AFP_INCREMENTAL_NEW} "
-           if incoming_only else "")
-    inc_tail = (f"AND f.doc_id % 4 = {AFP_INCREMENTAL_NEW} "
-                if incoming_only else "")
-    new_hits = (f"CAST(SUM(CASE WHEN s_doc % {INCREMENTAL_MOD} >= "
-                f"{INCREMENTAL_NEW} THEN 1 ELSE 0 END) AS BIGINT) "
-                "AS n_hits_new_suite,"
-                if refresh else "")
-    phase = (f"CASE WHEN f.doc_id % 4 = {AFP_INCREMENTAL_NEW} "
-             "THEN 'ingest' ELSE 'backfill' END AS phase,"
-             if refresh else "")
-    new_tail = ("CAST(COALESCE(h.n_hits_new_suite, 0) AS BIGINT) "
-                "AS n_hits_new_suite,"
-                if refresh else "")
-    return f"""
-WITH {AFP_ORACLE_CTES},
-fl AS (
-  SELECT doc_id, afp, {key_hash('doc_id')} < {BENCH_RATE} AS is_suite
-  FROM afpt),
-bands AS ({band_rows}),
-pairs AS (
-  SELECT DISTINCT c.doc_id, s.doc_id AS s_doc, {ham} AS hamming
-  FROM bands c JOIN bands s
-    ON s.band_idx = c.band_idx AND s.band_val = c.band_val
-   AND s.is_suite AND NOT c.is_suite
-  WHERE {ham} <= {AFP_HAMMING_MAX} {inc}),
-hits AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits, {new_hits}
-         MIN(hamming) AS min_hamming
-  FROM pairs GROUP BY doc_id)
-SELECT f.doc_id, {phase}
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits, {new_tail}
-       CAST(COALESCE(h.min_hamming, {PHASH_NO_HIT}) AS INT)
-         AS min_hamming,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM fl f LEFT JOIN hits h ON h.doc_id = f.doc_id
-WHERE NOT f.is_suite {inc_tail}
-ORDER BY f.doc_id
-"""
+    return _sig56_screen_oracle(AFP_ORACLE_CTES, "afpt", "afp",
+                                AFP_HAMMING_MAX, AFP_INCREMENTAL_NEW,
+                                incoming_only, refresh)
 
 
 def decontaminate_afp_suite_refresh(spark: SparkSession,
@@ -7081,21 +6967,11 @@ def _vfp_screen_candidates(corpus: DataFrame,
     """Distinct (doc_id, s_doc) clip candidates from the per-(frame,
     band) broadcast join — the suite side is an eval battery, so the
     band table broadcasts and no pair space materializes."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        VFP_N_BANDS,
-        _prod_band56,
-    )
-    def bands_of(df: DataFrame, idcol: str) -> DataFrame:
-        return df.select(
-            F.col("doc_id").alias(idcol), "frame_idx",
-            F.posexplode(F.array(*[
-                F.expr(_prod_band56("vfh", bi, VFP_N_BANDS, "spark"))
-                for bi in range(VFP_N_BANDS)
-            ])).alias("band_idx", "band_val"))
+    from qucosa_fcrepo_reportingdb_spark.operators.dedup import _vfp_bands
+    suite_bands = _vfp_bands(suite).withColumnRenamed("doc_id", "s_doc")
     return (
-        bands_of(corpus, "doc_id")
-        .join(F.broadcast(bands_of(suite, "s_doc")),
-              ["frame_idx", "band_idx", "band_val"])
+        band_join(_vfp_bands(corpus), F.broadcast(suite_bands),
+                  ["frame_idx"])
         .select("doc_id", "s_doc")
         .dropDuplicates(["doc_id", "s_doc"]))
 
@@ -7103,21 +6979,16 @@ def _vfp_screen_candidates(corpus: DataFrame,
 def _vfp_screen_oracle(incoming_only: bool = False,
                        refresh: bool = False) -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        VFP_BAND_BITS,
+        ORACLE_BANDS56,
         VFP_HAMMING_MAX,
         VFP_INCREMENTAL_NEW,
         VFP_MIN_FRAMES,
-        VFP_N_BANDS,
-        _phash_band,
     )
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         VFP_ORACLE_CTES,
     )
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, frame_idx, is_suite, {bi} AS band_idx, "
-        f"{_phash_band('vfh', bi, VFP_BAND_BITS, 'duck')} AS band_val "
-        f"FROM fl"
-        for bi in range(VFP_N_BANDS))
+    band_rows = band_rows_sql("fl", "vfh", ORACLE_BANDS56,
+                              ["doc_id", "frame_idx", "is_suite"])
     return f"""
 WITH {VFP_ORACLE_CTES.strip()},
 fl AS (
@@ -7742,35 +7613,23 @@ def suite_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _suite_leakage_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        AFP_BAND_BITS,
         AFP_HAMMING_MAX,
-        AFP_N_BANDS,
-        PHASH_BAND_BITS,
+        ORACLE_BANDS56,
         PHASH_HAMMING_MAX,
-        PHASH_N_BANDS,
-        VFP_BAND_BITS,
         VFP_HAMMING_MAX,
         VFP_MIN_FRAMES,
-        VFP_N_BANDS,
-        _phash_band,
     )
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         AFP_ORACLE_CTES,
         PHASH_ORACLE_CTES,
         VFP_ORACLE_CTES,
     )
-    iband_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, phash, is_suite, {bi} AS band_idx, "
-        f"{_phash_band('phash', bi, PHASH_BAND_BITS, 'duck')} AS band_val "
-        f"FROM ifl" for bi in range(PHASH_N_BANDS))
-    aband_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, afp, is_suite, {bi} AS band_idx, "
-        f"{_phash_band('afp', bi, AFP_BAND_BITS, 'duck')} AS band_val "
-        f"FROM afl" for bi in range(AFP_N_BANDS))
-    vband_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, frame_idx, is_suite, {bi} AS band_idx, "
-        f"{_phash_band('vfh', bi, VFP_BAND_BITS, 'duck')} AS band_val "
-        f"FROM vfl" for bi in range(VFP_N_BANDS))
+    iband_rows = band_rows_sql("ifl", "phash", ORACLE_BANDS56,
+                               ["doc_id", "phash", "is_suite"])
+    aband_rows = band_rows_sql("afl", "afp", ORACLE_BANDS56,
+                               ["doc_id", "afp", "is_suite"])
+    vband_rows = band_rows_sql("vfl", "vfh", ORACLE_BANDS56,
+                               ["doc_id", "frame_idx", "is_suite"])
     iham = H.hamming("c.phash", "s.phash", "duck")
     aham = H.hamming("c.afp", "s.afp", "duck")
     return f"""

@@ -27,11 +27,22 @@ from qucosa_fcrepo_reportingdb_spark.memo import (
     cut_lineage,
     session_memo,
 )
+from qucosa_fcrepo_reportingdb_spark.operators.banding import (
+    BAND_COLS,
+    Layout,
+    band_exprs,
+    band_join,
+    band_rows_sql,
+    banded_pairs,
+    banded_pairs_sql,
+    explode_bands,
+)
 from qucosa_fcrepo_reportingdb_spark.plans.common import fan_out, t
 
 JACCARD_THRESHOLD = 0.2
 COSINE_THRESHOLD = 0.35
 HAMMING_MAX = 3
+SIMHASH32_BANDS = Layout("contiguous", 4, 32)   # 4 x 8-bit bands
 # Document-frequency ceiling for the n-gram inverted index: a shingle
 # shared by k docs emits k^2 candidate pairs in the self-join, so
 # boilerplate shingles (cookie banners, license headers) would dominate
@@ -458,68 +469,26 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, no birthday cap) and df-capped n-gram Jaccard. A deployment
     needing simhash past ~10^5 docs widens the sketch (64-bit) before it
     re-bands — the phash_blocking_scheme_audit pattern then applies."""
-    # materialized once per (session, dataset): the band self-join below
-    # consumes BOTH sides of this frame — without the checkpoint each
-    # side re-evaluates the full tokenize->shingle->simhash expression
-    # tree over the corpus (the same double-scan the minhash path fixes)
-    def build() -> DataFrame:
-        return _shingled(spark, sf_dir).selectExpr(
-            "doc_id", f"{H.simhash('sh', 'spark')} AS simhash"
-        ).transform(cut_lineage)
-    sim = session_memo(spark, ("simhash_signatures", sf_dir), build)
-    bands = sim.select(
-        "doc_id", "simhash",
-        F.posexplode(F.array(*[
-            F.expr(H.simhash_band("simhash", bi, "spark"))
-            for bi in range(4)
-        ])).alias("band_idx", "band_val"),
-    )
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     F.col("simhash").alias("s1"), "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col("simhash").alias("s2"), "band_idx", "band_val")
-    # r16: hamming verified per CANDIDATE, before the distinct — hamming
-    # is functionally determined by (d1, d2) (each signature is a
-    # function of its doc), so distinct over (d1, d2, hamming) equals
-    # the old distinct over (d1, d2); the dedup exchange then carries
-    # only VERIFIED (d1, d2, hamming) rows instead of every candidate
-    # with both 8-byte signatures + first() aggregate state (guide §2.3:
-    # shuffle fewer bytes — measured 0.81-0.92x across the hamming
-    # families, tools/r16_bandpair_ab.py; the same hoist applies to all
-    # banded hamming sites below).
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        .withColumn("hamming", F.expr(H.hamming("s1", "s2", "spark")))
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        .select("d1", "d2", "hamming")
-        .dropDuplicates()
-        .orderBy("d1", "d2")
-    )
+    return _sig_pairs(_simhash32_signatures(spark, sf_dir), "simhash",
+                      SIMHASH32_BANDS, HAMMING_MAX)
 
 
 def _simhash_oracle() -> str:
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, simhash, {bi} AS band_idx, "
-        f"{H.simhash_band('simhash', bi, 'duck')} AS band_val FROM sim"
-        for bi in range(4))
     return f"""
 WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
 th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
 shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
 sim AS (SELECT doc_id, {H.simhash('sh', 'duck')} AS simhash FROM shl),
-bands AS ({band_rows}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, a.simhash AS s1,
-         b.doc_id AS d2, b.simhash AS s2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id)
-SELECT d1, d2, {H.hamming('s1', 's2', 'duck')} AS hamming
-FROM cand
-WHERE {H.hamming('s1', 's2', 'duck')} <= {HAMMING_MAX}
-ORDER BY d1, d2
-"""
+{banded_pairs_sql('sim', 'simhash', SIMHASH32_BANDS)}
+{_verified_sql(HAMMING_MAX)}"""
+
+
+def _verified_sql(hamming_max: int, names=("d1", "d2")) -> str:
+    """The verified-pair SELECT over a banded_pairs_sql ``cand``."""
+    ham = H.hamming("s1", "s2", "duck")
+    return (f"SELECT d1 AS {names[0]}, d2 AS {names[1]}, {ham} AS hamming\n"
+            f"FROM cand WHERE {ham} <= {hamming_max}\n"
+            f"ORDER BY {names[0]}, {names[1]}\n")
 
 
 # ---------------------------------------------------------------------------
@@ -1670,45 +1639,23 @@ PHASH_BAND_BITS = 14          # 4 x 14 = the full 56-bit dHash
 PHASH_HAMMING_MAX = 3         # < PHASH_N_BANDS, so banding is EXACT
                               # (pigeonhole: <=3 differing bits cannot
                               # touch all 4 bands)
+PHASH_C2_N_SUB = 5   # 5 strided sub-bands; hamming<=3 leaves >=2 intact
 
-
-def _phash_band(col: str, band: int, bits: int, dialect: str) -> str:
-    mask = (1 << bits) - 1
-    if dialect == "spark":
-        return f"(shiftright({col}, {band * bits}) & {mask})"
-    return f"(({col} >> {band * bits}) & {mask})"
-
-
-def _phash_strided_band(col: str, band: int, n_bands: int,
-                        dialect: str, total_bits: int = 56) -> str:
-    """Band value when band b owns the INTERLEAVED bit class
-    {{i : i mod n_bands == b}} — bit k of the band value is source bit
-    k*n_bands + b. Pure shift/mask integer math in both dialects.
-    total_bits defaults to the 56-bit perceptual families; the 62-bit
-    simhash64 sketch passes its own width."""
-    terms = []
-    for k, i in enumerate(range(band, total_bits, n_bands)):
-        if dialect == "spark":
-            terms.append(f"((shiftright({col}, {i}) & 1) * {1 << k})")
-        else:
-            terms.append(f"((({col} >> {i}) & 1) * {1 << k})")
-    return "(" + " + ".join(terms) + ")"
-
-
-def _prod_band56(col: str, band: int, n_bands: int, dialect: str) -> str:
-    """PRODUCTION band layout for every 56-bit perceptual signature
-    (image dHash, audio energy-sign fingerprint, per-frame video hash):
-    STRIDED. All three signatures have spatially/temporally CORRELATED
-    adjacent bits, so a contiguous 14-bit band is a low-entropy join
-    key; striding (bit i -> band i mod 4) decorrelates each band at
-    ZERO recall cost — pigeonhole exactness holds for any partition of
-    the bits. Measured by phash_band_layout_audit on the designed
-    corpora: image candidates 264 -> 160 (max bucket 6 -> 4), audio
-    220 -> 145, identical verified counts. Oracles that only emit the
-    VERIFIED pair set keep their contiguous banding (same output by
-    exactness); oracles that expose bucket shape (band_skew_audit)
-    mirror the strided layout."""
-    return _phash_strided_band(col, band, n_bands, dialect)
+# Band layouts of the 56-bit perceptual signatures (image dHash, audio
+# energy-sign fingerprint, per-frame video hash). PRODUCTION is STRIDED:
+# all three have spatially/temporally CORRELATED adjacent bits, so a
+# contiguous 14-bit band is a low-entropy join key; striding (bit i ->
+# band i mod 4) decorrelates each band at zero recall cost. Measured by
+# phash_band_layout_audit on the designed corpora: image candidates
+# 264 -> 160 (max bucket 6 -> 4), audio 220 -> 145, identical verified
+# counts. Verified-pair oracles band contiguously (banding.py).
+PROD_BANDS56 = Layout("strided", PHASH_N_BANDS)
+ORACLE_BANDS56 = Layout("contiguous", PHASH_N_BANDS)
+# The combinatorial 2-of-5 band pairs (the birthday-regime remedy): key
+# space per pair ~2^22-2^23 vs 2^14 for a single 14-bit band, keeping
+# average bucket occupancy << 1 once the corpus outgrows the
+# 16,384-value single-band space (SCALING.md). Cost: 10 rows/unit, not 4.
+PAIRS56 = Layout("pairs", PHASH_C2_N_SUB)
 
 
 def _phash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1724,6 +1671,21 @@ def _phash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_memo(spark, ("image_phash", sf_dir), build)
 
 
+def _sig_pairs(sigs: DataFrame, sig: str, layout: Layout, hamming_max: int,
+               is_new: "F.Column | None" = None) -> DataFrame:
+    """Verified hamming pairs of one signature frame (doc_id, ``sig``):
+    (d1, d2, hamming) in the batch form; (new_id, dup_of, hamming) in the
+    incremental form."""
+    keep = None
+    if is_new is not None:
+        keep = [F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
+                "hamming"]
+    out = banded_pairs(
+        explode_bands(sigs, band_exprs(sig, layout, "spark"), "doc_id", sig),
+        sig, is_new=is_new, hamming_max=hamming_max, keep=keep)
+    return out.orderBy(*out.columns[:2])
+
+
 def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate pairs: decoded pixels -> 8x8 normalized
     grayscale -> 56-bit dHash (multimodal.dhash56, the only Python stage,
@@ -1736,54 +1698,26 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: signatures are 16 bytes/doc; the join shuffles
     (band_idx, band_val) keyed signature rows only — pixels never leave
     the scan stage. Candidates are O(colliding pairs), never all pairs."""
-    ph = _phash_signatures(spark, sf_dir)
-    bands = ph.select(
-        "doc_id", "phash",
-        F.posexplode(F.array(*[
-            F.expr(_prod_band56("phash", bi, PHASH_N_BANDS, "spark"))
-            for bi in range(PHASH_N_BANDS)
-        ])).alias("band_idx", "band_val"),
-    )
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     F.col("phash").alias("p1"), "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col("phash").alias("p2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        # r16 early verify (see dedup_simhash): distinct carries only
-        # verified rows, no signatures, no first() aggs
-        .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
-        .select("d1", "d2", "hamming")
-        .dropDuplicates()
-        .orderBy("d1", "d2")
-    )
+    return _sig_pairs(_phash_signatures(spark, sf_dir), "phash",
+                      PROD_BANDS56, PHASH_HAMMING_MAX)
+
+
+def _sig_pairs_oracle(ctes: str, src: str, sig: str, hamming_max: int,
+                      is_new: "str | None" = None,
+                      layout: Layout = ORACLE_BANDS56) -> str:
+    """The oracle of _sig_pairs over table ``src``: contiguous blocking."""
+    names = ("d1", "d2") if is_new is None else ("new_id", "dup_of")
+    return (f"WITH {ctes.strip()},\n"
+            f"{banded_pairs_sql(src, sig, layout, is_new=is_new)}\n"
+            f"{_verified_sql(hamming_max, names)}")
 
 
 def _image_phash_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         PHASH_ORACLE_CTES,
     )
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, phash, {bi} AS band_idx, "
-        f"{_phash_band('phash', bi, PHASH_BAND_BITS, 'duck')} AS band_val "
-        f"FROM ph"
-        for bi in range(PHASH_N_BANDS))
-    return f"""
-WITH {PHASH_ORACLE_CTES},
-bands AS ({band_rows}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, a.phash AS p1,
-         b.doc_id AS d2, b.phash AS p2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id)
-SELECT d1, d2, {H.hamming('p1', 'p2', 'duck')} AS hamming
-FROM cand
-WHERE {H.hamming('p1', 'p2', 'duck')} <= {PHASH_HAMMING_MAX}
-ORDER BY d1, d2
-"""
+    return _sig_pairs_oracle(PHASH_ORACLE_CTES, "ph", "phash",
+                             PHASH_HAMMING_MAX)
 
 
 QUERIES["dedup_image_phash"] = dedup_image_phash
@@ -1809,26 +1743,24 @@ def phash_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one decode+hash pass (memoized signature table); each
     config pays only its own 16-bytes-per-row band join."""
-    ph = _phash_signatures(spark, sf_dir)
+    return _banding_sweep(_phash_signatures(spark, sf_dir), "phash",
+                          PHASH_SWEEP_CONFIGS, PHASH_HAMMING_MAX)
+
+
+def _banding_sweep(sigs: DataFrame, sig: str, configs, hamming_max: int
+                   ) -> DataFrame:
+    """The 56-bit banding sweep body shared by the image and audio
+    families: one contiguous band join per (n_bands, bits) config."""
     per_config = {}
-    for n_bands, bits in PHASH_SWEEP_CONFIGS:
-        bands = ph.select(
-            "doc_id", "phash",
-            F.posexplode(F.array(*[
-                F.expr(_phash_band("phash", bi, bits, "spark"))
-                for bi in range(n_bands)])).alias("band_idx", "band_val"))
-        a = bands.select(F.col("doc_id").alias("d1"),
-                         F.col("phash").alias("p1"), "band_idx", "band_val")
-        b = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("phash").alias("p2"), "band_idx", "band_val")
-        cand = (a.join(b, ["band_idx", "band_val"])
-                .filter(F.col("d1") < F.col("d2"))
-                .dropDuplicates(["d1", "d2"])
-                .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark"))))
+    for n_bands, bits in configs:
+        cand = banded_pairs(
+            explode_bands(sigs, band_exprs(sig, Layout("contiguous", n_bands),
+                                           "spark"), "doc_id", sig),
+            sig).withColumn("hamming", F.expr(H.hamming("s1", "s2", "spark")))
         per_config[(n_bands, bits)] = (
             cand.agg(
                 F.count(F.lit(1)).alias("n_candidates"),
-                F.sum(F.when(F.col("hamming") <= PHASH_HAMMING_MAX, 1)
+                F.sum(F.when(F.col("hamming") <= hamming_max, 1)
                       .otherwise(0)).alias("n_verified"))
             .selectExpr(f"{n_bands} AS n_bands", f"{bits} AS bits_per_band",
                         "n_candidates", "n_verified"))
@@ -1853,39 +1785,28 @@ def phash_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _phash_sweep_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        PHASH_ORACLE_CTES,
-    )
-    ctes = [PHASH_ORACLE_CTES.strip()]
+def _banding_sweep_sql(ctes: str, src: str, sig: str, configs,
+                       hamming_max: int) -> str:
+    parts = [ctes.strip()]
     per_config = []
-    for n_bands, bits in PHASH_SWEEP_CONFIGS:
-        tag = f"{n_bands}x{bits}"
-        band_rows = "\nUNION ALL\n".join(
-            f"SELECT doc_id, phash, {bi} AS band_idx, "
-            f"{_phash_band('phash', bi, bits, 'duck')} AS band_val FROM ph"
-            for bi in range(n_bands))
-        ctes.append(f"bands_{tag} AS ({band_rows})")
-        ctes.append(
-            f"cand_{tag} AS (SELECT DISTINCT a.doc_id AS d1, a.phash AS p1, "
-            f"b.doc_id AS d2, b.phash AS p2 "
-            f"FROM bands_{tag} a JOIN bands_{tag} b "
-            f"ON a.band_idx = b.band_idx AND a.band_val = b.band_val "
-            f"AND a.doc_id < b.doc_id)")
-        ctes.append(
-            f"agg_{tag} AS (SELECT COUNT(*) AS n_candidates, "
-            f"SUM(CASE WHEN {H.hamming('p1', 'p2', 'duck')} <= "
-            f"{PHASH_HAMMING_MAX} THEN 1 ELSE 0 END) AS n_verified "
-            f"FROM cand_{tag})")
+    for n_bands, bits in configs:
+        tag = f"_{n_bands}x{bits}"
+        parts.append(banded_pairs_sql(src, sig, Layout("contiguous", n_bands),
+                                      tag=tag))
+        parts.append(
+            f"agg{tag} AS (SELECT COUNT(*) AS n_candidates, "
+            f"SUM(CASE WHEN {H.hamming('s1', 's2', 'duck')} <= "
+            f"{hamming_max} THEN 1 ELSE 0 END) AS n_verified "
+            f"FROM cand{tag})")
         per_config.append(
             f"SELECT {n_bands} AS n_bands, {bits} AS bits_per_band, "
             f"CAST(n_candidates AS BIGINT) AS n_candidates, "
-            f"CAST(n_verified AS BIGINT) AS n_verified FROM agg_{tag}")
-    exact_tag = f"{PHASH_N_BANDS}x{PHASH_BAND_BITS}"
+            f"CAST(n_verified AS BIGINT) AS n_verified FROM agg{tag}")
+    exact_tag = f"_{PHASH_N_BANDS}x{PHASH_BAND_BITS}"
     return (
-        "WITH " + ",\n".join(ctes)
+        "WITH " + ",\n".join(parts)
         + f",\nunioned AS ({' UNION ALL '.join(per_config)}),\n"
-        + f"tp AS (SELECT n_verified AS n_true FROM agg_{exact_tag})\n"
+        + f"tp AS (SELECT n_verified AS n_true FROM agg{exact_tag})\n"
         + "SELECT n_bands, bits_per_band, n_candidates, n_verified,\n"
         + "       CAST(n_true AS BIGINT) AS n_true,\n"
         + "       CAST(n_verified AS DOUBLE)"
@@ -1894,6 +1815,14 @@ def _phash_sweep_oracle() -> str:
         + "       CAST(n_verified AS DOUBLE)"
         + " / CAST(NULLIF(n_true, 0) AS DOUBLE) AS recall\n"
         + "FROM unioned CROSS JOIN tp ORDER BY n_bands")
+
+
+def _phash_sweep_oracle() -> str:
+    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
+        PHASH_ORACLE_CTES,
+    )
+    return _banding_sweep_sql(PHASH_ORACLE_CTES, "ph", "phash",
+                              PHASH_SWEEP_CONFIGS, PHASH_HAMMING_MAX)
 
 
 QUERIES["phash_banding_sweep"] = phash_banding_sweep
@@ -1924,32 +1853,18 @@ def phash_band_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one memoized signature pass; per layout one band join
     over 16-byte rows and one bucket-histogram aggregation."""
     ph = _phash_signatures(spark, sf_dir)
-    layouts = {
-        "contiguous": lambda bi: _phash_band(
-            "phash", bi, PHASH_BAND_BITS, "spark"),
-        "strided": lambda bi: _phash_strided_band(
-            "phash", bi, PHASH_N_BANDS, "spark"),
-    }
     out = None
-    for layout_name, band_expr in layouts.items():
-        bands = ph.select(
-            "doc_id", "phash",
-            F.posexplode(F.array(*[
-                F.expr(band_expr(bi)) for bi in range(PHASH_N_BANDS)
-            ])).alias("band_idx", "band_val"))
+    for layout_name, layout in (("contiguous", ORACLE_BANDS56),
+                                ("strided", PROD_BANDS56)):
+        bands = explode_bands(ph, band_exprs("phash", layout, "spark"),
+                              "doc_id", "phash")
         buckets = (bands.groupBy("band_idx", "band_val")
                    .agg(F.count(F.lit(1)).alias("sz"))
                    .agg(F.count(F.lit(1)).cast("long").alias("n_buckets"),
                         F.max("sz").cast("long").alias("max_bucket_size")))
-        a = bands.select(F.col("doc_id").alias("d1"),
-                         F.col("phash").alias("p1"), "band_idx", "band_val")
-        b = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("phash").alias("p2"), "band_idx", "band_val")
-        cand = (a.join(b, ["band_idx", "band_val"])
-                .filter(F.col("d1") < F.col("d2"))
-                .dropDuplicates(["d1", "d2"])
+        cand = (banded_pairs(bands, "phash")
                 .withColumn("hamming",
-                            F.expr(H.hamming("p1", "p2", "spark")))
+                            F.expr(H.hamming("s1", "s2", "spark")))
                 .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"),
                      F.sum(F.when(
                          F.col("hamming") <= PHASH_HAMMING_MAX, 1)
@@ -1964,49 +1879,51 @@ def phash_band_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("layout")
 
 
+def _scheme_audit_sql(ctes: str, schemes, hamming_max: int, label: str,
+                      n_band_rows: bool = True) -> str:
+    """Oracle of the per-scheme blocking audits: for each (name, src,
+    sig, layout), bucket shape and candidate/verified counts of its own
+    band self-join (the layout mirrors Spark's — the audit's output IS
+    the candidate set's shape)."""
+    parts = [ctes.strip()]
+    selects = []
+    for i, (name, src, sig, layout) in enumerate(schemes):
+        tag = f"_{i}"
+        parts.append(banded_pairs_sql(src, sig, layout, tag=tag))
+        rows = "CAST(SUM(sz) AS BIGINT) AS n_band_rows, " if n_band_rows \
+            else ""
+        parts.append(
+            f"bk{tag} AS (SELECT {rows}"
+            f"CAST(COUNT(*) AS BIGINT) AS n_buckets, "
+            f"CAST(MAX(sz) AS BIGINT) AS max_bucket_size FROM "
+            f"(SELECT band_idx, band_val, COUNT(*) AS sz FROM bands{tag} "
+            f"GROUP BY band_idx, band_val) h)")
+        parts.append(
+            f"agg{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
+            f"n_candidates, CAST(SUM(CASE WHEN "
+            f"{H.hamming('s1', 's2', 'duck')} <= {hamming_max} "
+            f"THEN 1 ELSE 0 END) AS BIGINT) AS n_verified "
+            f"FROM cand{tag})")
+        selects.append(
+            f"SELECT '{name}' AS {label}, "
+            f"{'n_band_rows, ' if n_band_rows else ''}n_buckets, "
+            f"max_bucket_size, n_candidates, n_verified, "
+            f"CAST(n_verified AS DOUBLE)"
+            f" / CAST(NULLIF(n_candidates, 0) AS DOUBLE)"
+            f" AS candidate_precision FROM bk{tag} CROSS JOIN agg{tag}")
+    return ("WITH " + ",\n".join(parts) + "\n"
+            + "\nUNION ALL\n".join(selects) + f"\nORDER BY {label}")
+
+
 def _band_layout_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         PHASH_ORACLE_CTES,
     )
-    ctes = [PHASH_ORACLE_CTES.strip()]
-    selects = []
-    for layout_name, band_expr in (
-        ("contiguous", lambda bi: _phash_band(
-            "phash", bi, PHASH_BAND_BITS, "duck")),
-        ("strided", lambda bi: _phash_strided_band(
-            "phash", bi, PHASH_N_BANDS, "duck")),
-    ):
-        tag = layout_name[:4]
-        band_rows = "\nUNION ALL\n".join(
-            f"SELECT doc_id, phash, {bi} AS band_idx, "
-            f"{band_expr(bi)} AS band_val FROM ph"
-            for bi in range(PHASH_N_BANDS))
-        ctes.append(f"bands_{tag} AS ({band_rows})")
-        ctes.append(
-            f"bk_{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets, "
-            f"CAST(MAX(sz) AS BIGINT) AS max_bucket_size FROM "
-            f"(SELECT band_idx, band_val, COUNT(*) AS sz FROM bands_{tag} "
-            f"GROUP BY band_idx, band_val) h)")
-        ctes.append(
-            f"cand_{tag} AS (SELECT DISTINCT a.doc_id AS d1, "
-            f"a.phash AS p1, b.doc_id AS d2, b.phash AS p2 "
-            f"FROM bands_{tag} a JOIN bands_{tag} b "
-            f"ON a.band_idx = b.band_idx AND a.band_val = b.band_val "
-            f"AND a.doc_id < b.doc_id)")
-        ctes.append(
-            f"agg_{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
-            f"n_candidates, CAST(SUM(CASE WHEN "
-            f"{H.hamming('p1', 'p2', 'duck')} <= {PHASH_HAMMING_MAX} "
-            f"THEN 1 ELSE 0 END) AS BIGINT) AS n_verified "
-            f"FROM cand_{tag})")
-        selects.append(
-            f"SELECT '{layout_name}' AS layout, n_buckets, "
-            f"max_bucket_size, n_candidates, n_verified, "
-            f"CAST(n_verified AS DOUBLE)"
-            f" / CAST(NULLIF(n_candidates, 0) AS DOUBLE)"
-            f" AS candidate_precision FROM bk_{tag} CROSS JOIN agg_{tag}")
-    return ("WITH " + ",\n".join(ctes) + "\n"
-            + "\nUNION ALL\n".join(selects) + "\nORDER BY layout")
+    return _scheme_audit_sql(
+        PHASH_ORACLE_CTES,
+        [("contiguous", "ph", "phash", ORACLE_BANDS56),
+         ("strided", "ph", "phash", PROD_BANDS56)],
+        PHASH_HAMMING_MAX, "layout", n_band_rows=False)
 
 
 QUERIES["phash_band_layout_audit"] = phash_band_layout_audit
@@ -2042,68 +1959,18 @@ def dedup_image_phash_incremental(spark: SparkSession,
     Output: (new_id, dup_of, hamming) — incoming docs near-duplicating
     an existing doc or an earlier-id doc of the same batch,
     hamming-verified."""
-    ph = _phash_signatures(spark, sf_dir)
-    is_new = (F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW
-
-    def bands_of(side: DataFrame) -> DataFrame:
-        return side.select(
-            "doc_id", "phash",
-            F.posexplode(F.array(*[
-                F.expr(_prod_band56("phash", bi, PHASH_N_BANDS, "spark"))
-                for bi in range(PHASH_N_BANDS)
-            ])).alias("band_idx", "band_val"))
-
-    # one predicated band self-join (the dedup_incremental_minhash
-    # shape): incoming filtered before the exchange, full side exchanged
-    # once, (not new2) or (d1 < d2) keeps incoming x existing plus the
-    # batch's own ordered self-pairs
-    bands = bands_of(ph).withColumn("is_new", is_new)
-    a = bands.filter("is_new").select(
-        F.col("doc_id").alias("d1"), F.col("phash").alias("p1"),
-        "band_idx", "band_val")
-    b = bands.select(
-        F.col("doc_id").alias("d2"), F.col("phash").alias("p2"),
-        F.col("is_new").alias("new2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter((~F.col("new2")) | (F.col("d1") < F.col("d2")))
-        # r16 early verify (see dedup_simhash)
-        .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
-        .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                "hamming")
-        .dropDuplicates()
-        .orderBy("new_id", "dup_of")
-    )
+    return _sig_pairs(_phash_signatures(spark, sf_dir), "phash",
+                      PROD_BANDS56, PHASH_HAMMING_MAX,
+                      is_new=(F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW)
 
 
 def _image_phash_incremental_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         PHASH_ORACLE_CTES,
     )
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, phash, {bi} AS band_idx, "
-        f"{_phash_band('phash', bi, PHASH_BAND_BITS, 'duck')} AS band_val "
-        f"FROM ph"
-        for bi in range(PHASH_N_BANDS))
-    return f"""
-WITH {PHASH_ORACLE_CTES},
-bands AS ({band_rows}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, a.phash AS p1,
-         b.doc_id AS d2, b.phash AS p2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id % 4 = {PHASH_INCREMENTAL_NEW}
-   AND (b.doc_id % 4 != {PHASH_INCREMENTAL_NEW}
-        OR (b.doc_id % 4 = {PHASH_INCREMENTAL_NEW}
-            AND a.doc_id < b.doc_id)))
-SELECT d1 AS new_id, d2 AS dup_of,
-       {H.hamming('p1', 'p2', 'duck')} AS hamming
-FROM cand
-WHERE {H.hamming('p1', 'p2', 'duck')} <= {PHASH_HAMMING_MAX}
-ORDER BY new_id, dup_of
-"""
+    return _sig_pairs_oracle(
+        PHASH_ORACLE_CTES, "ph", "phash", PHASH_HAMMING_MAX,
+        is_new=f"{{}}.doc_id % 4 = {PHASH_INCREMENTAL_NEW}")
 
 
 QUERIES["dedup_image_phash_incremental"] = dedup_image_phash_incremental
@@ -2113,8 +1980,7 @@ ORACLES["dedup_image_phash_incremental"] = _image_phash_incremental_oracle()
 # ---------------------------------------------------------------------------
 # audio fingerprint dedup family (energy-sign signature; phash parity)
 # ---------------------------------------------------------------------------
-AFP_N_BANDS = 4
-AFP_BAND_BITS = 14            # 4 x 14 = the full 56-bit fingerprint
+AFP_N_BANDS = 4               # 4 x 14 bits = the full 56-bit fingerprint
 AFP_HAMMING_MAX = 3           # < AFP_N_BANDS -> banding EXACT (pigeonhole)
 AFP_INCREMENTAL_NEW = 1       # doc_id % 4 == 1 -> incoming batch
 
@@ -2133,15 +1999,6 @@ def _afp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_memo(spark, ("audio_afp", sf_dir), build)
 
 
-def _afp_bands_of(side: DataFrame) -> DataFrame:
-    return side.select(
-        "doc_id", "afp",
-        F.posexplode(F.array(*[
-            F.expr(_prod_band56("afp", bi, AFP_N_BANDS, "spark"))
-            for bi in range(AFP_N_BANDS)
-        ])).alias("band_idx", "band_val"))
-
-
 def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-duplicate pairs: decoded PCM -> 57-window energy
     profile -> 56-bit energy-sign fingerprint (multimodal.
@@ -2156,49 +2013,15 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band_idx, band_val) keyed signature rows only — samples never
     leave the scan stage. Candidates measured ~2.7/doc on the synthetic
     corpus (banding sweep quantifies the configs)."""
-    bands = _afp_bands_of(_afp_signatures(spark, sf_dir))
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     F.col("afp").alias("p1"), "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col("afp").alias("p2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        # r16 early verify (see dedup_simhash)
-        .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= AFP_HAMMING_MAX)
-        .select("d1", "d2", "hamming")
-        .dropDuplicates()
-        .orderBy("d1", "d2")
-    )
-
-
-def _afp_band_rows_sql(n_bands: int, bits: int) -> str:
-    return "\nUNION ALL\n".join(
-        f"SELECT doc_id, afp, {bi} AS band_idx, "
-        f"{_phash_band('afp', bi, bits, 'duck')} AS band_val "
-        f"FROM afpt"
-        for bi in range(n_bands))
+    return _sig_pairs(_afp_signatures(spark, sf_dir), "afp",
+                      PROD_BANDS56, AFP_HAMMING_MAX)
 
 
 def _audio_fingerprint_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         AFP_ORACLE_CTES,
     )
-    return f"""
-WITH {AFP_ORACLE_CTES},
-bands AS ({_afp_band_rows_sql(AFP_N_BANDS, AFP_BAND_BITS)}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, a.afp AS p1,
-         b.doc_id AS d2, b.afp AS p2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id)
-SELECT d1, d2, {H.hamming('p1', 'p2', 'duck')} AS hamming
-FROM cand
-WHERE {H.hamming('p1', 'p2', 'duck')} <= {AFP_HAMMING_MAX}
-ORDER BY d1, d2
-"""
+    return _sig_pairs_oracle(AFP_ORACLE_CTES, "afpt", "afp", AFP_HAMMING_MAX)
 
 
 QUERIES["dedup_audio_fingerprint"] = dedup_audio_fingerprint
@@ -2218,88 +2041,16 @@ def afp_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one synth+decode+fingerprint pass (memoized signature
     table); each config pays only its own 16-bytes-per-row band join."""
-    ph = _afp_signatures(spark, sf_dir)
-    per_config = {}
-    for n_bands, bits in AFP_SWEEP_CONFIGS:
-        bands = ph.select(
-            "doc_id", "afp",
-            F.posexplode(F.array(*[
-                F.expr(_phash_band("afp", bi, bits, "spark"))
-                for bi in range(n_bands)])).alias("band_idx", "band_val"))
-        a = bands.select(F.col("doc_id").alias("d1"),
-                         F.col("afp").alias("p1"), "band_idx", "band_val")
-        b = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("afp").alias("p2"), "band_idx", "band_val")
-        cand = (a.join(b, ["band_idx", "band_val"])
-                .filter(F.col("d1") < F.col("d2"))
-                .dropDuplicates(["d1", "d2"])
-                .withColumn("hamming",
-                            F.expr(H.hamming("p1", "p2", "spark"))))
-        per_config[(n_bands, bits)] = (
-            cand.agg(
-                F.count(F.lit(1)).alias("n_candidates"),
-                F.sum(F.when(F.col("hamming") <= AFP_HAMMING_MAX, 1)
-                      .otherwise(0)).alias("n_verified"))
-            .selectExpr(f"{n_bands} AS n_bands", f"{bits} AS bits_per_band",
-                        "n_candidates", "n_verified"))
-    n_true = (per_config[(AFP_N_BANDS, AFP_BAND_BITS)]
-              .selectExpr("n_verified AS n_true"))
-    out = None
-    for row in per_config.values():
-        out = row if out is None else out.unionByName(row)
-    return (
-        out.crossJoin(F.broadcast(n_true))
-        .selectExpr(
-            "n_bands", "bits_per_band",
-            "CAST(n_candidates AS BIGINT) AS n_candidates",
-            "CAST(n_verified AS BIGINT) AS n_verified",
-            "CAST(n_true AS BIGINT) AS n_true",
-            "CAST(n_verified AS DOUBLE)"
-            " / CAST(nullif(n_candidates, 0) AS DOUBLE)"
-            " AS candidate_precision",
-            "CAST(n_verified AS DOUBLE) / CAST(nullif(n_true, 0) AS DOUBLE)"
-            " AS recall")
-        .orderBy("n_bands")
-    )
+    return _banding_sweep(_afp_signatures(spark, sf_dir), "afp",
+                          AFP_SWEEP_CONFIGS, AFP_HAMMING_MAX)
 
 
 def _afp_sweep_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         AFP_ORACLE_CTES,
     )
-    ctes = [AFP_ORACLE_CTES.strip()]
-    per_config = []
-    for n_bands, bits in AFP_SWEEP_CONFIGS:
-        tag = f"{n_bands}x{bits}"
-        ctes.append(f"bands_{tag} AS ({_afp_band_rows_sql(n_bands, bits)})")
-        ctes.append(
-            f"cand_{tag} AS (SELECT DISTINCT a.doc_id AS d1, a.afp AS p1, "
-            f"b.doc_id AS d2, b.afp AS p2 "
-            f"FROM bands_{tag} a JOIN bands_{tag} b "
-            f"ON a.band_idx = b.band_idx AND a.band_val = b.band_val "
-            f"AND a.doc_id < b.doc_id)")
-        ctes.append(
-            f"agg_{tag} AS (SELECT COUNT(*) AS n_candidates, "
-            f"SUM(CASE WHEN {H.hamming('p1', 'p2', 'duck')} <= "
-            f"{AFP_HAMMING_MAX} THEN 1 ELSE 0 END) AS n_verified "
-            f"FROM cand_{tag})")
-        per_config.append(
-            f"SELECT {n_bands} AS n_bands, {bits} AS bits_per_band, "
-            f"CAST(n_candidates AS BIGINT) AS n_candidates, "
-            f"CAST(n_verified AS BIGINT) AS n_verified FROM agg_{tag}")
-    exact_tag = f"{AFP_N_BANDS}x{AFP_BAND_BITS}"
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f",\nunioned AS ({' UNION ALL '.join(per_config)}),\n"
-        + f"tp AS (SELECT n_verified AS n_true FROM agg_{exact_tag})\n"
-        + "SELECT n_bands, bits_per_band, n_candidates, n_verified,\n"
-        + "       CAST(n_true AS BIGINT) AS n_true,\n"
-        + "       CAST(n_verified AS DOUBLE)"
-        + " / CAST(NULLIF(n_candidates, 0) AS DOUBLE)"
-        + " AS candidate_precision,\n"
-        + "       CAST(n_verified AS DOUBLE)"
-        + " / CAST(NULLIF(n_true, 0) AS DOUBLE) AS recall\n"
-        + "FROM unioned CROSS JOIN tp ORDER BY n_bands")
+    return _banding_sweep_sql(AFP_ORACLE_CTES, "afpt", "afp",
+                              AFP_SWEEP_CONFIGS, AFP_HAMMING_MAX)
 
 
 QUERIES["afp_banding_sweep"] = afp_banding_sweep
@@ -2319,51 +2070,18 @@ def dedup_audio_fingerprint_incremental(spark: SparkSession,
     At 100 TB the existing side's (doc_id, afp, band) rows are a
     persisted artifact written at each doc's own ingest; per-ingest cost
     is O(batch + matched buckets). Output: (new_id, dup_of, hamming)."""
-    ph = _afp_signatures(spark, sf_dir)
-    is_new = (F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW
-    # one predicated band self-join — see dedup_image_phash_incremental
-    bands = _afp_bands_of(ph).withColumn("is_new", is_new)
-    a = bands.filter("is_new").select(
-        F.col("doc_id").alias("d1"), F.col("afp").alias("p1"),
-        "band_idx", "band_val")
-    b = bands.select(
-        F.col("doc_id").alias("d2"), F.col("afp").alias("p2"),
-        F.col("is_new").alias("new2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter((~F.col("new2")) | (F.col("d1") < F.col("d2")))
-        # r16 early verify (see dedup_simhash)
-        .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= AFP_HAMMING_MAX)
-        .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                "hamming")
-        .dropDuplicates()
-        .orderBy("new_id", "dup_of")
-    )
+    return _sig_pairs(_afp_signatures(spark, sf_dir), "afp",
+                      PROD_BANDS56, AFP_HAMMING_MAX,
+                      is_new=(F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW)
 
 
 def _audio_fingerprint_incremental_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         AFP_ORACLE_CTES,
     )
-    return f"""
-WITH {AFP_ORACLE_CTES},
-bands AS ({_afp_band_rows_sql(AFP_N_BANDS, AFP_BAND_BITS)}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, a.afp AS p1,
-         b.doc_id AS d2, b.afp AS p2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id % 4 = {AFP_INCREMENTAL_NEW}
-   AND (b.doc_id % 4 != {AFP_INCREMENTAL_NEW}
-        OR (b.doc_id % 4 = {AFP_INCREMENTAL_NEW}
-            AND a.doc_id < b.doc_id)))
-SELECT d1 AS new_id, d2 AS dup_of,
-       {H.hamming('p1', 'p2', 'duck')} AS hamming
-FROM cand
-WHERE {H.hamming('p1', 'p2', 'duck')} <= {AFP_HAMMING_MAX}
-ORDER BY new_id, dup_of
-"""
+    return _sig_pairs_oracle(
+        AFP_ORACLE_CTES, "afpt", "afp", AFP_HAMMING_MAX,
+        is_new=f"{{}}.doc_id % 4 = {AFP_INCREMENTAL_NEW}")
 
 
 QUERIES["dedup_audio_fingerprint_incremental"] = \
@@ -2377,8 +2095,7 @@ ORACLES["dedup_audio_fingerprint_incremental"] = \
 # ---------------------------------------------------------------------------
 # video-family banding constants (the family itself lives further down;
 # the import-time oracle builders here need the constants already bound)
-VFP_N_BANDS = 4
-VFP_BAND_BITS = 14            # 4 x 14 = the full 56-bit per-frame hash
+VFP_N_BANDS = 4               # 4 x 14 bits = the full 56-bit frame hash
 VFP_HAMMING_MAX = 3           # < VFP_N_BANDS -> per-frame banding EXACT
 VFP_MIN_FRAMES = 3            # M of K aligned frames must match
 VFP_INCREMENTAL_NEW = 1       # doc_id % 4 == 1 -> incoming batch
@@ -2394,18 +2111,18 @@ def _banded_family_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     mh = minhash_band_table(spark, sf_dir).selectExpr(
         "'minhash_lsh' AS family", "CAST(band_idx AS INT) AS band_idx",
         "CAST(signature AS STRING) AS key")
-    ph = _phash_signatures(spark, sf_dir)
-    ph_rows = ph.select(
-        "doc_id",
-        F.posexplode(F.array(*[
-            F.expr(_prod_band56("phash", bi, PHASH_N_BANDS, "spark"))
-            for bi in range(PHASH_N_BANDS)])).alias("band_idx", "band_val")
+    ph_rows = explode_bands(
+        _phash_signatures(spark, sf_dir),
+        band_exprs("phash", PROD_BANDS56, "spark"), "doc_id"
     ).selectExpr("'image_phash' AS family", "CAST(band_idx AS INT)"
                  " AS band_idx", "CAST(band_val AS STRING) AS key")
-    af_rows = _afp_bands_of(_afp_signatures(spark, sf_dir)).selectExpr(
+    af_rows = explode_bands(
+        _afp_signatures(spark, sf_dir),
+        band_exprs("afp", PROD_BANDS56, "spark"), "doc_id", "afp"
+    ).selectExpr(
         "'audio_afp' AS family", "CAST(band_idx AS INT) AS band_idx",
         "CAST(band_val AS STRING) AS key")
-    vf_rows = _vfp_bands_of(_vfp_signatures(spark, sf_dir)).selectExpr(
+    vf_rows = _vfp_bands(_vfp_signatures(spark, sf_dir)).selectExpr(
         "'video_vfh_frame' AS family", "CAST(band_idx AS INT) AS band_idx",
         "CONCAT(CAST(frame_idx AS STRING), ':',"
         " CAST(band_val AS STRING)) AS key")
@@ -2500,22 +2217,10 @@ def _banded_family_sizes_sql(extra_ctes: str = "",
         f"SELECT {bi} AS band_idx, "
         f"CAST({H.lsh_band(mcols, bi, 'duck')} AS VARCHAR) AS key FROM mh"
         for bi in range(H.LSH_BANDS))
-    pband_rows = "\nUNION ALL\n".join(
-        f"SELECT {bi} AS band_idx, "
-        f"CAST({_prod_band56('phash', bi, PHASH_N_BANDS, 'duck')}"
-        f" AS VARCHAR) AS key FROM ph"
-        for bi in range(PHASH_N_BANDS))
-    aband_rows = "\nUNION ALL\n".join(
-        f"SELECT {bi} AS band_idx, "
-        f"CAST({_prod_band56('afp', bi, AFP_N_BANDS, 'duck')}"
-        f" AS VARCHAR) AS key FROM afpt"
-        for bi in range(AFP_N_BANDS))
-    vband_rows = "\nUNION ALL\n".join(
-        f"SELECT {bi} AS band_idx, "
-        f"CAST(frame_idx AS VARCHAR) || ':' || "
-        f"CAST({_prod_band56('vfh', bi, VFP_N_BANDS, 'duck')}"
-        f" AS VARCHAR) AS key FROM vft"
-        for bi in range(VFP_N_BANDS))
+    vband_rows = (
+        "SELECT band_idx, CAST(frame_idx AS VARCHAR) || ':' || "
+        "CAST(band_val AS VARCHAR) AS key FROM "
+        f"({band_rows_sql('vft', 'vfh', PROD_BANDS56, ['frame_idx'])})")
     return f"""
 WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks
               FROM documents),
@@ -2531,9 +2236,9 @@ mh AS (SELECT doc_id, sh,
 {extra_ctes}rows_all AS (
   SELECT 'minhash_lsh' AS family, band_idx, key FROM ({mband_rows})
   UNION ALL
-  SELECT 'image_phash' AS family, band_idx, key FROM ({pband_rows})
+  SELECT 'image_phash' AS family, band_idx, key FROM ({_band_keys_sql('ph', 'phash', PROD_BANDS56)})
   UNION ALL
-  SELECT 'audio_afp' AS family, band_idx, key FROM ({aband_rows})
+  SELECT 'audio_afp' AS family, band_idx, key FROM ({_band_keys_sql('afpt', 'afp', PROD_BANDS56)})
   UNION ALL
   SELECT 'video_vfh_frame' AS family, band_idx, key FROM ({vband_rows})
   {extra_arms}),
@@ -2541,6 +2246,12 @@ sizes AS (
   SELECT family, band_idx, key, CAST(COUNT(*) AS BIGINT) AS k
   FROM rows_all GROUP BY family, band_idx, key)
 """
+
+
+def _band_keys_sql(src: str, sig: str, layout: Layout) -> str:
+    """(band_idx, key) rows of table ``src`` for the bucket-size oracles."""
+    return (f"SELECT band_idx, CAST(band_val AS VARCHAR) AS key "
+            f"FROM ({band_rows_sql(src, sig, layout)})")
 
 
 def _band_skew_oracle() -> str:
@@ -2915,13 +2626,9 @@ def dedup_image_phash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the salted shuffle, the signature-only-shuffle discipline
     shared with the minhash path."""
     ph = _phash_signatures(spark, sf_dir)
-    bands = ph.select(
-        "doc_id",
-        F.posexplode(F.array(*[
-            F.expr(_prod_band56("phash", bi, PHASH_N_BANDS, "spark"))
-            for bi in range(PHASH_N_BANDS)
-        ])).alias("band_idx", "band_val"))
-    cand = salted_band_candidates(bands, ["band_idx", "band_val"])
+    bands = explode_bands(ph, band_exprs("phash", PROD_BANDS56, "spark"),
+                          "doc_id")
+    cand = salted_band_candidates(bands, BAND_COLS)
     p1 = ph.select(F.col("doc_id").alias("d1"), F.col("phash").alias("p1"))
     p2 = ph.select(F.col("doc_id").alias("d2"), F.col("phash").alias("p2"))
     return (
@@ -2940,36 +2647,6 @@ ORACLES["dedup_image_phash_salted"] = _image_phash_oracle()
 # ---------------------------------------------------------------------------
 # combinatorial (2-of-5) banding: the birthday-regime remedy
 # ---------------------------------------------------------------------------
-PHASH_C2_N_SUB = 5   # 5 strided sub-bands; hamming<=3 leaves >=2 intact
-
-
-def _c2_bits(b: int, total_bits: int = 56) -> int:
-    """Width of strided sub-band b under the 5-way split of total_bits
-    (band b owns bits {i : i mod 5 == b}): 12 for b=0, 11 otherwise at
-    56 bits; 13/13/12/12/12 at the 62-bit simhash64 width."""
-    return len(range(b, total_bits, PHASH_C2_N_SUB))
-
-
-def _c2_pair_exprs(col: str, dialect: str,
-                   total_bits: int = 56) -> "list[str]":
-    """The 10 composite band-PAIR keys over 5 strided sub-bands.
-    Exactness for hamming <= 3: each differing bit lies in exactly one
-    sub-band, so <= 3 sub-bands are touched and >= 2 remain intact —
-    the intact pair's composite key (v_i * 2^bits_j + v_j, index-sorted)
-    collides. Key space per pair is ~2^22-2^23 vs 2^14 for a single
-    14-bit band: this is the knob that keeps AVERAGE bucket occupancy
-    << 1 once the corpus outgrows the 16,384-value single-band space
-    (the birthday regime the 100x video probe measured — see
-    SCALING.md). Cost: 10 exploded rows/doc instead of 4."""
-    from itertools import combinations
-    out = []
-    for i, j in combinations(range(PHASH_C2_N_SUB), 2):
-        vi = _phash_strided_band(col, i, PHASH_C2_N_SUB, dialect, total_bits)
-        vj = _phash_strided_band(col, j, PHASH_C2_N_SUB, dialect, total_bits)
-        out.append(f"(({vi}) * {1 << _c2_bits(j, total_bits)} + ({vj}))")
-    return out
-
-
 def dedup_image_phash_bandpairs(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """dedup_image_phash re-blocked on combinatorial 2-of-5 band pairs —
@@ -2980,31 +2657,40 @@ def dedup_image_phash_bandpairs(spark: SparkSession,
     the ~2^23 composite key space defers that cliff by ~500x corpus
     growth. phash_blocking_scheme_audit carries the per-scheme numbers;
     the scale probe measures them at 500k docs."""
-    ph = _phash_signatures(spark, sf_dir)
-    bands = ph.select(
-        "doc_id", "phash",
-        F.posexplode(F.array(*[
-            F.expr(e) for e in _c2_pair_exprs("phash", "spark")
-        ])).alias("band_idx", "band_val"))
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     F.col("phash").alias("p1"), "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col("phash").alias("p2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        # r16 early verify (see dedup_simhash): distinct carries only
-        # verified rows, no signatures, no first() aggs
-        .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
-        .select("d1", "d2", "hamming")
-        .dropDuplicates()
-        .orderBy("d1", "d2")
-    )
+    return _sig_pairs(_phash_signatures(spark, sf_dir), "phash", PAIRS56,
+                      PHASH_HAMMING_MAX)
 
 
 QUERIES["dedup_image_phash_bandpairs"] = dedup_image_phash_bandpairs
 ORACLES["dedup_image_phash_bandpairs"] = _image_phash_oracle()
+
+
+def _scheme_audit(schemes, hamming_max: int) -> DataFrame:
+    """Per (scheme, signature frame, sig column, layout): n_band_rows,
+    n_buckets, max_bucket_size, n_candidates, n_verified and
+    candidate_precision of the scheme's own band self-join."""
+    out = None
+    for scheme, sigs, sig, layout in schemes:
+        bands = explode_bands(sigs, band_exprs(sig, layout, "spark"),
+                              "doc_id", sig)
+        buckets = (bands.groupBy("band_idx", "band_val")
+                   .agg(F.count(F.lit(1)).alias("sz"))
+                   .agg(F.sum("sz").cast("long").alias("n_band_rows"),
+                        F.count(F.lit(1)).cast("long").alias("n_buckets"),
+                        F.max("sz").cast("long").alias("max_bucket_size")))
+        cand = (banded_pairs(bands, sig)
+                .withColumn("hm", F.expr(H.hamming("s1", "s2", "spark")))
+                .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"),
+                     F.sum(F.when(F.col("hm") <= hamming_max, 1)
+                           .otherwise(0)).cast("long").alias("n_verified")))
+        row = (buckets.crossJoin(cand).selectExpr(
+            f"'{scheme}' AS scheme", "n_band_rows", "n_buckets",
+            "max_bucket_size", "n_candidates", "n_verified",
+            "CAST(n_verified AS DOUBLE)"
+            " / CAST(nullif(n_candidates, 0) AS DOUBLE)"
+            " AS candidate_precision"))
+        out = row if out is None else out.unionByName(row)
+    return out.orderBy("scheme")
 
 
 def phash_blocking_scheme_audit(spark: SparkSession,
@@ -3023,98 +2709,24 @@ def phash_blocking_scheme_audit(spark: SparkSession,
     deployment consults (on a sample) to pick the blocking BEFORE the
     join ships."""
     ph = _phash_signatures(spark, sf_dir)
-    schemes = [
-        ("band4x14_strided", [
-            _prod_band56("phash", bi, PHASH_N_BANDS, "spark")
-            for bi in range(PHASH_N_BANDS)]),
-        ("bandpairs_2of5", _c2_pair_exprs("phash", "spark")),
-    ]
-    out = None
-    for scheme, exprs in schemes:
-        bands = ph.select(
-            "doc_id", "phash",
-            F.posexplode(F.array(*[F.expr(e) for e in exprs]))
-            .alias("band_idx", "band_val"))
-        buckets = (bands.groupBy("band_idx", "band_val")
-                   .agg(F.count(F.lit(1)).alias("sz"))
-                   .agg(F.sum("sz").cast("long").alias("n_band_rows"),
-                        F.count(F.lit(1)).cast("long").alias("n_buckets"),
-                        F.max("sz").cast("long").alias("max_bucket_size")))
-        a = bands.select(F.col("doc_id").alias("d1"),
-                         F.col("phash").alias("p1"),
-                         "band_idx", "band_val")
-        b = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("phash").alias("p2"),
-                         "band_idx", "band_val")
-        cand = (a.join(b, ["band_idx", "band_val"])
-                .filter(F.col("d1") < F.col("d2"))
-                .dropDuplicates(["d1", "d2"])
-                .withColumn("hm", F.expr(H.hamming("p1", "p2", "spark")))
-                .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"),
-                     F.sum(F.when(F.col("hm") <= PHASH_HAMMING_MAX, 1)
-                           .otherwise(0)).cast("long").alias("n_verified")))
-        row = (buckets.crossJoin(cand).selectExpr(
-            f"'{scheme}' AS scheme", "n_band_rows", "n_buckets",
-            "max_bucket_size", "n_candidates", "n_verified",
-            "CAST(n_verified AS DOUBLE)"
-            " / CAST(nullif(n_candidates, 0) AS DOUBLE)"
-            " AS candidate_precision"))
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("scheme")
+    return _scheme_audit([("band4x14_strided", ph, "phash", PROD_BANDS56),
+                          ("bandpairs_2of5", ph, "phash", PAIRS56)],
+                         PHASH_HAMMING_MAX)
 
 
 def _blocking_scheme_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         PHASH_ORACLE_CTES,
     )
-    ctes = [PHASH_ORACLE_CTES.strip()]
-    selects = []
-    for scheme, exprs in (
-        ("band4x14_strided", [
-            _prod_band56("phash", bi, PHASH_N_BANDS, "duck")
-            for bi in range(PHASH_N_BANDS)]),
-        ("bandpairs_2of5", _c2_pair_exprs("phash", "duck")),
-    ):
-        tag = scheme[:8]
-        band_rows = "\nUNION ALL\n".join(
-            f"SELECT doc_id, phash, {bi} AS band_idx, "
-            f"{e} AS band_val FROM ph"
-            for bi, e in enumerate(exprs))
-        ctes.append(f"bands_{tag} AS ({band_rows})")
-        ctes.append(
-            f"bk_{tag} AS (SELECT CAST(SUM(sz) AS BIGINT) AS n_band_rows, "
-            f"CAST(COUNT(*) AS BIGINT) AS n_buckets, "
-            f"CAST(MAX(sz) AS BIGINT) AS max_bucket_size FROM "
-            f"(SELECT band_idx, band_val, COUNT(*) AS sz FROM bands_{tag} "
-            f"GROUP BY band_idx, band_val) h)")
-        ctes.append(
-            f"cand_{tag} AS (SELECT DISTINCT a.doc_id AS d1, "
-            f"a.phash AS p1, b.doc_id AS d2, b.phash AS p2 "
-            f"FROM bands_{tag} a JOIN bands_{tag} b "
-            f"ON a.band_idx = b.band_idx AND a.band_val = b.band_val "
-            f"AND a.doc_id < b.doc_id)")
-        ctes.append(
-            f"agg_{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
-            f"n_candidates, CAST(SUM(CASE WHEN "
-            f"{H.hamming('p1', 'p2', 'duck')} <= {PHASH_HAMMING_MAX} "
-            f"THEN 1 ELSE 0 END) AS BIGINT) AS n_verified "
-            f"FROM cand_{tag})")
-        selects.append(
-            f"SELECT '{scheme}' AS scheme, n_band_rows, n_buckets, "
-            f"max_bucket_size, n_candidates, n_verified, "
-            f"CAST(n_verified AS DOUBLE)"
-            f" / CAST(NULLIF(n_candidates, 0) AS DOUBLE)"
-            f" AS candidate_precision FROM bk_{tag} CROSS JOIN agg_{tag}")
-    return ("WITH " + ",\n".join(ctes) + "\n"
-            + "\nUNION ALL\n".join(selects) + "\nORDER BY scheme")
+    return _scheme_audit_sql(
+        PHASH_ORACLE_CTES,
+        [("band4x14_strided", "ph", "phash", PROD_BANDS56),
+         ("bandpairs_2of5", "ph", "phash", PAIRS56)],
+        PHASH_HAMMING_MAX, "scheme")
 
 
 QUERIES["phash_blocking_scheme_audit"] = phash_blocking_scheme_audit
 ORACLES["phash_blocking_scheme_audit"] = _blocking_scheme_oracle()
-
-
-# (dedup_video_fingerprint_bandpairs lives at the end of the module —
-# its oracle builder needs the video section's definitions at import)
 
 
 # ---------------------------------------------------------------------------
@@ -3137,13 +2749,9 @@ def _vfp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_memo(spark, ("video_vfp", sf_dir), build)
 
 
-def _vfp_bands_of(side: DataFrame) -> DataFrame:
-    return side.select(
-        "doc_id", "frame_idx",
-        F.posexplode(F.array(*[
-            F.expr(_prod_band56("vfh", bi, VFP_N_BANDS, "spark"))
-            for bi in range(VFP_N_BANDS)
-        ])).alias("band_idx", "band_val"))
+def _vfp_bands(vf: DataFrame, layout: Layout = PROD_BANDS56) -> DataFrame:
+    return explode_bands(vf, band_exprs("vfh", layout, "spark"),
+                         "doc_id", "frame_idx")
 
 
 def _vfp_frame_match_counts(cand: DataFrame, vf: DataFrame) -> DataFrame:
@@ -3175,6 +2783,18 @@ def _vfp_frame_match_counts(cand: DataFrame, vf: DataFrame) -> DataFrame:
     )
 
 
+def _vfp_matches(vf: DataFrame, layout: Layout = PROD_BANDS56,
+                 is_new: "F.Column | None" = None) -> DataFrame:
+    """(d1, d2, frames_matched) for pairs meeting the M-of-K rule: the
+    per-frame band join keyed (frame_idx, band_idx, band_val) yields doc
+    candidates, the frame-aligned fold verifies them; ``is_new`` selects
+    the incremental form. Unordered."""
+    cand = banded_pairs(_vfp_bands(vf, layout), keys=["frame_idx"],
+                        is_new=is_new, keep=["d1", "d2"])
+    return (_vfp_frame_match_counts(cand, vf)
+            .filter(F.col("frames_matched") >= VFP_MIN_FRAMES))
+
+
 def dedup_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video near-duplicate pairs: per-frame decoded pixels -> per-frame
     56-bit dHash (multimodal.video_fingerprint_frame, the only Python
@@ -3197,54 +2817,24 @@ def dedup_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: signatures are VFP_FRAMES x 16 bytes/doc; the band join
     shuffles (frame, band) keyed id rows only — frames never leave the
     scan stage. Candidates stay O(colliding frame pairs)."""
-    vf = _vfp_signatures(spark, sf_dir)
-    bands = _vfp_bands_of(vf)
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     "frame_idx", "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     "frame_idx", "band_idx", "band_val")
-    cand = (
-        a.join(b, ["frame_idx", "band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2")
-        .dropDuplicates(["d1", "d2"])
-    )
-    return (
-        _vfp_frame_match_counts(cand, vf)
-        .filter(F.col("frames_matched") >= VFP_MIN_FRAMES)
-        .orderBy("d1", "d2")
-    )
+    return _vfp_matches(_vfp_signatures(spark, sf_dir)).orderBy("d1", "d2")
 
 
-def _vfp_band_rows_sql(n_bands: int, bits: int,
-                       layout: str = "contiguous") -> str:
-    """Per-(frame, band) oracle rows. Verified-pair oracles may use either
-    layout (pigeonhole exactness — see _prod_band56); oracles whose OUTPUT
-    depends on the candidate set (vfp_frame_match_sweep) must pass
-    layout='prod' to mirror the production strided banding."""
-    def band(bi: int) -> str:
-        if layout == "prod":
-            return _prod_band56("vfh", bi, n_bands, "duck")
-        return _phash_band("vfh", bi, bits, "duck")
-    return "\nUNION ALL\n".join(
-        f"SELECT doc_id, frame_idx, {bi} AS band_idx, "
-        f"{band(bi)} AS band_val "
-        f"FROM vft"
-        for bi in range(n_bands))
-
-
-def _vfp_oracle_prefix(layout: str = "contiguous") -> str:
+def _vfp_oracle_prefix(layout: Layout = ORACLE_BANDS56,
+                       is_new: "str | None" = None) -> str:
+    """The video oracles' CTE prefix: doc candidates of the per-frame
+    band join (``cand``) and their frame-aligned match counts
+    (``matched``). Verified-pair oracles band contiguously; oracles whose
+    OUTPUT depends on the candidate set (vfp_frame_match_sweep) pass the
+    production layout."""
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         VFP_ORACLE_CTES,
     )
+    cand = banded_pairs_sql("vft", "vfh", layout, keys=["frame_idx"],
+                            has_sig=False, is_new=is_new)
     return f"""
 WITH {VFP_ORACLE_CTES.strip()},
-vbands AS ({_vfp_band_rows_sql(VFP_N_BANDS, VFP_BAND_BITS, layout)}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM vbands a JOIN vbands b
-    ON a.frame_idx = b.frame_idx AND a.band_idx = b.band_idx
-   AND a.band_val = b.band_val AND a.doc_id < b.doc_id),
+{cand},
 matched AS (
   SELECT c.d1, c.d2,
          CAST(SUM(CASE WHEN {H.hamming('x.vfh', 'y.vfh', 'duck')}
@@ -3282,20 +2872,14 @@ def vfp_frame_match_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     The candidate set is the PRODUCTION (strided) band join, so the
     low-M rows count real production candidates — unlike the verified
     pair set, these counts ARE layout-dependent, and the oracle mirrors
-    the strided layout (layout='prod').
+    the strided layout.
 
     Scale shape: one pass over the candidate frame-match counts, then a
     cumulative sum over a (VFP_FRAMES+1)-row grid. O(K) post-scan
     state."""
     vf = _vfp_signatures(spark, sf_dir)
-    bands = _vfp_bands_of(vf)
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     "frame_idx", "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     "frame_idx", "band_idx", "band_val")
-    cand = (a.join(b, ["frame_idx", "band_idx", "band_val"])
-            .filter(F.col("d1") < F.col("d2"))
-            .select("d1", "d2").dropDuplicates(["d1", "d2"]))
+    cand = banded_pairs(_vfp_bands(vf), keys=["frame_idx"],
+                        keep=["d1", "d2"])
     per_m = (_vfp_frame_match_counts(cand, vf)
              .groupBy("frames_matched")
              .agg(F.count(F.lit(1)).cast("long").alias("n")))
@@ -3319,7 +2903,7 @@ def _vfp_sweep_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         VFP_FRAMES,
     )
-    return (_vfp_oracle_prefix(layout="prod")
+    return (_vfp_oracle_prefix(PROD_BANDS56)
             + f""",
 per_m AS (SELECT frames_matched, CAST(COUNT(*) AS BIGINT) AS n
           FROM matched GROUP BY frames_matched),
@@ -3340,6 +2924,14 @@ QUERIES["vfp_frame_match_sweep"] = vfp_frame_match_sweep
 ORACLES["vfp_frame_match_sweep"] = _vfp_sweep_oracle()
 
 
+def _vfp_incremental(vf: DataFrame, layout: Layout) -> DataFrame:
+    return (_vfp_matches(vf, layout,
+                         is_new=(F.col("doc_id") % 4) == VFP_INCREMENTAL_NEW)
+            .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
+                    "frames_matched")
+            .orderBy("new_id", "dup_of"))
+
+
 def dedup_video_fingerprint_incremental(spark: SparkSession,
                                         sf_dir: str) -> DataFrame:
     """Delta-ingest video dedup — the incremental asymmetry of the
@@ -3356,57 +2948,17 @@ def dedup_video_fingerprint_incremental(spark: SparkSession,
     ingest); per-ingest cost is O(batch + matched buckets). Output:
     (new_id, dup_of, frames_matched) under the same M-of-K rule as the
     batch form."""
-    vf = _vfp_signatures(spark, sf_dir)
-    is_new = (F.col("doc_id") % 4) == VFP_INCREMENTAL_NEW
-    # one predicated band self-join — see dedup_image_phash_incremental
-    bands = _vfp_bands_of(vf).withColumn("is_new", is_new)
-    a = bands.filter("is_new").select(
-        F.col("doc_id").alias("d1"), "frame_idx", "band_idx", "band_val")
-    b = bands.select(
-        F.col("doc_id").alias("d2"), F.col("is_new").alias("new2"),
-        "frame_idx", "band_idx", "band_val")
-    cand = (a.join(b, ["frame_idx", "band_idx", "band_val"])
-            .filter((~F.col("new2")) | (F.col("d1") < F.col("d2")))
-            .select("d1", "d2")
-            .dropDuplicates(["d1", "d2"]))
-    return (
-        _vfp_frame_match_counts(cand, vf)
-        .filter(F.col("frames_matched") >= VFP_MIN_FRAMES)
-        .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                "frames_matched")
-        .orderBy("new_id", "dup_of")
-    )
+    return _vfp_incremental(_vfp_signatures(spark, sf_dir), PROD_BANDS56)
 
 
 def _video_fingerprint_incremental_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        VFP_ORACLE_CTES,
-    )
-    return f"""
-WITH {VFP_ORACLE_CTES.strip()},
-vbands AS ({_vfp_band_rows_sql(VFP_N_BANDS, VFP_BAND_BITS)}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM vbands a JOIN vbands b
-    ON a.frame_idx = b.frame_idx AND a.band_idx = b.band_idx
-   AND a.band_val = b.band_val
-   AND a.doc_id % 4 = {VFP_INCREMENTAL_NEW}
-   AND (b.doc_id % 4 != {VFP_INCREMENTAL_NEW}
-        OR (b.doc_id % 4 = {VFP_INCREMENTAL_NEW}
-            AND a.doc_id < b.doc_id))),
-matched AS (
-  SELECT c.d1, c.d2,
-         CAST(SUM(CASE WHEN {H.hamming('x.vfh', 'y.vfh', 'duck')}
-                       <= {VFP_HAMMING_MAX} THEN 1 ELSE 0 END)
-              AS BIGINT) AS frames_matched
-  FROM cand c
-  JOIN vft x ON x.doc_id = c.d1
-  JOIN vft y ON y.doc_id = c.d2 AND y.frame_idx = x.frame_idx
-  GROUP BY c.d1, c.d2)
+    return (_vfp_oracle_prefix(
+        is_new=f"{{}}.doc_id % 4 = {VFP_INCREMENTAL_NEW}")
+        + f"""
 SELECT d1 AS new_id, d2 AS dup_of, frames_matched FROM matched
 WHERE frames_matched >= {VFP_MIN_FRAMES}
 ORDER BY new_id, dup_of
-"""
+""")
 
 
 QUERIES["dedup_video_fingerprint_incremental"] = \
@@ -3418,32 +2970,6 @@ ORACLES["dedup_video_fingerprint_incremental"] = \
 # ---------------------------------------------------------------------------
 # cross-media method agreement (image x audio x video dup-graph overlap)
 # ---------------------------------------------------------------------------
-def _hamming_pair_ids(sig_frame: DataFrame, sig_col: str, n_bands: int,
-                      hmax: int) -> DataFrame:
-    """(doc_id, sig) -> verified (d1, d2) hamming pairs via the banded
-    self-join — the batch image/audio pair pipeline with the
-    presentation columns stripped, shared by the agreement audit."""
-    bands = sig_frame.select(
-        "doc_id", sig_col,
-        F.posexplode(F.array(*[
-            F.expr(_prod_band56(sig_col, bi, n_bands, "spark"))
-            for bi in range(n_bands)
-        ])).alias("band_idx", "band_val"))
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     F.col(sig_col).alias("p1"), "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col(sig_col).alias("p2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        # r16 early verify (see dedup_simhash): the distinct carries
-        # only verified id pairs, no signatures
-        .filter(F.expr(H.hamming("p1", "p2", "spark")) <= hmax)
-        .select("d1", "d2")
-        .dropDuplicates(["d1", "d2"])
-    )
-
-
 def multimodal_method_agreement(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Do the three media dup graphs agree? For every pair flagged by
@@ -3461,23 +2987,16 @@ def multimodal_method_agreement(spark: SparkSession,
     the band joins are the same candidate-bounded shapes as the batch
     queries, the two full-outer joins are pair-table-sized, and the
     output is a <= 7-row combinable aggregation."""
-    img = _hamming_pair_ids(_phash_signatures(spark, sf_dir), "phash",
-                            PHASH_N_BANDS, PHASH_HAMMING_MAX) \
-        .withColumn("bi", F.lit(1))
-    aud = _hamming_pair_ids(_afp_signatures(spark, sf_dir), "afp",
-                            AFP_N_BANDS, AFP_HAMMING_MAX) \
-        .withColumn("ba", F.lit(1))
-    vf = _vfp_signatures(spark, sf_dir)
-    bands = _vfp_bands_of(vf)
-    vcand = (bands.select(F.col("doc_id").alias("d1"),
-                          "frame_idx", "band_idx", "band_val")
-             .join(bands.select(F.col("doc_id").alias("d2"),
-                                "frame_idx", "band_idx", "band_val"),
-                   ["frame_idx", "band_idx", "band_val"])
-             .filter(F.col("d1") < F.col("d2"))
-             .select("d1", "d2").dropDuplicates(["d1", "d2"]))
-    vid = (_vfp_frame_match_counts(vcand, vf)
-           .filter(F.col("frames_matched") >= VFP_MIN_FRAMES)
+    def pair_ids(sigs: DataFrame, sig: str, hamming_max: int) -> DataFrame:
+        return banded_pairs(
+            explode_bands(sigs, band_exprs(sig, PROD_BANDS56, "spark"),
+                          "doc_id", sig),
+            sig, hamming_max=hamming_max, keep=["d1", "d2"])
+    img = pair_ids(_phash_signatures(spark, sf_dir), "phash",
+                   PHASH_HAMMING_MAX).withColumn("bi", F.lit(1))
+    aud = pair_ids(_afp_signatures(spark, sf_dir), "afp",
+                   AFP_HAMMING_MAX).withColumn("ba", F.lit(1))
+    vid = (_vfp_matches(_vfp_signatures(spark, sf_dir))
            .select("d1", "d2").withColumn("bv", F.lit(1)))
     merged = (img.join(aud, ["d1", "d2"], "full_outer")
               .join(vid, ["d1", "d2"], "full_outer"))
@@ -3497,45 +3016,19 @@ def _multimodal_agreement_oracle() -> str:
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         AFP_ORACLE_CTES,
         PHASH_ORACLE_CTES,
-        VFP_ORACLE_CTES,
     )
-    iband_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, phash, {bi} AS band_idx, "
-        f"{_phash_band('phash', bi, PHASH_BAND_BITS, 'duck')} AS band_val "
-        f"FROM ph" for bi in range(PHASH_N_BANDS))
-    return f"""
-WITH {PHASH_ORACLE_CTES.strip()},
+    ham = H.hamming("s1", "s2", "duck")
+    return _vfp_oracle_prefix() + f""",
+{PHASH_ORACLE_CTES.strip()},
 {AFP_ORACLE_CTES.strip()},
-{VFP_ORACLE_CTES.strip()},
-ibands AS ({iband_rows}),
-abands AS ({_afp_band_rows_sql(AFP_N_BANDS, AFP_BAND_BITS)}),
-vbands AS ({_vfp_band_rows_sql(VFP_N_BANDS, VFP_BAND_BITS)}),
-ip AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM ibands a JOIN ibands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id
-  WHERE {H.hamming('a.phash', 'b.phash', 'duck')} <= {PHASH_HAMMING_MAX}),
-ap AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM abands a JOIN abands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id
-  WHERE {H.hamming('a.afp', 'b.afp', 'duck')} <= {AFP_HAMMING_MAX}),
-vcand AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM vbands a JOIN vbands b
-    ON a.frame_idx = b.frame_idx AND a.band_idx = b.band_idx
-   AND a.band_val = b.band_val AND a.doc_id < b.doc_id),
-vp AS (
-  SELECT c.d1, c.d2
-  FROM vcand c
-  JOIN vft x ON x.doc_id = c.d1
-  JOIN vft y ON y.doc_id = c.d2 AND y.frame_idx = x.frame_idx
-  GROUP BY c.d1, c.d2
-  HAVING SUM(CASE WHEN {H.hamming('x.vfh', 'y.vfh', 'duck')}
-                  <= {VFP_HAMMING_MAX} THEN 1 ELSE 0 END)
-         >= {VFP_MIN_FRAMES}),
+{banded_pairs_sql('ph', 'phash', ORACLE_BANDS56, tag='_i')},
+{banded_pairs_sql('afpt', 'afp', ORACLE_BANDS56, tag='_a')},
+ip AS (SELECT DISTINCT d1, d2 FROM cand_i
+       WHERE {ham} <= {PHASH_HAMMING_MAX}),
+ap AS (SELECT DISTINCT d1, d2 FROM cand_a
+       WHERE {ham} <= {AFP_HAMMING_MAX}),
+vp AS (SELECT d1, d2 FROM matched
+       WHERE frames_matched >= {VFP_MIN_FRAMES}),
 allp AS (
   SELECT d1, d2 FROM ip UNION
   SELECT d1, d2 FROM ap UNION
@@ -3567,7 +3060,7 @@ def band_layout_audit_multimodal(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """phash_band_layout_audit generalized to every 56-bit perceptual
     signature — the one table that justifies the fleet-wide production
-    switch to strided banding (_prod_band56). Per (family, layout):
+    switch to strided banding (PROD_BANDS56). Per (family, layout):
     n_buckets, max_bucket_size, n_candidates, n_verified,
     candidate_precision over the family's own band self-join.
 
@@ -3585,32 +3078,28 @@ def band_layout_audit_multimodal(spark: SparkSession,
     signature frame explodes both layouts' bands in a single pass —
     feeding ONE bucket histogram, ONE band self-join keyed on (family,
     layout, align, band_idx, band_val), and one roll-up each, instead
-    of 6 per-combination shuffle trees (the strip-spans collapse,
-    r10 -> r11: 24 shuffles down to a handful; outputs and oracle
-    unchanged). No pixels/samples move."""
+    of 6 per-combination shuffle trees. No pixels/samples move."""
     fams = [
         ("audio_afp",
          _afp_signatures(spark, sf_dir).select(
              "doc_id", F.lit(0).alias("align"), F.col("afp").alias("sig")),
-         AFP_N_BANDS, AFP_BAND_BITS, AFP_HAMMING_MAX),
+         AFP_N_BANDS, AFP_HAMMING_MAX),
         ("image_phash",
          _phash_signatures(spark, sf_dir).select(
              "doc_id", F.lit(0).alias("align"),
              F.col("phash").alias("sig")),
-         PHASH_N_BANDS, PHASH_BAND_BITS, PHASH_HAMMING_MAX),
+         PHASH_N_BANDS, PHASH_HAMMING_MAX),
         ("video_vfh_frame",
          _vfp_signatures(spark, sf_dir).select(
              "doc_id", F.col("frame_idx").alias("align"),
              F.col("vfh").alias("sig")),
-         VFP_N_BANDS, VFP_BAND_BITS, VFP_HAMMING_MAX),
+         VFP_N_BANDS, VFP_HAMMING_MAX),
     ]
     bands = None
     hmax_expr = None
-    for family, sigs, n_bands, bits, hmax in fams:
-        exprs = ([_phash_band("sig", bi, bits, "spark")
-                  for bi in range(n_bands)]
-                 + [_phash_strided_band("sig", bi, n_bands, "spark")
-                    for bi in range(n_bands)])
+    for family, sigs, n_bands, hmax in fams:
+        exprs = (band_exprs("sig", Layout("contiguous", n_bands), "spark")
+                 + band_exprs("sig", Layout("strided", n_bands), "spark"))
         fb = sigs.select(
             F.lit(family).alias("family"), "doc_id", "align", "sig",
             F.posexplode(F.array(*[F.expr(e) for e in exprs]))
@@ -3624,7 +3113,7 @@ def band_layout_audit_multimodal(spark: SparkSession,
         bands = fb if bands is None else bands.unionByName(fb)
     # per-family verify threshold (all 3 at hamming<=3 today; keep the
     # lookup so a per-family change can't silently skew n_verified)
-    for family, _, _, _, hmax in fams:
+    for family, _, _, hmax in fams:
         cond = (F.col("family") == family, F.lit(hmax))
         hmax_expr = F.when(*cond) if hmax_expr is None \
             else hmax_expr.when(*cond)
@@ -3640,7 +3129,7 @@ def band_layout_audit_multimodal(spark: SparkSession,
     b = bands.select(*keys, "align", "band_idx", "band_val",
                      F.col("doc_id").alias("d2"), F.col("sig").alias("s2"))
     cand = (
-        a.join(b, [*keys, "align", "band_idx", "band_val"])
+        band_join(a, b, [*keys, "align"])
         .filter(F.col("d1") < F.col("d2"))
         .dropDuplicates([*keys, "d1", "d2", "align"])
         .withColumn("hm", F.expr(H.hamming("s1", "s2", "spark")))
@@ -3654,7 +3143,7 @@ def band_layout_audit_multimodal(spark: SparkSession,
     # same guard as lsh_banding_sweep's config universe)
     universe = spark.range(1).select(F.explode(F.array(*[
         F.struct(F.lit(fam).alias("family"), F.lit(lay).alias("layout"))
-        for fam, _, _, _, _ in fams
+        for fam, _, _, _ in fams
         for lay in ("contiguous", "strided")])).alias("c")
     ).select("c.family", "c.layout")
     return (
@@ -3690,48 +3179,34 @@ def _band_layout_multimodal_oracle() -> str:
     ctes.append("u_video_vfh_frame AS (SELECT doc_id, frame_idx AS align, "
                 "vfh AS sig FROM vft)")
     selects = []
-    for family, n_bands, bits, hmax in (
-        ("image_phash", PHASH_N_BANDS, PHASH_BAND_BITS, PHASH_HAMMING_MAX),
-        ("audio_afp", AFP_N_BANDS, AFP_BAND_BITS, AFP_HAMMING_MAX),
-        ("video_vfh_frame", VFP_N_BANDS, VFP_BAND_BITS, VFP_HAMMING_MAX),
+    for family, n_bands, hmax in (
+        ("image_phash", PHASH_N_BANDS, PHASH_HAMMING_MAX),
+        ("audio_afp", AFP_N_BANDS, AFP_HAMMING_MAX),
+        ("video_vfh_frame", VFP_N_BANDS, VFP_HAMMING_MAX),
     ):
-        for layout_name, band_expr in (
-            ("contiguous",
-             lambda bi, b=bits: _phash_band("sig", bi, b, "duck")),
-            ("strided",
-             lambda bi, nb=n_bands: _phash_strided_band(
-                 "sig", bi, nb, "duck")),
-        ):
-            tag = f"{family}_{layout_name[:4]}"
-            band_rows = "\nUNION ALL\n".join(
-                f"SELECT doc_id, align, sig, {bi} AS band_idx, "
-                f"{band_expr(bi)} AS band_val FROM u_{family}"
-                for bi in range(n_bands))
-            ctes.append(f"bands_{tag} AS ({band_rows})")
+        for layout_name in ("contiguous", "strided"):
+            tag = f"_{family}_{layout_name[:4]}"
+            ctes.append(banded_pairs_sql(
+                f"u_{family}", "sig", Layout(layout_name, n_bands),
+                keys=["align"], carry=["align"], tag=tag))
             ctes.append(
-                f"bk_{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
+                f"bk{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
                 f"n_buckets, CAST(MAX(sz) AS BIGINT) AS max_bucket_size "
                 f"FROM (SELECT align, band_idx, band_val, COUNT(*) AS sz "
-                f"FROM bands_{tag} GROUP BY align, band_idx, band_val) h)")
+                f"FROM bands{tag} GROUP BY align, band_idx, band_val) h)")
             ctes.append(
-                f"cand_{tag} AS (SELECT DISTINCT a.doc_id AS d1, "
-                f"a.sig AS s1, b.doc_id AS d2, b.sig AS s2, a.align "
-                f"FROM bands_{tag} a JOIN bands_{tag} b "
-                f"ON a.align = b.align AND a.band_idx = b.band_idx "
-                f"AND a.band_val = b.band_val AND a.doc_id < b.doc_id)")
-            ctes.append(
-                f"agg_{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
+                f"agg{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
                 f"n_candidates, CAST(SUM(CASE WHEN "
                 f"{H.hamming('s1', 's2', 'duck')} <= {hmax} "
                 f"THEN 1 ELSE 0 END) AS BIGINT) AS n_verified "
-                f"FROM cand_{tag})")
+                f"FROM cand{tag})")
             selects.append(
                 f"SELECT '{family}' AS family, '{layout_name}' AS layout, "
                 f"n_buckets, max_bucket_size, n_candidates, n_verified, "
                 f"CAST(n_verified AS DOUBLE)"
                 f" / CAST(NULLIF(n_candidates, 0) AS DOUBLE)"
-                f" AS candidate_precision FROM bk_{tag} "
-                f"CROSS JOIN agg_{tag}")
+                f" AS candidate_precision FROM bk{tag} "
+                f"CROSS JOIN agg{tag}")
     return ("WITH " + ",\n".join(ctes) + "\n"
             + "\nUNION ALL\n".join(selects)
             + "\nORDER BY family, layout")
@@ -3752,24 +3227,8 @@ def dedup_video_fingerprint_bandpairs(spark: SparkSession,
     oracle IS dedup_video_fingerprint's SQL — the hash gate proves the
     re-blocking loses nothing. The scale probe's video_vfh_c2 family
     measures what it buys at 100x."""
-    vf = _vfp_signatures(spark, sf_dir)
-    bands = vf.select(
-        "doc_id", "frame_idx",
-        F.posexplode(F.array(*[
-            F.expr(e) for e in _c2_pair_exprs("vfh", "spark")
-        ])).alias("band_idx", "band_val"))
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     "frame_idx", "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     "frame_idx", "band_idx", "band_val")
-    cand = (a.join(b, ["frame_idx", "band_idx", "band_val"])
-            .filter(F.col("d1") < F.col("d2"))
-            .select("d1", "d2").dropDuplicates(["d1", "d2"]))
-    return (
-        _vfp_frame_match_counts(cand, vf)
-        .filter(F.col("frames_matched") >= VFP_MIN_FRAMES)
-        .orderBy("d1", "d2")
-    )
+    return (_vfp_matches(_vfp_signatures(spark, sf_dir), PAIRS56)
+            .orderBy("d1", "d2"))
 
 
 QUERIES["dedup_video_fingerprint_bandpairs"] = \
@@ -3786,26 +3245,8 @@ def dedup_audio_fingerprint_bandpairs(spark: SparkSession,
     sub-bands intact), candidate volume on the band-pair curve. The
     same SCALING.md crossover guidance applies: single strided bands
     below ~16k-bucket occupancy, band pairs past it."""
-    ph = _afp_signatures(spark, sf_dir)
-    bands = ph.select(
-        "doc_id", "afp",
-        F.posexplode(F.array(*[
-            F.expr(e) for e in _c2_pair_exprs("afp", "spark")
-        ])).alias("band_idx", "band_val"))
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     F.col("afp").alias("p1"), "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col("afp").alias("p2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        # r16 early verify (see dedup_simhash)
-        .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= AFP_HAMMING_MAX)
-        .select("d1", "d2", "hamming")
-        .dropDuplicates()
-        .orderBy("d1", "d2")
-    )
+    return _sig_pairs(_afp_signatures(spark, sf_dir), "afp", PAIRS56,
+                      AFP_HAMMING_MAX)
 
 
 QUERIES["dedup_audio_fingerprint_bandpairs"] = \
@@ -3817,6 +3258,8 @@ ORACLES["dedup_audio_fingerprint_bandpairs"] = _audio_fingerprint_oracle()
 # 64-bit simhash: the widened-sketch remedy for the 32-bit birthday cap
 # ---------------------------------------------------------------------------
 SIMHASH64_BITS = H.SIMHASH64_BITS   # 62 informative bits (2x31, rehash64)
+PAIRS62 = Layout("pairs", PHASH_C2_N_SUB, SIMHASH64_BITS)
+SIMHASH64_ORACLE_BANDS = Layout("contiguous", 4, 64)   # 4 x 16-bit bands
 
 
 def _simhash64_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3870,61 +3313,39 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     than at 32 (more bits must agree), which is the point: the coarse
     prefilter becomes a usable near-dup detector once the sketch is
     wide enough to band."""
-    sim = _simhash64_signatures(spark, sf_dir)
-    bands = sim.select(
-        "doc_id", "simhash",
-        F.posexplode(F.array(*[
-            F.expr(e)
-            for e in _c2_pair_exprs("simhash", "spark", SIMHASH64_BITS)
-        ])).alias("band_idx", "band_val"))
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     F.col("simhash").alias("s1"), "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col("simhash").alias("s2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        # r16 early verify (see dedup_simhash)
-        .withColumn("hamming", F.expr(H.hamming("s1", "s2", "spark")))
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        .select("d1", "d2", "hamming")
-        .dropDuplicates()
-        .orderBy("d1", "d2")
-    )
+    return _sig_pairs(_simhash64_signatures(spark, sf_dir), "simhash",
+                      PAIRS62, HAMMING_MAX)
 
 
-def _simhash64_oracle() -> str:
-    # contiguous 4x16 banding: exact for hamming <= 3 (pigeonhole over a
-    # 4-way bit partition), far cheaper SQL than the 10 pair keys; the
-    # output equality under a DIFFERENT exact blocking is the strongest
-    # form of the check
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, simhash, {bi} AS band_idx, "
-        f"{_phash_band('simhash', bi, 16, 'duck')} AS band_val FROM sim"
-        for bi in range(4))
-    return f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
+_SIM64_CTES = f"""
+toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
 th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
 shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
 sim AS (SELECT doc_id,
         {H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)}
-        AS simhash FROM shl WHERE len(sh) > 0),
-bands AS ({band_rows}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, a.simhash AS s1,
-         b.doc_id AS d2, b.simhash AS s2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id)
-SELECT d1, d2, {H.hamming('s1', 's2', 'duck')} AS hamming
-FROM cand
-WHERE {H.hamming('s1', 's2', 'duck')} <= {HAMMING_MAX}
-ORDER BY d1, d2
-"""
+        AS simhash FROM shl WHERE len(sh) > 0)"""
+
+
+def _simhash64_oracle() -> str:
+    return _sig_pairs_oracle(_SIM64_CTES, "sim", "simhash", HAMMING_MAX,
+                             layout=SIMHASH64_ORACLE_BANDS)
 
 
 QUERIES["dedup_simhash64"] = dedup_simhash64
 ORACLES["dedup_simhash64"] = _simhash64_oracle()
+
+
+def _simhash32_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized (doc_id, simhash) at 32 bits, shared by dedup_simhash,
+    the width audit, the census and the rollover report: the band
+    self-join consumes BOTH sides of this frame, and without the
+    checkpoint each side re-evaluates the full tokenize->shingle->simhash
+    expression tree over the corpus."""
+    def build() -> DataFrame:
+        return _shingled(spark, sf_dir).selectExpr(
+            "doc_id", f"{H.simhash('sh', 'spark')} AS simhash"
+        ).transform(cut_lineage)
+    return session_memo(spark, ("simhash_signatures", sf_dir), build)
 
 
 def simhash_width_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3940,50 +3361,12 @@ def simhash_width_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     matters is candidates per doc. This is the table a 100 TB deployment
     consults (on a sample) before choosing the text prefilter, the same
     role phash_blocking_scheme_audit plays for the image family."""
-    def build32() -> DataFrame:
-        return _shingled(spark, sf_dir).selectExpr(
-            "doc_id", f"{H.simhash('sh', 'spark')} AS simhash"
-        ).transform(cut_lineage)
-    sim32 = session_memo(spark, ("simhash_signatures", sf_dir), build32)
-    sim64 = _simhash64_signatures(spark, sf_dir)
-    schemes = [
-        ("simhash32_band4x8", sim32,
-         [H.simhash_band("simhash", bi, "spark") for bi in range(4)]),
-        ("simhash64_bandpairs_2of5", sim64,
-         _c2_pair_exprs("simhash", "spark", SIMHASH64_BITS)),
-    ]
-    out = None
-    for scheme, sim, exprs in schemes:
-        bands = sim.select(
-            "doc_id", "simhash",
-            F.posexplode(F.array(*[F.expr(e) for e in exprs]))
-            .alias("band_idx", "band_val"))
-        buckets = (bands.groupBy("band_idx", "band_val")
-                   .agg(F.count(F.lit(1)).alias("sz"))
-                   .agg(F.sum("sz").cast("long").alias("n_band_rows"),
-                        F.count(F.lit(1)).cast("long").alias("n_buckets"),
-                        F.max("sz").cast("long").alias("max_bucket_size")))
-        a = bands.select(F.col("doc_id").alias("d1"),
-                         F.col("simhash").alias("s1"),
-                         "band_idx", "band_val")
-        b = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("simhash").alias("s2"),
-                         "band_idx", "band_val")
-        cand = (a.join(b, ["band_idx", "band_val"])
-                .filter(F.col("d1") < F.col("d2"))
-                .dropDuplicates(["d1", "d2"])
-                .withColumn("hm", F.expr(H.hamming("s1", "s2", "spark")))
-                .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"),
-                     F.sum(F.when(F.col("hm") <= HAMMING_MAX, 1)
-                           .otherwise(0)).cast("long").alias("n_verified")))
-        row = (buckets.crossJoin(cand).selectExpr(
-            f"'{scheme}' AS scheme", "n_band_rows", "n_buckets",
-            "max_bucket_size", "n_candidates", "n_verified",
-            "CAST(n_verified AS DOUBLE)"
-            " / CAST(nullif(n_candidates, 0) AS DOUBLE)"
-            " AS candidate_precision"))
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("scheme")
+    return _scheme_audit(
+        [("simhash32_band4x8", _simhash32_signatures(spark, sf_dir),
+          "simhash", SIMHASH32_BANDS),
+         ("simhash64_bandpairs_2of5", _simhash64_signatures(spark, sf_dir),
+          "simhash", PAIRS62)],
+        HAMMING_MAX)
 
 
 def _simhash_width_oracle() -> str:
@@ -3999,46 +3382,11 @@ def _simhash_width_oracle() -> str:
         f"sim64 AS (SELECT doc_id, "
         f"{H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)} "
         f"AS simhash FROM shl WHERE len(sh) > 0)")
-    ctes = [base]
-    selects = []
-    for scheme, src, exprs in (
-        ("simhash32_band4x8", "sim32",
-         [H.simhash_band("simhash", bi, "duck") for bi in range(4)]),
-        ("simhash64_bandpairs_2of5", "sim64",
-         _c2_pair_exprs("simhash", "duck", SIMHASH64_BITS)),
-    ):
-        tag = scheme[:9].rstrip("_")
-        band_rows = "\nUNION ALL\n".join(
-            f"SELECT doc_id, simhash, {bi} AS band_idx, "
-            f"{e} AS band_val FROM {src}"
-            for bi, e in enumerate(exprs))
-        ctes.append(f"bands_{tag} AS ({band_rows})")
-        ctes.append(
-            f"bk_{tag} AS (SELECT CAST(SUM(sz) AS BIGINT) AS n_band_rows, "
-            f"CAST(COUNT(*) AS BIGINT) AS n_buckets, "
-            f"CAST(MAX(sz) AS BIGINT) AS max_bucket_size FROM "
-            f"(SELECT band_idx, band_val, COUNT(*) AS sz FROM bands_{tag} "
-            f"GROUP BY band_idx, band_val) h)")
-        ctes.append(
-            f"cand_{tag} AS (SELECT DISTINCT a.doc_id AS d1, "
-            f"a.simhash AS s1, b.doc_id AS d2, b.simhash AS s2 "
-            f"FROM bands_{tag} a JOIN bands_{tag} b "
-            f"ON a.band_idx = b.band_idx AND a.band_val = b.band_val "
-            f"AND a.doc_id < b.doc_id)")
-        ctes.append(
-            f"agg_{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
-            f"n_candidates, CAST(SUM(CASE WHEN "
-            f"{H.hamming('s1', 's2', 'duck')} <= {HAMMING_MAX} "
-            f"THEN 1 ELSE 0 END) AS BIGINT) AS n_verified "
-            f"FROM cand_{tag})")
-        selects.append(
-            f"SELECT '{scheme}' AS scheme, n_band_rows, n_buckets, "
-            f"max_bucket_size, n_candidates, n_verified, "
-            f"CAST(n_verified AS DOUBLE)"
-            f" / CAST(NULLIF(n_candidates, 0) AS DOUBLE)"
-            f" AS candidate_precision FROM bk_{tag} CROSS JOIN agg_{tag}")
-    return ("WITH " + ",\n".join(ctes) + "\n"
-            + "\nUNION ALL\n".join(selects) + "\nORDER BY scheme")
+    return _scheme_audit_sql(
+        base,
+        [("simhash32_band4x8", "sim32", "simhash", SIMHASH32_BANDS),
+         ("simhash64_bandpairs_2of5", "sim64", "simhash", PAIRS62)],
+        HAMMING_MAX, "scheme")
 
 
 QUERIES["simhash_width_audit"] = simhash_width_audit
@@ -4072,28 +3420,17 @@ def _census_family_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """_banded_family_rows extended with the two simhash schemes — every
     banded join the registry can deploy, under its production blocking,
     as (family, band_idx, key) rows over the memoized signatures."""
-    def build32() -> DataFrame:
-        return _shingled(spark, sf_dir).selectExpr(
-            "doc_id", f"{H.simhash('sh', 'spark')} AS simhash"
-        ).transform(cut_lineage)
-    sim32 = session_memo(spark, ("simhash_signatures", sf_dir), build32)
-    s32 = sim32.select(
-        F.posexplode(F.array(*[
-            F.expr(H.simhash_band("simhash", bi, "spark"))
-            for bi in range(4)])).alias("band_idx", "band_val")
-    ).selectExpr("'simhash32_band4x8' AS family",
-                 "CAST(band_idx AS INT) AS band_idx",
-                 "CAST(band_val AS STRING) AS key")
-    s64 = _simhash64_signatures(spark, sf_dir).select(
-        F.posexplode(F.array(*[
-            F.expr(e)
-            for e in _c2_pair_exprs("simhash", "spark", SIMHASH64_BITS)
-        ])).alias("band_idx", "band_val")
-    ).selectExpr("'simhash64_bandpairs_2of5' AS family",
-                 "CAST(band_idx AS INT) AS band_idx",
-                 "CAST(band_val AS STRING) AS key")
+    def rows(sigs: DataFrame, layout: Layout, family: str) -> DataFrame:
+        return explode_bands(
+            sigs, band_exprs("simhash", layout, "spark")
+        ).selectExpr(f"'{family}' AS family",
+                     "CAST(band_idx AS INT) AS band_idx",
+                     "CAST(band_val AS STRING) AS key")
     return (_banded_family_rows(spark, sf_dir)
-            .unionByName(s32).unionByName(s64))
+            .unionByName(rows(_simhash32_signatures(spark, sf_dir),
+                              SIMHASH32_BANDS, "simhash32_band4x8"))
+            .unionByName(rows(_simhash64_signatures(spark, sf_dir),
+                              PAIRS62, "simhash64_bandpairs_2of5")))
 
 
 # Per-family remedy when the tripwire fires, derived from each
@@ -4173,15 +3510,8 @@ def _remedy_case() -> str:
 
 
 def _candidate_volume_oracle() -> str:
-    sim32_rows = "\nUNION ALL\n".join(
-        f"SELECT {bi} AS band_idx, "
-        f"CAST({H.simhash_band('simhash', bi, 'duck')} AS VARCHAR) AS key "
-        f"FROM c_sim32"
-        for bi in range(4))
-    sim64_rows = "\nUNION ALL\n".join(
-        f"SELECT {bi} AS band_idx, CAST({e} AS VARCHAR) AS key FROM c_sim64"
-        for bi, e in enumerate(
-            _c2_pair_exprs("simhash", "duck", SIMHASH64_BITS)))
+    sim32_rows = _band_keys_sql("c_sim32", "simhash", SIMHASH32_BANDS)
+    sim64_rows = _band_keys_sql("c_sim64", "simhash", PAIRS62)
     # the base prefix's shl is filtered to non-empty (the minhash
     # semantics); the 32-bit simhash family deliberately bands ALL docs
     # (the documented coarse prefilter), so it gets its own unfiltered
@@ -4244,7 +3574,7 @@ def blocking_exprs_for(action: str, sig_col: str) -> "list[str] | None":
     row decides, this function translates, the stream topology is
     unchanged (both schemes are exact for hamming <= 3)."""
     if action == "band_pairs":
-        return _c2_pair_exprs(sig_col, "spark")
+        return band_exprs(sig_col, PAIRS56, "spark")
     if action == "single_bands":
         return None
     raise ValueError(f"unknown blocking action: {action!r}")
@@ -4366,18 +3696,11 @@ def band_blocking_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small independent branches overlap as concurrent stages, while
     # the fused shuffle serializes the whole 420k-row band stream
     # through one exchange. Measurement keeps the branch form.
-    schemes = [
-        ("single", [_prod_band56("sig", bi, PHASH_N_BANDS, "spark")
-                    for bi in range(PHASH_N_BANDS)]),
-        ("pairs", _c2_pair_exprs("sig", "spark")),
-    ]
     out = None
     for family, sigs in fams:
-        for scheme, exprs in schemes:
-            bands = sigs.select(
-                "align",
-                F.posexplode(F.array(*[F.expr(e) for e in exprs]))
-                .alias("band_idx", "band_val"))
+        for scheme, layout in (("single", PROD_BANDS56), ("pairs", PAIRS56)):
+            bands = explode_bands(sigs, band_exprs("sig", layout, "spark"),
+                                  "align")
             row = (bands.groupBy("align", "band_idx", "band_val")
                    .agg(F.count(F.lit(1)).alias("k"))
                    .agg(F.sum("k").cast("long").alias("n_band_rows"),
@@ -4432,16 +3755,9 @@ def _band_blocking_policy_oracle() -> str:
                 "vfh AS sig FROM vft)")
     arm_rows = []
     for family in ("image_phash", "audio_afp", "video_vfh_frame"):
-        for scheme, exprs in (
-            ("single", [_prod_band56("sig", bi, PHASH_N_BANDS, "duck")
-                        for bi in range(PHASH_N_BANDS)]),
-            ("pairs", _c2_pair_exprs("sig", "duck")),
-        ):
+        for scheme, layout in (("single", PROD_BANDS56), ("pairs", PAIRS56)):
             tag = f"{family}_{scheme}"
-            band_rows = "\nUNION ALL\n".join(
-                f"SELECT align, {bi} AS band_idx, {e} AS band_val "
-                f"FROM p_{family}"
-                for bi, e in enumerate(exprs))
+            band_rows = band_rows_sql(f"p_{family}", "sig", layout, ["align"])
             ctes.append(f"bands_{tag} AS ({band_rows})")
             ctes.append(
                 f"agg_{tag} AS (SELECT '{family}' AS family, "
@@ -4600,60 +3916,20 @@ def dedup_simhash64_incremental(spark: SparkSession,
     an existing (or earlier-ordered same-batch) doc."""
     sim = _simhash64_signatures(spark, sf_dir).withColumn(
         "is_new", (F.col("doc_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW)
-    bands = sim.select(
-        "doc_id", "simhash", "is_new",
-        F.posexplode(F.array(*[
-            F.expr(e)
-            for e in _c2_pair_exprs("simhash", "spark", SIMHASH64_BITS)
-        ])).alias("band_idx", "band_val"))
-    a = bands.filter("is_new").select(
-        F.col("doc_id").alias("d1"), F.col("simhash").alias("s1"),
-        "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col("is_new").alias("new2"),
-                     F.col("simhash").alias("s2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") != F.col("d2"))
-        .filter((~F.col("new2")) | (F.col("d1") < F.col("d2")))
-        # r16 early verify (see dedup_simhash)
-        .withColumn("hamming", F.expr(H.hamming("s1", "s2", "spark")))
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                "hamming")
-        .dropDuplicates()
-        .orderBy("new_id", "dup_of")
-    )
+    return banded_pairs(
+        explode_bands(sim, band_exprs("simhash", PAIRS62, "spark"),
+                      "doc_id", "simhash", "is_new"),
+        "simhash", is_new=F.col("is_new"), hamming_max=HAMMING_MAX,
+        keep=[F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
+              "hamming"]
+    ).orderBy("new_id", "dup_of")
 
 
 def _simhash64_incremental_oracle() -> str:
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, simhash, {bi} AS band_idx, "
-        f"{_phash_band('simhash', bi, 16, 'duck')} AS band_val FROM sim"
-        for bi in range(4))
-    return f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
-sim AS (SELECT doc_id,
-        {H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)}
-        AS simhash FROM shl WHERE len(sh) > 0),
-bands AS ({band_rows}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, a.simhash AS s1,
-         b.doc_id AS d2, b.simhash AS s2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id != b.doc_id
-   AND a.doc_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}
-   AND (b.doc_id % {INCREMENTAL_MOD} < {INCREMENTAL_NEW}
-        OR a.doc_id < b.doc_id))
-SELECT d1 AS new_id, d2 AS dup_of,
-       {H.hamming('s1', 's2', 'duck')} AS hamming
-FROM cand
-WHERE {H.hamming('s1', 's2', 'duck')} <= {HAMMING_MAX}
-ORDER BY new_id, dup_of
-"""
+    return _sig_pairs_oracle(
+        _SIM64_CTES, "sim", "simhash", HAMMING_MAX,
+        is_new=f"{{}}.doc_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}",
+        layout=SIMHASH64_ORACLE_BANDS)
 
 
 QUERIES["dedup_simhash64_incremental"] = dedup_simhash64_incremental
@@ -4672,34 +3948,10 @@ def dedup_image_phash_incremental_bandpairs(spark: SparkSession,
     UNCHANGED single-band incremental SQL, so the hash gate proves the
     re-blocking loses nothing. This is what band_blocking_policy's
     action='band_pairs' deploys for the delta-ingest job (the stream
-    twin already follows it via the band_exprs seam; video's
-    frame-aligned incremental re-blocks the same way when its corpus
-    crosses — dedup_video_fingerprint_bandpairs carries the keys)."""
-    ph = _phash_signatures(spark, sf_dir)
-    is_new = (F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW
-    bands = ph.select(
-        "doc_id", "phash",
-        F.posexplode(F.array(*[
-            F.expr(e) for e in _c2_pair_exprs("phash", "spark")
-        ])).alias("band_idx", "band_val")
-    ).withColumn("is_new", is_new)
-    a = bands.filter("is_new").select(
-        F.col("doc_id").alias("d1"), F.col("phash").alias("p1"),
-        "band_idx", "band_val")
-    b = bands.select(
-        F.col("doc_id").alias("d2"), F.col("phash").alias("p2"),
-        F.col("is_new").alias("new2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter((~F.col("new2")) | (F.col("d1") < F.col("d2")))
-        # r16 early verify (see dedup_simhash)
-        .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
-        .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                "hamming")
-        .dropDuplicates()
-        .orderBy("new_id", "dup_of")
-    )
+    twin already follows it via the band_exprs seam)."""
+    return _sig_pairs(_phash_signatures(spark, sf_dir), "phash", PAIRS56,
+                      PHASH_HAMMING_MAX,
+                      is_new=(F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW)
 
 
 QUERIES["dedup_image_phash_incremental_bandpairs"] = \
@@ -4715,31 +3967,9 @@ def dedup_audio_fingerprint_incremental_bandpairs(
     crossover was measured at the same ~1M docs (SCALING.md round 10:
     dead heat at 1M, 1.9x at 2M). Oracle = the unchanged single-band
     incremental SQL."""
-    af = _afp_signatures(spark, sf_dir)
-    is_new = (F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW
-    bands = af.select(
-        "doc_id", "afp",
-        F.posexplode(F.array(*[
-            F.expr(e) for e in _c2_pair_exprs("afp", "spark")
-        ])).alias("band_idx", "band_val")
-    ).withColumn("is_new", is_new)
-    a = bands.filter("is_new").select(
-        F.col("doc_id").alias("d1"), F.col("afp").alias("p1"),
-        "band_idx", "band_val")
-    b = bands.select(
-        F.col("doc_id").alias("d2"), F.col("afp").alias("p2"),
-        F.col("is_new").alias("new2"), "band_idx", "band_val")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter((~F.col("new2")) | (F.col("d1") < F.col("d2")))
-        # r16 early verify (see dedup_simhash)
-        .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= AFP_HAMMING_MAX)
-        .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                "hamming")
-        .dropDuplicates()
-        .orderBy("new_id", "dup_of")
-    )
+    return _sig_pairs(_afp_signatures(spark, sf_dir), "afp", PAIRS56,
+                      AFP_HAMMING_MAX,
+                      is_new=(F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW)
 
 
 QUERIES["dedup_audio_fingerprint_incremental_bandpairs"] = \
@@ -4761,30 +3991,7 @@ def dedup_video_fingerprint_incremental_bandpairs(
     theorem lifts identically, and the oracle IS the single-band
     incremental SQL — the hash gate proves the re-blocking loses
     nothing."""
-    vf = _vfp_signatures(spark, sf_dir)
-    is_new = (F.col("doc_id") % 4) == VFP_INCREMENTAL_NEW
-    bands = vf.select(
-        "doc_id", "frame_idx",
-        F.posexplode(F.array(*[
-            F.expr(e) for e in _c2_pair_exprs("vfh", "spark")
-        ])).alias("band_idx", "band_val")
-    ).withColumn("is_new", is_new)
-    a = bands.filter("is_new").select(
-        F.col("doc_id").alias("d1"), "frame_idx", "band_idx", "band_val")
-    b = bands.select(
-        F.col("doc_id").alias("d2"), F.col("is_new").alias("new2"),
-        "frame_idx", "band_idx", "band_val")
-    cand = (a.join(b, ["frame_idx", "band_idx", "band_val"])
-            .filter((~F.col("new2")) | (F.col("d1") < F.col("d2")))
-            .select("d1", "d2")
-            .dropDuplicates(["d1", "d2"]))
-    return (
-        _vfp_frame_match_counts(cand, vf)
-        .filter(F.col("frames_matched") >= VFP_MIN_FRAMES)
-        .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                "frames_matched")
-        .orderBy("new_id", "dup_of")
-    )
+    return _vfp_incremental(_vfp_signatures(spark, sf_dir), PAIRS56)
 
 
 QUERIES["dedup_video_fingerprint_incremental_bandpairs"] = \
@@ -4819,31 +4026,12 @@ def simhash_rollover_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate volume — which is the quantity under audit, and the
     reason the report is worth running on a sample before a 100 TB
     rollover."""
-    def build32() -> DataFrame:
-        return _shingled(spark, sf_dir).selectExpr(
-            "doc_id", f"{H.simhash('sh', 'spark')} AS simhash"
-        ).transform(cut_lineage)
-    sim32 = session_memo(spark, ("simhash_signatures", sf_dir), build32)
+    sim32 = _simhash32_signatures(spark, sf_dir)
     sim64 = _simhash64_signatures(spark, sf_dir)
-    bands = sim32.select(
-        "doc_id", "simhash",
-        F.posexplode(F.array(*[
-            F.expr(H.simhash_band("simhash", bi, "spark"))
-            for bi in range(4)
-        ])).alias("band_idx", "band_val"))
-    a = bands.select(F.col("doc_id").alias("d1"),
-                     F.col("simhash").alias("s1"), "band_idx", "band_val")
-    b = bands.select(F.col("doc_id").alias("d2"),
-                     F.col("simhash").alias("s2"), "band_idx", "band_val")
-    asserted = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        # r16 early verify (see dedup_simhash): the distinct carries
-        # only asserted id pairs, no 32-bit signatures
-        .filter(F.expr(H.hamming("s1", "s2", "spark"))
-                <= HAMMING_MAX)
-        .select("d1", "d2")
-        .dropDuplicates(["d1", "d2"]))
+    asserted = banded_pairs(
+        explode_bands(sim32, band_exprs("simhash", SIMHASH32_BANDS, "spark"),
+                      "doc_id", "simhash"),
+        "simhash", hamming_max=HAMMING_MAX, keep=["d1", "d2"])
     w1 = sim64.select(F.col("doc_id").alias("d1"),
                       F.col("simhash").alias("w1"))
     w2 = sim64.select(F.col("doc_id").alias("d2"),
@@ -4873,10 +4061,6 @@ def simhash_rollover_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rollover_oracle() -> str:
-    band_rows = "\nUNION ALL\n".join(
-        f"SELECT doc_id, simhash, {bi} AS band_idx, "
-        f"{H.simhash_band('simhash', bi, 'duck')} AS band_val FROM sim32"
-        for bi in range(4))
     return f"""
 WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
 th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
@@ -4885,13 +4069,10 @@ sim32 AS (SELECT doc_id, {H.simhash('sh', 'duck')} AS simhash FROM shl),
 sim64 AS (SELECT doc_id,
           {H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)}
           AS simhash FROM shl WHERE len(sh) > 0),
-bands AS ({band_rows}),
+{banded_pairs_sql('sim32', 'simhash', SIMHASH32_BANDS)},
 asserted AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id
-  WHERE {H.hamming('a.simhash', 'b.simhash', 'duck')} <= {HAMMING_MAX}),
+  SELECT DISTINCT d1, d2 FROM cand
+  WHERE {H.hamming('s1', 's2', 'duck')} <= {HAMMING_MAX}),
 judged AS (
   SELECT p.d1, p.d2,
          COALESCE({H.hamming('w1.simhash', 'w2.simhash', 'duck')}

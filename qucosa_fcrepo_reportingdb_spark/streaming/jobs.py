@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from qucosa_fcrepo_reportingdb_spark import schemas
 from qucosa_fcrepo_reportingdb_spark.tables import TableStore
 from qucosa_fcrepo_reportingdb_spark.memo import cut_lineage
+from qucosa_fcrepo_reportingdb_spark.operators import banding
 
 
 def stream_events_hourly(spark: SparkSession, source_dir: str,
@@ -1022,8 +1023,6 @@ def _banded_signature_dedupe_stream(
     swaps the blocking scheme — e.g. the 2-of-5 band-pair keys for the
     birthday regime (SCALING.md r8 cont. 7) — without forking the
     topology; default is the production strided single bands."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import _prod_band56
-
     doc_schema = schema or T.StructType([
         T.StructField("doc_id", T.LongType()),
     ])
@@ -1042,38 +1041,15 @@ def _banded_signature_dedupe_stream(
         T.StructField("hamming", T.IntegerType()),
     ])
 
-    exprs = band_exprs or [
-        _prod_band56(sig_col, bi, n_bands, "spark")
-        for bi in range(n_bands)]
-
-    def bands_of(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "doc_id",
-            F.posexplode(F.array(*[F.expr(e) for e in exprs]))
-            .alias("band_idx", "band_val"))
+    exprs = band_exprs or _strided_exprs(sig_col, n_bands)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         sig_b = sign_frame(batch.dropDuplicates(["doc_id"])).persist()
         try:
-            new_bands = bands_of(sig_b)
+            new_bands = banding.explode_bands(sig_b, exprs, "doc_id")
             stored_sigs = store.read(sigs_table, sig_schema)
             stored_bands = store.read(bands_table, band_schema)
-            new_a = new_bands.select(F.col("doc_id").alias("d1"),
-                                     "band_idx", "band_val")
-            new_b = new_bands.select(F.col("doc_id").alias("d2"),
-                                     "band_idx", "band_val")
-            intra = (new_a.join(new_b, ["band_idx", "band_val"])
-                     .filter(F.col("d1") < F.col("d2")))
-            cross = (stored_bands.select(F.col("doc_id").alias("d1"),
-                                         "band_idx", "band_val")
-                     .join(new_b, ["band_idx", "band_val"]))
-            cand = (
-                intra.unionByName(cross)
-                .select(F.least("d1", "d2").alias("d1"),
-                        F.greatest("d1", "d2").alias("d2"))
-                .filter(F.col("d1") != F.col("d2"))
-                .dropDuplicates(["d1", "d2"])
-            )
+            cand = banding.stream_candidates(new_bands, stored_bands)
             # signature lookup: batch rows win over stored on re-delivery
             lookup = sig_b.unionByName(
                 stored_sigs.join(sig_b.select("doc_id"), "doc_id",
@@ -1117,6 +1093,12 @@ def _banded_signature_dedupe_stream(
     )
 
 
+def _strided_exprs(sig_col: str, n_bands: int) -> "list[str]":
+    """The production single-band exprs: strided over 56 bits."""
+    return banding.band_exprs(sig_col, banding.Layout("strided", n_bands),
+                              "spark")
+
+
 def stream_image_phash_dedupe(spark: SparkSession, source_dir: str,
                               store: TableStore, checkpoint_dir: str,
                               schema: "T.StructType | None" = None):
@@ -1158,9 +1140,9 @@ def stream_image_phash_bandpairs_dedupe(spark: SparkSession,
     the batch-equivalence pytest. State cost: 10 band rows per doc
     instead of 4, the trade phash_blocking_scheme_audit prices."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        PAIRS56,
         PHASH_HAMMING_MAX,
         PHASH_N_BANDS,
-        _c2_pair_exprs,
     )
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         image_phash_frame,
@@ -1173,7 +1155,7 @@ def stream_image_phash_bandpairs_dedupe(spark: SparkSession,
         bands_table=PHASH_C2_BANDS_TABLE,
         pairs_table=PHASH_C2_PAIRS_TABLE,
         checkpoint_name="phash_c2_dedupe",
-        band_exprs=_c2_pair_exprs("phash", "spark"))
+        band_exprs=banding.band_exprs("phash", PAIRS56, "spark"))
 
 
 PHASH_POLICY_SIGS_TABLE = "phash_policy_sigs"
@@ -1231,7 +1213,7 @@ def migrate_band_state(spark: SparkSession, store: TableStore,
 
     ``band_exprs`` follows _banded_signature_dedupe_stream's contract
     exactly (None = the production strided single bands over
-    ``n_bands``; a list — e.g. _c2_pair_exprs / blocking_exprs_for
+    ``n_bands``; a list — e.g. banding.band_exprs / blocking_exprs_for
     output — swaps the scheme), so the migrated state is bit-identical
     to what the stream itself would have written under the new scheme.
     The write is TableStore.overwrite: atomic versioned repoint, so a
@@ -1245,12 +1227,7 @@ def migrate_band_state(spark: SparkSession, store: TableStore,
     the matching band_exprs (the pytest drives exactly this sequence).
     Returns a small audit dict (units, band rows, rows per unit) —
     bounded driver-side counts, the numbers the operator logs."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        _prod_band56,
-    )
-    exprs = band_exprs or [
-        _prod_band56(sig_col, bi, n_bands, "spark")
-        for bi in range(n_bands)]
+    exprs = band_exprs or _strided_exprs(sig_col, n_bands)
     keys = ["doc_id", *extra_keys]
     sigs = store.read(sigs_table, sig_schema)
     # The band state is LONG-keyed (every 56/62-bit family); a string-
@@ -1268,11 +1245,8 @@ def migrate_band_state(spark: SparkSession, store: TableStore,
             f"band_vals for the long-keyed band state; got {bad} — "
             "string-keyed schemes (minhash band signatures) need their "
             "own migration, not this one")
-    new_bands = sigs.select(
+    new_bands = banding.explode_bands(sigs, exprs, *keys).select(
         *keys,
-        F.posexplode(F.array(*[F.expr(e) for e in exprs]))
-        .alias("band_idx", "band_val"),
-    ).select(*keys,
              F.col("band_idx").cast("int").alias("band_idx"),
              F.col("band_val").cast("long").alias("band_val"))
     store.overwrite(bands_table, new_bands)
@@ -1342,7 +1316,6 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
         VFP_HAMMING_MAX,
         VFP_MIN_FRAMES,
         VFP_N_BANDS,
-        _prod_band56,
     )
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         video_fingerprint_frame,
@@ -1369,40 +1342,21 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
     ])
 
     # band_exprs: the same blocking-scheme seam as the shared topology
-    # (None = production strided single bands; _c2_pair_exprs swaps in
-    # the 2-of-5 pair keys) — per-frame exactness lifts unchanged, so
-    # the M-of-K verify downstream is scheme-independent
-    exprs = band_exprs or [
-        _prod_band56("vfh", bi, VFP_N_BANDS, "spark")
-        for bi in range(VFP_N_BANDS)]
-
-    def bands_of(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "doc_id", "frame_idx",
-            F.posexplode(F.array(*[F.expr(e) for e in exprs]))
-            .alias("band_idx", "band_val"))
+    # (None = production strided single bands; the 2-of-5 pair keys swap
+    # in) — per-frame exactness lifts unchanged, so the M-of-K verify
+    # downstream is scheme-independent
+    exprs = band_exprs or _strided_exprs("vfh", VFP_N_BANDS)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         sig_b = video_fingerprint_frame(
             batch.dropDuplicates(["doc_id"])).persist()
         try:
-            new_bands = bands_of(sig_b)
+            new_bands = banding.explode_bands(sig_b, exprs,
+                                              "doc_id", "frame_idx")
             stored_sigs = store.read(VFP_SIGS_TABLE, sig_schema)
             stored_bands = store.read(VFP_BANDS_TABLE, band_schema)
-            keys = ["frame_idx", "band_idx", "band_val"]
-            new_a = new_bands.select(F.col("doc_id").alias("d1"), *keys)
-            new_b = new_bands.select(F.col("doc_id").alias("d2"), *keys)
-            intra = (new_a.join(new_b, keys)
-                     .filter(F.col("d1") < F.col("d2")))
-            cross = (stored_bands.select(F.col("doc_id").alias("d1"), *keys)
-                     .join(new_b, keys))
-            cand = (
-                intra.unionByName(cross)
-                .select(F.least("d1", "d2").alias("d1"),
-                        F.greatest("d1", "d2").alias("d2"))
-                .filter(F.col("d1") != F.col("d2"))
-                .dropDuplicates(["d1", "d2"])
-            )
+            cand = banding.stream_candidates(new_bands, stored_bands,
+                                             ["frame_idx"])
             # signature lookup: batch rows win over stored on re-delivery
             lookup = sig_b.unionByName(
                 stored_sigs.join(sig_b.select("doc_id").distinct(),
@@ -1628,7 +1582,7 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
     """Streaming twin of band_skew_audit / band_salting_policy for the
     three 56-bit signature families: each microbatch of docs is signed
     by the scan-local Python builders shared with the dedupe streams,
-    exploded to PRODUCTION strided band rows (_prod_band56; video keyed
+    exploded to PRODUCTION strided band rows (PROD_BANDS56; video keyed
     by its frame-qualified triple), and the state table accumulates
     per-(family, band_idx, key) counts — the mergeable sketch is plain
     addition, so the folded profile (band_skew_state_profile) equals
@@ -1646,7 +1600,6 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
         AFP_N_BANDS,
         PHASH_N_BANDS,
         VFP_N_BANDS,
-        _prod_band56,
     )
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         audio_fingerprint_frame,
@@ -1659,30 +1612,19 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
     ])
 
     def band_rows_of(docs: DataFrame) -> DataFrame:
-        ph = image_phash_frame(docs).select(
-            "doc_id",
-            F.posexplode(F.array(*[
-                F.expr(_prod_band56("phash", bi, PHASH_N_BANDS, "spark"))
-                for bi in range(PHASH_N_BANDS)
-            ])).alias("band_idx", "band_val")
+        ph = banding.explode_bands(
+            image_phash_frame(docs), _strided_exprs("phash", PHASH_N_BANDS)
         ).selectExpr("'image_phash' AS family",
                      "CAST(band_idx AS INT) AS band_idx",
                      "CAST(band_val AS STRING) AS key")
-        af = audio_fingerprint_frame(docs).select(
-            "doc_id",
-            F.posexplode(F.array(*[
-                F.expr(_prod_band56("afp", bi, AFP_N_BANDS, "spark"))
-                for bi in range(AFP_N_BANDS)
-            ])).alias("band_idx", "band_val")
+        af = banding.explode_bands(
+            audio_fingerprint_frame(docs), _strided_exprs("afp", AFP_N_BANDS)
         ).selectExpr("'audio_afp' AS family",
                      "CAST(band_idx AS INT) AS band_idx",
                      "CAST(band_val AS STRING) AS key")
-        vf = video_fingerprint_frame(docs).select(
-            "doc_id", "frame_idx",
-            F.posexplode(F.array(*[
-                F.expr(_prod_band56("vfh", bi, VFP_N_BANDS, "spark"))
-                for bi in range(VFP_N_BANDS)
-            ])).alias("band_idx", "band_val")
+        vf = banding.explode_bands(
+            video_fingerprint_frame(docs), _strided_exprs("vfh", VFP_N_BANDS),
+            "frame_idx"
         ).selectExpr("'video_vfh_frame' AS family",
                      "CAST(band_idx AS INT) AS band_idx",
                      "CONCAT(CAST(frame_idx AS STRING), ':',"
@@ -1993,8 +1935,7 @@ def stream_simhash64_dedupe(spark: SparkSession, source_dir: str,
     jobs; state cost 10 band rows + one 8-byte signature per doc."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         HAMMING_MAX,
-        SIMHASH64_BITS,
-        _c2_pair_exprs,
+        PAIRS62,
         simhash64_frame,
     )
 
@@ -2010,7 +1951,7 @@ def stream_simhash64_dedupe(spark: SparkSession, source_dir: str,
         bands_table=SIMHASH64_BANDS_TABLE,
         pairs_table=SIMHASH64_PAIRS_TABLE,
         checkpoint_name="simhash64_dedupe",
-        band_exprs=_c2_pair_exprs("simhash", "spark", SIMHASH64_BITS))
+        band_exprs=banding.band_exprs("simhash", PAIRS62, "spark"))
 
 
 SEM_SUITE_TABLE = "semantic_suite_vectors"

@@ -319,21 +319,55 @@ def test_dhash56_matches_resize_then_compare():
 
 
 def test_phash_band_pigeonhole_guarantee():
-    """<= 3 differing bits cannot touch all four 14-bit bands, so the
-    banded candidate join is EXACT for hamming <= 3 (the theorem
-    dedup_image_phash's correctness rests on)."""
-    import itertools
-    rng_state = 123456789
-    for trial in range(50):
-        rng_state = (rng_state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-        h1 = rng_state % (1 << 56)
-        for bits in itertools.combinations(range(56), 3):
-            h2 = h1
-            for b in bits:
-                h2 ^= 1 << b
-            shared = any(((h1 >> (14 * k)) & 16383) == ((h2 >> (14 * k)) & 16383)
-                         for k in range(4))
-            assert shared
+    """Pigeonhole exactness (operators/banding.py) through the core's
+    own DuckDB expressions, for every layout the registry bands with:
+    two values within the layout's bound — n_bands - 1 flipped bits for
+    single bands, n_bands - 2 for 2-of-n band pairs — always share a
+    blocking key (checked over every flip set of that size, capped at
+    3), and one more flip can break every key, so the bound is tight.
+    The banded joins' correctness rests on this, for hamming <= 3."""
+    import duckdb
+
+    from qucosa_fcrepo_reportingdb_spark.operators.banding import (
+        Layout,
+        band_exprs,
+    )
+    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        ORACLE_BANDS56,
+        PAIRS56,
+        PAIRS62,
+        PROD_BANDS56,
+        SIMHASH32_BANDS,
+        SIMHASH64_ORACLE_BANDS,
+    )
+    con = duckdb.connect()
+
+    def misses(layout: Layout, base: int, width: int, k: int) -> int:
+        idx = [f"i{n}" for n in range(k)]
+        ranges = ", ".join(f"range({width}) t{n}({c})"
+                           for n, c in enumerate(idx))
+        order = " AND ".join(f"{a} < {b}" for a, b in zip(idx, idx[1:]))
+        mask = " | ".join(f"(CAST(1 AS BIGINT) << {c})" for c in idx)
+        shared = " OR ".join(
+            f"{ev} = {ew}" for ev, ew in zip(band_exprs("v", layout, "duck"),
+                                             band_exprs("w", layout, "duck")))
+        return con.execute(
+            f"SELECT COUNT(*) FROM (SELECT v, xor(v, {mask}) AS w "
+            f"FROM (SELECT CAST({base} AS BIGINT) AS v) b, {ranges}"
+            f"{' WHERE ' + order if order else ''}) p "
+            f"WHERE NOT ({shared})").fetchone()[0]
+
+    layouts = [SIMHASH32_BANDS, ORACLE_BANDS56, PROD_BANDS56, PAIRS56,
+               PAIRS62, SIMHASH64_ORACLE_BANDS,
+               Layout("contiguous", 2), Layout("contiguous", 7)]
+    for layout in layouts:
+        bound = layout.n_bands - (2 if layout.scheme == "pairs" else 1)
+        width = min(layout.bits, 62)      # BIGINT-safe signature width
+        for base in (0x2545F4914F6CDD1D % (1 << width),
+                     0x5851F42D4C957F2D % (1 << width)):
+            assert misses(layout, base, width, min(bound, 3)) == 0, layout
+            if bound < 4:
+                assert misses(layout, base, width, bound + 1) > 0, layout
 
 
 def test_dedup_image_phash_designed_pairs(spark):
@@ -418,7 +452,7 @@ def test_band_layout_recall_is_layout_independent(spark):
 
 
 def test_band_layout_multimodal_strided_wins_every_family(spark):
-    """The fleet-wide audit behind the _prod_band56 production switch:
+    """The fleet-wide audit behind the PROD_BANDS56 production switch:
     per family, n_verified is layout-independent (pigeonhole holds for
     any 4-way bit partition) and the strided layout produces strictly
     fewer candidates on the designed corpora — adjacent-bit correlation

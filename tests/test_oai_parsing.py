@@ -6,6 +6,9 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from qucosa_fcrepo_reportingdb_spark.functions.filters import qucosa_document_filter
+from qucosa_fcrepo_reportingdb_spark.functions.mets_xml import (
+    extract_mets_metadata,
+)
 from qucosa_fcrepo_reportingdb_spark.functions.oai_xml import (
     explode_headers,
     parse_oai_pages,
@@ -190,3 +193,51 @@ def test_x9_spark_formatter_matches_request_path(spark):
         state = HarvestState(run_id=1, timestamp_of_run=dt,
                              response_date=dt, next_from_timestamp=dt)
         assert build_request_params(state, fc3)["from"] == spark_side
+
+
+def test_mets_extraction_ignores_foreign_namespace_collisions(spark):
+    """The reference's XPath binds mets:/mods:
+    prefixes to their namespace URIs (MetsProcessor.java:67-69,81-85),
+    so an element with the RIGHT local name in the WRONG namespace must
+    never extract. Our ElementTree finds use {uri}tag qualification —
+    this pins that an adversarial document full of colliding local names
+    in a foreign namespace (a) extracts nothing when the real elements
+    are absent, and (b) never shadows the real elements when both are
+    present."""
+    evil = (
+        '<?xml version="1.0"?>'
+        '<mets xmlns="http://www.loc.gov/METS/" xmlns:x="http://evil.example/ns">'
+        '<x:metsHdr><x:agent ROLE="EDITOR"><x:name>EVIL</x:name></x:agent>'
+        "</x:metsHdr>"
+        '<x:structMap TYPE="LOGICAL"><x:div TYPE="evil_type"/></x:structMap>'
+        '<x:mods><x:originInfo eventType="distribution">'
+        "<x:dateIssued>1999-01-01</x:dateIssued></x:originInfo></x:mods>"
+        "</mets>"
+    )
+    df = spark.createDataFrame([(evil,)], "xml string")
+    row = extract_mets_metadata(df, "xml").collect()[0]
+    assert (row.mandator, row.document_type,
+            row.distribution_date_raw) == (None, None, None)
+
+    # both present: the namespace-bound elements win, foreign ones are
+    # invisible even when they come FIRST in document order
+    both = (
+        '<?xml version="1.0"?>'
+        '<mets xmlns:mets="http://www.loc.gov/METS/" '
+        'xmlns:m="http://www.loc.gov/mods/v3" '
+        'xmlns:x="http://evil.example/ns">'
+        '<x:structMap TYPE="LOGICAL"><x:div TYPE="evil_type"/></x:structMap>'
+        '<mets:metsHdr><mets:agent ROLE="EDITOR">'
+        "<mets:name>SLUB</mets:name></mets:agent></mets:metsHdr>"
+        '<mets:structMap TYPE="LOGICAL"><mets:div TYPE="issue"/>'
+        "</mets:structMap>"
+        '<x:originInfo eventType="distribution">'
+        "<x:dateIssued>1999-01-01</x:dateIssued></x:originInfo>"
+        '<m:mods><m:originInfo eventType="distribution">'
+        "<m:dateIssued>2008-08-04</m:dateIssued></m:originInfo></m:mods>"
+        "</mets>"
+    )
+    df2 = spark.createDataFrame([(both,)], "xml string")
+    row2 = extract_mets_metadata(df2, "xml").collect()[0]
+    assert (row2.mandator, row2.document_type,
+            row2.distribution_date_raw) == ("SLUB", "issue", "2008-08-04")

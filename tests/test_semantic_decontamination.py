@@ -651,54 +651,6 @@ def test_lsh_arrow_signing_twin_is_bit_identical(spark):
     assert 0 < sum(some) < len(some)
 
 
-def test_lsh_arrow_rescore_twin_is_bit_identical(spark):
-    """The opt-in Arrow rescore twin (VERDICT r14 item 7 stretch):
-    every cosine equals the zip_with fold's on the real banded
-    candidate join, bit-for-bit. The rescore is FLOAT arithmetic, so
-    the proof needs an order-preserving accumulation — the twin's
-    column loop performs the fold's exact left-to-right IEEE adds per
-    row (numpy reductions would pairwise-sum and diverge in the last
-    ulp); this test checks the construction against data, including
-    the NULL passthrough for band rows with no suite match. Like the
-    signing twin, NOT in any registry plan."""
-    from pyspark.sql import functions as F
-
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        _lsh_band_frame,
-        _lsh_rescore_arrow,
-        _lsh_sign_frame,
-        _suite_flagged_embeddings,
-    )
-
-    n = _suite_flagged_embeddings(spark, SF_DIR)
-    dim = C._embedding_dim(spark, SF_DIR)
-    signed = _lsh_sign_frame(spark, n, dim)
-    suite_b = (_lsh_band_frame(signed.filter("is_suite"))
-               .select(F.col("vec_id").alias("s_vec"),
-                       F.col("v").alias("sv"),
-                       F.col("nrm").alias("snrm"),
-                       "band_id", "band_val"))
-    cand = (_lsh_band_frame(signed.filter("NOT is_suite"))
-            .join(F.broadcast(suite_b), ["band_id", "band_val"], "left")
-            .select("vec_id", "s_vec", "v", "sv", "nrm", "snrm"))
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    sql_rows = sorted(map(tuple, cand.select(
-        "vec_id", "s_vec",
-        F.when(F.col("snrm").isNotNull(),
-               F.expr(dot) / (F.col("nrm") * F.col("snrm")))
-        .alias("cosine")).collect()),
-        key=lambda t: (t[0], t[1] is None, t[1], t[2] is None, t[2]))
-    arrow_rows = sorted(map(tuple, _lsh_rescore_arrow(cand).collect()),
-                        key=lambda t: (t[0], t[1] is None, t[1],
-                                       t[2] is None, t[2]))
-    assert len(sql_rows) == len(arrow_rows) > 0
-    assert sql_rows == arrow_rows          # exact ==, not approx
-    # non-degenerate: both matched and unmatched band rows exercised
-    assert any(t[2] is None for t in sql_rows)
-    assert any(t[2] is not None for t in sql_rows)
-
-
 def test_stream_lsh_matches_batch(spark, store, tmp_path):
     """The angle-keyed screen's streaming twin: suite first, corpus
     over two microbatches, merged verdicts equal the batch operator's

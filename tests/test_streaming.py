@@ -1689,7 +1689,8 @@ def test_migrate_band_state_flips_live_stream(spark, store, tmp_path):
     band_blocking_policy flips the family, migrate_band_state re-derives
     the 10-row/doc pair-key state from the persisted SIGNATURE table (no
     re-signing, no source replay), and the continued stream under
-    band_exprs=_c2_pair_exprs(...) finds every cross-boundary pair —
+    band_exprs=blocking_exprs_for('band_pairs', ...) finds every
+    cross-boundary pair —
     the full pair table equals the batch operator's. The control run
     (same flip, NO migration) proves the job is load-bearing: the stale
     single-band state matches no pair key, so every designed (4k, 4k+1)
@@ -1761,15 +1762,16 @@ def test_migrate_band_state_video_multirow(spark, store, tmp_path):
     """migrate_band_state's multi-row-signature path (extra_keys =
     frame_idx): a video stream deployed under single bands is migrated
     to 2-of-5 pair keys from its persisted per-frame signature table,
-    and the continued stream under band_exprs=_c2_pair_exprs finds the
+    and the continued stream under the 2-of-5 band_exprs finds the
     full batch pair set — the same flip the image test pins, on the
     family whose crossover measurement motivated it (SCALING.md r11:
     single bands lose 7.6x at 1M clips)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        PAIRS56,
         VFP_N_BANDS,
-        _c2_pair_exprs,
         dedup_video_fingerprint,
     )
+    from qucosa_fcrepo_reportingdb_spark.operators.banding import band_exprs
     from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
         VFP_BANDS_TABLE,
         VFP_PAIRS_TABLE,
@@ -1792,7 +1794,7 @@ def test_migrate_band_state_video_multirow(spark, store, tmp_path):
 
     report = migrate_band_state(
         spark, store, VFP_SIGS_TABLE, VFP_BANDS_TABLE, "vfh",
-        VFP_N_BANDS, band_exprs=_c2_pair_exprs("vfh", "spark"),
+        VFP_N_BANDS, band_exprs=band_exprs("vfh", PAIRS56, "spark"),
         extra_keys=("frame_idx",))
     assert report["n_units"] == n_frames
     assert report["rows_per_unit"] == 10.0
@@ -1803,7 +1805,7 @@ def test_migrate_band_state_video_multirow(spark, store, tmp_path):
 
     q2 = stream_video_fingerprint_dedupe(
         spark, src2, store, str(tmp_path / "ck2"),
-        band_exprs=_c2_pair_exprs("vfh", "spark"))
+        band_exprs=band_exprs("vfh", PAIRS56, "spark"))
     q2.awaitTermination(180)
     streamed = {(r.d1, r.d2, r.frames_matched) for r in
                 store.read(VFP_PAIRS_TABLE).collect()}

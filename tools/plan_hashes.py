@@ -5,10 +5,17 @@ run on two trees (the last driver-attested commit vs the working tree),
 diff the hash tables, and every differing name gets a touched entry.
 
 Normalization strips the unstable bits of a plan string: expression ids
-(#123), plan ids, checkpoint/memo RDD ids, absolute paths, and byte
-statistics — what remains is the operator tree and its arguments.
+(#123), plan ids, common-subexpression counters, checkpoint/memo RDD
+ids, absolute paths, and byte statistics — what remains is the operator
+tree and its arguments. Still run-unstable: the group order of a
+distinct-aggregate rewrite (Expand gids), which follows the hash order
+of expression ids.
 
-Usage: python tools/plan_hashes.py <sf_dir> <out_file>
+A query whose plan cannot be built gets an ERR row, and the tool exits
+non-zero naming every such query: two trees that both fail must not
+compare equal.
+
+Usage: python tools/plan_hashes.py <sf_dir> <out_file> [text_dir]
 """
 
 from __future__ import annotations
@@ -39,6 +46,7 @@ def normalize(plan: str) -> str:
     plan = re.sub(r"file:[^\s,\]]*", "file:X", plan)
     plan = re.sub(r"Statistics\([^)]*\)", "Statistics(X)", plan)
     plan = re.sub(r"size in bytes[^\n]*", "size X", plan)
+    plan = re.sub(r"_common_expr_\d+", "_common_expr_N", plan)
     return plan
 
 
@@ -50,9 +58,14 @@ def main() -> None:
 
     spark = get_spark("plan-hashes")
     spark.sparkContext.setLogLevel("ERROR")
+    # Scan metadata (DataFilters, PushedFilters) is cut at a fixed
+    # length BEFORE normalization, so where the cut falls depends on
+    # how many digits the run's expression ids have; print it whole.
+    spark.conf.set("spark.sql.maxMetadataStringLength", str(1 << 20))
     if text_dir:
         os.makedirs(text_dir, exist_ok=True)
     lines = []
+    failed = []
     for name, fn in em.queries().items():
         if name in ITERATIVE:
             lines.append(f"{name} ITERATIVE")
@@ -68,9 +81,12 @@ def main() -> None:
                     tf.write(norm)
         except Exception as e:  # noqa: BLE001
             lines.append(f"{name} ERR {type(e).__name__}")
+            failed.append(f"{name}: {type(e).__name__}: {e}")
     with open(out_file, "w") as f:
         f.write("\n".join(sorted(lines)) + "\n")
     print(f"wrote {out_file} ({len(lines)} rows)")
+    if failed:
+        sys.exit(f"{len(failed)} queries raised:\n" + "\n".join(failed))
 
 
 if __name__ == "__main__":

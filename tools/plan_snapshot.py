@@ -1,16 +1,15 @@
-"""Round-15 optimization evidence tool: per-query formatted plans +
-noop-sink timings (guide §1.4 — time the computation, not the sink).
+"""Per-query formatted plans plus noop-sink timings (time the
+computation, not the sink) — before/after evidence for a plan change.
 
 Usage:
-  python tools/r15_snapshot.py <sf_dir> <tag> [names]
+  python tools/plan_snapshot.py <sf_dir> <out_dir> <tag> [names]
 
-Writes plans/r15/<name>_<tag>.txt (the .explain("formatted") output) and
+Writes <out_dir>/<name>_<tag>.txt (the .explain("formatted") output) and
 prints one timing line per query: median of PASSES noop-sink runs after
 one warm-up. `names` is a comma list, or the literals `headline` /
-`tier2` / `headline+tier2` (bench.py's sets). The bench itself keeps its
-historical .count() action — this tool exists so before/after evidence
-for the optimization round measures full-column computation in
-isolation, labeled per job (guide §1.5).
+`tier2` / `headline+tier2` (bench.py's sets; the default). The bench
+itself keeps its .count() action — this tool measures full-column
+computation in isolation, each run labeled with its query and tag.
 """
 
 from __future__ import annotations
@@ -32,9 +31,10 @@ def noop(df) -> None:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
-    sel = sys.argv[3] if len(sys.argv) > 3 else "headline+tier2"
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    sf_dir, outdir, tag = sys.argv[1:4]
+    sel = sys.argv[4] if len(sys.argv) > 4 else "headline+tier2"
 
     import bench
     import __spark_entry__ as entrymod
@@ -49,10 +49,8 @@ def main() -> None:
     else:
         names = [n for n in sel.split(",") if n]
 
-    spark = get_spark("r15-snapshot")
+    spark = get_spark("plan-snapshot")
     spark.sparkContext.setLogLevel("ERROR")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", "r15")
     os.makedirs(outdir, exist_ok=True)
 
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM warm-up
@@ -65,7 +63,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted")
         with open(os.path.join(outdir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(plan)
-        spark.sparkContext.setJobDescription(f"r15 {tag}: {name}")
+        spark.sparkContext.setJobDescription(f"snapshot {tag}: {name}")
         try:
             t0 = time.time()
             noop(fn(spark, sf_dir))

@@ -81,17 +81,18 @@ def main():
             d = os.path.join(root, f"x{s}")
             n_docs = build_replica_corpus(spark, base, s, d)
             if ONLY64:
+                from qucosa_fcrepo_reportingdb_spark.operators.banding import (
+                    band_exprs,
+                    explode_bands,
+                )
                 from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-                    SIMHASH64_BITS,
-                    _c2_pair_exprs,
+                    PAIRS62,
                     _simhash64_signatures,
                 )
                 from pyspark.sql import functions as FF
-                sigs = _simhash64_signatures(spark, d)
-                bands = sigs.select(FF.posexplode(FF.array(*[
-                    FF.expr(e) for e in
-                    _c2_pair_exprs("simhash", "spark", SIMHASH64_BITS)
-                ])).alias("band_idx", "band_val"))
+                bands = explode_bands(
+                    _simhash64_signatures(spark, d),
+                    band_exprs("simhash", PAIRS62, "spark"))
                 r = (bands.groupBy("band_idx", "band_val")
                      .agg(FF.count(FF.lit(1)).alias("k"))
                      .agg(FF.count(FF.lit(1)).alias("n_buckets"),

@@ -8,9 +8,10 @@ guarded merge.
 Usage:
   python tools/streaming_bench.py [sf_dir] [n_batches] [passes]
 
-Method: split <sf_dir>/documents.parquet into n_batches one-file
-slices by pmod(doc_id, n_batches) (deterministic), then run
-stream_ngram_decontaminate (maxFilesPerTrigger=1, availableNow) to
+Method: write <sf_dir>/documents.parquet as n_batches one-file slices
+(deterministic): the suite docs (key_hash < BENCH_RATE) first, then the
+corpus docs split by pmod(doc_id, n_batches - 1) — so n_batches must be
+at least 2. Then run stream_ngram_decontaminate (maxFilesPerTrigger=1, availableNow) to
 completion against a fresh store + checkpoint per pass. Two arms per
 pass: production (merge guard ON — the shipped path) and a
 guard-skipped twin (TableStore._assert_immutable_redelivery
@@ -79,6 +80,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     passes = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    if n_batches < 2:
+        sys.exit(f"n_batches must be >= 2 (one suite file plus at least "
+                 f"one corpus slice); got {n_batches}")
 
     spark = get_spark("streaming-bench")
     spark.sparkContext.setLogLevel("ERROR")
