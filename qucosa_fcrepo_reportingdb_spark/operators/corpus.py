@@ -72,6 +72,21 @@ def key_hash(col: str) -> str:
 BENCH_RATE = MOD // 20     # ~5% of documents play the held-out benchmark
 CONTAMINATION_MIN_SHINGLES = 3
 
+
+def _bench_split(frame: DataFrame, id_col: str = "doc_id",
+                 flag: str = "is_suite") -> DataFrame:
+    """Flag the ~5% key_hash benchmark sample every single-suite screen
+    shares, so an entity's text, embedding and media agree on whether
+    it is held-out eval material."""
+    return frame.withColumn(flag, F.expr(key_hash(id_col)) < BENCH_RATE)
+
+
+def _suite_slice(frame: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Tag the key_hash suite slice the multi-suite screens share
+    (suite < N_BENCH_SUITES is a benchmark suite, the rest is corpus)."""
+    return frame.withColumn(
+        "suite", F.expr(f"{key_hash(id_col)} % {SUITE_SLICE_MOD}"))
+
 PACK_BUDGET_TOKENS = 512   # context-window token budget per pack
 PACK_SHARDS = 16           # independent packing streams (no global sort)
 
@@ -124,24 +139,34 @@ def _ngram_screen(spark: SparkSession, sf_dir: str,
     re-tokenized the corpus from parquet per invocation — the same
     duplicated-subtree cost the suite-refresh form already avoided."""
     sh = _bench_shingled(spark, sf_dir)
-    # explode_outer + null-filter rather than explode: see
-    # operators/dedup.py — InferFiltersFromGenerate on a non-outer explode
-    # pushes a size(sh)>0 predicate below the projection chain with full
-    # expression substitution.
-    bench_sh = (
-        sh.filter("is_bench")
-        .select(F.explode_outer("sh").alias("s"))
-        .filter(F.col("s").isNotNull())
-        .distinct()
-    )
     corpus = sh.filter(~F.col("is_bench"))
     if incoming_only:
         corpus = corpus.filter(
             (F.col("doc_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW)
+    return ngram_screen_frame(corpus, _shingle_set(sh.filter("is_bench")))\
+        .orderBy("doc_id")
+
+
+def _shingle_set(frame: DataFrame, col: str = "sh", *keep: str) -> DataFrame:
+    """Distinct (``keep``..., s) rows of the hash array ``col`` — the
+    suite side of the lexical screens. explode_outer + null-filter
+    rather than explode: see operators/dedup.py — InferFiltersFromGenerate
+    on a non-outer explode pushes a size(sh)>0 predicate below the
+    projection chain with full expression substitution."""
+    return (frame.select(*keep, F.explode_outer(col).alias("s"))
+            .filter(F.col("s").isNotNull())
+            .distinct())
+
+
+def ngram_screen_frame(corpus: DataFrame, suite: DataFrame) -> DataFrame:
+    """Shared verdict body of the lexical screen — corpus shingles
+    (doc_id, sh) against the suite shingle set (s): one shingle explode,
+    one broadcast join, one per-doc count. One code path for the batch,
+    incremental and streaming forms."""
     overlap = (
         corpus.select("doc_id", F.explode_outer("sh").alias("s"))
         .filter(F.col("s").isNotNull())
-        .join(F.broadcast(bench_sh), "s", "inner")
+        .join(F.broadcast(suite), "s", "inner")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
@@ -154,7 +179,6 @@ def _ngram_screen(spark: SparkSession, sf_dir: str,
             (F.coalesce("n_overlap", F.lit(0))
              >= CONTAMINATION_MIN_SHINGLES).alias("contaminated"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -212,9 +236,7 @@ def _bench_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     path already needs."""
     def build() -> DataFrame:
         docs = fan_out(t(spark, sf_dir, "documents"), "doc_id")
-        return (shingled_docs(docs)
-                .withColumn("is_bench",
-                            F.expr(key_hash("doc_id")) < BENCH_RATE)
+        return (_bench_split(shingled_docs(docs), flag="is_bench")
                 .transform(cut_lineage))
     return session_memo(spark, ("bench_shingled", sf_dir), build)
 
@@ -1879,18 +1901,30 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches (bits, corpus explode, roll-up base) re-tokenized the
     corpus per branch before."""
     sh = _bench_shingled(spark, sf_dir)
-    # explode(array(...)) of a scan-local value is safe (size(CreateArray)
-    # constant-folds; no InferFiltersFromGenerate blowup)
-    bits = (
-        sh.filter("is_bench")
-        .select(F.explode_outer("sh").alias("s"))
+    return bloom_screen_frame(sh.filter(~F.col("is_bench")),
+                              _bloom_bit_set(sh.filter("is_bench")))\
+        .orderBy("doc_id")
+
+
+def _bloom_bit_set(suite: DataFrame) -> DataFrame:
+    """Distinct set-bit positions (bit) of the suite docs' shingles.
+    explode(array(...)) of a scan-local value is safe (size(CreateArray)
+    constant-folds; no InferFiltersFromGenerate blowup)."""
+    return (
+        suite.select(F.explode_outer("sh").alias("s"))
         .filter(F.col("s").isNotNull())
         .selectExpr(f"explode({_bloom_bits('s')}) AS bit")
         .distinct()
     )
+
+
+def bloom_screen_frame(corpus: DataFrame, bits: DataFrame) -> DataFrame:
+    """Shared verdict body of the bloom screen — corpus shingles
+    (doc_id, sh) against the suite's set bits (bit): two broadcast
+    semi-joins and one per-doc count, for the batch and streaming
+    forms."""
     ex = (
-        sh.filter(~F.col("is_bench"))
-        .select("doc_id", F.explode_outer("sh").alias("s"))
+        corpus.select("doc_id", F.explode_outer("sh").alias("s"))
         .filter(F.col("s").isNotNull())
         .selectExpr("doc_id", f"{_bloom_bits('s')}[0] AS b1",
                     f"{_bloom_bits('s')}[1] AS b2")
@@ -1904,7 +1938,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_bloom_hits"))
     )
     return (
-        sh.filter(~F.col("is_bench")).select("doc_id")
+        corpus.select("doc_id")
         .join(hits, "doc_id", "left")
         .select(
             "doc_id",
@@ -1912,7 +1946,6 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.coalesce("n_bloom_hits", F.lit(0))
              >= CONTAMINATION_MIN_SHINGLES).alias("maybe_contaminated"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -4214,11 +4247,7 @@ def _suite_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch + incremental pair audited at 8 scans each before this)."""
     def build() -> DataFrame:
         docs = fan_out(t(spark, sf_dir, "documents"), "doc_id")
-        return (shingled_docs(docs)
-                .withColumn("suite",
-                            F.expr(f"{key_hash('doc_id')}"
-                                   f" % {SUITE_SLICE_MOD}"))
-                .transform(cut_lineage))
+        return _suite_slice(shingled_docs(docs)).transform(cut_lineage)
     return session_memo(spark, ("suite_shingled", sf_dir), build)
 
 
@@ -4238,25 +4267,23 @@ def decontaminate_multi_suite(spark: SparkSession,
     no pivot shuffle); the suite-tagged shingle frame is a memoized
     artifact shared with the incremental screen."""
     sh = _suite_shingled(spark, sf_dir)
-    suites = (
-        sh.filter(F.col("suite") < N_BENCH_SUITES)
-        .select("suite", F.explode_outer("sh").alias("s"))
-        .filter(F.col("s").isNotNull())
-        .distinct()
-    )
-    corpus = sh.filter(F.col("suite") >= N_BENCH_SUITES)
-    overlap = (
-        corpus.select("doc_id", F.explode_outer("sh").alias("s"))
-        .filter(F.col("s").isNotNull())
-        .join(F.broadcast(suites), "s", "inner")
-        .groupBy("doc_id")
-        .agg(*[F.sum(F.when(F.col("suite") == k, 1).otherwise(0))
-               .cast("long").alias(f"n_overlap_suite{k}")
-               for k in range(N_BENCH_SUITES)])
-    )
+    return multi_suite_screen_frame(
+        sh.filter(F.col("suite") >= N_BENCH_SUITES),
+        _shingle_set(sh.filter(F.col("suite") < N_BENCH_SUITES), "sh",
+                     "suite")).orderBy("doc_id")
+
+
+def multi_suite_screen_frame(corpus: DataFrame,
+                             suites: DataFrame) -> DataFrame:
+    """Shared verdict body of the multi-suite screen — corpus shingles
+    (doc_id, sh) against the (suite, s) shingle rows: per-suite overlap
+    counts in one conditional aggregation, for the batch and streaming
+    forms."""
     cols = [f"n_overlap_suite{k}" for k in range(N_BENCH_SUITES)]
     any_pred = " OR ".join(
         f"{c} >= {CONTAMINATION_MIN_SHINGLES}" for c in cols)
+    overlap = _suite_overlap_counts(corpus, suites,
+                                    list(range(N_BENCH_SUITES)))
     return (
         corpus.select("doc_id")
         .join(overlap, "doc_id", "left")
@@ -4264,7 +4291,6 @@ def decontaminate_multi_suite(spark: SparkSession,
             "doc_id",
             *[f"coalesce({c}, 0) AS {c}" for c in cols])
         .selectExpr("doc_id", *cols, f"{any_pred} AS contaminated")
-        .orderBy("doc_id")
     )
 
 
@@ -4352,12 +4378,8 @@ def decontaminate_multi_suite_incremental(spark: SparkSession,
     row-identical to the batch operator, which the path-equivalence
     pytest pins."""
     sh = _suite_shingled(spark, sf_dir)
-    suites = (
-        sh.filter(F.col("suite") < N_BENCH_SUITES)
-        .select("suite", F.explode_outer("sh").alias("s"))
-        .filter(F.col("s").isNotNull())
-        .distinct()
-    )
+    suites = _shingle_set(sh.filter(F.col("suite") < N_BENCH_SUITES), "sh",
+                          "suite")
     corpus = sh.filter(F.col("suite") >= N_BENCH_SUITES) \
         .select("doc_id", "sh")
     is_new = (F.col("doc_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW
@@ -4444,19 +4466,23 @@ def _strip_span_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan VERDICT r9 flagged as the registry's widest (28)."""
     def build() -> DataFrame:
         docs = fan_out(t(spark, sf_dir, "documents"), "doc_id")
-        toks = docs.selectExpr(
-            "doc_id", f"{H.tokens('text', 'spark')} AS toks")
-        th = toks.selectExpr(
-            "doc_id", "size(toks) AS n_tokens",
-            f"{H.token_hashes('toks', 'spark')} AS th")
-        return th.selectExpr(
-            "doc_id", "n_tokens",
-            "CASE WHEN n_tokens >= 3 THEN 3 ELSE 1 END AS span",
-            f"{H.ordered_shingle_hashes('th', 'spark')} AS gr") \
-            .withColumn("suite",
-                        F.expr(f"{key_hash('doc_id')} % {SUITE_SLICE_MOD}")) \
-            .transform(cut_lineage)
+        return strip_span_grams_frame(docs).transform(cut_lineage)
     return session_memo(spark, ("strip_span_grams", sf_dir), build)
+
+
+def strip_span_grams_frame(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, span, gr, suite) from (doc_id, text): the
+    positional 3-gram hashes and suite slice of each doc, for the batch
+    artifact and the stream's micro-batches."""
+    toks = docs.selectExpr(
+        "doc_id", f"{H.tokens('text', 'spark')} AS toks")
+    th = toks.selectExpr(
+        "doc_id", "size(toks) AS n_tokens",
+        f"{H.token_hashes('toks', 'spark')} AS th")
+    return _suite_slice(th.selectExpr(
+        "doc_id", "n_tokens",
+        "CASE WHEN n_tokens >= 3 THEN 3 ELSE 1 END AS span",
+        f"{H.ordered_shingle_hashes('th', 'spark')} AS gr"))
 
 
 def decontaminate_strip_spans(spark: SparkSession,
@@ -4484,12 +4510,16 @@ def decontaminate_strip_spans(spark: SparkSession,
     the exploded match frame instead of two separately-shuffled
     consumers. All integer until the final ratio."""
     grams = _strip_span_grams(spark, sf_dir)
-    suite_set = (
-        grams.filter(F.col("suite") < N_BENCH_SUITES)
-        .select(F.explode_outer("gr").alias("s"))
-        .filter(F.col("s").isNotNull()).distinct()
-    )
-    corpus = grams.filter(F.col("suite") >= N_BENCH_SUITES)
+    return strip_spans_frame(
+        grams.filter(F.col("suite") >= N_BENCH_SUITES),
+        _shingle_set(grams.filter(F.col("suite") < N_BENCH_SUITES), "gr"))\
+        .orderBy("doc_id")
+
+
+def strip_spans_frame(corpus: DataFrame, suite_set: DataFrame) -> DataFrame:
+    """Shared ledger body of the span strip — corpus grams (doc_id,
+    n_tokens, span, gr) against the suite gram set (s), for the batch
+    and streaming forms."""
     pos = corpus.select(
         "doc_id", "span",
         F.posexplode_outer("gr").alias("p", "s")
@@ -4516,7 +4546,6 @@ def decontaminate_strip_spans(spark: SparkSession,
             " / CAST(nullif(n_tokens, 0) AS DOUBLE) AS clean_ratio",
             f"coalesce(n_matched_grams, 0)"
             f" >= {CONTAMINATION_MIN_SHINGLES} AS would_drop")
-        .orderBy("doc_id")
     )
 
 
@@ -4870,8 +4899,7 @@ def _suite_flagged_embeddings(spark: SparkSession,
     screens use (key_hash < BENCH_RATE, keyed on vec_id = the entity
     id) — so a document's text representation and its embedding
     representation agree on whether it is held-out eval material."""
-    return _normed_embeddings(spark, sf_dir).withColumn(
-        "is_suite", F.expr(key_hash("vec_id")) < BENCH_RATE)
+    return _bench_split(_normed_embeddings(spark, sf_dir), "vec_id")
 
 
 def semantic_screen_frame(n: DataFrame,
@@ -5873,55 +5901,6 @@ def _lsh_sign_frame(spark: SparkSession, frame: DataFrame,
             .transform(cut_lineage))
 
 
-def _lsh_sign_frame_arrow(spark: SparkSession, frame: DataFrame,
-                          dim: int) -> DataFrame:
-    """OPT-IN Arrow/numpy twin of _lsh_sign_frame (VERDICT r13 item 7
-    — the lever SCALING.md names for a corpus build where signing
-    dominates): same (vec_id, v, nrm, is_suite, bits) output, computed
-    as one vectorized integer matmul per Arrow batch instead of POOL
-    SQL aggregates per row.
-
-    Bit-identity is BY CONSTRUCTION, not tolerance: the quantization
-    floor(v / nrm * 2^20) is the same two IEEE ops in the same order
-    (numpy elementwise division then multiplication round exactly as
-    the SQL expression does), the cast to int64 is exact, and the
-    hyperplane dot is INTEGER arithmetic — max |sum| ~ dim x 2^20 x
-    2^31 << 2^63, so no wraparound, and integer addition is
-    associative, so the matmul's accumulation order cannot matter.
-    The hash-equality pytest (tests/test_semantic_decontamination.py)
-    pins the twin against the SQL path on real data.
-
-    NOT used by any registry plan: the repo keeps Python out of every
-    non-codec plan (the PLANS.md invariant), and at the driver SFs the
-    SQL path is already sub-second. A deployment whose signing probe
-    shows the POOL-dot stage dominating opts in at the _lsh_signed
-    seam; scan-local shape (mapInPandas, no shuffle) is identical."""
-    import numpy as np
-
-    pool, scale = SEMANTIC_LSH_POOL, SEMANTIC_LSH_QSCALE
-    wt = np.array([[_lsh_weight(j, d) for d in range(1, dim + 1)]
-                   for j in range(pool)], dtype=np.int64)
-
-    def sign_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.array([np.asarray(x, dtype=np.float64)
-                             for x in pdf["v"]])
-            nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            vq = np.floor(vecs / nrm[:, None] * scale).astype(np.int64)
-            bits = (vq @ wt.T >= 0).astype(np.int64)
-            out = pdf[["vec_id", "v", "nrm", "is_suite"]].copy()
-            out["bits"] = list(bits)
-            yield out
-
-    return (frame.select("vec_id", "v", "nrm", "is_suite")
-            .mapInPandas(sign_batches,
-                         schema=("vec_id long, v array<double>, "
-                                 "nrm double, is_suite boolean, "
-                                 "bits array<bigint>")))
-
-
 def _lsh_band_frame(signed: DataFrame) -> DataFrame:
     """(vec_id, v, nrm, band_id, band_val) from a signed frame —
     SEMANTIC_LSH_BANDS rows per vector, each band value the packed
@@ -6491,34 +6470,52 @@ def decontaminate_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Signatures come from the memoized real-codec table
     (multimodal.image_phash_table: PNG round-trip in the one Python
     stage); this query shuffles 16-byte signature rows only."""
-    return _phash_screen_verdicts(spark, sf_dir, None)
+    return _perceptual_screen(spark, sf_dir, "phash")
 
 
-def _phash_screen_verdicts(spark: SparkSession, sf_dir: str,
-                           corpus_pred: "F.Column | None") -> DataFrame:
-    """Shared setup of the image screen's forms: memoized signatures,
-    key_hash suite split, optional corpus-side ingest restriction."""
+def _perceptual_screen(spark: SparkSession, sf_dir: str, family: str,
+                       corpus_pred: "F.Column | None" = None,
+                       ingest_pred: "F.Column | None" = None) -> DataFrame:
+    """Shared setup of every form of the image, audio and video
+    screens: the family's memoized signature table, the key_hash suite
+    split, and an optional ingest predicate — ``corpus_pred`` restricts
+    the corpus side (incremental and manifest forms), ``ingest_pred``
+    labels the suite-refresh phases (see _sig56_screen_frame)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        _afp_signatures,
         _phash_signatures,
+        _vfp_signatures,
     )
-    ph = _phash_signatures(spark, sf_dir).withColumn(
-        "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
-    corpus = ph.filter(~F.col("is_suite"))
+    signatures = {"phash": _phash_signatures, "afp": _afp_signatures,
+                  "vfp": _vfp_signatures}[family]
+    screen, cols, _ = PERCEPTUAL_SCREENS[family]
+    sigs = _bench_split(signatures(spark, sf_dir))
+    corpus = sigs.filter(~F.col("is_suite"))
     if corpus_pred is not None:
         corpus = corpus.filter(corpus_pred)
-    return phash_screen_frame(
-        corpus.select("doc_id", "phash"),
-        ph.filter("is_suite").select(F.col("doc_id").alias("s_doc"),
-                                     F.col("phash").alias("s_phash")))
+    return screen(corpus.select("doc_id", *cols),
+                  perceptual_suite_rows(sigs, family), ingest_pred)
 
 
-def phash_screen_frame(corpus: DataFrame, suite: DataFrame) -> DataFrame:
+def perceptual_suite_rows(sigs: DataFrame, family: str) -> DataFrame:
+    """The suite side (s_doc, *suite columns) of an is_suite-flagged
+    signature frame, in the shape the family's verdict body and its
+    stream's suite-state table take."""
+    _, cols, suite_cols = PERCEPTUAL_SCREENS[family]
+    return sigs.filter("is_suite").select(
+        F.col("doc_id").alias("s_doc"),
+        *[c if c == a else F.col(c).alias(a)
+          for c, a in zip(cols, suite_cols)])
+
+
+def phash_screen_frame(corpus: DataFrame, suite: DataFrame,
+                       ingest_pred: "F.Column | None" = None) -> DataFrame:
     """Shared verdict body of the image perceptual screen — corpus
     signatures (doc_id, phash) against suite signatures (s_doc,
     s_phash): banded broadcast join, hamming verify, per-asset roll-up.
-    One code path for the batch, incremental, and streaming forms, so
-    the gate can't drift between them (the semantic_screen_frame
-    convention)."""
+    One code path for the batch, incremental, suite-refresh and
+    streaming forms, so the gate can't drift between them (the
+    semantic_screen_frame convention)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         PHASH_HAMMING_MAX,
         PHASH_N_BANDS,
@@ -6526,7 +6523,21 @@ def phash_screen_frame(corpus: DataFrame, suite: DataFrame) -> DataFrame:
     return _sig56_screen_frame(
         corpus.select("doc_id", F.col("phash").alias("sig")),
         suite.select("s_doc", F.col("s_phash").alias("s_sig")),
-        PHASH_N_BANDS, PHASH_HAMMING_MAX)
+        PHASH_N_BANDS, PHASH_HAMMING_MAX, ingest_pred)
+
+
+def afp_screen_frame(corpus: DataFrame, suite: DataFrame,
+                     ingest_pred: "F.Column | None" = None) -> DataFrame:
+    """phash_screen_frame for the audio fingerprint: corpus (doc_id,
+    afp) against suite (s_doc, s_afp)."""
+    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        AFP_HAMMING_MAX,
+        AFP_N_BANDS,
+    )
+    return _sig56_screen_frame(
+        corpus.select("doc_id", F.col("afp").alias("sig")),
+        suite.select("s_doc", F.col("s_afp").alias("s_sig")),
+        AFP_N_BANDS, AFP_HAMMING_MAX, ingest_pred)
 
 
 def _sig56_screen_frame(corpus: DataFrame, suite: DataFrame,
@@ -6608,8 +6619,9 @@ def decontaminate_phash_incremental(spark: SparkSession,
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         PHASH_INCREMENTAL_NEW,
     )
-    return _phash_screen_verdicts(
-        spark, sf_dir, (F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW)
+    return _perceptual_screen(
+        spark, sf_dir, "phash",
+        corpus_pred=(F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW)
 
 
 def _sig56_screen_oracle(ctes: str, src: str, sig: str, hamming_max: int,
@@ -6691,19 +6703,10 @@ def decontaminate_phash_suite_refresh(spark: SparkSession,
     broadcast join; the release stand-in is the corpus-wide
     {INCREMENTAL_MOD}/{INCREMENTAL_NEW} convention on suite ids."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        PHASH_HAMMING_MAX,
         PHASH_INCREMENTAL_NEW,
-        PHASH_N_BANDS,
-        _phash_signatures,
     )
-    ph = _phash_signatures(spark, sf_dir).withColumn(
-        "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
-    return _sig56_screen_frame(
-        ph.filter(~F.col("is_suite"))
-        .select("doc_id", F.col("phash").alias("sig")),
-        ph.filter("is_suite").select(F.col("doc_id").alias("s_doc"),
-                                     F.col("phash").alias("s_sig")),
-        PHASH_N_BANDS, PHASH_HAMMING_MAX,
+    return _perceptual_screen(
+        spark, sf_dir, "phash",
         ingest_pred=(F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW)
 
 
@@ -6728,28 +6731,7 @@ def decontaminate_afp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_sig56_screen_frame — recall 1.0 structurally); signatures come
     from the memoized real WAV-round-trip table, so this query shuffles
     16-byte rows only."""
-    return _afp_screen_verdicts(spark, sf_dir, None)
-
-
-def _afp_screen_verdicts(spark: SparkSession, sf_dir: str,
-                         corpus_pred: "F.Column | None") -> DataFrame:
-    """Shared setup of the audio screen's forms: memoized signatures,
-    key_hash suite split, optional corpus-side ingest restriction."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        AFP_HAMMING_MAX,
-        AFP_N_BANDS,
-        _afp_signatures,
-    )
-    af = _afp_signatures(spark, sf_dir).withColumn(
-        "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
-    corpus = af.filter(~F.col("is_suite"))
-    if corpus_pred is not None:
-        corpus = corpus.filter(corpus_pred)
-    return _sig56_screen_frame(
-        corpus.select("doc_id", F.col("afp").alias("sig")),
-        af.filter("is_suite").select(F.col("doc_id").alias("s_doc"),
-                                     F.col("afp").alias("s_sig")),
-        AFP_N_BANDS, AFP_HAMMING_MAX)
+    return _perceptual_screen(spark, sf_dir, "afp")
 
 
 def _afp_screen_oracle(incoming_only: bool = False,
@@ -6773,19 +6755,10 @@ def decontaminate_afp_suite_refresh(spark: SparkSession,
     decomposition, same release stand-in, the audio fingerprint's
     banding)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        AFP_HAMMING_MAX,
         AFP_INCREMENTAL_NEW,
-        AFP_N_BANDS,
-        _afp_signatures,
     )
-    af = _afp_signatures(spark, sf_dir).withColumn(
-        "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
-    return _sig56_screen_frame(
-        af.filter(~F.col("is_suite"))
-        .select("doc_id", F.col("afp").alias("sig")),
-        af.filter("is_suite").select(F.col("doc_id").alias("s_doc"),
-                                     F.col("afp").alias("s_sig")),
-        AFP_N_BANDS, AFP_HAMMING_MAX,
+    return _perceptual_screen(
+        spark, sf_dir, "afp",
         ingest_pred=(F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW)
 
 
@@ -6798,8 +6771,9 @@ def decontaminate_afp_incremental(spark: SparkSession,
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         AFP_INCREMENTAL_NEW,
     )
-    return _afp_screen_verdicts(
-        spark, sf_dir, (F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW)
+    return _perceptual_screen(
+        spark, sf_dir, "afp",
+        corpus_pred=(F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW)
 
 
 QUERIES["decontaminate_afp"] = decontaminate_afp
@@ -6833,7 +6807,7 @@ def decontaminate_vfp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VFP_FRAMES x 16 bytes/clip), suite side broadcast, frame arrays
     folded clip-level before the verify (the r10 strip-spans-style
     collapse dedup's verify uses)."""
-    return _vfp_screen_verdicts(spark, sf_dir, incoming_only=False)
+    return _perceptual_screen(spark, sf_dir, "vfp")
 
 
 def decontaminate_vfp_incremental(spark: SparkSession,
@@ -6842,28 +6816,12 @@ def decontaminate_vfp_incremental(spark: SparkSession,
     perceptual families' shared ingest convention): the incoming
     batch's frame signatures vs the suite's, O(batch) per ingest, rows
     identical to the batch screen's for incoming ids."""
-    return _vfp_screen_verdicts(spark, sf_dir, incoming_only=True)
-
-
-def _vfp_screen_verdicts(spark: SparkSession, sf_dir: str,
-                         incoming_only: bool,
-                         corpus_pred: "F.Column | None" = None) -> DataFrame:
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         VFP_INCREMENTAL_NEW,
-        _vfp_signatures,
     )
-    vf = _vfp_signatures(spark, sf_dir).withColumn(
-        "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
-    corpus = vf.filter(~F.col("is_suite"))
-    if incoming_only:
-        corpus = corpus.filter(
-            (F.col("doc_id") % 4) == VFP_INCREMENTAL_NEW)
-    if corpus_pred is not None:
-        corpus = corpus.filter(corpus_pred)
-    suite = vf.filter("is_suite")
-    return vfp_screen_frame(
-        corpus.select("doc_id", "frame_idx", "vfh"),
-        suite.select(F.col("doc_id").alias("s_doc"), "frame_idx", "vfh"))
+    return _perceptual_screen(
+        spark, sf_dir, "vfp",
+        corpus_pred=(F.col("doc_id") % 4) == VFP_INCREMENTAL_NEW)
 
 
 def vfp_screen_frame(corpus: DataFrame, suite: DataFrame,
@@ -6905,6 +6863,14 @@ def vfp_screen_frame(corpus: DataFrame, suite: DataFrame,
             (F.coalesce("n_hits", F.lit(0)) >= 1).alias("contaminated"))
         .orderBy("doc_id")
     )
+
+
+# family -> (verdict body, corpus signature columns, suite columns)
+PERCEPTUAL_SCREENS = {
+    "phash": (phash_screen_frame, ["phash"], ["s_phash"]),
+    "afp": (afp_screen_frame, ["afp"], ["s_afp"]),
+    "vfp": (vfp_screen_frame, ["frame_idx", "vfh"], ["frame_idx", "vfh"]),
+}
 
 
 def _vfp_matched_clips(corpus: DataFrame,
@@ -6950,15 +6916,9 @@ def decontaminate_vfp_suite_refresh(spark: SparkSession,
     n_hits_new_suite (clip membership is disjoint)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         VFP_INCREMENTAL_NEW,
-        _vfp_signatures,
     )
-    vf = _vfp_signatures(spark, sf_dir).withColumn(
-        "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
-    return vfp_screen_frame(
-        vf.filter(~F.col("is_suite"))
-        .select("doc_id", "frame_idx", "vfh"),
-        vf.filter("is_suite")
-        .select(F.col("doc_id").alias("s_doc"), "frame_idx", "vfh"),
+    return _perceptual_screen(
+        spark, sf_dir, "vfp",
         ingest_pred=(F.col("doc_id") % 4) == VFP_INCREMENTAL_NEW)
 
 
@@ -7293,12 +7253,11 @@ def _contamination_manifest(spark: SparkSession, sf_dir: str,
               else decontaminate_embedding_recallk)
     sem = sem_fn(spark, sf_dir).selectExpr(
         "vec_id AS doc_id", "contaminated AS flagged_semantic")
-    img = _phash_screen_verdicts(spark, sf_dir, pred).select(
+    img = _perceptual_screen(spark, sf_dir, "phash", pred).select(
         "doc_id", F.col("contaminated").alias("flagged_image"))
-    aud = _afp_screen_verdicts(spark, sf_dir, pred).select(
+    aud = _perceptual_screen(spark, sf_dir, "afp", pred).select(
         "doc_id", F.col("contaminated").alias("flagged_audio"))
-    vid = _vfp_screen_verdicts(spark, sf_dir, incoming_only=False,
-                               corpus_pred=pred).select(
+    vid = _perceptual_screen(spark, sf_dir, "vfp", pred).select(
         "doc_id", F.col("contaminated").alias("flagged_video"))
     # r16: the delta-ingest form's five verdict frames are O(batch) by
     # construction (every screen restricts its corpus side to the
@@ -9360,8 +9319,7 @@ def _multisuite_flagged_embeddings(spark: SparkSession,
     suite-slice membership as the lexical multi-suite screens
     (key_hash % SUITE_SLICE_MOD), so an entity's text and embedding
     representations agree on which benchmark battery it belongs to."""
-    return _normed_embeddings(spark, sf_dir).withColumn(
-        "suite", F.expr(f"{key_hash('vec_id')} % {SUITE_SLICE_MOD}"))
+    return _suite_slice(_normed_embeddings(spark, sf_dir), "vec_id")
 
 
 def _embedding_suite_hits(spark: SparkSession, sf_dir: str,
@@ -9383,7 +9341,18 @@ def _embedding_suite_hits(spark: SparkSession, sf_dir: str,
                       F.col("label").alias("s_label"),
                       F.col("v").alias("sv"),
                       F.col("nrm").alias("snrm")))
-    corpus = n.filter(F.col("suite") >= N_BENCH_SUITES)
+    return semantic_multisuite_frame(
+        n.filter(F.col("suite") >= N_BENCH_SUITES), suites,
+        with_phase).orderBy("vec_id")
+
+
+def semantic_multisuite_frame(corpus: DataFrame, suites: DataFrame,
+                              with_phase: bool = False) -> DataFrame:
+    """Shared verdict body of the embedding multi-suite screen — corpus
+    vectors (vec_id, label, v, nrm) against suite vectors (s_suite,
+    s_label, sv, snrm): one broadcast same-cell join, one conditional
+    aggregate with a per-suite hit column, for the batch, incremental
+    and streaming forms."""
     dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
            "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
     scored = (
@@ -9405,11 +9374,8 @@ def _embedding_suite_hits(spark: SparkSession, sf_dir: str,
     phase = ([f"CASE WHEN vec_id % {INCREMENTAL_MOD} >= "
               f"{INCREMENTAL_NEW} THEN 'ingest' ELSE 'backfill' END"
               " AS phase"] if with_phase else [])
-    return (
-        agg.selectExpr("vec_id", *phase, *cols,
-                       f"{any_pred} AS contaminated")
-        .orderBy("vec_id")
-    )
+    return agg.selectExpr("vec_id", *phase, *cols,
+                          f"{any_pred} AS contaminated")
 
 
 def decontaminate_embedding_multisuite(spark: SparkSession,

@@ -70,6 +70,11 @@ def attach_binary(docs: DataFrame) -> DataFrame:
     )
 
 
+# First bytes that can begin a header decode_image parses: 'P' (P6 PPM),
+# 'B' (BMP) and 0x89 (the PNG signature).
+_DECODABLE_FIRST_BYTES = frozenset(b"PB\x89")
+
+
 def decode_image(content: bytes) -> tuple[str, int, int, int]:
     """Real decode path: ``(format, width, height, channels)`` for the two
     formats decodable with zero dependencies — binary PPM (P6) and
@@ -292,9 +297,9 @@ def decode_features(assets: DataFrame) -> DataFrame:
     array thrashes memory bandwidth under 32 concurrent workers
     (0.84 s vs 0.41 s at 2000x256 KB — see OPTIMIZATION_r16.md).
     decode_image (a per-row header parse) runs only for rows whose
-    first byte can begin a decodable header ('P'/'B'/0x89) — every
-    other payload raised NotImplementedError two bytes in, so the gate
-    is behavior-identical. Only (asset_id, content) cross the Python
+    first byte is in _DECODABLE_FIRST_BYTES — every other payload
+    raised NotImplementedError two bytes in, so the gate is
+    behavior-identical. Only (asset_id, content) cross the Python
     boundary (guide §4.1)."""
     schema = ("asset_id long, n_bytes int, first_byte int, checksum int, "
               "decoder string, width int, height int, channels int")
@@ -321,7 +326,7 @@ def decode_features(assets: DataFrame) -> DataFrame:
                 n_bytes = int(b.size)
                 csum = int(b.sum(dtype=np.int64) % CHECKSUM_MOD)
                 fmt, w, h, ch = "stub", None, None, None
-                if n_bytes >= 2 and first in (0x50, 0x42, 0x89):
+                if n_bytes >= 2 and first in _DECODABLE_FIRST_BYTES:
                     try:
                         fmt, w, h, ch = decode_image(sc.as_py())
                     except NotImplementedError:

@@ -16,7 +16,35 @@ same topology is two streaming jobs with tables as the handoff:
 
 All of these run against file sources in tests (maxFilesPerTrigger is the
 S4 batch-size control); swapping to Kafka is a source-config change, not a
-plan change.
+plan change. Every foreachBatch job reads and drains through one source/
+sink pair, ``_drain_files``.
+
+The decontamination stream twins
+--------------------------------
+The eleven ``stream_*_decontaminate`` jobs are the streaming forms of
+the suite screens in operators/corpus.py. Each is a prepare step, its
+suite rows and the batch operator's own verdict body, run by one loop,
+``_suite_screen_stream``. The loop's contract:
+
+- Suite before corpus. In each micro-batch the suite members merge into
+  the accumulated suite-state table first; the corpus members are then
+  screened against the updated state. With suite rows delivered no
+  later than the corpus rows they contaminate, the final verdicts equal
+  the batch operator's. A late suite row can only add hits: replaying
+  the corpus re-screens it, and the keyed merge keeps one verdict row
+  per id.
+- ``suite_epoch``. Every verdict row carries the suite-state row count
+  it was screened against (``_with_suite_epoch``). Rows whose epoch is
+  below the current count are exactly the verdicts a late suite merge
+  may have invalidated; ``stale_verdict_ids`` returns them.
+- Immutable suite payload. The count is a valid epoch only while suite
+  state is insert-only up to idempotent re-delivery, so the suite merge
+  sets ``immutable_payload``: a re-delivered key with a changed payload
+  raises ``tables.ImmutablePayloadError`` at the merge. A feed that
+  corrects suite rows keys them by (id, revision) instead.
+- Checkpoint after data. Offsets commit only after the suite state and
+  the verdicts are merged, so a failed batch replays into the same
+  tables.
 """
 
 from __future__ import annotations
@@ -33,6 +61,66 @@ from qucosa_fcrepo_reportingdb_spark import schemas
 from qucosa_fcrepo_reportingdb_spark.tables import TableStore
 from qucosa_fcrepo_reportingdb_spark.memo import cut_lineage
 from qucosa_fcrepo_reportingdb_spark.operators import banding
+from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
+    N_BENCH_SUITES,
+    PERCEPTUAL_SCREENS,
+    SEMANTIC_PROBE_K,
+    _bench_split,
+    _bloom_bit_set,
+    _lsh_sign_frame,
+    _shingle_set,
+    _suite_probe_expansion,
+    _suite_slice,
+    bloom_screen_frame,
+    lsh_screen_frame,
+    multi_suite_screen_frame,
+    ngram_screen_frame,
+    perceptual_suite_rows,
+    semantic_multisuite_frame,
+    semantic_screen_frame,
+    strip_span_grams_frame,
+    strip_spans_frame,
+)
+from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+    normed_embedding_frame,
+    shingled_docs,
+)
+from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
+    audio_fingerprint_frame,
+    image_phash_frame,
+    video_fingerprint_frame,
+)
+
+# Default source schemas: text documents, embeddings, media asset ids.
+_TEXT_DOCS = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("text", T.StringType()),
+])
+_EMBEDDINGS = T.StructType([
+    T.StructField("vec_id", T.LongType()),
+    T.StructField("embedding", T.ArrayType(T.FloatType())),
+    T.StructField("label", T.IntegerType()),
+])
+_ASSET_IDS = T.StructType([T.StructField("doc_id", T.LongType())])
+
+
+def _drain_files(spark: SparkSession, source_dir: str,
+                 schema: "T.StructType | None", checkpoint_dir: str,
+                 subdir: str, handle: "Callable[[DataFrame, int], None]"):
+    """The source/sink half of every foreachBatch job: one file per
+    micro-batch (parquet under ``schema``, text lines when it is None),
+    ``handle`` per batch, offsets committed to ``checkpoint_dir/subdir``
+    after it returns (checkpoint-after-data), drained with
+    availableNow."""
+    reader = spark.readStream.option("maxFilesPerTrigger", "1")
+    source = (reader.text(source_dir) if schema is None
+              else reader.schema(schema).parquet(source_dir))
+    return (
+        source.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", os.path.join(checkpoint_dir, subdir))
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_events_hourly(spark: SparkSession, source_dir: str,
@@ -89,18 +177,8 @@ def stream_header_merges(spark: SparkSession, source_dir: str,
         if batch_hook is not None:
             batch_hook(batch, epoch_id)
 
-    headers = (
-        spark.readStream.schema(schemas.OAI_HEADER_SCHEMA)
-        .option("maxFilesPerTrigger", "1")  # S4 bounded-batch control
-        .parquet(source_dir)
-    )
-    return (
-        headers.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "header_merge"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, schemas.OAI_HEADER_SCHEMA,
+                        checkpoint_dir, "header_merge", handle)
 
 
 def stream_dedupe_latest(spark: SparkSession, source_dir: str,
@@ -126,38 +204,54 @@ def stream_dedupe_latest(spark: SparkSession, source_dir: str,
 
 def _with_suite_epoch(verdicts: DataFrame, state: DataFrame) -> DataFrame:
     """Stamp verdict rows with the suite-state row count they were
-    screened against — the ngram stream's ADVICE-r12 convention
-    generalized to every decontamination stream: a stream has no
-    single "the suite" moment, so without the epoch a violated
-    suite-before-corpus delivery assumption leaves stale verdicts with
-    no runtime signal. Rows with suite_epoch < the CURRENT state count
-    are exactly the verdicts a late suite merge may have invalidated —
-    the replay trigger is one comparison, no rescreen. Attached as a
-    broadcast 1-row aggregate (no driver collect).
-
-    HARD CONTRACT (ADVICE r13): the count is a valid epoch only while
-    suite state is INSERT-ONLY up to idempotent re-delivery — keys
-    only ever added, and a re-delivered key carries a byte-identical
-    payload (true for every screen here: suite signatures/vectors are
-    deterministic functions of the source row, keyed by its id). A
-    deployment whose suite feed can OVERWRITE an existing key with a
-    CHANGED payload (e.g. a corrected embedding re-issued under the
-    same id) changes verdict-relevant state without changing the
-    count; such a feed must key suite rows by (id, revision) — turning
-    the correction back into an insert this epoch counts — or replace
-    the count with a store-level merge-version counter. The contract
-    is ENFORCED, not just documented (VERDICT r14 item 3): every
-    epoch-backed suite-state merge in this module passes
-    ``immutable_payload=True``, so a changed-payload re-delivery
-    raises tables.ImmutablePayloadError at the merge instead of
-    silently invalidating every epoch comparison downstream. The store's
-    per-table commit log (tables.py _COMMITS) already records one line
-    per merge and would serve, at the cost of replay determinism: the
-    row count is a pure function of state CONTENT (reprocess-stable,
-    what the idempotence tests pin); a commit counter is not."""
+    screened against (the module docstring's suite_epoch), attached as
+    a broadcast 1-row aggregate — no driver collect. The row count, not
+    the store's per-table commit log, is the epoch because it is a pure
+    function of state content: a reprocessed stream reproduces it."""
     epoch = state.agg(
         F.count(F.lit(1)).cast("long").alias("suite_epoch"))
     return verdicts.crossJoin(F.broadcast(epoch))
+
+
+def _suite_screen_stream(
+        spark: SparkSession, source_dir: str, store: TableStore,
+        checkpoint_dir: str, subdir: str, schema: T.StructType,
+        id_col: str,
+        prepare: "Callable[[DataFrame], DataFrame | None]",
+        suite_rows: "Callable[[DataFrame], DataFrame]",
+        verdict: "Callable[[DataFrame, DataFrame], DataFrame]",
+        suite: "tuple[str, T.StructType, list]",
+        verdicts: "tuple[str, T.StructType]"):
+    """The suite-first loop every decontamination twin runs (contract in
+    the module docstring). Per micro-batch: dedupe on ``id_col`` (an
+    intra-batch re-delivery would double overlap counts and leave
+    duplicate verdict rows); ``prepare`` the batch once and persist it
+    (None skips an empty batch); merge ``suite_rows(prepared)`` into the
+    ``suite`` (table, schema, keys) state; read the state back, run
+    ``verdict(prepared, state)``, stamp the epoch and keyed-merge the
+    result into the ``verdicts`` (table, schema)."""
+    suite_table, suite_schema, suite_keys = suite
+    verdicts_table, verdict_schema = verdicts
+
+    def handle(batch: DataFrame, epoch_id: int) -> None:
+        prepared = prepare(batch.dropDuplicates([id_col]))
+        if prepared is None:
+            return
+        prepared = prepared.persist()
+        try:
+            store.merge_keyed(suite_table, suite_rows(prepared),
+                              keys=suite_keys, schema=suite_schema,
+                              immutable_payload=True)
+            state = store.read(suite_table, suite_schema)
+            store.merge_keyed(
+                verdicts_table,
+                _with_suite_epoch(verdict(prepared, state), state),
+                keys=[id_col], schema=verdict_schema)
+        finally:
+            prepared.unpersist()
+
+    return _drain_files(spark, source_dir, schema, checkpoint_dir, subdir,
+                        handle)
 
 
 def stale_verdict_ids(store: "TableStore", verdicts_table: str,
@@ -217,14 +311,10 @@ def stream_minhash_dedupe(spark: SparkSession, source_dir: str,
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         band_signatures,
         join_shingles_onto_pairs,
-        shingled_docs,
         verified_jaccard_pairs,
     )
 
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
+    doc_schema = schema or _TEXT_DOCS
     shingle_schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("sh", T.ArrayType(T.LongType())),
@@ -311,18 +401,8 @@ def stream_minhash_dedupe(spark: SparkSession, source_dir: str,
         finally:
             sh_b.unpersist()
 
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "minhash_dedupe"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
+                        "minhash_dedupe", handle)
 
 
 QUALITY_VERDICTS_TABLE = "quality_verdicts"
@@ -349,10 +429,7 @@ def stream_quality_verdicts(spark: SparkSession, source_dir: str,
         quality_filter_verdicts_df,
     )
 
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
+    doc_schema = schema or _TEXT_DOCS
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         # intra-batch re-delivery (at-least-once source) must not leave
@@ -363,18 +440,8 @@ def stream_quality_verdicts(spark: SparkSession, source_dir: str,
                           keys=["doc_id"],
                           schema=QUALITY_VERDICT_SCHEMA)
 
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "quality_verdicts"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
+                        "quality_verdicts", handle)
 
 
 BLOOM_BITS_TABLE = "bloom_bits"
@@ -385,11 +452,7 @@ BLOOM_VERDICT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("n_bloom_hits", T.LongType()),
     T.StructField("maybe_contaminated", T.BooleanType()),
-    # suite-state epoch at verdict time (see _with_suite_epoch): the
-    # accumulated bloom-bit count — bits only ever set, so the count
-    # is the same monotone version counter the screen streams carry
-    # (stamped in the r15 closure sweep; pre-epoch tables read NULL ->
-    # conservatively stale via stale_verdict_ids)
+    # suite_epoch: the accumulated bloom-bit count (bits are only set)
     T.StructField("suite_epoch", T.LongType()),
 ])
 
@@ -397,102 +460,20 @@ BLOOM_VERDICT_SCHEMA = T.StructType([
 def stream_bloom_decontaminate(spark: SparkSession, source_dir: str,
                                store: TableStore, checkpoint_dir: str,
                                schema: T.StructType | None = None):
-    """Incremental bloom decontamination: benchmark documents in each
-    microbatch fold their shingle bit positions into the accumulated
-    bloom-bit state FIRST; corpus documents are then scored against the
-    updated state and keyed-merged into the verdicts table. With
-    benchmark docs delivered no later than the corpus docs they
-    contaminate, the final verdicts equal the batch
-    operators/corpus.decontaminate_bloom output (pinned by test); a
-    late-arriving benchmark doc only widens the bit set — replaying the
-    corpus (at-least-once + idempotent merge) re-scores against the
-    fuller state, the same "nothing is ever too late" posture as the
-    header merges.
-
-    Scale shape per batch: bit state is bounded by BLOOM_M regardless of
-    benchmark size (broadcast semi-joins); only the batch's shingles
-    explode; offsets commit after bits + verdicts are durably merged
-    (checkpoint-after-data)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        BENCH_RATE,
-        CONTAMINATION_MIN_SHINGLES,
-        _bloom_bits,
-        key_hash,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import shingled_docs
-
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        # dedupe by doc_id: an intra-batch re-delivery would double every
-        # shingle's hit count (2 real hits reads as 4 >= the 3-hit
-        # contamination floor) and leave duplicate verdict rows
-        sh = (
-            shingled_docs(batch.select("doc_id", "text")
-                          .dropDuplicates(["doc_id"]))
-            .withColumn("is_bench",
-                        F.expr(key_hash("doc_id")) < BENCH_RATE)
-            .persist()
-        )
-        try:
-            bench_bits = (
-                sh.filter("is_bench")
-                .select(F.explode_outer("sh").alias("s"))
-                .filter(F.col("s").isNotNull())
-                .selectExpr(f"explode({_bloom_bits('s')}) AS bit")
-                .distinct()
-            )
-            store.merge_keyed(BLOOM_BITS_TABLE, bench_bits, keys=["bit"],
-                              schema=BLOOM_BITS_SCHEMA)
-            bits = store.read(BLOOM_BITS_TABLE, BLOOM_BITS_SCHEMA)
-            ex = (
-                sh.filter(~F.col("is_bench"))
-                .select("doc_id", F.explode_outer("sh").alias("s"))
-                .filter(F.col("s").isNotNull())
-                .selectExpr("doc_id", f"{_bloom_bits('s')}[0] AS b1",
-                            f"{_bloom_bits('s')}[1] AS b2")
-            )
-            hits = (
-                ex.join(F.broadcast(bits).withColumnRenamed("bit", "b1"),
-                        "b1", "left_semi")
-                .join(F.broadcast(bits).withColumnRenamed("bit", "b2"),
-                      "b2", "left_semi")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_bloom_hits"))
-            )
-            verdicts = _with_suite_epoch(
-                sh.filter(~F.col("is_bench")).select("doc_id")
-                .join(hits, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.coalesce("n_bloom_hits", F.lit(0)).cast("long")
-                    .alias("n_bloom_hits"),
-                    (F.coalesce("n_bloom_hits", F.lit(0))
-                     >= CONTAMINATION_MIN_SHINGLES)
-                    .alias("maybe_contaminated"),
-                ),
-                bits)
-            store.merge_keyed(BLOOM_VERDICTS_TABLE, verdicts,
-                              keys=["doc_id"],
-                              schema=BLOOM_VERDICT_SCHEMA)
-        finally:
-            sh.unpersist()
-
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "bloom_decontaminate"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Streaming twin of corpus.decontaminate_bloom: benchmark docs fold
+    their shingle bit positions into the bloom-bit state, corpus docs
+    are scored against it (bloom_screen_frame). The bit state is bounded
+    by BLOOM_M regardless of benchmark size and broadcasts."""
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir, "bloom_decontaminate",
+        schema or _TEXT_DOCS, "doc_id",
+        prepare=lambda b: _bench_split(
+            shingled_docs(b.select("doc_id", "text")), flag="is_bench"),
+        suite_rows=lambda sh: _bloom_bit_set(sh.filter("is_bench")),
+        verdict=lambda sh, bits: bloom_screen_frame(
+            sh.filter(~F.col("is_bench")), bits),
+        suite=(BLOOM_BITS_TABLE, BLOOM_BITS_SCHEMA, ["bit"]),
+        verdicts=(BLOOM_VERDICTS_TABLE, BLOOM_VERDICT_SCHEMA))
 
 
 def stream_sessionize(spark: SparkSession, source_dir: str,
@@ -688,16 +669,8 @@ def stream_histogram_quantiles(spark: SparkSession, source_dir: str,
                           keys=["epoch", "grp", "bucket"],
                           schema=b.schema)
 
-    src = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", "1")
-           .parquet(source_dir))
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "histogram"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, schema, checkpoint_dir,
+                        "histogram", handle)
 
 
 def histogram_state_quantiles(store: TableStore,
@@ -769,18 +742,8 @@ def stream_validated_ingest(spark: SparkSession, source_dir: str,
         store.merge_keyed(f"{table}_quarantine", quarantine,
                           keys=["line_hash"], schema=quarantine.schema)
 
-    lines = (
-        spark.readStream
-        .option("maxFilesPerTrigger", "1")
-        .text(source_dir)
-    )
-    return (
-        lines.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "validated_ingest"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, None, checkpoint_dir,
+                        "validated_ingest", handle)
 
 
 NORM_STATE_TABLE = "embedding_norm_state"
@@ -844,16 +807,8 @@ def stream_embedding_norm_monitor(spark: SparkSession, source_dir: str,
         store.merge_keyed(NORM_STATE_TABLE, b, keys=["epoch", "label"],
                           schema=b.schema)
 
-    src = (spark.readStream.schema(emb_schema)
-           .option("maxFilesPerTrigger", "1")
-           .parquet(source_dir))
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "norm_monitor"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, emb_schema, checkpoint_dir,
+                        "norm_monitor", handle)
 
 
 def embedding_norm_state_profile(store: TableStore) -> DataFrame:
@@ -946,16 +901,8 @@ def stream_content_drift_monitor(spark: SparkSession, source_dir: str,
         store.merge_keyed(QUALITY_DRIFT_STATE_TABLE, qual,
                           keys=["epoch", "b"], schema=qual.schema)
 
-    src = (spark.readStream.schema(doc_schema)
-           .option("maxFilesPerTrigger", "1")
-           .parquet(source_dir))
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "content_drift_monitor"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
+                        "content_drift_monitor", handle)
 
 
 def lang_drift_state_profile(store: TableStore) -> DataFrame:
@@ -1023,9 +970,7 @@ def _banded_signature_dedupe_stream(
     swaps the blocking scheme — e.g. the 2-of-5 band-pair keys for the
     birthday regime (SCALING.md r8 cont. 7) — without forking the
     topology; default is the production strided single bands."""
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-    ])
+    doc_schema = schema or _ASSET_IDS
     sig_schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField(sig_col, T.LongType()),
@@ -1079,18 +1024,8 @@ def _banded_signature_dedupe_stream(
         finally:
             sig_b.unpersist()
 
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, checkpoint_name))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
+                        checkpoint_name, handle)
 
 
 def _strided_exprs(sig_col: str, n_bands: int) -> "list[str]":
@@ -1109,9 +1044,6 @@ def stream_image_phash_dedupe(spark: SparkSession, source_dir: str,
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         PHASH_HAMMING_MAX,
         PHASH_N_BANDS,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        image_phash_frame,
     )
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, schema,
@@ -1143,9 +1075,6 @@ def stream_image_phash_bandpairs_dedupe(spark: SparkSession,
         PAIRS56,
         PHASH_HAMMING_MAX,
         PHASH_N_BANDS,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        image_phash_frame,
     )
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, schema,
@@ -1181,9 +1110,6 @@ def stream_image_phash_policy_dedupe(spark: SparkSession,
         PHASH_HAMMING_MAX,
         PHASH_N_BANDS,
         blocking_exprs_for,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        image_phash_frame,
     )
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, schema,
@@ -1274,9 +1200,6 @@ def stream_audio_fingerprint_dedupe(spark: SparkSession, source_dir: str,
         AFP_HAMMING_MAX,
         AFP_N_BANDS,
     )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        audio_fingerprint_frame,
-    )
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, schema,
         sign_frame=audio_fingerprint_frame, sig_col="afp",
@@ -1317,13 +1240,8 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
         VFP_MIN_FRAMES,
         VFP_N_BANDS,
     )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        video_fingerprint_frame,
-    )
 
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-    ])
+    doc_schema = schema or _ASSET_IDS
     sig_schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("frame_idx", T.IntegerType()),
@@ -1392,18 +1310,8 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
         finally:
             sig_b.unpersist()
 
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "vfp_dedupe"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
+                        "vfp_dedupe", handle)
 
 
 # ---------------------------------------------------------------------------
@@ -1455,16 +1363,8 @@ def stream_decode_health_monitor(spark: SparkSession, source_dir: str,
                           keys=["epoch", "width", "height", "decoder"],
                           schema=rollup.schema)
 
-    src = (spark.readStream.schema(doc_schema)
-           .option("maxFilesPerTrigger", "1")
-           .parquet(source_dir))
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "decode_health_monitor"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
+                        "decode_health_monitor", handle)
 
 
 def decode_health_state_profile(store: TableStore) -> DataFrame:
@@ -1545,16 +1445,8 @@ def stream_ivf_occupancy_monitor(spark: SparkSession, source_dir: str,
         store.merge_keyed(IVF_OCCUPANCY_STATE_TABLE, b,
                           keys=["epoch", "cell"], schema=b.schema)
 
-    src = (spark.readStream.schema(emb_schema)
-           .option("maxFilesPerTrigger", "1")
-           .parquet(source_dir))
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "ivf_occupancy"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, emb_schema, checkpoint_dir,
+                        "ivf_occupancy", handle)
 
 
 def ivf_occupancy_state_profile(store: TableStore) -> DataFrame:
@@ -1601,15 +1493,8 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
         PHASH_N_BANDS,
         VFP_N_BANDS,
     )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        audio_fingerprint_frame,
-        image_phash_frame,
-        video_fingerprint_frame,
-    )
 
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-    ])
+    doc_schema = schema or _ASSET_IDS
 
     def band_rows_of(docs: DataFrame) -> DataFrame:
         ph = banding.explode_bands(
@@ -1641,16 +1526,8 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
                           keys=["epoch", "family", "band_idx", "key"],
                           schema=b.schema)
 
-    src = (spark.readStream.schema(doc_schema)
-           .option("maxFilesPerTrigger", "1")
-           .parquet(source_dir))
-    return (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "band_skew"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
+                        "band_skew", handle)
 
 
 def band_skew_state_profile(store: TableStore) -> DataFrame:
@@ -1680,242 +1557,80 @@ def band_skew_state_profile(store: TableStore) -> DataFrame:
 # ---------------------------------------------------------------------------
 SUITE_SHINGLES_TABLE = "suite_shingles"
 MULTI_SUITE_VERDICTS_TABLE = "multi_suite_verdicts"
+_SUITE_SHINGLES_SCHEMA = T.StructType([
+    T.StructField("suite", T.LongType()),
+    T.StructField("s", T.LongType()),
+])
 
 
 def stream_multi_suite_decontaminate(spark: SparkSession, source_dir: str,
                                      store: TableStore, checkpoint_dir: str,
                                      schema: "T.StructType | None" = None):
-    """Streaming twin of operators/corpus.decontaminate_multi_suite:
-    benchmark-suite documents in each microbatch fold their (suite,
-    shingle) rows into the accumulated suite state FIRST; corpus
-    documents are then screened against the updated state — per-suite
-    overlap counts in ONE conditional aggregation — and keyed-merged
-    into the verdicts table. With suite docs delivered no later than
-    the corpus docs they contaminate, the final verdicts equal the
-    batch operator exactly (pinned by test). A suite added AFTER corpus
-    docs were screened is the batch operator's backfill path
-    (decontaminate_multi_suite_incremental); in the stream the same
-    posture as the bloom job applies — replaying the corpus re-scores
-    against the fuller suite state and the idempotent merge keeps one
-    verdict row per doc.
-
-    Scale shape per batch: suite state is the distinct suite shingle
-    set (tiny — broadcast); only the batch's shingles explode; offsets
-    commit after state + verdicts are durable."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        CONTAMINATION_MIN_SHINGLES,
-        N_BENCH_SUITES,
-        SUITE_SLICE_MOD,
-        key_hash,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import shingled_docs
-
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    suite_schema = T.StructType([
-        T.StructField("suite", T.LongType()),
-        T.StructField("s", T.LongType()),
-    ])
+    """Streaming twin of corpus.decontaminate_multi_suite: suite docs
+    fold their (suite, shingle) rows into the state, corpus docs get
+    per-suite overlap counts in one conditional aggregation
+    (multi_suite_screen_frame). A suite added after corpus docs were
+    screened is the batch operator's backfill path
+    (decontaminate_multi_suite_incremental); here replaying the corpus
+    re-scores it."""
     cols = [f"n_overlap_suite{k}" for k in range(N_BENCH_SUITES)]
     verdict_schema = T.StructType(
         [T.StructField("doc_id", T.LongType())]
         + [T.StructField(c, T.LongType()) for c in cols]
         + [T.StructField("contaminated", T.BooleanType()),
-           # suite-state epoch at verdict time (see _with_suite_epoch);
-           # the (suite, shingle) row count — one TOTAL across suites,
-           # the semantic multisuite stream's deliberately conservative
-           # convention (stamped in the r15 closure sweep)
+           # one TOTAL (suite, shingle) count across suites, the
+           # semantic multisuite stream's conservative convention
            T.StructField("suite_epoch", T.LongType())])
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir, "multi_suite_decon",
+        schema or _TEXT_DOCS, "doc_id",
+        prepare=lambda b: _suite_slice(
+            shingled_docs(b.select("doc_id", "text"))),
+        suite_rows=lambda sh: _shingle_set(
+            sh.filter(F.col("suite") < N_BENCH_SUITES), "sh", "suite"),
+        verdict=lambda sh, suites: multi_suite_screen_frame(
+            sh.filter(F.col("suite") >= N_BENCH_SUITES), suites),
+        suite=(SUITE_SHINGLES_TABLE, _SUITE_SHINGLES_SCHEMA,
+               ["suite", "s"]),
+        verdicts=(MULTI_SUITE_VERDICTS_TABLE, verdict_schema))
 
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        # dedupe by doc_id: an intra-batch re-delivery would double every
-        # overlap count past the contamination floor
-        sh = (
-            shingled_docs(batch.select("doc_id", "text")
-                          .dropDuplicates(["doc_id"]))
-            .withColumn("suite",
-                        F.expr(f"{key_hash('doc_id')} % {SUITE_SLICE_MOD}"))
-            .persist()
-        )
-        try:
-            suite_rows = (
-                sh.filter(F.col("suite") < N_BENCH_SUITES)
-                .select("suite", F.explode_outer("sh").alias("s"))
-                .filter(F.col("s").isNotNull())
-                .distinct()
-            )
-            store.merge_keyed(SUITE_SHINGLES_TABLE, suite_rows,
-                              keys=["suite", "s"], schema=suite_schema)
-            suites = store.read(SUITE_SHINGLES_TABLE, suite_schema)
-            corpus = sh.filter(F.col("suite") >= N_BENCH_SUITES)
-            overlap = (
-                corpus.select("doc_id", F.explode_outer("sh").alias("s"))
-                .filter(F.col("s").isNotNull())
-                .join(F.broadcast(suites), "s", "inner")
-                .groupBy("doc_id")
-                .agg(*[F.sum(F.when(F.col("suite") == k, 1).otherwise(0))
-                       .cast("long").alias(cols[k])
-                       for k in range(N_BENCH_SUITES)])
-            )
-            any_pred = " OR ".join(
-                f"{c} >= {CONTAMINATION_MIN_SHINGLES}" for c in cols)
-            verdicts = _with_suite_epoch(
-                corpus.select("doc_id")
-                .join(overlap, "doc_id", "left")
-                .selectExpr(
-                    "doc_id",
-                    *[f"CAST(coalesce({c}, 0) AS BIGINT) AS {c}"
-                      for c in cols])
-                .selectExpr("doc_id", *cols,
-                            f"{any_pred} AS contaminated"),
-                suites)
-            store.merge_keyed(MULTI_SUITE_VERDICTS_TABLE, verdicts,
-                              keys=["doc_id"], schema=verdict_schema)
-        finally:
-            sh.unpersist()
-
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "multi_suite_decon"))
-        .trigger(availableNow=True)
-        .start()
-    )
 
 STRIP_SUITE_GRAMS_TABLE = "strip_suite_grams"
 STRIP_LEDGERS_TABLE = "strip_span_ledgers"
+_GRAM_SCHEMA = T.StructType([T.StructField("s", T.LongType())])
+_LEDGER_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("n_tokens", T.LongType()),
+    T.StructField("n_matched_grams", T.LongType()),
+    T.StructField("n_covered_tokens", T.LongType()),
+    T.StructField("clean_ratio", T.DoubleType()),
+    T.StructField("would_drop", T.BooleanType()),
+    # suite-state epoch at ledger time: the suite-gram count
+    T.StructField("suite_epoch", T.LongType()),
+])
 
 
 def stream_strip_spans_decontaminate(spark: SparkSession, source_dir: str,
                                      store: TableStore,
                                      checkpoint_dir: str,
                                      schema: "T.StructType | None" = None):
-    """Streaming twin of operators/corpus.decontaminate_strip_spans —
-    completing batch/incremental/streaming parity for span-level
-    decontamination (the last decontamination form without a stream).
-    Each microbatch: benchmark-suite docs fold their grams into the
-    accumulated suite state FIRST; corpus docs are then span-screened
-    against the updated state — the batch operator's collapsed shape
-    (one position explode, one broadcast gram join, one multi-distinct
-    aggregate) — and their ledgers keyed-merge into the table. With
-    suite docs delivered no later than the corpus docs they
-    contaminate, final ledgers equal the batch operator exactly
-    (pinned by test).
+    """Streaming twin of corpus.decontaminate_strip_spans: suite docs
+    fold their grams into the state, corpus docs get their span ledger
+    (strip_spans_frame — one position explode, one broadcast gram join,
+    one multi-distinct aggregate). Re-screening a doc against more
+    suites only moves its ledger toward the batch answer — the backfill
+    of decontaminate_strip_spans_incremental, played forward."""
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir, "strip_spans_decon",
+        schema or _TEXT_DOCS, "doc_id",
+        prepare=lambda b: strip_span_grams_frame(b.select("doc_id", "text")),
+        suite_rows=lambda g: _shingle_set(
+            g.filter(F.col("suite") < N_BENCH_SUITES), "gr"),
+        verdict=lambda g, grams: strip_spans_frame(
+            g.filter(F.col("suite") >= N_BENCH_SUITES), grams),
+        suite=(STRIP_SUITE_GRAMS_TABLE, _GRAM_SCHEMA, ["s"]),
+        verdicts=(STRIP_LEDGERS_TABLE, _LEDGER_SCHEMA))
 
-    Replay-idempotent like stream_band_skew_monitor: a re-delivered
-    corpus doc re-screens against the (possibly fuller) suite state and
-    the keyed merge keeps ONE ledger row per doc — re-screening against
-    more suites can only update the ledger toward the batch answer (the
-    backfill posture of decontaminate_strip_spans_incremental, played
-    forward by the stream instead of as a separate pass).
-
-    Scale shape per batch: suite state is the distinct suite gram set
-    (tiny — broadcast); only the batch's grams explode; covered
-    positions explode only from matches; offsets commit after state +
-    ledgers are durable."""
-    from qucosa_fcrepo_reportingdb_spark.functions import hashing as H
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        CONTAMINATION_MIN_SHINGLES,
-        N_BENCH_SUITES,
-        SUITE_SLICE_MOD,
-        key_hash,
-    )
-
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    gram_schema = T.StructType([T.StructField("s", T.LongType())])
-    ledger_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_tokens", T.LongType()),
-        T.StructField("n_matched_grams", T.LongType()),
-        T.StructField("n_covered_tokens", T.LongType()),
-        T.StructField("clean_ratio", T.DoubleType()),
-        T.StructField("would_drop", T.BooleanType()),
-        # suite-state epoch at ledger time (see _with_suite_epoch):
-        # the suite-gram count (stamped in the r15 closure sweep)
-        T.StructField("suite_epoch", T.LongType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        grams = (
-            batch.select("doc_id", "text").dropDuplicates(["doc_id"])
-            .selectExpr("doc_id", f"{H.tokens('text', 'spark')} AS toks")
-            .selectExpr("doc_id", "size(toks) AS n_tokens",
-                        f"{H.token_hashes('toks', 'spark')} AS th")
-            .selectExpr(
-                "doc_id", "n_tokens",
-                "CASE WHEN n_tokens >= 3 THEN 3 ELSE 1 END AS span",
-                f"{H.ordered_shingle_hashes('th', 'spark')} AS gr")
-            .withColumn("suite",
-                        F.expr(f"{key_hash('doc_id')} % {SUITE_SLICE_MOD}"))
-            .persist()
-        )
-        try:
-            suite_rows = (
-                grams.filter(F.col("suite") < N_BENCH_SUITES)
-                .select(F.explode_outer("gr").alias("s"))
-                .filter(F.col("s").isNotNull()).distinct()
-            )
-            store.merge_keyed(STRIP_SUITE_GRAMS_TABLE, suite_rows,
-                              keys=["s"], schema=gram_schema)
-            suite_set = store.read(STRIP_SUITE_GRAMS_TABLE, gram_schema)
-            corpus = grams.filter(F.col("suite") >= N_BENCH_SUITES)
-            pos = (corpus.select("doc_id", "span",
-                                 F.posexplode_outer("gr").alias("p", "s"))
-                   .filter(F.col("s").isNotNull()))
-            cov = (pos.join(F.broadcast(suite_set), "s")
-                   .select("doc_id", "s",
-                           F.explode(F.sequence(
-                               F.col("p"),
-                               F.col("p") + F.col("span") - 1))
-                           .alias("tp")))
-            agg = (cov.groupBy("doc_id")
-                   .agg(F.countDistinct("s").cast("long")
-                        .alias("n_matched_grams"),
-                        F.countDistinct("tp").cast("long")
-                        .alias("n_covered")))
-            ledgers = (
-                corpus.select("doc_id", "n_tokens")
-                .join(agg, "doc_id", "left")
-                .selectExpr(
-                    "doc_id", "CAST(n_tokens AS BIGINT) AS n_tokens",
-                    "CAST(coalesce(n_matched_grams, 0) AS BIGINT)"
-                    " AS n_matched_grams",
-                    "CAST(coalesce(n_covered, 0) AS BIGINT)"
-                    " AS n_covered_tokens",
-                    "CAST(n_tokens - coalesce(n_covered, 0) AS DOUBLE)"
-                    " / CAST(nullif(n_tokens, 0) AS DOUBLE)"
-                    " AS clean_ratio",
-                    f"coalesce(n_matched_grams, 0)"
-                    f" >= {CONTAMINATION_MIN_SHINGLES} AS would_drop")
-            )
-            ledgers = _with_suite_epoch(ledgers, suite_set)
-            store.merge_keyed(STRIP_LEDGERS_TABLE, ledgers,
-                              keys=["doc_id"], schema=ledger_schema)
-        finally:
-            grams.unpersist()
-
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "strip_spans_decon"))
-        .trigger(availableNow=True)
-        .start()
-    )
 
 SIMHASH64_SIGS_TABLE = "simhash64_sigs"
 SIMHASH64_BANDS_TABLE = "simhash64_bands"
@@ -1939,10 +1654,7 @@ def stream_simhash64_dedupe(spark: SparkSession, source_dir: str,
         simhash64_frame,
     )
 
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
+    doc_schema = schema or _TEXT_DOCS
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, doc_schema,
         sign_frame=simhash64_frame, sig_col="simhash",
@@ -1975,73 +1687,25 @@ SEM_VERDICT_SCHEMA = T.StructType([
 def stream_semantic_decontaminate(spark: SparkSession, source_dir: str,
                                   store: TableStore, checkpoint_dir: str,
                                   schema: "T.StructType | None" = None):
-    """Streaming twin of corpus.decontaminate_embedding, completing the
-    semantic screen's batch/incremental/stream parity (the family norm
-    every lexical screen already follows): suite vectors in each
-    microbatch merge into the accumulated suite-state table FIRST;
-    corpus vectors are then screened against the updated state through
-    the SAME join body as the batch operator (semantic_screen_frame —
-    one code path, so the scoring can't drift between forms) and their
-    verdicts keyed-merge. With suite vectors delivered no later than
-    the corpus vectors they contaminate, the final verdicts equal the
-    batch operator's output (pinned by test); a late-arriving suite
-    vector only ADDS hits — replaying the corpus (at-least-once +
-    idempotent merge) re-scores against the fuller suite, the same
-    nothing-ever-too-late posture as the bloom stream.
+    """Streaming twin of corpus.decontaminate_embedding: suite vectors
+    merge into the state, corpus vectors screen against it through
+    semantic_screen_frame, the batch operator's join body. The suite is
+    an eval benchmark and broadcasts; only the batch's vectors are
+    normed."""
+    def verdict(n: DataFrame, state: DataFrame) -> DataFrame:
+        suite = state.withColumn("is_suite", F.lit(True))
+        return semantic_screen_frame(
+            n.filter(~F.col("is_suite")).unionByName(suite))
 
-    Scale shape per batch: the suite state is an eval benchmark
-    (thousands of rows — broadcast by semantic_screen_frame); only the
-    batch's vectors are normed; offsets commit after suite + verdicts
-    are durable (checkpoint-after-data)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        BENCH_RATE,
-        key_hash,
-        semantic_screen_frame,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        normed_embedding_frame,
-    )
-
-    emb_schema = schema or T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        n = (normed_embedding_frame(batch.dropDuplicates(["vec_id"]))
-             .withColumn("is_suite",
-                         F.expr(key_hash("vec_id")) < BENCH_RATE)
-             .persist())
-        try:
-            store.merge_keyed(
-                SEM_SUITE_TABLE,
-                n.filter("is_suite").select("vec_id", "label", "v", "nrm"),
-                keys=["vec_id"], schema=SEM_SUITE_SCHEMA,
-                immutable_payload=True)
-            state = store.read(SEM_SUITE_TABLE, SEM_SUITE_SCHEMA)
-            suite = state.withColumn("is_suite", F.lit(True))
-            corpus = n.filter(~F.col("is_suite"))
-            verdicts = _with_suite_epoch(
-                semantic_screen_frame(corpus.unionByName(suite)), state)
-            store.merge_keyed(SEM_VERDICTS_TABLE, verdicts,
-                              keys=["vec_id"],
-                              schema=SEM_VERDICT_SCHEMA)
-        finally:
-            n.unpersist()
-
-    emb = (
-        spark.readStream.schema(emb_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        emb.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "semantic_decontaminate"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir, "semantic_decontaminate",
+        schema or _EMBEDDINGS, "vec_id",
+        prepare=lambda b: _bench_split(normed_embedding_frame(b), "vec_id"),
+        suite_rows=lambda n: n.filter("is_suite")
+        .select("vec_id", "label", "v", "nrm"),
+        verdict=verdict,
+        suite=(SEM_SUITE_TABLE, SEM_SUITE_SCHEMA, ["vec_id"]),
+        verdicts=(SEM_VERDICTS_TABLE, SEM_VERDICT_SCHEMA))
 
 
 SEM_RK_SUITE_TABLE = "semantic_recallk_suite_vectors"
@@ -2055,77 +1719,25 @@ def stream_semantic_recallk_decontaminate(
         spark: SparkSession, source_dir: str, store: TableStore,
         checkpoint_dir: str, cents: DataFrame,
         k=_DEFAULT_PROBE_K, schema: "T.StructType | None" = None):
-    """Streaming twin of corpus.decontaminate_embedding_recallk — the
-    recall-targeted screen's third form, completing batch/incremental/
-    stream parity for the schedule semantic_screen_policy dispatches.
-    Same state machine as stream_semantic_decontaminate (suite vectors
-    merge into state FIRST; corpus vectors screen against the updated
-    state; nothing-ever-too-late on replay), except the broadcast side
-    is the suite's top-k cell expansion (_suite_probe_expansion — one
-    shared seam with the batch form, so the probe schedule can't drift
-    between forms). ``cents`` is the coarse quantizer artifact (label,
-    c, cnrm) — in a deployment a persisted table, versioned with the
-    quantizer, exactly the posture of migrate_band_state's scheme flip:
-    re-expansion is suite-sized math, never a corpus rescan. ``k`` =
-    None runs the exact screen through the SAME topology (the policy's
-    exact_screen action needs no different stream, only a different
-    expansion).
-
-    Scale shape per batch: expansion is |suite-state| x n_cells
-    broadcast-side math; only the batch's vectors are normed; one
-    single-cell equi-join per batch."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        BENCH_RATE,
-        SEMANTIC_PROBE_K,
-        _suite_probe_expansion,
-        key_hash,
-        semantic_screen_frame,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        normed_embedding_frame,
-    )
-
+    """Streaming twin of corpus.decontaminate_embedding_recallk: the
+    broadcast side is the suite state's top-k cell expansion
+    (_suite_probe_expansion, shared with the batch form). ``cents`` is
+    the coarse quantizer artifact (label, c, cnrm), versioned with the
+    quantizer like migrate_band_state's scheme flip: re-expansion is
+    suite-sized math, never a corpus rescan. ``k`` = None runs the
+    exact screen through the same topology."""
     if k is _DEFAULT_PROBE_K:
         k = SEMANTIC_PROBE_K
-    emb_schema = schema or T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        n = (normed_embedding_frame(batch.dropDuplicates(["vec_id"]))
-             .withColumn("is_suite",
-                         F.expr(key_hash("vec_id")) < BENCH_RATE)
-             .persist())
-        try:
-            store.merge_keyed(
-                SEM_RK_SUITE_TABLE,
-                n.filter("is_suite").select("vec_id", "label", "v", "nrm"),
-                keys=["vec_id"], schema=SEM_SUITE_SCHEMA,
-                immutable_payload=True)
-            suite_state = store.read(SEM_RK_SUITE_TABLE, SEM_SUITE_SCHEMA)
-            exp = _suite_probe_expansion(suite_state, cents, k)
-            verdicts = _with_suite_epoch(
-                semantic_screen_frame(n, suite=exp), suite_state)
-            store.merge_keyed(SEM_RK_VERDICTS_TABLE, verdicts,
-                              keys=["vec_id"],
-                              schema=SEM_VERDICT_SCHEMA)
-        finally:
-            n.unpersist()
-
-    emb = (
-        spark.readStream.schema(emb_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        emb.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "semantic_recallk"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir, "semantic_recallk",
+        schema or _EMBEDDINGS, "vec_id",
+        prepare=lambda b: _bench_split(normed_embedding_frame(b), "vec_id"),
+        suite_rows=lambda n: n.filter("is_suite")
+        .select("vec_id", "label", "v", "nrm"),
+        verdict=lambda n, state: semantic_screen_frame(
+            n, suite=_suite_probe_expansion(state, cents, k)),
+        suite=(SEM_RK_SUITE_TABLE, SEM_SUITE_SCHEMA, ["vec_id"]),
+        verdicts=(SEM_RK_VERDICTS_TABLE, SEM_VERDICT_SCHEMA))
 
 
 LSH_SCREEN_SUITE_TABLE = "semantic_lsh_suite_signed"
@@ -2141,74 +1753,27 @@ LSH_SCREEN_SUITE_SCHEMA = T.StructType([
 def stream_semantic_lsh_decontaminate(
         spark: SparkSession, source_dir: str, store: TableStore,
         checkpoint_dir: str, schema: "T.StructType | None" = None):
-    """Streaming twin of corpus.decontaminate_embedding_lsh — the
-    angle-keyed schedule's third form, completing batch/incremental/
-    stream parity for every action semantic_screen_policy can dispatch.
-    Same state machine as stream_semantic_recallk_decontaminate (suite
-    members merge into state FIRST; corpus members screen against the
-    updated state; nothing-ever-too-late on replay), except the state
-    is the suite's SIGNED vectors: each batch signs its own vectors
-    once (_lsh_sign_frame — the same seam as the batch form, so the
-    signature definition can't drift), suite signatures persist with
-    the vector, and the verdict body is the shared lsh_screen_frame
-    banded broadcast join. No quantizer artifact is needed at all —
-    the hyperplane weights are constants — which is the operational
-    point of the schedule: a suite refresh or corpus ingest never
-    waits on centroid training.
-
-    Scale shape per batch: POOL integer dots for the batch's vectors
-    only (suite state stores bits, never re-signs); band fan-out and
-    broadcast state join per batch; one verdict merge."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        BENCH_RATE,
-        _lsh_sign_frame,
-        key_hash,
-        lsh_screen_frame,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        normed_embedding_frame,
-    )
-
-    emb_schema = schema or T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        n = (normed_embedding_frame(batch.dropDuplicates(["vec_id"]))
-             .withColumn("is_suite",
-                         F.expr(key_hash("vec_id")) < BENCH_RATE))
+    """Streaming twin of corpus.decontaminate_embedding_lsh: each batch
+    signs its vectors once (_lsh_sign_frame, the batch form's signer),
+    suite signatures persist with the vector, and the verdict body is
+    lsh_screen_frame's banded broadcast join. The hyperplane weights are
+    constants, so no quantizer artifact is needed: a suite refresh or
+    corpus ingest never waits on centroid training."""
+    def signed(batch: DataFrame) -> "DataFrame | None":
+        n = _bench_split(normed_embedding_frame(batch), "vec_id")
         head = n.select(F.size("v").alias("d")).limit(1).collect()
-        if not head:
-            return
-        signed = _lsh_sign_frame(spark, n, int(head[0]["d"]))
-        store.merge_keyed(
-            LSH_SCREEN_SUITE_TABLE,
-            signed.filter("is_suite")
-            .select("vec_id", "v", "nrm", "bits"),
-            keys=["vec_id"], schema=LSH_SCREEN_SUITE_SCHEMA,
-            immutable_payload=True)
-        state = store.read(LSH_SCREEN_SUITE_TABLE,
-                           LSH_SCREEN_SUITE_SCHEMA)
-        verdicts = _with_suite_epoch(
-            lsh_screen_frame(signed.filter(~F.col("is_suite")), state),
-            state)
-        store.merge_keyed(LSH_SCREEN_VERDICTS_TABLE, verdicts,
-                          keys=["vec_id"], schema=SEM_VERDICT_SCHEMA)
+        return _lsh_sign_frame(spark, n, int(head[0]["d"])) if head else None
 
-    emb = (
-        spark.readStream.schema(emb_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        emb.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "semantic_lsh"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir, "semantic_lsh",
+        schema or _EMBEDDINGS, "vec_id",
+        prepare=signed,
+        suite_rows=lambda sig: sig.filter("is_suite")
+        .select("vec_id", "v", "nrm", "bits"),
+        verdict=lambda sig, state: lsh_screen_frame(
+            sig.filter(~F.col("is_suite")), state),
+        suite=(LSH_SCREEN_SUITE_TABLE, LSH_SCREEN_SUITE_SCHEMA, ["vec_id"]),
+        verdicts=(LSH_SCREEN_VERDICTS_TABLE, SEM_VERDICT_SCHEMA))
 
 
 PH_SCREEN_SUITE_TABLE = "phash_screen_suite_sigs"
@@ -2230,74 +1795,35 @@ PH_SCREEN_VERDICT_SCHEMA = T.StructType([
 def stream_phash_decontaminate(spark: SparkSession, source_dir: str,
                                store: TableStore, checkpoint_dir: str,
                                schema: "T.StructType | None" = None):
-    """Streaming twin of corpus.decontaminate_phash — the perceptual
-    screen's third form, completing batch/incremental/stream parity for
-    the screen family across modalities. Same state machine as
-    stream_semantic_decontaminate, with signatures instead of vectors:
-    each microbatch's assets are SIGNED once (image_phash_frame — the
-    real PNG round-trip, the one Python stage, scan-local); suite
-    assets' 8-byte signatures merge into state FIRST; corpus assets
-    screen against the updated state through the SAME banded broadcast
-    join as the batch form (phash_screen_frame — one code path, so the
-    hamming gate can't drift). With suite assets delivered no later
-    than the corpus assets they contaminate, the final verdicts equal
-    the batch operator's (pinned by test); a late suite asset only ADDS
-    hits on corpus replay — the family's nothing-ever-too-late posture.
+    """Streaming twin of corpus.decontaminate_phash: each batch's assets
+    are signed once (image_phash_frame — the PNG round-trip, the one
+    Python stage), suite signatures merge into the state, and corpus
+    assets screen through phash_screen_frame. Pigeonhole keeps the
+    banded screen exact, so the stream needs no recall schedule."""
+    return _perceptual_stream(
+        spark, source_dir, store, checkpoint_dir, "phash_decontaminate",
+        schema, "phash", image_phash_frame,
+        (PH_SCREEN_SUITE_TABLE, PH_SCREEN_SUITE_SCHEMA, ["s_doc"]),
+        (PH_SCREEN_VERDICTS_TABLE, PH_SCREEN_VERDICT_SCHEMA))
 
-    Scale shape per batch: only the batch's assets decode; the suite
-    state is 16 bytes/asset and broadcasts; pigeonhole keeps the screen
-    exact under banding, so the stream needs no recall schedule."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        BENCH_RATE,
-        key_hash,
-        phash_screen_frame,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        image_phash_frame,
-    )
 
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        sigs = (image_phash_frame(batch.dropDuplicates(["doc_id"]))
-                .withColumn("is_suite",
-                            F.expr(key_hash("doc_id")) < BENCH_RATE)
-                .persist())
-        try:
-            store.merge_keyed(
-                PH_SCREEN_SUITE_TABLE,
-                sigs.filter("is_suite")
-                .select(F.col("doc_id").alias("s_doc"),
-                        F.col("phash").alias("s_phash")),
-                keys=["s_doc"], schema=PH_SCREEN_SUITE_SCHEMA,
-                immutable_payload=True)
-            state = store.read(PH_SCREEN_SUITE_TABLE,
-                               PH_SCREEN_SUITE_SCHEMA)
-            verdicts = _with_suite_epoch(
-                phash_screen_frame(
-                    sigs.filter(~F.col("is_suite"))
-                    .select("doc_id", "phash"), state),
-                state)
-            store.merge_keyed(PH_SCREEN_VERDICTS_TABLE, verdicts,
-                              keys=["doc_id"],
-                              schema=PH_SCREEN_VERDICT_SCHEMA)
-        finally:
-            sigs.unpersist()
-
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "phash_decontaminate"))
-        .trigger(availableNow=True)
-        .start()
-    )
+def _perceptual_stream(spark: SparkSession, source_dir: str,
+                       store: TableStore, checkpoint_dir: str, subdir: str,
+                       schema: "T.StructType | None", family: str, sign,
+                       suite: tuple, verdicts: tuple):
+    """The image, audio and video twins: ``sign`` each batch's assets,
+    keep the suite members' signatures as state, screen the corpus
+    members with the family's batch verdict body
+    (corpus.PERCEPTUAL_SCREENS)."""
+    screen, cols, _ = PERCEPTUAL_SCREENS[family]
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir, subdir,
+        schema or _ASSET_IDS, "doc_id",
+        prepare=lambda b: _bench_split(sign(b)),
+        suite_rows=lambda sig: perceptual_suite_rows(sig, family),
+        verdict=lambda sig, state: screen(
+            sig.filter(~F.col("is_suite")).select("doc_id", *cols), state),
+        suite=suite, verdicts=verdicts)
 
 
 NGRAM_SCREEN_SUITE_TABLE = "ngram_screen_suite_shingles"
@@ -2309,14 +1835,8 @@ NGRAM_SCREEN_VERDICT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("n_overlap", T.LongType()),
     T.StructField("contaminated", T.BooleanType()),
-    # suite-state EPOCH at verdict time: the number of distinct suite
-    # shingles the doc was screened against. Suite state only ever
-    # accumulates, so the count is a monotone version counter — a
-    # consumer comparing a row's suite_epoch against the CURRENT
-    # count(ngram_screen_suite_shingles) detects verdicts computed
-    # under an older suite state (a late suite doc arrived after the
-    # verdict) and can trigger a corpus replay, instead of relying on
-    # the delivery-order contract alone (ADVICE r12).
+    # suite_epoch: the distinct suite shingles the doc was screened
+    # against (see the module docstring)
     T.StructField("suite_epoch", T.LongType()),
 ])
 
@@ -2324,98 +1844,20 @@ NGRAM_SCREEN_VERDICT_SCHEMA = T.StructType([
 def stream_ngram_decontaminate(spark: SparkSession, source_dir: str,
                                store: TableStore, checkpoint_dir: str,
                                schema: "T.StructType | None" = None):
-    """Streaming twin of corpus.decontaminate_ngram_overlap — the
-    single-suite lexical screen's third form, completing batch/
-    incremental/stream parity for EVERY screen in the contamination
-    manifest (the multi-suite and strip-spans twins' state machine,
-    single-suite shape): each microbatch's benchmark docs fold their
-    distinct shingles into the suite state FIRST; corpus docs are then
-    screened against the updated broadcast state — one shingle explode,
-    one broadcast join, one per-doc count, the batch operator's exact
-    shape — and keyed-merge into the verdicts table. With suite docs
-    delivered no later than the corpus docs they contaminate, the final
-    verdicts equal the batch operator's (pinned by test, and by the
-    manifest-assembly integration test); a late suite doc only ADDS
-    overlap on corpus replay — nothing-ever-too-late.
-
-    Each verdict row carries ``suite_epoch`` — the suite-shingle count
-    it was screened against (ADVICE r12): unlike the batch and
-    incremental forms, a stream has no single "the suite" moment, so
-    without the epoch a violated delivery-order assumption leaves
-    stale non-contaminated verdicts with no runtime signal. The suite
-    state only accumulates, so rows with suite_epoch < the current
-    state count are exactly the verdicts a late suite merge may have
-    invalidated — the replay trigger is one comparison, no rescreen.
-    The epoch attaches as a broadcast 1-row aggregate (no driver
-    collect, no per-row work)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        BENCH_RATE,
-        CONTAMINATION_MIN_SHINGLES,
-        key_hash,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import shingled_docs
-
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        sh = (
-            shingled_docs(batch.select("doc_id", "text")
-                          .dropDuplicates(["doc_id"]))
-            .withColumn("is_bench",
-                        F.expr(key_hash("doc_id")) < BENCH_RATE)
-            .persist()
-        )
-        try:
-            suite_rows = (
-                sh.filter("is_bench")
-                .select(F.explode_outer("sh").alias("s"))
-                .filter(F.col("s").isNotNull())
-                .distinct()
-            )
-            store.merge_keyed(NGRAM_SCREEN_SUITE_TABLE, suite_rows,
-                              keys=["s"],
-                              schema=NGRAM_SCREEN_SUITE_SCHEMA,
-                              immutable_payload=True)
-            suite = store.read(NGRAM_SCREEN_SUITE_TABLE,
-                               NGRAM_SCREEN_SUITE_SCHEMA)
-            corpus = sh.filter(~F.col("is_bench"))
-            overlap = (
-                corpus.select("doc_id", F.explode_outer("sh").alias("s"))
-                .filter(F.col("s").isNotNull())
-                .join(F.broadcast(suite), "s", "inner")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_overlap"))
-            )
-            verdicts = _with_suite_epoch(
-                corpus.select("doc_id")
-                .join(overlap, "doc_id", "left")
-                .selectExpr(
-                    "doc_id",
-                    "CAST(COALESCE(n_overlap, 0) AS BIGINT) AS n_overlap",
-                    f"COALESCE(n_overlap, 0) >= "
-                    f"{CONTAMINATION_MIN_SHINGLES} AS contaminated"),
-                suite)
-            store.merge_keyed(NGRAM_SCREEN_VERDICTS_TABLE, verdicts,
-                              keys=["doc_id"],
-                              schema=NGRAM_SCREEN_VERDICT_SCHEMA)
-        finally:
-            sh.unpersist()
-
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "ngram_decontaminate"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Streaming twin of corpus.decontaminate_ngram_overlap: benchmark
+    docs fold their distinct shingles into the suite state, corpus docs
+    are screened through ngram_screen_frame — one shingle explode, one
+    broadcast join, one per-doc count, the batch operator's own body."""
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir, "ngram_decontaminate",
+        schema or _TEXT_DOCS, "doc_id",
+        prepare=lambda b: _bench_split(
+            shingled_docs(b.select("doc_id", "text")), flag="is_bench"),
+        suite_rows=lambda sh: _shingle_set(sh.filter("is_bench")),
+        verdict=lambda sh, suite: ngram_screen_frame(
+            sh.filter(~F.col("is_bench")), suite),
+        suite=(NGRAM_SCREEN_SUITE_TABLE, NGRAM_SCREEN_SUITE_SCHEMA, ["s"]),
+        verdicts=(NGRAM_SCREEN_VERDICTS_TABLE, NGRAM_SCREEN_VERDICT_SCHEMA))
 
 
 AFP_SCREEN_SUITE_TABLE = "afp_screen_suite_sigs"
@@ -2450,141 +1892,31 @@ VFP_SCREEN_VERDICT_SCHEMA = T.StructType([
 def stream_afp_decontaminate(spark: SparkSession, source_dir: str,
                              store: TableStore, checkpoint_dir: str,
                              schema: "T.StructType | None" = None):
-    """Streaming twin of corpus.decontaminate_afp — the audio screen's
-    third form, same state machine as stream_phash_decontaminate: each
-    microbatch's clips are SIGNED once (audio_fingerprint_frame — the
-    real WAV round-trip, the one Python stage, scan-local); suite
-    clips' 8-byte fingerprints merge into state FIRST; corpus clips
-    screen against the updated state through the SAME pigeonhole-exact
-    banded broadcast join as the batch form (_sig56_screen_frame — one
-    code path, so the hamming gate can't drift). Late suite clips only
-    ADD hits on corpus replay — nothing-ever-too-late."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        BENCH_RATE,
-        _sig56_screen_frame,
-        key_hash,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        AFP_HAMMING_MAX,
-        AFP_N_BANDS,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        audio_fingerprint_frame,
-    )
-
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        sigs = (audio_fingerprint_frame(batch.dropDuplicates(["doc_id"]))
-                .withColumn("is_suite",
-                            F.expr(key_hash("doc_id")) < BENCH_RATE)
-                .persist())
-        try:
-            store.merge_keyed(
-                AFP_SCREEN_SUITE_TABLE,
-                sigs.filter("is_suite")
-                .select(F.col("doc_id").alias("s_doc"),
-                        F.col("afp").alias("s_afp")),
-                keys=["s_doc"], schema=AFP_SCREEN_SUITE_SCHEMA,
-                immutable_payload=True)
-            state = store.read(AFP_SCREEN_SUITE_TABLE,
-                               AFP_SCREEN_SUITE_SCHEMA)
-            verdicts = _with_suite_epoch(
-                _sig56_screen_frame(
-                    sigs.filter(~F.col("is_suite"))
-                    .select("doc_id", F.col("afp").alias("sig")),
-                    state.select("s_doc", F.col("s_afp").alias("s_sig")),
-                    AFP_N_BANDS, AFP_HAMMING_MAX),
-                state)
-            store.merge_keyed(AFP_SCREEN_VERDICTS_TABLE, verdicts,
-                              keys=["doc_id"],
-                              schema=AFP_SCREEN_VERDICT_SCHEMA)
-        finally:
-            sigs.unpersist()
-
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "afp_decontaminate"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Streaming twin of corpus.decontaminate_afp: each batch's clips
+    are signed once (audio_fingerprint_frame — the WAV round-trip) and
+    corpus clips screen through afp_screen_frame, the batch form's
+    pigeonhole-exact banded broadcast join."""
+    return _perceptual_stream(
+        spark, source_dir, store, checkpoint_dir, "afp_decontaminate",
+        schema, "afp", audio_fingerprint_frame,
+        (AFP_SCREEN_SUITE_TABLE, AFP_SCREEN_SUITE_SCHEMA, ["s_doc"]),
+        (AFP_SCREEN_VERDICTS_TABLE, AFP_SCREEN_VERDICT_SCHEMA))
 
 
 def stream_vfp_decontaminate(spark: SparkSession, source_dir: str,
                              store: TableStore, checkpoint_dir: str,
                              schema: "T.StructType | None" = None):
-    """Streaming twin of corpus.decontaminate_vfp — the video screen's
-    third form, completing batch/incremental/stream parity for every
-    screen modality. Multi-row signatures (VFP_FRAMES rows/clip), the
-    stream_video_fingerprint_dedupe state shape pointed at a suite
-    table: each microbatch's clips are SIGNED once
-    (video_fingerprint_frame — the real PNG round-trip per sampled
-    frame, the one Python stage); suite clips' frame signatures merge
-    into state FIRST (keyed (s_doc, frame_idx) — replays overwrite
-    idempotently); corpus clips screen against the updated state
-    through the SAME per-frame banded broadcast join + M-of-K verify as
-    the batch form (vfp_screen_frame — one code path, so neither the
-    hamming gate nor the M-of-K rule can drift)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        BENCH_RATE,
-        key_hash,
-        vfp_screen_frame,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        video_fingerprint_frame,
-    )
-
-    doc_schema = schema or T.StructType([
-        T.StructField("doc_id", T.LongType()),
-    ])
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        sigs = (video_fingerprint_frame(batch.dropDuplicates(["doc_id"]))
-                .withColumn("is_suite",
-                            F.expr(key_hash("doc_id")) < BENCH_RATE)
-                .persist())
-        try:
-            store.merge_keyed(
-                VFP_SCREEN_SUITE_TABLE,
-                sigs.filter("is_suite")
-                .select(F.col("doc_id").alias("s_doc"),
-                        "frame_idx", "vfh"),
-                keys=["s_doc", "frame_idx"],
-                schema=VFP_SCREEN_SUITE_SCHEMA,
-                immutable_payload=True)
-            state = store.read(VFP_SCREEN_SUITE_TABLE,
-                               VFP_SCREEN_SUITE_SCHEMA)
-            verdicts = _with_suite_epoch(
-                vfp_screen_frame(
-                    sigs.filter(~F.col("is_suite"))
-                    .select("doc_id", "frame_idx", "vfh"), state),
-                state)
-            store.merge_keyed(VFP_SCREEN_VERDICTS_TABLE, verdicts,
-                              keys=["doc_id"],
-                              schema=VFP_SCREEN_VERDICT_SCHEMA)
-        finally:
-            sigs.unpersist()
-
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir, "vfp_decontaminate"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Streaming twin of corpus.decontaminate_vfp: each batch's clips
+    are signed per sampled frame (video_fingerprint_frame), suite frame
+    signatures are state keyed (s_doc, frame_idx), and corpus clips
+    screen through vfp_screen_frame — the batch form's per-frame banded
+    join and M-of-K verify."""
+    return _perceptual_stream(
+        spark, source_dir, store, checkpoint_dir, "vfp_decontaminate",
+        schema, "vfp", video_fingerprint_frame,
+        (VFP_SCREEN_SUITE_TABLE, VFP_SCREEN_SUITE_SCHEMA,
+         ["s_doc", "frame_idx"]),
+        (VFP_SCREEN_VERDICTS_TABLE, VFP_SCREEN_VERDICT_SCHEMA))
 
 
 SEM_MS_SUITE_TABLE = "semantic_multisuite_vectors"
@@ -2604,113 +1936,38 @@ def _sem_ms_verdict_schema(n_suites: int) -> T.StructType:
         + [T.StructField(f"n_hits_suite{k}", T.LongType())
            for k in range(n_suites)]
         + [T.StructField("contaminated", T.BooleanType()),
-           # suite-state epoch at verdict time (see _with_suite_epoch);
-           # one TOTAL count across all suites — a late release for ANY
-           # suite bumps it, which is exactly the conservative signal
-           # the per-suite attribution screen needs (a stale verdict's
-           # per-suite hit columns may undercount any suite).
-           # Per-suite epochs (VERDICT r14 item 8) considered and NOT
-           # taken: the refinement only trims replay volume when suites
-           # release asynchronously AND replays are expensive — at this
-           # screen's replay cost (one corpus re-score against broadcast
-           # state) the over-invalidation is cheaper than three more
-           # schema columns; revisit only if a deployment's replay bill
-           # ever shows up in a probe.
+           # suite_epoch: one TOTAL count across all suites, so a late
+           # release for any suite marks the verdict stale. Per-suite
+           # epochs would only trim replay volume, and one re-score
+           # against broadcast state is cheaper than three more columns.
            T.StructField("suite_epoch", T.LongType())])
 
 
 def stream_semantic_multisuite_decontaminate(
         spark: SparkSession, source_dir: str, store: TableStore,
         checkpoint_dir: str, schema: "T.StructType | None" = None):
-    """Streaming twin of corpus.decontaminate_embedding_multisuite —
-    the per-suite-attribution screen's third form (the lexical
-    multi-suite family has had all three since r8). Suite vectors in
-    each microbatch merge into the suite-state table (keyed by vec_id,
-    carrying their suite id) FIRST; corpus vectors are then scored
-    against the updated state through one broadcast join and ONE
-    conditional aggregate with a per-suite hit column — the same
-    single-join decomposition the batch/incremental forms share, so
-    with suites delivered no later than the corpus they contaminate the
-    final verdicts equal the batch operator's (pinned by test). A new
-    benchmark RELEASE streams in as that suite's vectors: existing
-    verdicts re-merge on corpus replay against the fuller state — the
-    nothing-ever-too-late posture, per suite."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        N_BENCH_SUITES,
-        SEMANTIC_COSINE_THRESHOLD,
-        SUITE_SLICE_MOD,
-        key_hash,
-    )
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        normed_embedding_frame,
-    )
-
-    emb_schema = schema or T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ])
-    verdict_schema = _sem_ms_verdict_schema(N_BENCH_SUITES)
-    cols = [f"n_hits_suite{k}" for k in range(N_BENCH_SUITES)]
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        n = (normed_embedding_frame(batch.dropDuplicates(["vec_id"]))
-             .withColumn("suite",
-                         F.expr(f"{key_hash('vec_id')}"
-                                f" % {SUITE_SLICE_MOD}"))
-             .persist())
-        try:
-            store.merge_keyed(
-                SEM_MS_SUITE_TABLE,
-                n.filter(F.col("suite") < N_BENCH_SUITES)
-                .select("vec_id", "suite", "label", "v", "nrm"),
-                keys=["vec_id"], schema=SEM_MS_SUITE_SCHEMA,
-                immutable_payload=True)
-            suites = (store.read(SEM_MS_SUITE_TABLE, SEM_MS_SUITE_SCHEMA)
-                      .select(F.col("suite").alias("s_suite"),
-                              F.col("label").alias("s_label"),
-                              F.col("v").alias("sv"),
-                              F.col("nrm").alias("snrm")))
-            corpus = n.filter(F.col("suite") >= N_BENCH_SUITES)
-            dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-                   "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-            scored = (
-                corpus.join(F.broadcast(suites),
-                            F.col("label") == F.col("s_label"), "left")
-                .select("vec_id", "s_suite",
-                        F.when(F.col("snrm").isNotNull(),
-                               F.expr(dot)
-                               / (F.col("nrm") * F.col("snrm")))
-                        .alias("cosine")))
-            any_pred = " OR ".join(f"{c} >= 1" for c in cols)
-            verdicts = _with_suite_epoch(
-                scored.groupBy("vec_id")
-                .agg(*[F.sum(F.when(
-                    (F.col("s_suite") == k)
-                    & (F.col("cosine") >= SEMANTIC_COSINE_THRESHOLD),
-                    1).otherwise(0)).cast("long").alias(cols[k])
-                    for k in range(N_BENCH_SUITES)])
-                .selectExpr("vec_id", *cols,
-                            f"{any_pred} AS contaminated"),
-                suites)
-            store.merge_keyed(SEM_MS_VERDICTS_TABLE, verdicts,
-                              keys=["vec_id"], schema=verdict_schema)
-        finally:
-            n.unpersist()
-
-    emb = (
-        spark.readStream.schema(emb_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    return (
-        emb.writeStream.foreachBatch(handle)
-        .option("checkpointLocation",
-                os.path.join(checkpoint_dir,
-                             "semantic_multisuite_decontaminate"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Streaming twin of corpus.decontaminate_embedding_multisuite:
+    suite vectors (keyed by vec_id, carrying their suite id) merge into
+    the state, corpus vectors get a per-suite hit column through
+    semantic_multisuite_frame, the batch form's single join and
+    conditional aggregate. A new benchmark release streams in as that
+    suite's vectors."""
+    return _suite_screen_stream(
+        spark, source_dir, store, checkpoint_dir,
+        "semantic_multisuite_decontaminate", schema or _EMBEDDINGS,
+        "vec_id",
+        prepare=lambda b: _suite_slice(normed_embedding_frame(b), "vec_id"),
+        suite_rows=lambda n: n.filter(F.col("suite") < N_BENCH_SUITES)
+        .select("vec_id", "suite", "label", "v", "nrm"),
+        verdict=lambda n, state: semantic_multisuite_frame(
+            n.filter(F.col("suite") >= N_BENCH_SUITES),
+            state.select(F.col("suite").alias("s_suite"),
+                         F.col("label").alias("s_label"),
+                         F.col("v").alias("sv"),
+                         F.col("nrm").alias("snrm"))),
+        suite=(SEM_MS_SUITE_TABLE, SEM_MS_SUITE_SCHEMA, ["vec_id"]),
+        verdicts=(SEM_MS_VERDICTS_TABLE,
+                  _sem_ms_verdict_schema(N_BENCH_SUITES)))
 
 
 CONTAMINATION_MANIFEST_TABLE = "contamination_manifest_streamed"

@@ -32,6 +32,9 @@ def bmp_bytes(w, h, bpp=24):
 def test_decode_image_ppm():
     assert M.decode_image(ppm_bytes(4, 3)) == ("ppm", 4, 3, 3)
     assert M.decode_image(ppm_bytes(2, 2, comment=True)) == ("ppm", 2, 2, 3)
+    # decode_features only hands decode_image payloads that pass this gate
+    for payload in (ppm_bytes(4, 3), ppm_bytes(2, 2, comment=True)):
+        assert payload[0] in M._DECODABLE_FIRST_BYTES
 
 
 def test_decode_image_bmp():
@@ -41,6 +44,8 @@ def test_decode_image_bmp():
     down = bytearray(bmp_bytes(4, 4))
     struct.pack_into("<i", down, 22, -4)
     assert M.decode_image(bytes(down)) == ("bmp", 4, 4, 3)
+    for payload in (bmp_bytes(5, 7), bmp_bytes(3, 2, bpp=32), bytes(down)):
+        assert payload[0] in M._DECODABLE_FIRST_BYTES
 
 
 def png_bytes(w, h, channels=1):

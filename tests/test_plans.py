@@ -279,3 +279,40 @@ def test_registry_wide_plan_invariants(spark):
             offenders_py.append(name)
     assert offenders_cart == [], offenders_cart
     assert offenders_py == [], offenders_py
+
+
+# Two runs' executedPlan().toString() of
+# decontaminate_strip_spans_incremental, cut to the distinct-aggregate
+# rewrite (the aggregates above the Expand and the Expand itself). The
+# runs put the three distinct groups (s, tp, the is_old-gated tp) in a
+# different order, so the gids, the Expand rows and every column list
+# above the Expand differ.
+_EXPAND_RUN_A = (
+    '+- HashAggregate(keys=[doc_id#596L], functions=[partial_count(s#609L) FILTER (WHERE (gid#608 = 1)), partial_count(tp#610) FILTER (WHERE (gid#608 = 2)), partial_count(CASE WHEN (is_old = 1) THEN tp END#611) FILTER (WHERE (gid#608 = 3))], output=[doc_id#596L, count#615L, count#616L, count#617L])\n'
+    '   +- HashAggregate(keys=[doc_id#596L, s#609L, tp#610, CASE WHEN (is_old = 1) THEN tp END#611, gid#608], functions=[], output=[doc_id#596L, s#609L, tp#610, CASE WHEN (is_old = 1) THEN tp END#611, gid#608])\n'
+    '      +- Exchange hashpartitioning(doc_id#596L, s#609L, tp#610, CASE WHEN (is_old = 1) THEN tp END#611, gid#608, 8), ENSURE_REQUIREMENTS, [plan_id=496]\n'
+    '         +- HashAggregate(keys=[doc_id#596L, s#609L, tp#610, CASE WHEN (is_old = 1) THEN tp END#611, gid#608], functions=[], output=[doc_id#596L, s#609L, tp#610, CASE WHEN (is_old = 1) THEN tp END#611, gid#608])\n'
+    '            +- Expand [[doc_id#596L, s#578L, null, null, 1], [doc_id#596L, null, tp#585, null, 2], [doc_id#596L, null, null, CASE WHEN (is_old#573 = 1) THEN tp#585 END, 3]], [doc_id#596L, s#609L, tp#610, CASE WHEN (is_old = 1) THEN tp END#611, gid#608]\n'
+)
+_EXPAND_RUN_B = (
+    '+- HashAggregate(keys=[doc_id#1148L], functions=[partial_count(s#1162L) FILTER (WHERE (gid#1160 = 2)), partial_count(tp#1163) FILTER (WHERE (gid#1160 = 3)), partial_count(CASE WHEN (is_old = 1) THEN tp END#1161) FILTER (WHERE (gid#1160 = 1))], output=[doc_id#1148L, count#1167L, count#1168L, count#1169L])\n'
+    '   +- HashAggregate(keys=[doc_id#1148L, CASE WHEN (is_old = 1) THEN tp END#1161, s#1162L, tp#1163, gid#1160], functions=[], output=[doc_id#1148L, CASE WHEN (is_old = 1) THEN tp END#1161, s#1162L, tp#1163, gid#1160])\n'
+    '      +- Exchange hashpartitioning(doc_id#1148L, CASE WHEN (is_old = 1) THEN tp END#1161, s#1162L, tp#1163, gid#1160, 8), ENSURE_REQUIREMENTS, [plan_id=764]\n'
+    '         +- HashAggregate(keys=[doc_id#1148L, CASE WHEN (is_old = 1) THEN tp END#1161, s#1162L, tp#1163, gid#1160], functions=[], output=[doc_id#1148L, CASE WHEN (is_old = 1) THEN tp END#1161, s#1162L, tp#1163, gid#1160])\n'
+    '            +- Expand [[doc_id#1148L, CASE WHEN (is_old#1125 = 1) THEN tp#1137 END, null, null, 1], [doc_id#1148L, null, s#1130L, null, 2], [doc_id#1148L, null, null, tp#1137, 3]], [doc_id#1148L, CASE WHEN (is_old = 1) THEN tp END#1161, s#1162L, tp#1163, gid#1160]\n'
+)
+
+
+def test_normalize_canonicalizes_expand_group_order():
+    """tools/plan_hashes.normalize must map both runs to one text, so a
+    two-tree plan diff needs no list of run-unstable queries; a real
+    change to the rewrite (here a FILTER pointed at another group) must
+    still show."""
+    from tools.plan_hashes import normalize
+
+    assert _EXPAND_RUN_A != _EXPAND_RUN_B
+    assert normalize(_EXPAND_RUN_A) == normalize(_EXPAND_RUN_B)
+    broken = _EXPAND_RUN_B.replace("gid#1160 = 3)), partial_count(CASE",
+                                   "gid#1160 = 2)), partial_count(CASE")
+    assert broken != _EXPAND_RUN_B
+    assert normalize(broken) != normalize(_EXPAND_RUN_A)

@@ -624,33 +624,6 @@ SELECT j, d, wt FROM m6 ORDER BY j, d"""
         assert all(0 <= i < C.SEMANTIC_LSH_POOL for i in band)
 
 
-def test_lsh_arrow_signing_twin_is_bit_identical(spark):
-    """The opt-in Arrow signing path (VERDICT r13 item 7): every
-    signature bit equals the SQL path's on the real embedding table —
-    the exactness proof (same IEEE quantization ops in the same
-    order, then associative integer arithmetic) checked against data
-    rather than asserted. The twin is NOT in any registry plan (the
-    no-Python-outside-codecs invariant); this equality test is what
-    lets a deployment opt in at the _lsh_signed seam without a recall
-    or parity question."""
-    from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
-        _lsh_sign_frame_arrow,
-        _suite_flagged_embeddings,
-    )
-    n = _suite_flagged_embeddings(spark, SF_DIR)
-    dim = C._embedding_dim(spark, SF_DIR)
-    sql_rows = {r.vec_id: (list(r.bits), r.is_suite)
-                for r in C._lsh_sign_frame(spark, n, dim).collect()}
-    arrow_rows = {r.vec_id: (list(r.bits), r.is_suite)
-                  for r in _lsh_sign_frame_arrow(spark, n, dim)
-                  .collect()}
-    assert set(sql_rows) == set(arrow_rows) and len(sql_rows) > 0
-    assert sql_rows == arrow_rows
-    # non-degenerate: bits vary across vectors and within a signature
-    some = next(iter(sql_rows.values()))[0]
-    assert 0 < sum(some) < len(some)
-
-
 def test_stream_lsh_matches_batch(spark, store, tmp_path):
     """The angle-keyed screen's streaming twin: suite first, corpus
     over two microbatches, merged verdicts equal the batch operator's
@@ -1337,34 +1310,54 @@ def test_stream_ngram_late_suite_doc_flags_stale_verdicts(
     assert {r.suite_epoch for r in after.values()} == {n_state}
 
 
-def test_stream_suite_overwrite_raises_at_merge(spark, store, tmp_path):
-    """The suite-epoch HARD CONTRACT's enforcement, end-to-end
-    (VERDICT r14 item 3): a suite feed that re-issues an EXISTING
-    vec_id with a CHANGED embedding would change verdict-relevant
-    state without changing the row-count epoch — the merge refuses
-    (ImmutablePayloadError through the streaming query) instead of
-    letting every downstream epoch comparison silently lie, and the
-    suite state keeps the original payload."""
+def _fixture_cents(spark):
+    """One coarse cell centred on the fixture suite vector: the
+    quantizer artifact the recall-targeted stream twin takes."""
+    c = _vec("suite")
+    return spark.createDataFrame(
+        [(0, c, sum(x * x for x in c) ** 0.5)],
+        "label int, c array<double>, cnrm double")
+
+
+@pytest.mark.parametrize("twin", ["semantic", "recallk", "lsh",
+                                  "semantic_multisuite"])
+def test_stream_suite_overwrite_raises_at_merge(spark, store, tmp_path,
+                                                twin):
+    """The suite-epoch contract's enforcement, end-to-end, on every
+    stream twin whose suite payload comes from the input row: a suite
+    feed that re-issues an EXISTING vec_id with a CHANGED embedding
+    would change verdict-relevant state without changing the row-count
+    epoch — the merge refuses (ImmutablePayloadError through the
+    streaming query) instead of letting every downstream epoch
+    comparison silently lie, and the suite state keeps the original
+    payload."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        LSH_SCREEN_SUITE_SCHEMA,
-        LSH_SCREEN_SUITE_TABLE,
-        stream_semantic_lsh_decontaminate,
-    )
+    from qucosa_fcrepo_reportingdb_spark.streaming import jobs as J
 
+    start, table, schema = {
+        "semantic": (J.stream_semantic_decontaminate, J.SEM_SUITE_TABLE,
+                     J.SEM_SUITE_SCHEMA),
+        "recallk": (lambda *a: J.stream_semantic_recallk_decontaminate(
+            *a, _fixture_cents(spark)), J.SEM_RK_SUITE_TABLE,
+            J.SEM_SUITE_SCHEMA),
+        "lsh": (J.stream_semantic_lsh_decontaminate,
+                J.LSH_SCREEN_SUITE_TABLE, J.LSH_SCREEN_SUITE_SCHEMA),
+        "semantic_multisuite": (J.stream_semantic_multisuite_decontaminate,
+                                J.SEM_MS_SUITE_TABLE,
+                                J.SEM_MS_SUITE_SCHEMA),
+    }[twin]
     src = str(tmp_path / "emb")
     ck = str(tmp_path / "ck")
-    # vec_id 0 hashes into the suite (see the fixture-corpus note)
+    # vec_id 0 hashes into the suite of both the single-suite screens
+    # and the multi-suite slices (see the fixture-corpus note)
     spark.createDataFrame(
         [(0, _vec("suite"), 0), (1, _vec("near"), 0)],
         "vec_id long, embedding array<float>, label int") \
         .coalesce(1).write.mode("append").parquet(src)
-    stream_semantic_lsh_decontaminate(
-        spark, src, store, ck).awaitTermination(180)
-    before = {r.vec_id: r.v for r in store.read(
-        LSH_SCREEN_SUITE_TABLE, LSH_SCREEN_SUITE_SCHEMA).collect()}
+    start(spark, src, store, ck).awaitTermination(180)
+    before = {r.vec_id: r.v for r in store.read(table, schema).collect()}
     assert 0 in before
     # the overwriting feed: same suite key, corrected embedding
     spark.createDataFrame(
@@ -1372,11 +1365,9 @@ def test_stream_suite_overwrite_raises_at_merge(spark, store, tmp_path):
         "vec_id long, embedding array<float>, label int") \
         .coalesce(1).write.mode("append").parquet(src)
     with pytest.raises((StreamingQueryException, Py4JJavaError)) as exc:
-        stream_semantic_lsh_decontaminate(
-            spark, src, store, ck).awaitTermination(180)
+        start(spark, src, store, ck).awaitTermination(180)
     assert "CHANGED payload" in str(exc.value)
-    after = {r.vec_id: r.v for r in store.read(
-        LSH_SCREEN_SUITE_TABLE, LSH_SCREEN_SUITE_SCHEMA).collect()}
+    after = {r.vec_id: r.v for r in store.read(table, schema).collect()}
     assert after[0] == before[0]
 
 

@@ -39,7 +39,6 @@ from qucosa_fcrepo_reportingdb_spark.operators.corpus import (  # noqa: E402
     SEMANTIC_COSINE_THRESHOLD,
     _lsh_band_frame,
     _lsh_sign_frame,
-    _lsh_sign_frame_arrow,
     lsh_screen_frame,
 )
 from qucosa_fcrepo_reportingdb_spark.operators.dedup import (  # noqa: E402
@@ -77,19 +76,11 @@ def main():
         signed = _lsh_sign_frame(spark, frame, DIM)
         signed.selectExpr("sum(element_at(bits, 1)) AS s").collect()
         sign_wall = time.time() - t0
-        # 1b. the opt-in Arrow twin (round 14): same forced column,
-        # bit-identical signatures (equality pytest), vectorized matmul
-        t0 = time.time()
-        _lsh_sign_frame_arrow(spark, frame, DIM).selectExpr(
-            "sum(element_at(bits, 1)) AS s").collect()
-        arrow_wall = time.time() - t0
         corpus_signed = signed.filter("NOT is_suite").persist()
         suite_signed = signed.filter("is_suite")
         n_corpus = corpus_signed.count()
         print(f"{n:9d} vecs: signing wall {sign_wall:7.2f}s "
-              f"({n / max(sign_wall, 1e-9):,.0f} vec/s); arrow twin "
-              f"{arrow_wall:7.2f}s ({n / max(arrow_wall, 1e-9):,.0f} "
-              f"vec/s)", flush=True)
+              f"({n / max(sign_wall, 1e-9):,.0f} vec/s)", flush=True)
 
         # 2. screen wall over the pre-signed corpus (steady state per
         # suite release), forced through the verdict columns
