@@ -9,9 +9,12 @@ namespace prefixes (MetsProcessor.java:67-69,81-85,221-251):
 
 Namespace awareness is mandatory: fixtures bind the MODS namespace to
 varying prefixes (``v3`` in qucosa13-mets.xml), so Spark's prefix-literal
-``xpath_*`` functions cannot match reliably. Extraction therefore runs in an
-Arrow-batched pandas UDF over stdlib ElementTree — one parse per document,
-vectorized transfer, no JVM round-trips per field.
+``xpath_*`` functions cannot match reliably. Extraction therefore runs over
+stdlib ElementTree, one parse per document (``_extract_one``). The ETL loop
+calls it inside its fetch pass (sources/mets.fetch_mets_documents), so a
+body is parsed where it is fetched and never shipped back to the JVM. The
+Arrow-batched pandas UDF here serves only ``extract_mets_metadata``, for
+callers that already hold an XML column.
 
 X10 (local-id extraction oai:example.org:qucosa:123 -> qucosa:123,
 MetsProcessor.java:285-287) stays JVM-side as regexp_extract.

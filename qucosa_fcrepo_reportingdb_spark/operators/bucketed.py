@@ -40,7 +40,7 @@ from qucosa_fcrepo_reportingdb_spark.operators.maintenance import (
     conditional_delete,
     last_wins_dedupe,
 )
-from qucosa_fcrepo_reportingdb_spark.tables import TableStore
+from qucosa_fcrepo_reportingdb_spark.tables import TableStore, local_frame
 
 BUCKET_COL = "bucket"
 
@@ -83,7 +83,7 @@ class BucketedKeyTable:
 
     def read(self) -> DataFrame:
         if not self._has_data():
-            return self.spark.createDataFrame([], self._stored_schema())
+            return local_frame(self.spark, self._stored_schema())
         return self.spark.read.parquet(self.path).drop(BUCKET_COL)
 
     def _stored_schema(self) -> T.StructType:
@@ -94,7 +94,7 @@ class BucketedKeyTable:
         """Partition-pruned scan: only the named buckets are read."""
         if not self._has_data():
             return self._with_bucket(
-                self.spark.createDataFrame([], self._stored_schema()))
+                local_frame(self.spark, self._stored_schema()))
         df = self.spark.read.parquet(self.path)
         return df.filter(F.col(BUCKET_COL).isin(list(buckets)))
 
@@ -232,7 +232,7 @@ class BucketedTableStore(TableStore):
             if not tab.exists():
                 if schema is None:
                     raise FileNotFoundError(f"table {name!r} does not exist")
-                return self.spark.createDataFrame([], schema)
+                return local_frame(self.spark, schema)
             df = tab.read()
             if schema is None:
                 return df

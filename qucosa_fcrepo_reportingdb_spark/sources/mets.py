@@ -7,10 +7,15 @@ consumed headers (MetsProcessor.java:100-163).
 
 Spark-native shape:
 - the queue batch is a DataFrame (S4: limit(batch_size)),
-- the per-record fetch runs inside ``mapInPandas`` — distributed across
+- fetch and extraction are ONE ``mapInPandas`` pass — distributed across
   executors, each partition rate-limited locally so the aggregate request
-  rate stays bounded (politeness budget / partitions),
-- extraction is the Arrow-batched ElementTree UDF (functions/mets_xml.py),
+  rate stays bounded (politeness budget / partitions). Each body is
+  parsed by ElementTree (functions/mets_xml._extract_one) right after its
+  fetch and dropped: the pass returns the header columns plus the three
+  extracted fields, with no ``xml`` column,
+- ``enrich_once`` persists that small frame once per batch; the counts,
+  validation, both merges and the queue delete all read it, so the batch
+  crosses the Python boundary exactly once,
 - validation F4 splits valid/quarantine but the queue row is consumed
   either way (MetsProcessor.java:209-216),
 - S6 merge + S8 optimistic-concurrency delete finish the batch. Failures
@@ -35,9 +40,7 @@ from qucosa_fcrepo_reportingdb_spark import schemas
 from qucosa_fcrepo_reportingdb_spark.functions.filters import (
     validate_reporting_documents,
 )
-from qucosa_fcrepo_reportingdb_spark.functions.mets_xml import (
-    extract_mets_metadata,
-)
+from qucosa_fcrepo_reportingdb_spark.functions.mets_xml import _extract_one
 from qucosa_fcrepo_reportingdb_spark.functions.timestamps import parse_xsd_datetime
 # keyed mutations go through the TableStore seam (merge_keyed /
 # delete_keyed) so the bucketed store can prune rewrites to touched buckets
@@ -63,45 +66,51 @@ MetsFetcher = Callable[[str], "str | None"]
 
 def fetch_mets_documents(headers: DataFrame, fetch: MetsFetcher,
                          min_wait_s: float = 0.0) -> DataFrame:
-    """S2: per-record point lookup, distributed via mapInPandas.
+    """S2 + X6: per-record point lookup and extraction in one mapInPandas
+    pass.
 
     ``min_wait_s`` is the per-partition politeness spacing (T5; the
     reference hardcodes 1 s at ReportingManager.java:85 — with P partitions
     the aggregate rate is P/min_wait_s, so size P to the budget).
-    Adds an ``xml`` column (NULL on fetch failure -> row quarantined later
-    but still consumed)."""
+    Each fetched body goes straight through ``_extract_one``; the result
+    carries the header columns plus ``mandator``, ``document_type`` and
+    ``distribution_date_raw`` and no ``xml`` column. A failed fetch or an
+    unparsable body gives three NULLs -> the row is quarantined later but
+    still consumed."""
     out_schema = (
         "record_identifier string, datestamp timestamp, "
-        "set_spec array<string>, status_is_deleted boolean, xml string"
+        "set_spec array<string>, status_is_deleted boolean, "
+        "mandator string, document_type string, distribution_date_raw string"
     )
 
     def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         last = [0.0]
         for pdf in batches:
-            xmls = []
+            fields = []
             for rid in pdf["record_identifier"]:
                 if min_wait_s > 0:
                     elapsed = time.monotonic() - last[0]
                     if elapsed < min_wait_s:
                         time.sleep(min_wait_s - elapsed)
                     last[0] = time.monotonic()
-                xmls.append(fetch(rid))
-            yield pdf.assign(xml=xmls)
+                fields.append(_extract_one(fetch(rid)))
+            yield pdf.join(pd.DataFrame(
+                fields, index=pdf.index,
+                columns=["mandator", "document_type", "distribution_date_raw"]))
 
     return headers.mapInPandas(per_partition, schema=out_schema)
 
 
-def extract_and_validate(with_xml: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """X6-X8 + F4: extract the three reporting attributes, parse the
-    distribution date, split (valid, quarantined). Both sides keep the full
-    header tuple so the caller can consume the queue rows."""
-    extracted = (
-        extract_mets_metadata(with_xml, "xml")
+def extract_and_validate(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """X7-X8 + F4 over the fused pass's output: parse the distribution
+    date, split (valid, quarantined). Both sides keep the full header
+    tuple so the caller can consume the queue rows."""
+    return validate_reporting_documents(
+        extracted
         .withColumn("distribution_date",
                     parse_xsd_datetime(F.col("distribution_date_raw")))
         .withColumn("header_last_modified", F.col("datestamp"))
     )
-    return validate_reporting_documents(extracted)
 
 
 def enrich_once(spark: SparkSession, store: TableStore, fetch: MetsFetcher,
@@ -118,15 +127,16 @@ def enrich_once(spark: SparkSession, store: TableStore, fetch: MetsFetcher,
     and inventing them would diverge from the system being rebuilt."""
     batch = read_header_queue(store, batch_size)
 
-    # Cache the fetched batch: every HTTP point-lookup must run exactly once
-    # even though three downstream consumers (merge, delete, counters) each
-    # trigger an action. Politeness (T5) would be violated by re-fetching.
-    with_xml = fetch_mets_documents(batch, fetch, min_wait_s).persist()
+    # Persist the fetched-and-extracted batch: every HTTP point-lookup and
+    # every parse must run exactly once even though the counters, both
+    # merges and the delete each trigger an action. Politeness (T5) would
+    # be violated by re-fetching.
+    extracted = fetch_mets_documents(batch, fetch, min_wait_s).persist()
     try:
-        n_processed = with_xml.count()
+        n_processed = extracted.count()
         if n_processed == 0:
             return {"processed": 0, "persisted": 0, "rejected": 0}
-        valid, rejected = extract_and_validate(with_xml)
+        valid, rejected = extract_and_validate(extracted)
 
         documents = valid.select(
             F.col("record_identifier"),
@@ -165,11 +175,11 @@ def enrich_once(spark: SparkSession, store: TableStore, fetch: MetsFetcher,
         # operator itself supports full tuples incl. the array column
         # (tests pin that), the pipeline just mirrors the reference.
         header_cols = ["record_identifier", "datestamp", "status_is_deleted"]
-        processed = with_xml.select(*header_cols)
+        processed = extracted.select(*header_cols)
         store.delete_keyed(OAI_HEADER_TABLE, processed, header_cols,
                            schema=schemas.OAI_HEADER_SCHEMA)
     finally:
-        with_xml.unpersist()
+        extracted.unpersist()
 
     return {
         "processed": n_processed,

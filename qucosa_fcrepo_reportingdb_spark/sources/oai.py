@@ -22,7 +22,7 @@ from collections.abc import Callable
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from qucosa_fcrepo_reportingdb_spark import schemas
 from qucosa_fcrepo_reportingdb_spark.functions.filters import (
@@ -45,7 +45,7 @@ from qucosa_fcrepo_reportingdb_spark.streaming.state import (
     next_state,
     response_date_skew,
 )
-from qucosa_fcrepo_reportingdb_spark.tables import TableStore
+from qucosa_fcrepo_reportingdb_spark.tables import TableStore, local_frame
 
 import logging
 
@@ -56,6 +56,8 @@ Fetcher = Callable[[dict[str, str]], "str | None"]
 OAI_HEADER_TABLE = "oai_header"
 OAI_HEADER_STAGING_TABLE = "oai_header_staging"
 OAI_RUN_RESULT_TABLE = "oai_run_result"
+
+_PAGE_XML_SCHEMA = T.StructType([T.StructField("xml", T.StringType())])
 
 
 class OaiHarvestSource:
@@ -89,11 +91,11 @@ class OaiHarvestSource:
         )
 
     def store_state(self, state: HarvestState) -> None:
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark, schemas.OAI_RUN_RESULT_SCHEMA,
             [(state.run_id, state.timestamp_of_run, state.response_date,
               state.resumption_token, state.resumption_token_expiration_date,
               state.next_from_timestamp)],
-            schemas.OAI_RUN_RESULT_SCHEMA,
         )
         self.store.append(OAI_RUN_RESULT_TABLE, df,
                           schema=schemas.OAI_RUN_RESULT_SCHEMA)
@@ -112,8 +114,7 @@ class OaiHarvestSource:
             return None  # T8 failure isolation: no offset commit
 
         pages = parse_oai_pages(
-            self.spark.createDataFrame([(xml,)], "xml string"), "xml"
-        )
+            local_frame(self.spark, _PAGE_XML_SCHEMA, [(xml,)]), "xml")
         page_row = pages.collect()[0]  # one page per trigger: 1-row collect
         if (page_row.response_date is None and not page_row.headers
                 and not page_row.errors and page_row.resumption_token is None):
@@ -160,11 +161,12 @@ class OaiHarvestSource:
         self.store_state(state)
 
         if not state.has_resumption_token:
-            # retention (T7/S9) once per sequence instead of per page
+            # retention (T7/S9) once per sequence instead of per page; the
+            # log is a few rows, so it is rewritten as one file
             cutoff = start_of_run - self.history_length
             checkpoints = self.store.read(OAI_RUN_RESULT_TABLE)
             self.store.overwrite(OAI_RUN_RESULT_TABLE,
-                                 retain_recent(checkpoints, cutoff))
+                                 retain_recent(checkpoints, cutoff).coalesce(1))
         return state
 
     def _compact_staging(self) -> None:
@@ -179,7 +181,7 @@ class OaiHarvestSource:
                                schema=schemas.OAI_HEADER_SCHEMA)
         self.store.overwrite(
             OAI_HEADER_STAGING_TABLE,
-            self.spark.createDataFrame([], schemas.OAI_HEADER_SCHEMA))
+            local_frame(self.spark, schemas.OAI_HEADER_SCHEMA))
 
     def harvest_available(self, max_pages: int = 1000) -> int:
         """Trigger.AvailableNow analog: page through until the resumption

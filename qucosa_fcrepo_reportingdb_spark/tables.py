@@ -19,13 +19,31 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _CURRENT = "_CURRENT"
 _COMMITS = "_COMMITS"
+
+
+def local_frame(spark: SparkSession, schema: T.StructType,
+                rows: Iterable[Sequence] = ()) -> DataFrame:
+    """Driver-side rows (checkpoint row, page body, empty table) as a
+    single-partition JVM frame whose schema equals ``schema``.
+
+    The rows become one typed literal ``array<struct>``, cast to the
+    declared row type and exploded with ``inline`` over a one-row
+    ``spark.range``. No Python worker runs, unlike a frame built from a
+    Python list (whose reserialize pass starts one), and a write makes one
+    parquet file. The cast carries the declared nullability: a None in a
+    non-nullable field fails analysis instead of being written."""
+    structs = [F.struct(*[F.lit(v).alias(f.name)
+                          for v, f in zip(r, schema.fields)]) for r in rows]
+    packed = F.array(*structs).cast(T.ArrayType(schema, containsNull=False))
+    return spark.range(0, 1, 1, numPartitions=1).select(F.inline(packed))
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -82,7 +100,7 @@ class TableStore:
         if version is None:
             if schema is None:
                 raise FileNotFoundError(f"table {name!r} does not exist")
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         reader = self.spark.read
         if schema is not None:
             # declared schema wins over the stored footer: columns the
@@ -162,7 +180,7 @@ class TableStore:
         if not self.exists(name):
             if schema is None:
                 schema = df.schema
-            self.overwrite(name, self.spark.createDataFrame([], schema))
+            self.overwrite(name, local_frame(self.spark, schema))
         version = self._current_version(name)
         df.write.mode("append").parquet(
             os.path.join(self._table_dir(name), version))
@@ -252,7 +270,6 @@ class TableStore:
         non_key = [c for c in current.columns if c not in keys]
         if not non_key:
             return
-        from pyspark.sql import functions as F
         cur = current.select(*keys, F.xxhash64(*non_key).alias("_cur_sig"))
         chg = changes.select(*keys, F.xxhash64(*non_key).alias("_chg_sig"))
         bad = (cur.join(chg, on=list(keys))

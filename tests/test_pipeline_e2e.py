@@ -2,6 +2,7 @@
 checkpoint -> METS enrich -> reporting_documents, with the golden tuples
 from the reference's test expectations."""
 
+import glob
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -18,6 +19,8 @@ from qucosa_fcrepo_reportingdb_spark.sources.oai import (
     OaiHarvestSource,
     fixture_fetcher,
 )
+from qucosa_fcrepo_reportingdb_spark.streaming.state import HarvestState
+from qucosa_fcrepo_reportingdb_spark.tables import local_frame
 from tests import fixtures_oai as fx
 
 
@@ -140,6 +143,64 @@ def test_rejected_documents_are_quarantined(spark, store):
     assert q[0].record_identifier == "oai:example.org:qucosa:31789"
     assert q[0].mandator is None and q[0].document_type is None
     assert q[0].distribution_date_raw == "2010-01-01"
+
+
+def test_enrich_once_fetches_each_record_once(spark, store):
+    """T5 politeness: one METS fetch per processed record, rejected ones
+    included, counted on the executors where the fetch runs. Extraction
+    happens inside the fetch pass, so this also pins one parse per
+    record: a consumer re-running the pass would fetch again."""
+    docs = {
+        "qucosa:1": fx.mets_document("SLUB", "issue", "2008-08-04"),
+        "qucosa:2": fx.mets_document("slub", "article", "2016-10-10"),
+        "qucosa:3": fx.mets_document(None, None, "2010-01-01"),
+        "qucosa:4": "<mets:mets>not well-formed",
+        # qucosa:5 has no body: the fetch returns None
+    }
+    calls = spark.sparkContext.accumulator(0)
+    inner = fixture_mets_fetcher(docs)
+
+    def counting_fetch(record_identifier):
+        calls.add(1)
+        return inner(record_identifier)
+
+    d = datetime(2015, 12, 17, 16, 3, 17)
+    store.overwrite(OAI_HEADER_TABLE, spark.createDataFrame(
+        [(f"oai:example.org:qucosa:{n}", d, [], False) for n in range(1, 6)],
+        schemas.OAI_HEADER_SCHEMA))
+
+    stats = enrich_once(spark, store, counting_fetch)
+    assert stats == {"processed": 5, "persisted": 2, "rejected": 3}
+    assert calls.value == stats["processed"]
+    assert store.read(OAI_HEADER_TABLE).count() == 0
+
+
+def test_checkpoint_round_trips_exactly(spark, store, tmp_path):
+    """store_state -> load_state returns an equal HarvestState, including
+    the X4 three-valued token ('' is not NULL) and microseconds; each
+    checkpoint append adds exactly one parquet file."""
+    src = OaiHarvestSource(spark, store, fixture_fetcher([]))
+    t = datetime(2015, 12, 17, 16, 3, 17)
+    states = [
+        HarvestState(1, t, t, None, None, t),
+        HarvestState(2, t, t, "", None, t),
+        HarvestState(3, datetime(2016, 1, 2, 3, 4, 5, 678901),
+                     datetime(2016, 1, 2, 3, 4, 6, 1), "tok-3",
+                     datetime(2016, 1, 3, 0, 0, 0, 999999),
+                     datetime(2016, 1, 2, 3, 4, 5, 678901)),
+    ]
+    for state in states:
+        src.store_state(state)
+        assert src.load_state() == state
+    # one file per checkpoint, plus the empty one that created the table
+    assert store.file_count(OAI_RUN_RESULT_TABLE) == len(states) + 1
+
+    for schema in (schemas.OAI_HEADER_SCHEMA, schemas.OAI_RUN_RESULT_SCHEMA):
+        frame = local_frame(spark, schema)
+        assert frame.schema == schema
+        out = str(tmp_path / f"empty-{len(schema.fields)}")
+        frame.write.parquet(out)
+        assert len(glob.glob(f"{out}/*.parquet")) == 1
 
 
 def test_headers_compacted_before_checkpoint_stored(spark, store, monkeypatch):
