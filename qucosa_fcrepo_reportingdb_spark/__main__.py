@@ -10,9 +10,6 @@ overrides (config.py). One process, batch or continuous:
       --config local.properties --once
   python -m qucosa_fcrepo_reportingdb_spark --store /data/reporting \\
       --continuous            # poll loop with the T1 wait semantics
-
-`--bucketed` switches the table store to the bucket-pruned
-BucketedTableStore (O(touched buckets) merges — the 100 TB write path).
 """
 
 from __future__ import annotations
@@ -30,27 +27,10 @@ from qucosa_fcrepo_reportingdb_spark.sources.oai import http_fetcher
 from qucosa_fcrepo_reportingdb_spark.tables import TableStore
 
 
-def build_pipeline(spark, cfg: ReportingConfig, store_root: str,
-                   bucketed: bool = False) -> ReportingPipeline:
-    if bucketed:
-        from qucosa_fcrepo_reportingdb_spark.operators.bucketed import (
-            BucketedTableStore,
-        )
-        from qucosa_fcrepo_reportingdb_spark.sources.mets import (
-            REPORTING_DOCUMENTS_TABLE,
-        )
-        from qucosa_fcrepo_reportingdb_spark.sources.oai import (
-            OAI_HEADER_TABLE,
-        )
-        store = BucketedTableStore(
-            spark, store_root,
-            bucketed={OAI_HEADER_TABLE: "record_identifier",
-                      REPORTING_DOCUMENTS_TABLE: "record_identifier"},
-            n_buckets=cfg.n_buckets,
-            auto_compact_files=cfg.auto_compact_files)
-    else:
-        store = TableStore(spark, store_root,
-                           auto_compact_files=cfg.auto_compact_files)
+def build_pipeline(spark, cfg: ReportingConfig,
+                   store_root: str) -> ReportingPipeline:
+    store = TableStore(spark, store_root,
+                       auto_compact_files=cfg.auto_compact_files)
     return ReportingPipeline(
         spark, store,
         oai_fetch=http_fetcher(cfg.oai_url),
@@ -68,8 +48,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--config", default=None,
                    help="properties file (reference format); env "
                         "REPORTING_* overrides apply on top")
-    p.add_argument("--bucketed", action="store_true",
-                   help="use the bucket-pruned table store")
     mode = p.add_mutually_exclusive_group()
     mode.add_argument("--once", action="store_true", default=True,
                       help="harvest + drain queue, then exit (default)")
@@ -81,7 +59,7 @@ def main(argv: list[str] | None = None) -> int:
                         format="%(asctime)s %(levelname)s %(name)s %(message)s")
     cfg = ReportingConfig.load(local_file=args.config)
     spark = get_spark("reportingdb-pipeline")
-    pipeline = build_pipeline(spark, cfg, args.store, bucketed=args.bucketed)
+    pipeline = build_pipeline(spark, cfg, args.store)
     if args.continuous:
         # C2 cooperative shutdown: SIGINT/SIGTERM finish the current
         # microbatch, then stop — the reference's TerminateableRunnable

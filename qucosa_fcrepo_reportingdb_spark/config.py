@@ -43,7 +43,6 @@ DEFAULTS: dict[str, str] = {
     # Spark-engine additions (not in the reference)
     "pipeline.batchsize": "100",
     "mets.minwaitseconds": "1",
-    "store.nbuckets": "64",
     # files-per-table auto-compaction threshold for the versioned store
     # (TableStore.auto_compact_files); 0 disables
     "store.autocompactfiles": "64",
@@ -153,10 +152,6 @@ class ReportingConfig:
     @property
     def mets_min_wait_s(self) -> float:
         return float(self.props["mets.minwaitseconds"])
-
-    @property
-    def n_buckets(self) -> int:
-        return int(self.props["store.nbuckets"])
 
     @property
     def auto_compact_files(self) -> "int | None":

@@ -42,8 +42,6 @@ from qucosa_fcrepo_reportingdb_spark.functions.filters import (
 )
 from qucosa_fcrepo_reportingdb_spark.functions.mets_xml import _extract_one
 from qucosa_fcrepo_reportingdb_spark.functions.timestamps import parse_xsd_datetime
-# keyed mutations go through the TableStore seam (merge_keyed /
-# delete_keyed) so the bucketed store can prune rewrites to touched buckets
 from qucosa_fcrepo_reportingdb_spark.sources.oai import (
     OAI_HEADER_TABLE,
     read_header_queue,

@@ -170,9 +170,8 @@ class OaiHarvestSource:
         return state
 
     def _compact_staging(self) -> None:
-        """Keyed merge of the staged pages into oai_header via the store's
-        mutation seam: O(table) rewrite on a plain TableStore, O(touched
-        buckets) on a BucketedTableStore (operators/bucketed.py)."""
+        """Keyed merge of the staged pages into oai_header (one O(table)
+        rewrite), then reset the staging table to empty."""
         staged = self.store.read(OAI_HEADER_STAGING_TABLE,
                                  schemas.OAI_HEADER_SCHEMA)
         self.store.merge_keyed(OAI_HEADER_TABLE, staged,

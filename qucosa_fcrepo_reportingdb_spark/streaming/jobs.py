@@ -165,11 +165,8 @@ def stream_header_merges(spark: SparkSession, source_dir: str,
     (checkpoint-after-data ordering, OaiHarvester.java:151-164), and the
     merge is idempotent, so replay of a failed batch converges.
 
-    The merge goes through the store's keyed-mutation seam
-    (``merge_keyed``) rather than read/merge/overwrite: on a
-    ``BucketedTableStore`` that makes each microbatch O(touched buckets)
-    instead of a full-table rewrite — the difference between an
-    incremental stream and re-writing 100 TB per batch."""
+    The merge is ``TableStore.merge_keyed``, so each microbatch is one
+    whole-table rewrite committed by the store's atomic repoint."""
     def handle(batch: DataFrame, epoch_id: int) -> None:
         store.merge_keyed(table, batch, keys=["record_identifier"],
                           order_by=["datestamp"],
@@ -703,7 +700,8 @@ def stream_validated_ingest(spark: SparkSession, source_dir: str,
 
     Scale shape: the text file source is splittable and rate-controlled
     by maxFilesPerTrigger; the parse is from_json expression work
-    (scan-local); per-batch write cost is O(batch) on a bucketed store.
+    (scan-local); each batch pays two keyed merges, each a rewrite of
+    its target table.
     A deployment points this at the landing bucket and lets it run —
     the quarantine table is the triage queue for producer bugs."""
     from qucosa_fcrepo_reportingdb_spark.sources.files import (

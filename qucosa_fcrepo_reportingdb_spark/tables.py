@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _CURRENT = "_CURRENT"
-_COMMITS = "_COMMITS"
 
 
 def local_frame(spark: SparkSession, schema: T.StructType,
@@ -155,14 +154,6 @@ class TableStore:
             os.fsync(dir_fd)          # persist the rename itself
         finally:
             os.close(dir_fd)
-        # commit log: the ONLY record of committed order. A version dir
-        # written by a crashed overwrite (no repoint) never appears here,
-        # so time travel can't mistake an orphan for the last committed
-        # state; append-after-repoint keeps log entries ⊆ commits, and a
-        # crash between the two costs only history visibility, not
-        # correctness of _CURRENT.
-        with open(os.path.join(table_dir, _COMMITS), "a") as fh:
-            fh.write(version + "\n")
         self._versions.setdefault(name, []).append(version)
         history = self._versions[name]
         for stale in history[:-2]:
@@ -220,14 +211,11 @@ class TableStore:
         except ConcurrentWriteError:
             return False
 
-    # -- keyed mutation seam -------------------------------------------------
-    # The pipeline mutates keyed tables ONLY through these two methods, so
-    # the storage strategy is swappable: this base class rewrites the whole
-    # table per batch (fine at the reference's scale), while
-    # operators.bucketed.BucketedTableStore overrides both with
-    # bucket-pruned rewrites whose cost is O(touched buckets) — the 100 TB
-    # path. Semantics (idempotent last-wins merge, optimistic-concurrency
-    # delete) are identical in both.
+    # -- keyed mutations -----------------------------------------------------
+    # The pipeline mutates keyed tables only through these two methods.
+    # Each rewrites the whole table per batch (fine at the reference's
+    # scale); at cluster scale they are the two calls a Delta/Iceberg
+    # MERGE replaces (module docstring).
 
     def merge_keyed(self, name: str, changes: DataFrame,
                     keys: Sequence[str],
@@ -334,63 +322,6 @@ class TableStore:
         after = len([f for f in os.listdir(new_dir)
                      if f.endswith(".parquet")])
         return len(snapshot), after
-
-    # -- time travel ---------------------------------------------------------
-    # The GC in _repoint retains the immediately-previous version, which
-    # makes the last committed state readable — enough for the two
-    # operations a pipeline actually runs against history: audit "what
-    # changed in the last batch" and roll-back-by-re-overwrite. (Deeper
-    # history is a retention-policy knob in Delta/Iceberg; this store
-    # keeps the swap-in seam, not the full feature.)
-
-    def versions(self, name: str) -> list[str]:
-        """COMMITTED versions still on disk, oldest-commit first — read
-        from the _COMMITS log, not the directory listing: a v-* dir
-        written by a crashed overwrite (data present, _CURRENT never
-        repointed) is an orphan, and an mtime sort would hand it to
-        previous_version()/diff_last() as if it were the last committed
-        state. Entries whose directories were GC'd are skipped."""
-        table_dir = self._table_dir(name)
-        log = os.path.join(table_dir, _COMMITS)
-        if not os.path.isfile(log):
-            return []
-        out, seen = [], set()
-        with open(log) as fh:
-            for line in fh:
-                v = line.strip()
-                if v and v not in seen and os.path.isdir(
-                        os.path.join(table_dir, v)):
-                    seen.add(v)
-                    out.append(v)
-        return out
-
-    def read_version(self, name: str, version: str) -> DataFrame:
-        path = os.path.join(self._table_dir(name), version)
-        if not os.path.isdir(path):
-            raise FileNotFoundError(
-                f"table {name!r} has no version {version!r} "
-                "(GC retains only the current and previous versions)")
-        return self.spark.read.parquet(path)
-
-    def previous_version(self, name: str) -> str | None:
-        current = self._current_version(name)
-        older = [v for v in self.versions(name) if v != current]
-        return older[-1] if older else None
-
-    def diff_last(self, name: str, keys: Sequence[str]) -> DataFrame:
-        """Change feed of the most recent overwrite: keyed diff of the
-        previous version against the current one (op per changed key —
-        see operators.maintenance.keyed_diff). Raises if no previous
-        version survives (fresh table, or GC after multiple writes)."""
-        from qucosa_fcrepo_reportingdb_spark.operators.maintenance import (
-            keyed_diff,
-        )
-        prev = self.previous_version(name)
-        if prev is None:
-            raise FileNotFoundError(
-                f"table {name!r} has no previous version to diff against")
-        return keyed_diff(self.read_version(name, prev),
-                          self.read(name), keys)
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._table_dir(name), ignore_errors=True)

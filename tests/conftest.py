@@ -65,9 +65,8 @@ SLOW_TIER = {
     "test_migrate_band_state_flips_live_stream",
     "test_migrate_band_state_video_multirow",
     "test_streaming_sink_file_count_bounded_by_auto_compaction",
-    # e2e soaks; the fast crash-point tests remain default
+    # e2e soak; the crash-point tests remain default
     "test_many_page_harvest_keeps_file_counts_bounded",
-    "test_crash_between_document_merge_and_queue_delete_converges",
     # the bench computes this census on every run already
     "test_candidate_volume_tripwire",
 }

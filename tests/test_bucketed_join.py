@@ -3,9 +3,8 @@ join path the brief's 100 TB posture calls for — both fact tables
 pre-bucketed on the join key mean the join runs with ZERO Exchange nodes,
 the shuffle paid once at write time instead of on every query.
 
-This is the catalog-table complement to operators/bucketed.py (which is
-the keyed-mutation store); here we pin the PLAN property: bucketed scan →
-SortMergeJoin with no Exchange on either side.
+This pins the PLAN property: bucketed scan → SortMergeJoin with no
+Exchange on either side.
 """
 
 import pytest

@@ -117,23 +117,3 @@ def test_main_once_exit_code(spark, tmp_path, http_server, monkeypatch):
     docs = TableStore(spark, str(tmp_path / "store3")) \
         .read(REPORTING_DOCUMENTS_TABLE)
     assert docs.count() == 2
-
-
-def test_main_once_bucketed_store(spark, tmp_path, http_server):
-    propfile = tmp_path / "local.properties"
-    propfile.write_text(
-        f"oai.url={http_server}/oai\n"
-        f"mets.url={http_server}/mets\n"
-        "mets.minwaitseconds=0\n"
-        "store.nbuckets=8\n")
-    assert main(["--store", str(tmp_path / "store4"),
-                 "--config", str(propfile), "--once", "--bucketed"]) == 0
-    # bucketed reporting_documents reads back the same 2 rows
-    from qucosa_fcrepo_reportingdb_spark.operators.bucketed import (
-        BucketedTableStore,
-    )
-    store = BucketedTableStore(
-        spark, str(tmp_path / "store4"),
-        bucketed={REPORTING_DOCUMENTS_TABLE: "record_identifier"},
-        n_buckets=8)
-    assert store.read(REPORTING_DOCUMENTS_TABLE).count() == 2

@@ -1,5 +1,5 @@
-"""S5/S6 merge, S8 conditional delete, S9 retention, A2/A4 tests
-(reference: PostgrePersistenceServiceTestIT.java)."""
+"""S5/S6 merge, S8 conditional delete, S9 retention, A2/A4 and keyed
+change-feed tests (reference: PostgrePersistenceServiceTestIT.java)."""
 
 from datetime import datetime
 
@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from qucosa_fcrepo_reportingdb_spark import schemas
 from qucosa_fcrepo_reportingdb_spark.operators.maintenance import (
     conditional_delete,
+    keyed_diff,
     last_wins_dedupe,
     latest_checkpoint,
     merge_upsert,
@@ -112,3 +113,23 @@ def test_s9_retention_prunes_only_older_than_cutoff(spark):
     ])
     kept = retain_recent(cps, cutoff=datetime(2016, 6, 1))
     assert {r.run_id for r in kept.collect()} == {2, 3}
+
+
+def test_keyed_diff_classifies_ops(spark):
+    old = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "k long, v string")
+    new = spark.createDataFrame(
+        [(1, "a"), (2, "B"), (4, "d")], "k long, v string")
+    rows = {r.k: r for r in keyed_diff(old, new, ["k"]).collect()}
+    # unchanged key 1 absent; 2 updated; 3 deleted; 4 inserted
+    assert {k: r.op for k, r in rows.items()} \
+        == {2: "update", 3: "delete", 4: "insert"}
+    assert (rows[2].before.v, rows[2].after.v) == ("b", "B")
+
+
+def test_keyed_diff_null_field_semantics(spark):
+    # NULL -> NULL is unchanged; NULL -> value is an update (3VL escape)
+    old = spark.createDataFrame([(1, None), (2, None)], "k long, v string")
+    new = spark.createDataFrame([(1, None), (2, "x")], "k long, v string")
+    ops = {r.k: r.op for r in keyed_diff(old, new, ["k"]).collect()}
+    assert ops == {2: "update"}

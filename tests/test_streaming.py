@@ -75,76 +75,6 @@ def test_streaming_merge_foreachbatch(spark, store, tmp_path):
     assert len(epochs) >= 1
 
 
-def test_streaming_merge_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
-    """stream_header_merges goes through the keyed-mutation seam: on a
-    BucketedTableStore a 1-key microbatch must rewrite ONLY that key's
-    bucket — every other bucket's files (path, size, mtime) stay
-    byte-identical, the O(touched buckets) property that makes the
-    stream incremental instead of a full-table rewrite per batch."""
-    import os
-    import time
-
-    from qucosa_fcrepo_reportingdb_spark.operators.bucketed import (
-        BucketedTableStore,
-    )
-
-    n_buckets = 16
-    store = BucketedTableStore(
-        spark, str(tmp_path / "tables"),
-        bucketed={OAI_HEADER_TABLE: "record_identifier"},
-        n_buckets=n_buckets)
-    d1, d2 = datetime(2015, 1, 1), datetime(2016, 1, 1)
-    batches = [
-        [(f"k{i}", d1, None, False) for i in range(20)],  # spread buckets
-        [("k0", d2, ["x"], True)],                        # touch one key
-    ]
-    src = str(tmp_path / "headers")
-    for rows in batches:
-        spark.createDataFrame(rows, schemas.OAI_HEADER_SCHEMA).coalesce(1) \
-            .write.mode("append").parquet(src)
-        time.sleep(0.05)  # distinct mtimes: file source processes oldest first
-
-    tdir = store._table_dir(OAI_HEADER_TABLE)
-
-    def snapshot():
-        out = {}
-        for root, _, files in os.walk(tdir):
-            rel = os.path.relpath(root, tdir)
-            bucket = rel.split(os.sep)[0]
-            if not bucket.startswith("bucket="):
-                continue
-            for f in files:
-                p = os.path.join(root, f)
-                out.setdefault(bucket, {})[os.path.relpath(p, tdir)] = (
-                    os.path.getsize(p), os.path.getmtime(p))
-        return out
-
-    records = []
-
-    def hook(df, epoch):
-        touched = {f"bucket={r[0]}" for r in df.select(
-            F.pmod(F.hash("record_identifier"), F.lit(n_buckets))
-        ).distinct().collect()}
-        records.append((df.count(), touched, snapshot()))
-
-    q = stream_header_merges(spark, src, store, OAI_HEADER_TABLE,
-                             str(tmp_path / "ck"), batch_hook=hook)
-    q.awaitTermination(120)
-
-    assert [r[0] for r in records] == [20, 1]
-    (_, _, s0), (_, touched1, s1) = records
-    changed = {b for b in s0 if s1.get(b) != s0[b]}
-    assert changed and changed <= touched1
-    untouched = set(s0) - touched1
-    assert untouched  # 20 keys over 16 buckets, 1-key batch: most are idle
-    for b in untouched:
-        assert s1[b] == s0[b]
-    rows = {r.record_identifier: r for r in
-            store.read(OAI_HEADER_TABLE, schemas.OAI_HEADER_SCHEMA).collect()}
-    assert len(rows) == 20
-    assert rows["k0"].datestamp == d2 and rows["k0"].status_is_deleted is True
-
-
 def test_streaming_dedupe_first_arrival_per_key(spark, tmp_path):
     src = str(tmp_path / "ev")
     _write_events(spark, src)

@@ -115,70 +115,29 @@ def test_compact_missing_table_raises_file_not_found(spark, tmp_path):
         store.compact("nope")
 
 
-# --- time travel + change feed ----------------------------------------------
-def test_read_previous_version_after_overwrite(spark, store):
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    df2 = spark.createDataFrame([(1, "a2"), (3, "c")], "k long, v string")
-    store.overwrite("tt", df1)
-    store.overwrite("tt", df2)
-    prev = store.previous_version("tt")
-    assert prev is not None
-    assert {tuple(r) for r in store.read_version("tt", prev).collect()} \
-        == {(1, "a"), (2, "b")}
-    assert {tuple(r) for r in store.read("tt").collect()} \
-        == {(1, "a2"), (3, "c")}
+def test_crash_before_repoint_orphan_is_gc_by_fresh_store(spark, store):
+    """A crashed overwrite leaves a written v-* directory whose name never
+    reached _CURRENT. Readers keep seeing the last commit, and a store
+    opened later (the restarted process) seeds its GC history from disk,
+    so the orphan is deleted within two overwrites while the previous
+    committed version is still retained for in-flight readers."""
+    schema = "k long, v string"
+    store.overwrite("tto", spark.createDataFrame([(1, "a")], schema))
+    store.overwrite("tto", spark.createDataFrame([(1, "b")], schema))
+    table_dir = os.path.join(store.root, "tto")
+    orphan = os.path.join(table_dir, "v-deadbeefcafe")
+    spark.createDataFrame([(9, "ORPHAN")], schema).write.parquet(orphan)
+    assert [tuple(r) for r in store.read("tto").collect()] == [(1, "b")]
 
-
-def test_diff_last_classifies_ops(spark, store):
-    df1 = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string")
-    df2 = spark.createDataFrame(
-        [(1, "a"), (2, "B"), (4, "d")], "k long, v string")
-    store.overwrite("ttd", df1)
-    store.overwrite("ttd", df2)
-    ops = {r.k: r.op for r in store.diff_last("ttd", ["k"]).collect()}
-    # unchanged key 1 absent; 2 updated; 3 deleted; 4 inserted
-    assert ops == {2: "update", 3: "delete", 4: "insert"}
-    row = {r.k: r for r in store.diff_last("ttd", ["k"]).collect()}[2]
-    assert (row.before.v, row.after.v) == ("b", "B")
-
-
-def test_diff_last_null_field_semantics(spark, store):
-    # NULL -> NULL is unchanged; NULL -> value is an update (3VL escape)
-    df1 = spark.createDataFrame([(1, None), (2, None)], "k long, v string")
-    df2 = spark.createDataFrame([(1, None), (2, "x")], "k long, v string")
-    store.overwrite("ttn", df1)
-    store.overwrite("ttn", df2)
-    ops = {r.k: r.op for r in store.diff_last("ttn", ["k"]).collect()}
-    assert ops == {2: "update"}
-
-
-def test_diff_last_fresh_table_raises(spark, store):
-    store.overwrite("ttf", spark.createDataFrame([(1,)], "k long"))
-    import pytest as _pytest
-    with _pytest.raises(FileNotFoundError):
-        store.diff_last("ttf", ["k"])
-
-
-def test_orphan_version_dir_is_not_time_travel_target(spark, store, tmp_path):
-    """A v-* directory from a crashed overwrite (written, never
-    repointed) must be invisible to versions()/previous_version() — only
-    the _COMMITS log defines committed history."""
-    import os
-    import time
-
-    store.overwrite("tto", spark.createDataFrame([(1, "a")], "k long, v string"))
-    store.overwrite("tto", spark.createDataFrame([(1, "b")], "k long, v string"))
-    committed_prev = store.previous_version("tto")
-    # simulate a crashed writer: newest-mtime dir, no repoint, no log entry
-    time.sleep(0.05)
-    orphan = os.path.join(store.root, "tto", "v-deadbeefcafe")
-    spark.createDataFrame([(9, "ORPHAN")], "k long, v string") \
-        .write.parquet(orphan)
-    assert store.previous_version("tto") == committed_prev
-    assert "v-deadbeefcafe" not in store.versions("tto")
-    ops = {r.k: r.op for r in store.diff_last("tto", ["k"]).collect()}
-    assert ops == {1: "update"}
+    fresh = TableStore(spark, store.root)
+    for v in ("c", "d"):
+        committed = fresh._current_version("tto")
+        fresh.overwrite("tto", spark.createDataFrame([(1, v)], schema))
+    assert not os.path.exists(orphan)
+    assert [tuple(r) for r in fresh.read("tto").collect()] == [(1, "d")]
+    kept = os.path.join(table_dir, committed)
+    assert [tuple(r) for r in spark.read.parquet(kept).collect()] \
+        == [(1, "c")]
 
 
 def test_merge_keyed_schema_evolution_adds_column(spark, store):

@@ -4,7 +4,9 @@ statements. Tokenize-based, so a multi-line expression counts every line
 it spans.
 
 Usage: python tools/code_lines.py <dir> [top_n]
-Prints the top_n largest files (default 10) and the total.
+Prints the top_n largest files (default 10) and the total. Exits non-zero
+when <dir> is not a directory or holds no .py file, so a mistyped path
+cannot report a total of 0.
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ def main() -> None:
         sys.exit(__doc__)
     root = sys.argv[1]
     top_n = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    if not os.path.isdir(root):
+        sys.exit(f"code_lines: {root!r} is not a directory")
     counts = {}
     for dirpath, _, files in os.walk(root):
         for name in files:
@@ -44,6 +48,8 @@ def main() -> None:
                 path = os.path.join(dirpath, name)
                 with open(path, encoding="utf-8") as fh:
                     counts[os.path.relpath(path, root)] = code_lines(fh.read())
+    if not counts:
+        sys.exit(f"code_lines: no .py file under {root!r}")
     for path, n in sorted(counts.items(), key=lambda kv: -kv[1])[:top_n]:
         print(f"{n:7d}  {path}")
     print(f"{sum(counts.values()):7d}  total ({len(counts)} files)")
