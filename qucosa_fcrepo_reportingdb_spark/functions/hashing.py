@@ -220,3 +220,43 @@ def token_hash_scalar(tok: str, dialect: str) -> str:
             f"list_transform(range(1, length({tok}) + 1), "
             f"i -> CAST(unicode(substr({tok}, i, 1)) AS BIGINT))), "
             f"(acc, x) -> (acc * 31 + x) % {P})")
+
+
+# --- embedding vectors -------------------------------------------------------
+def dot(u: str, v: str, dialect: str) -> str:
+    """Sequential left fold of the element products of two DOUBLE
+    arrays: the same summation order in both engines, so a cosine built
+    on it is bit-identical across them."""
+    if dialect == "spark":
+        return (f"aggregate(zip_with({u}, {v}, (x, y) -> x * y), "
+                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
+    return (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
+            f"list_transform(range(1, len({u}) + 1), i -> {u}[i] * {v}[i])),"
+            f" (acc, x) -> acc + x)")
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB cosine of rows ``a`` and ``b`` of a normed-vector relation
+    (columns ``v`` and ``nrm``, as normed_ctes emits them)."""
+    return f"{dot(f'{a}.v', f'{b}.v', 'duck')} / ({a}.nrm * {b}.nrm)"
+
+
+def normed_ctes(name: str = "n", **member: str) -> str:
+    """DuckDB CTE pair ``pre``/``<name>``: (vec_id, label, v, *member,
+    nrm) from the ``embeddings`` table — the vector cast to DOUBLE[],
+    its L2 norm by the dot fold, zero vectors dropped (the Spark side's
+    normed-embedding frame). Each keyword adds a membership column,
+    e.g. ``is_suite="<expr>"``, computed from the raw row."""
+    extra = "".join(f",\n         {expr} AS {col}"
+                    for col, expr in member.items())
+    cols = "".join(f", {col}" for col in member)
+    return f"""pre AS (
+  SELECT vec_id, label,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v{extra}
+  FROM embeddings),
+{name} AS (
+  SELECT vec_id, label, v{cols},
+         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
+  FROM pre
+  WHERE nrm > 0)"""

@@ -14,6 +14,9 @@ and candidate graphs that never materialize a quadratic pair space.
 
 from __future__ import annotations
 
+import functools
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -133,7 +136,7 @@ def _ngram_screen(spark: SparkSession, sf_dir: str,
     forms: one shingling pipeline, one broadcast benchmark-shingle
     join, one per-doc roll-up.
 
-    Reads the memoized _bench_shingled artifact (r15): the plan
+    Reads the memoized _bench_shingled artifact: the plan
     consumes the shingle frame on THREE branches (bench set, corpus
     explode, roll-up base), and without the materialization each branch
     re-tokenized the corpus from parquet per invocation — the same
@@ -212,9 +215,9 @@ DECONTAMINATE_SQL = _decontaminate_oracle()
 
 def _bench_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized bench-flagged shingle frame (doc_id, sh, is_bench) —
-    the lexical arm of the manifest-reconstruction path (VERDICT r14
-    item 5): the other four refresh screens ride memoized signature
-    artifacts (_phash_signatures and friends), but the lexical refresh
+    the lexical arm of the manifest-reconstruction path: the other
+    four refresh screens ride memoized signature artifacts
+    (_phash_signatures and friends), but the lexical refresh
     re-tokenized and re-shingled the corpus from parquet on every
     call, and its plan consumes the frame on BOTH sides (bench +
     corpus), so even a single reconstruction paid the shingle pipeline
@@ -222,7 +225,7 @@ def _bench_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint blocks by every census consumer of the reconstruction
     (diff, and any repeated release pricing in one session).
 
-    r15 (late): extended beyond the refresh path to every lexical plan
+    Also used beyond the refresh path, by every lexical plan
     that consumes the shingle frame on MULTIPLE branches — the
     batch/incremental n-gram screens and the Bloom screen (three
     branches each: bench/bits set, corpus explode, roll-up base) and
@@ -614,8 +617,8 @@ def connected_components(
     converged)`` where ``labels`` is ``(doc_id, label)`` with label = min
     doc_id reachable — the two-phase star contraction from the public
     MapReduce-CC literature (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"), which replaced the round-7 min-label
-    propagation loop.
+    MapReduce and Beyond"), in place of a min-label propagation
+    loop.
 
     State is the EDGE SET itself, kept canonical as (u, v) with u > v,
     not a label table joined against a static edge set every round:
@@ -1104,9 +1107,9 @@ def incremental_split_assign(docs: DataFrame, prior_assign: DataFrame,
     rejoin; no corpus self-join. ``rep``, ``comp``, and ``prior_assign``
     each feed BOTH arms of the frozen/new union — they are materialized
     once (cut_lineage) instead of re-deriving their join subtrees per
-    arm, which is what held this operator's plan at 26 shuffles before
-    round 8 (widest in the registry; now the union arms read three
-    checkpointed frames)."""
+    arm, which is what held this operator's plan at 26 shuffles (the
+    widest in the registry; now the union arms read three checkpointed
+    frames)."""
     prior_assign = prior_assign.transform(cut_lineage)
     rep = (docs.join(full_labels, "doc_id", "left")
            .select("doc_id", F.coalesce("label", "doc_id")
@@ -1161,7 +1164,7 @@ def leakage_safe_split_incremental(spark: SparkSession,
     pair table shared), then the three-join assign core. The assembled
     per-doc assignment is itself session-memoized: it IS the pinned
     split artifact a deployment persists (the clean_corpus_manifest
-    precedent), and memoizing it keeps the round-8 plan-width fix's
+    precedent), and memoizing it keeps the plan-width fix's
     three cut_lineage materializations a once-per-session cost instead
     of a per-read one."""
     def build() -> DataFrame:
@@ -1897,7 +1900,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the bits side is <= BLOOM_M distinct ints -> broadcast
     semi-joins; corpus explodes once; one map-side-combinable count.
-    Reads the memoized _bench_shingled artifact (r15): three consuming
+    Reads the memoized _bench_shingled artifact: three consuming
     branches (bits, corpus explode, roll-up base) re-tokenized the
     corpus per branch before."""
     sh = _bench_shingled(spark, sf_dir)
@@ -2208,9 +2211,9 @@ PAGERANK_SCALE = 10 ** 12  # fixed-point: score 1.0 == 10^12
 # edge-sized side never shuffles inside the loop; above it the loop
 # falls back to plain joins (localCheckpoint reports
 # UnknownPartitioning, so the fallback shuffles both sides per
-# iteration — no worse than the r15 form, and the planner is free to
-# hash the node-sized side). Strategy only — both branches compute
-# identical fixed-point scores.
+# iteration — no worse than plain per-iteration joins, and the
+# planner is free to hash the node-sized side). Strategy only — both
+# branches compute identical fixed-point scores.
 PAGERANK_BROADCAST_MAX_NODES = 2_000_000
 
 
@@ -2229,7 +2232,7 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     first SUM. The iteration count is FIXED ({PAGERANK_ITERS}), so the
     oracle is the same recurrence unrolled into CTE generations.
 
-    Scale shape (r16, guide §2.4/§3.1): the degree is attached to the
+    Scale shape: the degree is attached to the
     edge ONCE up front (aggregate degrees per src, join back, one-time
     materialization) — `score div deg` per edge is arithmetically
     identical to the old per-src contribution join, so the loop needs
@@ -2237,10 +2240,11 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable SUM per dst: the node-sized scores frame is broadcast
     into the edge join and the node-sized inbound aggregate is
     broadcast into the nodes left join (guarded by
-    PAGERANK_BROADCAST_MAX_NODES; the r15 form re-shuffled the edge set
-    twice per iteration). A window-based degree attach was measured and
-    rejected: the per-partition sort under the window cost more than
-    the aggregate+join build at every SF tried. Each generation is cut
+    PAGERANK_BROADCAST_MAX_NODES; a per-src contribution join
+    re-shuffles the edge set twice per iteration). A window-based
+    degree attach was measured and rejected: the per-partition sort
+    under the window cost more than the aggregate+join build at every
+    SF tried. Each generation is cut
     from its lineage with localCheckpoint (the connected-components
     lesson — and the broadcast build would otherwise recompute every
     prior generation). No dangling-mass term: the symmetrized edge set
@@ -2398,13 +2402,13 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window survives documents of any length and corpora of any size."""
     docs = fan_out(t(spark, sf_dir, "documents"), "doc_id")
     n_docs = docs.count()
-    # materialized once per (session, dataset) — r16, was per-call: tf
+    # materialized once per (session, dataset): tf
     # feeds BOTH the document-frequency aggregate and the score join,
     # and Spark reuses neither subtree (0 ReusedExchange at runtime) —
     # without the cut the whole corpus-sized tokenize -> explode ->
     # (doc, term) count pipeline executed twice per invocation
-    # (plans/r15; measured ~1.15x at sf0.1, and at scale the duplicated
-    # pass is the dominant cost). Memoizing (ADVICE r15) means repeat
+    # (measured ~1.15x at sf0.1, and at scale the duplicated
+    # pass is the dominant cost). Memoizing means repeat
     # calls in one session stop re-running the materialization job; the
     # executor-loss caveat of localCheckpoint is centralized in
     # cut_lineage.
@@ -4463,7 +4467,7 @@ def _strip_span_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc join) reads blocks instead of re-running the gram expansion
     over the corpus — the cut-lineage remedy that took
     leakage_safe_split_incremental from 26 shuffles to 1, applied to
-    the plan VERDICT r9 flagged as the registry's widest (28)."""
+    the plan that was the registry's widest (28)."""
     def build() -> DataFrame:
         docs = fan_out(t(spark, sf_dir, "documents"), "doc_id")
         return strip_span_grams_frame(docs).transform(cut_lineage)
@@ -4626,7 +4630,7 @@ def decontaminate_strip_spans_incremental(spark: SparkSession,
     is O(corpus grams x new-only suite set) with the tiny gram sets
     broadcast — the full corpus x all-suites re-screen never runs.
 
-    Plan shape (the r9→r10 collapse, 28 shuffles → a handful): the
+    Plan shape (28 shuffles collapsed to a handful): the
     decomposed per-branch numbers provably recombine — old and
     new-only gram sets are DISJOINT, so g_old + g_new = g_all,
     c_old + c_new = c_all, and n_new_covered = c_all - c_old (exactly
@@ -4865,31 +4869,37 @@ ORACLES["shard_repack_plan"] = SHARD_REPACK_SQL
 # eval material — same meaning, different surface — which sits closer
 # in embedding space than random text but further than a near-copy.
 SEMANTIC_COSINE_THRESHOLD = 0.30
-# Sentinel for "no suite embedding shares this vector's cell": outside
-# the cosine range [-1, 1], so it can never collide with a real score.
+# Sentinel for "no suite embedding is a candidate of this vector":
+# outside the cosine range [-1, 1], so it can never collide with a real
+# score.
 _NO_CANDIDATE = -2.0
+# Probe budget for the recall-targeted screen: suite vectors are multi-
+# assigned to their SEMANTIC_PROBE_K most-plausible cells. Chosen one
+# step above the measured recall wall (semantic_probe_recall_sweep:
+# k=7 is the smallest k meeting the target at both test SFs — 0.869
+# at sf0.01, 0.826 at sf0.1 — so k=8 carries margin: 0.905 / 0.883),
+# the same one-step-before-the-wall convention as the band blocking
+# actuator. k is an ABSOLUTE probe count, not a cell fraction: this
+# 10-cell test corpus pays 8/10 of the exact candidate volume, but a
+# 100 TB deployment's quantizer has ~sqrt(N) cells, where 8 probes are
+# a vanishing fraction — semantic_screen_policy prices which regime a
+# corpus is in and dispatches accordingly.
+SEMANTIC_PROBE_K = 8
+# Audited-recall floor a deployable decontamination screen must meet:
+# a screen that misses more is not a screen.
+SEMANTIC_RECALL_TARGET = 0.8
+# When the candidate volume AT the recall target exceeds this fraction
+# of the exact pair space, blocking is bookkeeping without savings —
+# the policy dispatches the exact screen instead.
+SEMANTIC_EXACT_CUTOVER = 0.5
+# Cosine numerator of a corpus vector (v) and a suite vector (sv).
+_SV_DOT = H.dot("v", "sv", "spark")
 
 
-def _semantic_verdict_rollup(scored: DataFrame) -> DataFrame:
-    """(vec_id, n_hits, max_cosine, contaminated) from per-candidate
-    cosine rows — the one roll-up every semantic screen variant shares
-    (single-probe, cell-multiprobe, suite-top-k, exact), so the verdict
-    semantics can't drift between probe schedules."""
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.coalesce(F.max("cosine"), F.lit(_NO_CANDIDATE))
-             .alias("max_cosine"),
-             F.sum(F.when(
-                 F.col("cosine") >= SEMANTIC_COSINE_THRESHOLD,
-                 1).otherwise(0)).cast("long").alias("n_hits"))
-        .select(
-            "vec_id",
-            "n_hits",
-            "max_cosine",
-            (F.col("n_hits") >= 1).alias("contaminated"),
-        )
-        .orderBy("vec_id")
-    )
+def _is_new(col: str) -> F.Column:
+    """The family's ingest / new-release convention on an id column:
+    ``col % INCREMENTAL_MOD >= INCREMENTAL_NEW``."""
+    return (F.col(col) % INCREMENTAL_MOD) >= INCREMENTAL_NEW
 
 
 def _suite_flagged_embeddings(spark: SparkSession,
@@ -4902,155 +4912,111 @@ def _suite_flagged_embeddings(spark: SparkSession,
     return _bench_split(_normed_embeddings(spark, sf_dir), "vec_id")
 
 
+def semantic_verdicts(corpus: DataFrame, suite: DataFrame,
+                      on: "F.Column | list | None",
+                      distinct: bool = False,
+                      ingest_pred: "F.Column | None" = None) -> DataFrame:
+    """The one verdict body of every semantic screen schedule and form:
+    corpus vectors (vec_id, v, nrm, ...) LEFT-joined to the broadcast
+    suite side (sv, snrm, ...) on the schedule's candidate condition,
+    the exact cosine of every candidate, one roll-up per corpus vector
+    — n_hits (suite vectors at cosine >= SEMANTIC_COSINE_THRESHOLD),
+    max_cosine (the score flagged vectors rank by; _NO_CANDIDATE when no
+    suite vector is a candidate), contaminated = n_hits >= 1.
+
+    The LEFT join keeps a candidate-less corpus vector as one
+    null-cosine row, so the roll-up needs no second join back to the
+    corpus. ``on`` = None makes every suite vector a candidate (the
+    exact schedule); LEFT rather than cross, an EMPTY suite keeps every
+    corpus row (0 hits, _NO_CANDIDATE), as the oracle's LEFT JOIN does.
+    A keyed join guards the cosine against the null suite row; the
+    unkeyed one leaves it to null arithmetic (same value).
+
+    ``distinct``: a schedule whose join can meet one suite vector more
+    than once (LSH: a pair matching several bands scores identically
+    each time) counts DISTINCT s_vec, so its suite side carries s_vec;
+    the others count rows.
+
+    ``ingest_pred`` switches on the SUITE-REFRESH output (the
+    _sig56_screen_frame convention): a benchmark release adds suite
+    members after the corpus snapshot, and hits split by whether the
+    matched suite vector is a NEW-RELEASE member — s_vec's release
+    convention for a distinct schedule, the suite side's s_is_new
+    column otherwise. Membership is disjoint, so n_hits decomposes
+    exactly as persisted-old + n_hits_new_suite and every row equals
+    the batch screen's row plus (phase, n_hits_new_suite); each row
+    gains its growth-event phase (ingest when ``ingest_pred``, else
+    backfill). In a deployment the backfill rows only re-screen the
+    standing corpus against the new members, with prior-suite counts
+    the persisted per-entity artifact — recomputed here as the
+    deterministic stand-in, so both phases share one plan."""
+    cosine = F.expr(_SV_DOT) / (F.col("nrm") * F.col("snrm"))
+    if on is None:
+        on = F.lit(True)
+    else:
+        cosine = F.when(F.col("snrm").isNotNull(), cosine)
+    keep = (["s_vec"] if distinct
+            else ["s_is_new"] if ingest_pred is not None else [])
+    scored = (corpus.join(F.broadcast(suite), on, "left")
+              .select("vec_id", *keep, cosine.alias("cosine")))
+    hit = F.col("cosine") >= SEMANTIC_COSINE_THRESHOLD
+    if distinct:
+        def count(pred):
+            return F.countDistinct(F.when(pred, F.col("s_vec")))
+        s_new = _is_new("s_vec")
+    else:
+        def count(pred):
+            return F.sum(F.when(pred, 1).otherwise(0))
+        s_new = F.col("s_is_new")
+    counts = [count(hit).cast("long").alias("n_hits")]
+    cols: list = ["vec_id", "n_hits"]
+    if ingest_pred is not None:
+        counts.append(count(hit & s_new).cast("long")
+                      .alias("n_hits_new_suite"))
+        cols = ["vec_id",
+                F.when(ingest_pred, F.lit("ingest"))
+                .otherwise(F.lit("backfill")).alias("phase"),
+                "n_hits", "n_hits_new_suite"]
+    max_cos = (F.coalesce(F.max("cosine"), F.lit(_NO_CANDIDATE))
+               .alias("max_cosine"))
+    # aggregate order as each schedule's plan has it
+    aggs = [*counts, max_cos] if distinct else [max_cos, *counts]
+    return (
+        scored.groupBy("vec_id")
+        .agg(*aggs)
+        .select(*cols, "max_cosine",
+                (F.col("n_hits") >= 1).alias("contaminated"))
+        .orderBy("vec_id")
+    )
+
+
 def semantic_screen_frame(n: DataFrame,
                           incoming_only: bool = False,
                           suite: "DataFrame | None" = None) -> DataFrame:
-    """Screen corpus embeddings against suite embeddings — the shared
-    join body of decontaminate_embedding (full corpus), its incremental
-    form (incoming batch only), and the recall-targeted multi-assigned
-    screen (which passes ``suite`` = _suite_probe_expansion output so
-    the scoring/roll-up body stays ONE code path across all probe
-    schedules); also the frame-level seam the paraphrase-exclusion
-    pytest drives directly.
-
-    Input: (vec_id, label, v, nrm, is_suite); ``suite`` optionally
-    overrides the broadcast side with pre-expanded (s_label, sv, snrm)
-    rows (multi-assignment changes WHERE a suite vector is visible, not
-    how it scores). Output per corpus (non-suite) vector: n_hits =
-    suite embeddings visible in its coarse cell with cosine >=
-    SEMANTIC_COSINE_THRESHOLD, max_cosine (the score a reviewer ranks
-    by; _NO_CANDIDATE when no suite vector shares the cell),
-    contaminated = n_hits >= 1.
-
-    Scale shape: the suite side is an eval benchmark — thousands of
-    rows in a deployment (the ~5% hash sample is the self-contained
-    test-data stand-in, same convention as the lexical screens) — so
-    it broadcasts; the corpus side streams once through an equi-join
-    on the coarse cell (label = IVF cell, the blocking the whole
-    embedding family shares). No pair space, no self-join: cost is one
-    corpus scan regardless of corpus size, exactly the
-    decontaminate_ngram_overlap shape transplanted to the semantic
-    side. If the suite ever outgrows broadcast, the salted (label,
-    salt) equi-join dedup_embedding_cosine uses applies unchanged.
-
-    Recall caveat (inherent to IVF-style blocking, documented on the
-    ANN family too): a paraphrase quantized into a DIFFERENT cell than
-    its suite source escapes this screen; raising recall is a
-    multi-cell probe of the same join, not a different operator."""
-    # fan_out (r15): the corpus side of every semantic screen is a
-    # single-split scan at test SFs (one parquet row group), so the
-    # dot-product stage ran on one core; spreading it is a no-op at
-    # scale (guide §2/§6). Measured per schedule: the EXPANDED-suite
-    # paths (recallk's k x |suite| broadcast) win 2.0 -> 0.86 s, while
-    # the single-cell screen's per-row dot volume is too small to pay
-    # for the exchange (0.57 -> 0.62 s) — so the fan applies only to
-    # the expanded path, on measurement.
+    """The cell-keyed screens over an is_suite-flagged frame
+    (vec_id, label, v, nrm, is_suite) — the seam the streaming twins
+    and the paraphrase-exclusion tests drive: by default the suite's
+    own cell (the cell schedule); ``suite`` overrides the broadcast
+    side with pre-expanded (s_label, sv, snrm) rows (the suite-top-k
+    schedule: multi-assignment changes WHERE a suite vector is visible,
+    not how it scores), and fans the corpus out like that schedule.
+    ``incoming_only`` screens the incoming batch only."""
     corpus = n.filter(~F.col("is_suite"))
     if suite is None:
-        suite = (n.filter("is_suite")
-                 .select(F.col("label").alias("s_label"),
-                         F.col("v").alias("sv"),
-                         F.col("nrm").alias("snrm")))
+        suite = _cell_suite(n.filter("is_suite"))
     else:
         corpus = fan_out(corpus)
     if incoming_only:
-        corpus = corpus.filter(
-            (F.col("vec_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW)
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    # LEFT broadcast join so no-candidate vectors survive as one
-    # null-cosine row: the per-doc roll-up then needs no second join
-    # back to the corpus (one aggregate exchange instead of an extra
-    # corpus-wide outer SortMergeJoin — the strip-spans lesson).
-    scored = (
-        corpus.join(F.broadcast(suite),
-                    F.col("label") == F.col("s_label"), "left")
-        .select("vec_id",
-                F.when(F.col("snrm").isNotNull(),
-                       F.expr(dot) / (F.col("nrm") * F.col("snrm")))
-                .alias("cosine"))
-    )
-    return _semantic_verdict_rollup(scored)
+        corpus = corpus.filter(_is_new("vec_id"))
+    return semantic_verdicts(corpus, suite,
+                             F.col("label") == F.col("s_label"))
 
 
-def decontaminate_embedding(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """Semantic test-set decontamination: flag corpus entities whose
-    EMBEDDING is close to a held-out benchmark embedding. The lexical
-    screens (decontaminate_ngram_overlap / _multi_suite / strip_spans)
-    are exact-surface-form by construction — an eval document that was
-    paraphrased or re-tokenized shares no 3-gram and sails through all
-    of them; in embedding space the paraphrase stays near its source,
-    which is what this screen keys on (the standard embedding-similarity
-    decontamination pass run alongside the n-gram one for LLM training
-    sets). The two screens share the benchmark membership function, so
-    a training pipeline unions their contaminated sets per entity."""
-    return semantic_screen_frame(_suite_flagged_embeddings(spark, sf_dir))
-
-
-def _semantic_oracle(incoming_only: bool) -> str:
-    inc = (f"AND c.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW} "
-           if incoming_only else "")
-    return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-scored AS (
-  SELECT c.vec_id,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM n c JOIN n s ON c.label = s.label
-   AND s.is_suite AND NOT c.is_suite {inc}),
-hits AS (
-  SELECT vec_id, MAX(cosine) AS max_cosine,
-         CAST(SUM(CASE WHEN cosine >= {SEMANTIC_COSINE_THRESHOLD}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-  FROM scored GROUP BY vec_id)
-SELECT c.vec_id,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       COALESCE(h.max_cosine, CAST({_NO_CANDIDATE} AS DOUBLE))
-         AS max_cosine,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM n c LEFT JOIN hits h ON h.vec_id = c.vec_id
-WHERE NOT c.is_suite {inc}
-ORDER BY c.vec_id
-"""
-
-
-QUERIES["decontaminate_embedding"] = decontaminate_embedding
-ORACLES["decontaminate_embedding"] = _semantic_oracle(False)
-
-
-def decontaminate_embedding_incremental(spark: SparkSession,
-                                        sf_dir: str) -> DataFrame:
-    """Delta-ingest form of the semantic screen: only the incoming
-    batch (vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}, the
-    convention every incremental operator here shares) is screened
-    against the suite. The suite is a FIXED artifact — eval benchmarks
-    change by explicit release, not by corpus ingest — so unlike
-    incremental dedup there is no incoming-x-incoming term: per-ingest
-    cost is O(batch), the already-screened corpus is never rescanned,
-    and the incoming rows' output is row-identical to the batch
-    screen's rows for those ids (the path-equivalence pytest pins it).
-    A suite REFRESH is the other growth event, and it is the backfill
-    branch of decontaminate_multi_suite_incremental transplanted here
-    unchanged — new-suite-only members against the full corpus."""
-    return semantic_screen_frame(
-        _suite_flagged_embeddings(spark, sf_dir), incoming_only=True)
-
-
-QUERIES["decontaminate_embedding_incremental"] = \
-    decontaminate_embedding_incremental
-ORACLES["decontaminate_embedding_incremental"] = _semantic_oracle(True)
+def _cell_suite(suite: DataFrame) -> DataFrame:
+    """(s_label, sv, snrm): suite vectors under their own cell."""
+    return suite.select(F.col("label").alias("s_label"),
+                        F.col("v").alias("sv"),
+                        F.col("nrm").alias("snrm"))
 
 
 def _cell_probe_map(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5070,9 +5036,7 @@ def _cell_probe_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cell_a") != F.col("cell_b"))
         .selectExpr(
             "cell_a", "cell_b",
-            "aggregate(zip_with(ca, cb, (x, y) -> x * y),"
-            " CAST(0 AS DOUBLE), (acc, x) -> acc + x) / (na * nb)"
-            " AS centroid_cosine"))
+            f"{H.dot('ca', 'cb', 'spark')} / (na * nb) AS centroid_cosine"))
     w = Window.partitionBy("cell_a").orderBy(
         F.desc("centroid_cosine"), F.asc("cell_b"))
     nearest = (sims.withColumn("rk", F.row_number().over(w))
@@ -5080,43 +5044,6 @@ def _cell_probe_map(spark: SparkSession, sf_dir: str) -> DataFrame:
                .selectExpr("cell_a AS label", "cell_b AS probe_label"))
     own = cents.selectExpr("label", "label AS probe_label")
     return own.unionByName(nearest)
-
-
-def decontaminate_embedding_multiprobe(spark: SparkSession,
-                                       sf_dir: str) -> DataFrame:
-    """The recall remedy for the cell-blocked semantic screen's
-    documented caveat (a paraphrase quantized into a DIFFERENT cell
-    than its suite source escapes decontaminate_embedding): probe each
-    corpus vector's own cell AND its most-confusable neighbor cell —
-    exactly where ivf_cell_similarity_matrix says single-probe recall
-    leaks, and the same own+nearest schedule ann_lsh_multiprobe uses on
-    the LSH side. Output schema is decontaminate_embedding's, so a
-    pipeline swaps the screen without touching its consumers;
-    semantic_screen_recall_audit prices what the extra probe buys.
-
-    Scale shape: the probe map is n_cells^2 centroid math (corpus-size
-    independent, memoized centroids); the corpus side fans out 2x
-    before the SAME broadcast suite join — still one corpus scan, no
-    pair space."""
-    n = _suite_flagged_embeddings(spark, sf_dir)
-    probes = _cell_probe_map(spark, sf_dir)
-    suite = (n.filter("is_suite")
-             .select(F.col("label").alias("s_label"),
-                     F.col("v").alias("sv"),
-                     F.col("nrm").alias("snrm")))
-    corpus = (n.filter(~F.col("is_suite"))
-              .join(F.broadcast(probes), "label"))
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    scored = (
-        corpus.join(F.broadcast(suite),
-                    F.col("probe_label") == F.col("s_label"), "left")
-        .select("vec_id",
-                F.when(F.col("snrm").isNotNull(),
-                       F.expr(dot) / (F.col("nrm") * F.col("snrm")))
-                .alias("cosine"))
-    )
-    return _semantic_verdict_rollup(scored)
 
 
 def _centroid_core_ctes() -> str:
@@ -5150,17 +5077,14 @@ cn AS (
   FROM cents)"""
 
 
-def _centroid_probe_ctes() -> str:
-    """DuckDB CTE block: full-corpus cell centroids -> directed
-    confusability -> (label, probe_label) own+nearest map. Mirrors
-    similarity.IVF_CELL_SIMILARITY_SQL's split-integer mean so the
-    centroids are bit-identical to the Spark side's."""
-    return f"""{_centroid_core_ctes()},
-sims AS (
+def _probe_map_ctes() -> str:
+    """DuckDB CTE block ``sims/nearest/probe_map``: directed cell
+    confusability -> the (label, probe_label) own+nearest map, the
+    oracle twin of _cell_probe_map; requires the _centroid_core_ctes
+    block."""
+    return f"""sims AS (
   SELECT a.label AS cell_a, b.label AS cell_b,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(a.c) + 1), i -> a.c[i] * b.c[i])),
-             (acc, x) -> acc + x) / (a.nrm * b.nrm) AS centroid_cosine
+         {H.dot('a.c', 'b.c', 'duck')} / (a.nrm * b.nrm) AS centroid_cosine
   FROM cn a JOIN cn b ON a.label != b.label),
 nearest AS (
   SELECT cell_a AS label, cell_b AS probe_label FROM (
@@ -5174,72 +5098,6 @@ probe_map AS (
   UNION ALL SELECT label, probe_label FROM nearest)"""
 
 
-def _semantic_multiprobe_oracle() -> str:
-    return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_centroid_probe_ctes()},
-scored AS (
-  SELECT c.vec_id,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM n c
-  JOIN probe_map p ON p.label = c.label
-  JOIN n s ON s.label = p.probe_label AND s.is_suite
-  WHERE NOT c.is_suite),
-hits AS (
-  SELECT vec_id, MAX(cosine) AS max_cosine,
-         CAST(SUM(CASE WHEN cosine >= {SEMANTIC_COSINE_THRESHOLD}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-  FROM scored GROUP BY vec_id)
-SELECT c.vec_id,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       COALESCE(h.max_cosine, CAST({_NO_CANDIDATE} AS DOUBLE))
-         AS max_cosine,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM n c LEFT JOIN hits h ON h.vec_id = c.vec_id
-WHERE NOT c.is_suite
-ORDER BY c.vec_id
-"""
-
-
-QUERIES["decontaminate_embedding_multiprobe"] = \
-    decontaminate_embedding_multiprobe
-ORACLES["decontaminate_embedding_multiprobe"] = \
-    _semantic_multiprobe_oracle()
-
-
-# Probe budget for the recall-targeted screen: suite vectors are multi-
-# assigned to their SEMANTIC_PROBE_K most-plausible cells. Chosen one
-# step above the measured recall wall (semantic_probe_recall_sweep:
-# k=7 is the smallest k meeting the target at both driver SFs — 0.869
-# at sf0.01, 0.826 at sf0.1 — so k=8 carries margin: 0.905 / 0.883),
-# the same one-step-before-the-wall convention as the band blocking
-# actuator. k is an ABSOLUTE probe count, not a cell fraction: this
-# 10-cell test corpus pays 8/10 of the exact candidate volume, but a
-# 100 TB deployment's quantizer has ~sqrt(N) cells, where 8 probes are
-# a vanishing fraction — semantic_screen_policy prices which regime a
-# corpus is in and dispatches accordingly.
-SEMANTIC_PROBE_K = 8
-# Audited-recall floor a deployable decontamination screen must meet
-# (VERDICT r11: a screen missing more is not a screen).
-SEMANTIC_RECALL_TARGET = 0.8
-# When the candidate volume AT the recall target exceeds this fraction
-# of the exact pair space, blocking is bookkeeping without savings —
-# the policy dispatches the exact screen instead.
-SEMANTIC_EXACT_CUTOVER = 0.5
-
-
 def _suite_cell_ranks(suite: DataFrame, cents: DataFrame) -> DataFrame:
     """(s_vec, sv, snrm, s_label, rk): every suite vector against every
     coarse cell, ranked by centroid cosine (desc, cell id asc tie-break)
@@ -5248,8 +5106,7 @@ def _suite_cell_ranks(suite: DataFrame, cents: DataFrame) -> DataFrame:
     sides are small (an eval benchmark x the quantizer), so this is
     broadcast-side math — the corpus never sees it until the final
     equi-join on its own single cell."""
-    cdot = ("aggregate(zip_with(sv, c, (x, y) -> x * y), "
-            "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
+    cdot = H.dot("sv", "c", "spark")
     scored = (
         suite.select(F.col("vec_id").alias("s_vec"),
                      F.col("v").alias("sv"),
@@ -5272,13 +5129,13 @@ def _suite_probe_expansion(suite: DataFrame, cents: DataFrame,
     to their top-k cells (k=None -> every cell, i.e. the exact screen).
     This moves the multiprobe fan-out OFF the corpus and ONTO the
     broadcast side — the corpus keeps its single-cell equi-join with
-    zero extra per-row work (vs decontaminate_embedding_multiprobe's
-    corpus-side 2x fan-out), which is the side you can afford to
-    replicate at 100 TB. ``keep_id`` retains the suite vector id
-    (s_vec) for the ATTRIBUTION consumers (suite_leakage_report,
-    suite_self_dedup_report) — one definition of the probe schedule
-    for screens and reports alike, so a schedule change can't leave
-    the reports scoring under the old one."""
+    zero extra per-row work (vs the multiprobe schedule's corpus-side
+    2x fan-out), which is the side you can afford to replicate at
+    100 TB. ``keep_id`` retains the suite vector id (s_vec) for the
+    suite-refresh form and the ATTRIBUTION consumers
+    (suite_leakage_report, suite_self_dedup_report) — one definition of
+    the probe schedule for screens and reports alike, so a schedule
+    change can't leave the reports scoring under the old one."""
     ranks = _suite_cell_ranks(suite, cents)
     if k is not None:
         ranks = ranks.filter(F.col("rk") <= k)
@@ -5286,469 +5143,32 @@ def _suite_probe_expansion(suite: DataFrame, cents: DataFrame,
     return ranks.select(*cols)
 
 
-def decontaminate_embedding_recallk(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-    """The deployable semantic decontamination screen (VERDICT r11
-    lead): decontaminate_embedding's cell blocking audited at 13%
-    recall — the paraphrases the screen exists to catch sit barely
-    inside the cosine threshold, so they land in a DIFFERENT cell than
-    their suite source ~9 times in 10. This form multi-assigns each
-    SUITE vector to its SEMANTIC_PROBE_K most-plausible cells (rank by
-    centroid cosine — classic IVF multi-probe applied to the query
-    side) so a corpus vector anywhere in those cells sees it. Audited
-    recall 0.905 (sf0.01) / 0.883 (sf0.1) >= SEMANTIC_RECALL_TARGET;
-    semantic_probe_recall_sweep shows the whole probes-vs-recall
-    frontier and semantic_screen_policy picks the schedule per corpus.
-
-    Scale shape: the fan-out is k x |suite| BROADCAST rows (an eval
-    benchmark is thousands of vectors; the corpus side is untouched) —
-    one corpus scan, single-cell equi-join, no pair space; candidate
-    volume O(corpus x k x |suite| / n_cells). Output schema and verdict
-    semantics are decontaminate_embedding's (shared
-    _semantic_verdict_rollup), so consumers swap screens without
-    change."""
-    from qucosa_fcrepo_reportingdb_spark.operators.similarity import (
-        _full_centroid_arrays,
-    )
-    n = _suite_flagged_embeddings(spark, sf_dir)
-    cents = _full_centroid_arrays(spark, sf_dir)
-    exp = _suite_probe_expansion(
-        n.filter("is_suite"), cents, SEMANTIC_PROBE_K)
-    return semantic_screen_frame(n, suite=exp)
-
-
-def decontaminate_embedding_recallk_incremental(
-        spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-ingest form of the recall-targeted screen: only the
-    incoming batch is screened, against the SAME multi-assigned suite
-    artifact (which is fixed per benchmark release — the expansion is
-    computed once per suite x quantizer, not per ingest). Per-ingest
-    cost O(batch); row-identical to the batch screen for incoming ids
-    (path-equivalence pytest)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.similarity import (
-        _full_centroid_arrays,
-    )
-    n = _suite_flagged_embeddings(spark, sf_dir)
-    cents = _full_centroid_arrays(spark, sf_dir)
-    exp = _suite_probe_expansion(
-        n.filter("is_suite"), cents, SEMANTIC_PROBE_K)
-    return semantic_screen_frame(n, incoming_only=True, suite=exp)
-
-
-def decontaminate_embedding_exact(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """The unblocked semantic screen as a first-class deployment
-    artifact (not just the recall audit's internal baseline): every
-    corpus vector against every suite vector — recall 1.0 by
-    construction. This is the schedule semantic_screen_policy
-    dispatches when the corpus sits in the regime this testdata
-    demonstrates (matches barely above threshold -> candidate volume
-    at the recall target approaches the exact pair space, so blocking
-    is bookkeeping without savings). Still one corpus scan with a
-    broadcast suite — O(corpus x |suite|) dot products, embarrassingly
-    parallel, no shuffle beyond the verdict roll-up; what it gives up
-    is only the k/n_cells candidate discount."""
-    n = _suite_flagged_embeddings(spark, sf_dir)
-    return _semantic_exact_screen(n, incoming_only=False)
-
-
-def decontaminate_embedding_exact_incremental(
-        spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-ingest form of the exact screen: incoming batch x full
-    suite, O(batch x |suite|) — the policy's exact_screen action keeps
-    the same two-form deployment story as every other screen."""
-    n = _suite_flagged_embeddings(spark, sf_dir)
-    return _semantic_exact_screen(n, incoming_only=True)
-
-
-def _semantic_exact_screen(n: DataFrame, incoming_only: bool) -> DataFrame:
-    """Shared body of the exact screens: broadcast LEFT join on a true
-    condition (no cell blocking) + the family verdict roll-up.
-
-    LEFT (not cross) so an EMPTY suite keeps every corpus row — one
-    all-NULL match whose cosine is NULL, which the roll-up already
-    folds to (n_hits=0, max_cosine=_NO_CANDIDATE, contaminated=false),
-    exactly the oracle's LEFT JOIN (ADVICE r14: the cross join silently
-    dropped the whole corpus on an empty suite while the oracle kept
-    it). With a non-empty suite the row stream is identical to the
-    cross join — every corpus row matches all suite rows — and the
-    physical plan is the same broadcast nested-loop."""
-    suite = (n.filter("is_suite")
-             .select(F.col("v").alias("sv"), F.col("nrm").alias("snrm")))
-    # fan_out (r15): see semantic_screen_frame — the O(corpus x suite)
-    # dot stage ran on the 1-split scan's single task at test SFs.
-    corpus = fan_out(n.filter(~F.col("is_suite")))
-    if incoming_only:
-        corpus = corpus.filter(
-            (F.col("vec_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW)
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    scored = (corpus.join(F.broadcast(suite), F.lit(True), "left")
-              .select("vec_id",
-                      (F.expr(dot) / (F.col("nrm") * F.col("snrm")))
-                      .alias("cosine")))
-    return _semantic_verdict_rollup(scored)
-
-
-def _sprobe_cte(k: "int | None") -> str:
-    """DuckDB CTE ``sprobe`` (suite vec_id -> its probed cells), the
-    oracle twin of _suite_probe_expansion; requires the
-    _centroid_core_ctes block and an ``n`` CTE in scope."""
-    cdot = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-            "list_transform(range(1, len(s.v) + 1), "
-            "i -> s.v[i] * cc.c[i])), (acc, x) -> acc + x)"
-            " / (s.nrm * cc.nrm)")
-    where = f"WHERE rk <= {k}" if k is not None else ""
-    return f"""sprobe AS (
-  SELECT vec_id, probe_label FROM (
-    SELECT s.vec_id, cc.label AS probe_label,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id
-                              ORDER BY {cdot} DESC, cc.label) AS rk
-    FROM n s CROSS JOIN cn cc WHERE s.is_suite) t
-  {where})"""
-
-
-def _semantic_recallk_oracle(incoming_only: bool) -> str:
-    inc = (f"AND c.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW} "
-           if incoming_only else "")
-    return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_centroid_core_ctes()},
-{_sprobe_cte(SEMANTIC_PROBE_K)},
-scored AS (
-  SELECT c.vec_id,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM n c
-  JOIN sprobe p ON p.probe_label = c.label
-  JOIN n s ON s.vec_id = p.vec_id AND s.is_suite
-  WHERE NOT c.is_suite {inc}),
-hits AS (
-  SELECT vec_id, MAX(cosine) AS max_cosine,
-         CAST(SUM(CASE WHEN cosine >= {SEMANTIC_COSINE_THRESHOLD}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-  FROM scored GROUP BY vec_id)
-SELECT c.vec_id,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       COALESCE(h.max_cosine, CAST({_NO_CANDIDATE} AS DOUBLE))
-         AS max_cosine,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM n c LEFT JOIN hits h ON h.vec_id = c.vec_id
-WHERE NOT c.is_suite {inc}
-ORDER BY c.vec_id
-"""
-
-
-def _semantic_exact_oracle(incoming_only: bool) -> str:
-    inc = (f"AND c.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW} "
-           if incoming_only else "")
-    return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-scored AS (
-  SELECT c.vec_id,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM n c JOIN n s ON s.is_suite
-  WHERE NOT c.is_suite {inc}),
-hits AS (
-  SELECT vec_id, MAX(cosine) AS max_cosine,
-         CAST(SUM(CASE WHEN cosine >= {SEMANTIC_COSINE_THRESHOLD}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-  FROM scored GROUP BY vec_id)
-SELECT c.vec_id,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       COALESCE(h.max_cosine, CAST({_NO_CANDIDATE} AS DOUBLE))
-         AS max_cosine,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM n c LEFT JOIN hits h ON h.vec_id = c.vec_id
-WHERE NOT c.is_suite {inc}
-ORDER BY c.vec_id
-"""
-
-
-QUERIES["decontaminate_embedding_recallk"] = decontaminate_embedding_recallk
-ORACLES["decontaminate_embedding_recallk"] = _semantic_recallk_oracle(False)
-QUERIES["decontaminate_embedding_recallk_incremental"] = \
-    decontaminate_embedding_recallk_incremental
-ORACLES["decontaminate_embedding_recallk_incremental"] = \
-    _semantic_recallk_oracle(True)
-QUERIES["decontaminate_embedding_exact"] = decontaminate_embedding_exact
-ORACLES["decontaminate_embedding_exact"] = _semantic_exact_oracle(False)
-QUERIES["decontaminate_embedding_exact_incremental"] = \
-    decontaminate_embedding_exact_incremental
-ORACLES["decontaminate_embedding_exact_incremental"] = \
-    _semantic_exact_oracle(True)
-
-
-def decontaminate_embedding_suite_refresh(spark: SparkSession,
-                                          sf_dir: str) -> DataFrame:
-    """The single-suite semantic screen's SECOND growth event (VERDICT
-    r11 item 6): a benchmark RELEASE adds suite members after the
-    corpus snapshot. decontaminate_embedding_recallk_incremental covers
-    ingest (incoming corpus x full suite); this form covers both events
-    in one phase-labeled output, the decontaminate_embedding_multisuite
-    _incremental pattern without requiring the multi-suite operator:
-    ingest rows are the incoming batch against the full suite, backfill
-    rows are the EXISTING corpus re-screened — in a deployment only
-    against the new-release members (suite vec_id %
-    {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}, the family's deterministic
-    stand-in), with prior-suite counts the persisted per-entity
-    artifact, recomputed here so both phases share one plan. The
-    split is exact: n_hits decomposes as persisted-old + n_hits_new
-    (suite membership is disjoint), so every row equals the batch
-    recallk screen's row plus (phase, n_hits_new_suite) — the
-    path-equivalence pytest pins it, and a deployment's backfill bill
-    is O(corpus x |new members| x k / n_cells), never a full
-    re-screen.
-
-    Runs the deployable suite-top-k schedule (the fixed expansion
-    artifact simply gains the new members' rows — suite-sized math, no
-    corpus work)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.similarity import (
-        _full_centroid_arrays,
-    )
-    n = _suite_flagged_embeddings(spark, sf_dir)
-    cents = _full_centroid_arrays(spark, sf_dir)
-    suite = n.filter("is_suite")
-    exp = (_suite_probe_expansion(suite, cents, SEMANTIC_PROBE_K,
-                                  keep_id=True)
-           .withColumn("s_is_new",
-                       (F.col("s_vec") % INCREMENTAL_MOD)
-                       >= INCREMENTAL_NEW)
-           .select("s_label", "sv", "snrm", "s_is_new"))
-    # fan_out (r15): see semantic_screen_frame.
-    corpus = fan_out(n.filter(~F.col("is_suite")))
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    scored = (
-        corpus.join(F.broadcast(exp),
-                    F.col("label") == F.col("s_label"), "left")
-        .select("vec_id", "s_is_new",
-                F.when(F.col("snrm").isNotNull(),
-                       F.expr(dot) / (F.col("nrm") * F.col("snrm")))
-                .alias("cosine")))
-    hit = F.col("cosine") >= SEMANTIC_COSINE_THRESHOLD
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.coalesce(F.max("cosine"), F.lit(_NO_CANDIDATE))
-             .alias("max_cosine"),
-             F.sum(F.when(hit, 1).otherwise(0))
-             .cast("long").alias("n_hits"),
-             F.sum(F.when(hit & F.col("s_is_new"), 1).otherwise(0))
-             .cast("long").alias("n_hits_new_suite"))
-        .selectExpr(
-            "vec_id",
-            f"CASE WHEN vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}"
-            " THEN 'ingest' ELSE 'backfill' END AS phase",
-            "n_hits",
-            "n_hits_new_suite",
-            "max_cosine",
-            "n_hits >= 1 AS contaminated")
-        .orderBy("vec_id")
-    )
-
-
-SEMANTIC_SUITE_REFRESH_SQL = f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_centroid_core_ctes()},
-{_sprobe_cte(SEMANTIC_PROBE_K)},
-scored AS (
-  SELECT c.vec_id,
-         s.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW} AS s_is_new,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM n c
-  JOIN sprobe p ON p.probe_label = c.label
-  JOIN n s ON s.vec_id = p.vec_id AND s.is_suite
-  WHERE NOT c.is_suite),
-hits AS (
-  SELECT vec_id, MAX(cosine) AS max_cosine,
-         CAST(SUM(CASE WHEN cosine >= {SEMANTIC_COSINE_THRESHOLD}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         CAST(SUM(CASE WHEN cosine >= {SEMANTIC_COSINE_THRESHOLD}
-                       AND s_is_new THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_hits_new_suite
-  FROM scored GROUP BY vec_id)
-SELECT c.vec_id,
-       CASE WHEN c.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}
-            THEN 'ingest' ELSE 'backfill' END AS phase,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(COALESCE(h.n_hits_new_suite, 0) AS BIGINT)
-         AS n_hits_new_suite,
-       COALESCE(h.max_cosine, CAST({_NO_CANDIDATE} AS DOUBLE))
-         AS max_cosine,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM n c LEFT JOIN hits h ON h.vec_id = c.vec_id
-WHERE NOT c.is_suite
-ORDER BY c.vec_id
-"""
-
-
-QUERIES["decontaminate_embedding_suite_refresh"] = \
-    decontaminate_embedding_suite_refresh
-ORACLES["decontaminate_embedding_suite_refresh"] = \
-    SEMANTIC_SUITE_REFRESH_SQL
-
-
-def decontaminate_embedding_exact_suite_refresh(
-        spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The EXACT schedule's suite-refresh form (VERDICT r13 item 4's
-    sweep): the one semantic schedule still missing its release event
-    — the suite-top-k refresh is decontaminate_embedding_suite_refresh
-    and the angle-keyed one shipped in r13, but a deployment
-    semantic_screen_policy dispatches to exact_screen (the
-    cells-carry-no-signal regime before r13's LSH option, and still
-    the choice where candidate volume at the recall target approaches
-    the pair space) had no priced release path. Same phase-labeled
-    decomposition as the family: ingest rows are the incoming corpus
-    batch against the full suite; backfill rows are the standing
-    corpus, whose deployment bill is only O(corpus x |new members|)
-    exact dots (prior-suite counts are the persisted per-entity
-    artifact — recomputed here as the deterministic stand-in so both
-    phases share one plan); n_hits decomposes exactly as
-    persisted-old + n_hits_new_suite, so every row equals the batch
-    exact screen's row plus (phase, n_hits_new_suite) — the
-    path-equivalence pytest pins it. Recall stays 1.0 by construction
-    through the release, which is the point of dispatching exact.
-
-    Scale shape: one corpus scan, broadcast suite, verdict roll-up —
-    the exact screen's plan with one extra boolean per suite row; the
-    rescore is the family zip_with fold (the faster form at
-    rescore-dominant scale — SCALING.md round-14)."""
-    n = _suite_flagged_embeddings(spark, sf_dir)
-    suite = (n.filter("is_suite")
-             .select(F.col("v").alias("sv"),
-                     F.col("nrm").alias("snrm"),
-                     ((F.col("vec_id") % INCREMENTAL_MOD)
-                      >= INCREMENTAL_NEW).alias("s_is_new")))
-    # fan_out (r15): see semantic_screen_frame.
-    corpus = fan_out(n.filter(~F.col("is_suite")))
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    # broadcast LEFT join on true, not crossJoin: an empty suite keeps
-    # every corpus row (NULL cosine/s_is_new -> 0 hits, _NO_CANDIDATE),
-    # matching the oracle's LEFT JOIN — see _semantic_exact_screen
-    # (ADVICE r14). Identical row stream and physical plan otherwise.
-    scored = (corpus.join(F.broadcast(suite), F.lit(True), "left")
-              .select("vec_id", "s_is_new",
-                      (F.expr(dot) / (F.col("nrm") * F.col("snrm")))
-                      .alias("cosine")))
-    hit = F.col("cosine") >= SEMANTIC_COSINE_THRESHOLD
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.coalesce(F.max("cosine"), F.lit(_NO_CANDIDATE))
-             .alias("max_cosine"),
-             F.sum(F.when(hit, 1).otherwise(0))
-             .cast("long").alias("n_hits"),
-             F.sum(F.when(hit & F.col("s_is_new"), 1).otherwise(0))
-             .cast("long").alias("n_hits_new_suite"))
-        .selectExpr(
-            "vec_id",
-            f"CASE WHEN vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}"
-            " THEN 'ingest' ELSE 'backfill' END AS phase",
-            "n_hits",
-            "n_hits_new_suite",
-            "max_cosine",
-            "n_hits >= 1 AS contaminated")
-        .orderBy("vec_id")
-    )
-
-
-SEMANTIC_EXACT_SUITE_REFRESH_SQL = f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-scored AS (
-  SELECT c.vec_id,
-         s.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW} AS s_is_new,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM n c JOIN n s ON s.is_suite
-  WHERE NOT c.is_suite),
-hits AS (
-  SELECT vec_id, MAX(cosine) AS max_cosine,
-         CAST(SUM(CASE WHEN cosine >= {SEMANTIC_COSINE_THRESHOLD}
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         CAST(SUM(CASE WHEN cosine >= {SEMANTIC_COSINE_THRESHOLD}
-                       AND s_is_new THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_hits_new_suite
-  FROM scored GROUP BY vec_id)
-SELECT c.vec_id,
-       CASE WHEN c.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}
-            THEN 'ingest' ELSE 'backfill' END AS phase,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(COALESCE(h.n_hits_new_suite, 0) AS BIGINT)
-         AS n_hits_new_suite,
-       COALESCE(h.max_cosine, CAST({_NO_CANDIDATE} AS DOUBLE))
-         AS max_cosine,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM n c LEFT JOIN hits h ON h.vec_id = c.vec_id
-WHERE NOT c.is_suite
-ORDER BY c.vec_id
-"""
-
-
-QUERIES["decontaminate_embedding_exact_suite_refresh"] = \
-    decontaminate_embedding_exact_suite_refresh
-ORACLES["decontaminate_embedding_exact_suite_refresh"] = \
-    SEMANTIC_EXACT_SUITE_REFRESH_SQL
+def _suite_rank_cte() -> str:
+    """DuckDB CTE ``srank`` (s_vec, s_label, rk): every suite vector's
+    cells ranked by centroid cosine, the oracle twin of
+    _suite_cell_ranks; requires the _centroid_core_ctes block and an
+    ``n`` CTE in scope."""
+    cdot = H.dot("s.v", "cc.c", "duck")
+    return f"""srank AS (
+  SELECT s.vec_id AS s_vec, cc.label AS s_label,
+         ROW_NUMBER() OVER (PARTITION BY s.vec_id
+                            ORDER BY {cdot} / (s.nrm * cc.nrm) DESC,
+                                     cc.label) AS rk
+  FROM n s CROSS JOIN cn cc WHERE s.is_suite)"""
 
 
 # ---------------------------------------------------------------------------
-# angle-keyed (hyperplane-LSH banded) semantic screen
+# angle-keyed (hyperplane-LSH banded) signatures
 # ---------------------------------------------------------------------------
-# The third schedule of the semantic screen family (VERDICT r12 item 1):
-# the cell schedules (single-probe / suite-top-k) key on the TRAINED
+# The cell schedules (single-probe / suite-top-k) key on the TRAINED
 # quantizer, whose cells can carry no signal about the cosine threshold
 # (exactly this testdata's regime — semantic_probe_recall_sweep shows a
-# near-linear frontier, and semantic_screen_policy then had only the
-# O(corpus x suite) exact screen to fall back to). Random-hyperplane
-# signatures key on the thresholded quantity ITSELF: the per-bit match
-# probability of a pair is 1 - angle/pi, a pure function of its cosine,
-# so the banded S-curve recall is structural — data-independent — and
-# the schedule stays sub-exact even where the quantizer is blind.
+# near-linear frontier, which leaves only the O(corpus x suite) exact
+# screen). Random-hyperplane signatures key on the thresholded quantity
+# ITSELF: the per-bit match probability of a pair is 1 - angle/pi, a
+# pure function of its cosine, so the banded S-curve recall is
+# structural — data-independent — and the schedule stays sub-exact even
+# where the quantizer is blind.
 #
 # Construction: a POOL of {SEMANTIC_LSH_POOL} signature bits per vector
 # (sign of an exact-integer hyperplane dot), from which
@@ -5929,204 +5349,13 @@ def _lsh_band_frame(signed: DataFrame) -> DataFrame:
 def lsh_screen_frame(corpus_signed: DataFrame,
                      suite_signed: DataFrame,
                      ingest_pred: "F.Column | None" = None) -> DataFrame:
-    """Verdict body of the angle-keyed screen over SIGNED frames — the
-    seam the batch/incremental/suite-refresh forms and the streaming
-    twin share (the semantic_screen_frame role for this schedule):
-    band both sides, broadcast the suite's band rows, LEFT equi-join
-    on (band_id, band_val), rescore matches with the exact cosine, one
-    distinct-aware verdict roll-up (a pair matching several bands
-    scores identically each time; COUNT(DISTINCT) folds the
-    duplicates without a pre-aggregation shuffle).
-
-    ``ingest_pred`` switches on the SUITE-REFRESH output (the
-    _sig56_screen_frame convention): hits split by whether the matched
-    suite vector is a NEW-RELEASE member (the corpus-wide release
-    convention on s_vec — disjoint from the old suite, so n_hits
-    decomposes exactly as persisted-old + n_hits_new_suite), and each
-    row gains its growth-event phase. ONE roll-up for both forms, so
-    the verdict shape can't drift between the screen and its
-    refresh.
-
-    The rescore stays the ``zip_with`` fold ON MEASUREMENT (r14,
-    VERDICT r13 item 3 — both alternatives tried and rejected, full
-    receipts in SCALING.md round-14): (a) the int8/Hamming prefilter
-    is structurally zero — max_cosine is exact over ALL candidates, a
-    sound estimate costs a same-length integer dot, and Hamming on
-    fixed hyperplanes has no sound per-pair cosine bound; (b) the
-    "allocation-free" index fold (aggregate over sequence(1, dim)
-    with element_at) looked 1.27x at sf0.1 but REVERSED at
-    rescore-dominant scale (1.25-1.6x SLOWER at 94M/258M-dot walls,
-    dim 64 and 32) — HOF lambdas are interpreted, so the index fold's
-    deeper per-element tree (two element_at calls per step) costs
-    more than zip_with's single-multiply lambda plus one small array
-    allocation. The sf0.1 wall is compile/overhead-dominated for this
-    screen; trust only candidate-volume-dominant walls for rescore
-    decisions."""
-    suite_b = (_lsh_band_frame(suite_signed)
-               .select(F.col("vec_id").alias("s_vec"),
-                       F.col("v").alias("sv"),
-                       F.col("nrm").alias("snrm"),
-                       "band_id", "band_val"))
-    corpus_b = _lsh_band_frame(corpus_signed)
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    scored = (
-        corpus_b.join(F.broadcast(suite_b), ["band_id", "band_val"],
-                      "left")
-        .select("vec_id", "s_vec",
-                F.when(F.col("snrm").isNotNull(),
-                       F.expr(dot) / (F.col("nrm") * F.col("snrm")))
-                .alias("cosine"))
-    )
-    hit = F.col("cosine") >= SEMANTIC_COSINE_THRESHOLD
-    aggs = [F.countDistinct(F.when(hit, F.col("s_vec")))
-            .cast("long").alias("n_hits")]
-    cols: list = ["vec_id", "n_hits"]
-    if ingest_pred is not None:
-        s_new = (F.col("s_vec") % INCREMENTAL_MOD) >= INCREMENTAL_NEW
-        aggs.append(F.countDistinct(F.when(hit & s_new, F.col("s_vec")))
-                    .cast("long").alias("n_hits_new_suite"))
-        cols = ["vec_id",
-                F.when(ingest_pred, F.lit("ingest"))
-                .otherwise(F.lit("backfill")).alias("phase"),
-                "n_hits", "n_hits_new_suite"]
-    aggs.append(F.coalesce(F.max("cosine"), F.lit(_NO_CANDIDATE))
-                .alias("max_cosine"))
-    return (
-        scored.groupBy("vec_id")
-        .agg(*aggs)
-        .select(*cols, "max_cosine",
-                (F.col("n_hits") >= 1).alias("contaminated"))
-        .orderBy("vec_id")
-    )
-
-
-def _lsh_screen(spark: SparkSession, sf_dir: str,
-                incoming_only: bool) -> DataFrame:
-    """Batch/delta-ingest wrapper: split the materialized signature
-    table into corpus and suite sides and run the shared verdict
-    body."""
-    signed = _lsh_signed(spark, sf_dir)
-    corpus = signed.filter(~F.col("is_suite"))
-    if incoming_only:
-        corpus = corpus.filter(
-            (F.col("vec_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW)
-    return lsh_screen_frame(corpus, signed.filter("is_suite"))
-
-
-def decontaminate_embedding_lsh(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """The angle-keyed semantic decontamination screen — the schedule
-    semantic_screen_policy dispatches when the quantizer's cells carry
-    no signal about the cosine threshold (this testdata's regime),
-    giving that regime a sub-exact option where round 12 had only
-    O(corpus x suite). Output schema and verdict semantics are
-    decontaminate_embedding's, so consumers swap screens unchanged;
-    n_hits counts DISTINCT suite vectors scored at or above the
-    threshold among band-matched candidates (a blocked subset of the
-    exact screen's — the audit rows in semantic_screen_recall_audit
-    measure exactly what the blocking loses).
-
-    Scale shape: signatures are POOL exact-integer dots per vector —
-    scan-local, corpus- and suite-size independent (vs the exact
-    screen's |suite| dots per corpus vector); the band fan-out is
-    SEMANTIC_LSH_BANDS small rows per vector into a broadcast-suite
-    equi-join (candidate volume is the measured ~0.34 of the exact
-    pair space on this worst-case corpus, structurally lower on any
-    clustered one); one aggregate exchange total. In a deployment the
-    signature column persists next to the vectors (the _coded_corpus
-    convention) and the suite's band table is a fixed per-release
-    broadcast artifact."""
-    return _lsh_screen(spark, sf_dir, incoming_only=False)
-
-
-def decontaminate_embedding_lsh_incremental(
-        spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-ingest form of the angle-keyed screen: only the incoming
-    batch (the family's vec_id % {INCREMENTAL_MOD} >=
-    {INCREMENTAL_NEW} convention) signs and screens, against the SAME
-    fixed suite band artifact. Per-ingest cost O(batch); rows
-    identical to the batch screen's for incoming ids
-    (path-equivalence pytest)."""
-    return _lsh_screen(spark, sf_dir, incoming_only=True)
-
-
-def decontaminate_embedding_lsh_suite_refresh(
-        spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The angle-keyed screen's SECOND growth event — a benchmark
-    release adding suite members after the corpus snapshot — in the
-    family's phase-labeled form, completing both-growth-event coverage
-    for all three policy schedules (the cell schedules got theirs in
-    r12). Ingest rows are the incoming batch against the full suite;
-    backfill rows are the existing corpus, whose deployment bill is
-    only the NEW members' band rows against the PERSISTED corpus
-    signatures — new members sign (suite-sized math) and their band
-    rows join the standing corpus band table; the standing corpus
-    never re-signs and prior-suite counts are the persisted per-entity
-    artifact (recomputed here as the deterministic stand-in, both
-    phases sharing one plan). n_hits decomposes exactly as
-    persisted-old + n_hits_new_suite (suite membership is disjoint),
-    so every row equals the batch screen's row plus
-    (phase, n_hits_new_suite) — the path-equivalence pytest pins
-    it."""
-    signed = _lsh_signed(spark, sf_dir)
-    return lsh_screen_frame(
-        signed.filter(~F.col("is_suite")),
-        signed.filter("is_suite"),
-        ingest_pred=(F.col("vec_id") % INCREMENTAL_MOD)
-        >= INCREMENTAL_NEW)
-
-
-def _lsh_refresh_oracle() -> str:
-    return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_lsh_weight_ctes()},
-{_lsh_band_ctes()},
-scored AS (
-  SELECT c.vec_id, s.vec_id AS s_vec,
-         s.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW} AS s_new,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM bandrows cb
-  JOIN bandrows sb ON sb.band_id = cb.band_id
-                  AND sb.band_val = cb.band_val
-  JOIN n c ON c.vec_id = cb.vec_id
-  JOIN n s ON s.vec_id = sb.vec_id AND s.is_suite
-  WHERE NOT c.is_suite),
-hits AS (
-  SELECT vec_id,
-         CAST(COUNT(DISTINCT CASE WHEN cosine >=
-                {SEMANTIC_COSINE_THRESHOLD} THEN s_vec END) AS BIGINT)
-           AS n_hits,
-         CAST(COUNT(DISTINCT CASE WHEN cosine >=
-                {SEMANTIC_COSINE_THRESHOLD} AND s_new THEN s_vec END)
-              AS BIGINT) AS n_hits_new_suite,
-         MAX(cosine) AS max_cosine
-  FROM scored GROUP BY vec_id)
-SELECT c.vec_id,
-       CASE WHEN c.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}
-            THEN 'ingest' ELSE 'backfill' END AS phase,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(COALESCE(h.n_hits_new_suite, 0) AS BIGINT)
-         AS n_hits_new_suite,
-       COALESCE(h.max_cosine, CAST({_NO_CANDIDATE} AS DOUBLE))
-         AS max_cosine,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM n c LEFT JOIN hits h ON h.vec_id = c.vec_id
-WHERE NOT c.is_suite
-ORDER BY c.vec_id
-"""
+    """The angle-keyed screen over SIGNED frames — the seam the
+    streaming twin drives: band both sides, broadcast the suite's band
+    rows, rescore matches with the exact cosine, one distinct-aware
+    verdict roll-up (semantic_verdicts; ``ingest_pred`` switches on
+    the suite-refresh output)."""
+    return semantic_verdicts(*_lsh_candidates(corpus_signed, suite_signed),
+                             distinct=True, ingest_pred=ingest_pred)
 
 
 def _mulmod32_sql(expr: str, mult: int) -> str:
@@ -6195,43 +5424,228 @@ bandrows AS (
                        generate_subscripts(bv, 1) AS i) u)"""
 
 
-def _lsh_screen_oracle(incoming_only: bool) -> str:
+# ---------------------------------------------------------------------------
+# the semantic screen's candidate schedules
+# ---------------------------------------------------------------------------
+# Each Spark candidate stage takes the corpus side (non-suite vectors,
+# already fanned out and ingest-filtered as the form asks) and the
+# suite vectors, and returns (corpus, broadcast suite side, join
+# condition) for semantic_verdicts. ``refresh`` asks a row-counting
+# schedule for the suite side's s_is_new column.
+
+
+def _cell_candidates(corpus: DataFrame, suite: DataFrame,
+                     *_) -> tuple:
+    """Single probe: suite vectors in the corpus vector's own cell."""
+    return corpus, _cell_suite(suite), F.col("label") == F.col("s_label")
+
+
+def _multiprobe_candidates(corpus: DataFrame, suite: DataFrame,
+                           refresh: bool, spark: SparkSession,
+                           sf_dir: str) -> tuple:
+    """Own cell AND its most-confusable neighbor cell (_cell_probe_map):
+    the corpus side fans out 2x before the same broadcast suite join."""
+    probes = _cell_probe_map(spark, sf_dir)
+    return (corpus.join(F.broadcast(probes), "label"), _cell_suite(suite),
+            F.col("probe_label") == F.col("s_label"))
+
+
+def _topk_candidates(corpus: DataFrame, suite: DataFrame, refresh: bool,
+                     spark: SparkSession, sf_dir: str) -> tuple:
+    """Suite-top-k: each suite vector multi-assigned to its
+    SEMANTIC_PROBE_K most-plausible cells (_suite_probe_expansion), the
+    corpus on its own single cell. The new-release flag rides on the
+    expanded rows (suite-sized math, no corpus work)."""
+    from qucosa_fcrepo_reportingdb_spark.operators.similarity import (
+        _full_centroid_arrays,
+    )
+    exp = _suite_probe_expansion(suite, _full_centroid_arrays(spark, sf_dir),
+                                 SEMANTIC_PROBE_K, keep_id=refresh)
+    if refresh:
+        exp = exp.select("s_label", "sv", "snrm",
+                         _is_new("s_vec").alias("s_is_new"))
+    return corpus, exp, F.col("label") == F.col("s_label")
+
+
+def _exact_candidates(corpus: DataFrame, suite: DataFrame,
+                      refresh: bool, *_) -> tuple:
+    """Every suite vector (no blocking): recall 1.0 by construction."""
+    new = [_is_new("vec_id").alias("s_is_new")] if refresh else []
+    return (corpus,
+            suite.select(F.col("v").alias("sv"), F.col("nrm").alias("snrm"),
+                         *new),
+            None)
+
+
+def _lsh_candidates(corpus: DataFrame, suite: DataFrame, *_) -> tuple:
+    """Angle-keyed: both sides banded from their signatures, equi-joined
+    on (band_id, band_val)."""
+    suite_b = (_lsh_band_frame(suite)
+               .select(F.col("vec_id").alias("s_vec"),
+                       F.col("v").alias("sv"),
+                       F.col("nrm").alias("snrm"),
+                       "band_id", "band_val"))
+    return _lsh_band_frame(corpus), suite_b, ["band_id", "band_val"]
+
+
+class SemanticSchedule(NamedTuple):
+    """One candidate schedule of the semantic screen — which suite
+    vectors a corpus vector is scored against — in both engines."""
+    # (spark, sf_dir) -> is_suite-flagged vectors the schedule reads
+    vectors: Callable
+    # Spark candidate stage (see above)
+    candidates: Callable
+    # DuckDB CTE builders the candidate join needs after pre/n
+    ctes: tuple
+    # DuckDB candidate join: corpus row ``c``, suite row ``s`` of ``n``
+    join: str
+    # repartition the corpus before the dot stage: the corpus side is a
+    # single-split scan at test SFs (one parquet row group), so the dot
+    # stage would run on one core. Measured per schedule: it pays where
+    # the candidate volume is large (suite-top-k 2.0 -> 0.86 s, exact),
+    # not for the single cell (0.57 -> 0.62 s); the LSH signatures are
+    # fanned out before signing.
+    fan_out: bool
+    # count DISTINCT s_vec (semantic_verdicts)
+    distinct: bool
+    # form -> registry query name
+    forms: dict
+    # method label in semantic_screen_recall_audit ("" = the baseline)
+    audit: str = ""
+
+
+SEMANTIC_SCHEDULES = {
+    "cell": SemanticSchedule(
+        _suite_flagged_embeddings, _cell_candidates, (),
+        "n c JOIN n s ON s.is_suite AND s.label = c.label",
+        fan_out=False, distinct=False,
+        forms={"batch": "decontaminate_embedding",
+               "incremental": "decontaminate_embedding_incremental"},
+        audit="cell_blocked"),
+    "multiprobe": SemanticSchedule(
+        _suite_flagged_embeddings, _multiprobe_candidates,
+        (_centroid_core_ctes, _probe_map_ctes),
+        "n c JOIN probe_map p ON p.label = c.label "
+        "JOIN n s ON s.is_suite AND s.label = p.probe_label",
+        fan_out=False, distinct=False,
+        forms={"batch": "decontaminate_embedding_multiprobe"},
+        audit="cell_multiprobe"),
+    "topk": SemanticSchedule(
+        _suite_flagged_embeddings, _topk_candidates,
+        (_centroid_core_ctes, _suite_rank_cte),
+        "n c JOIN srank p ON p.s_label = c.label "
+        f"AND p.rk <= {SEMANTIC_PROBE_K} "
+        "JOIN n s ON s.is_suite AND s.vec_id = p.s_vec",
+        fan_out=True, distinct=False,
+        forms={"batch": "decontaminate_embedding_recallk",
+               "incremental": "decontaminate_embedding_recallk_incremental",
+               "suite_refresh": "decontaminate_embedding_suite_refresh"},
+        audit="suite_topk_probe"),
+    "exact": SemanticSchedule(
+        _suite_flagged_embeddings, _exact_candidates, (),
+        "n c JOIN n s ON s.is_suite",
+        fan_out=True, distinct=False,
+        forms={"batch": "decontaminate_embedding_exact",
+               "incremental": "decontaminate_embedding_exact_incremental",
+               "suite_refresh":
+                   "decontaminate_embedding_exact_suite_refresh"}),
+    "lsh": SemanticSchedule(
+        _lsh_signed, _lsh_candidates, (_lsh_weight_ctes, _lsh_band_ctes),
+        "bandrows cb JOIN bandrows sb ON sb.band_id = cb.band_id "
+        "AND sb.band_val = cb.band_val "
+        "JOIN n c ON c.vec_id = cb.vec_id "
+        "JOIN n s ON s.is_suite AND s.vec_id = sb.vec_id",
+        fan_out=False, distinct=True,
+        forms={"batch": "decontaminate_embedding_lsh",
+               "incremental": "decontaminate_embedding_lsh_incremental",
+               "suite_refresh": "decontaminate_embedding_lsh_suite_refresh"},
+        audit="lsh_bands"),
+}
+_SEMANTIC_FORMS = {name: (schedule, form)
+                   for schedule, s in SEMANTIC_SCHEDULES.items()
+                   for form, name in s.forms.items()}
+
+
+def _semantic_screen(spark: SparkSession, sf_dir: str, schedule: str,
+                     form: str) -> DataFrame:
+    """A schedule's form in Spark. ``incremental`` screens only the
+    incoming batch against the fixed suite (eval benchmarks change by
+    explicit release, not by corpus ingest, so there is no
+    incoming-x-incoming term: per-ingest cost O(batch), rows identical
+    to the batch screen's for those ids); ``suite_refresh`` is the
+    phase-labeled release form (semantic_verdicts)."""
+    s = SEMANTIC_SCHEDULES[schedule]
+    n = s.vectors(spark, sf_dir)
+    corpus = n.filter(~F.col("is_suite"))
+    if s.fan_out:
+        corpus = fan_out(corpus)
+    if form == "incremental":
+        corpus = corpus.filter(_is_new("vec_id"))
+    refresh = form == "suite_refresh"
+    return semantic_verdicts(
+        *s.candidates(corpus, n.filter("is_suite"), refresh, spark, sf_dir),
+        distinct=s.distinct,
+        ingest_pred=_is_new("vec_id") if refresh else None)
+
+
+def _semantic_ctes(*schedules: str) -> str:
+    """DuckDB CTEs for the candidate joins of ``schedules``: the normed
+    vectors ``pre``/``n`` with _suite_flagged_embeddings' membership,
+    then each builder the joins need, once."""
+    builders = dict.fromkeys(b for name in schedules
+                             for b in SEMANTIC_SCHEDULES[name].ctes)
+    suite = f"{key_hash('vec_id')} < {BENCH_RATE}"
+    return ",\n".join([H.normed_ctes(is_suite=suite),
+                       *(b() for b in builders)])
+
+
+def _flagged_sql(schedule: str) -> str:
+    """DuckDB: the corpus vectors a schedule flags (candidate join +
+    cosine gate), one row each."""
+    return (f"SELECT DISTINCT c.vec_id "
+            f"FROM {SEMANTIC_SCHEDULES[schedule].join} "
+            f"WHERE NOT c.is_suite "
+            f"AND {H.cosine_sql('c', 's')} >= {SEMANTIC_COSINE_THRESHOLD}")
+
+
+def semantic_screen_oracle(schedule: str, form: str) -> str:
+    """DuckDB oracle of a schedule's form, composed from the schedule's
+    SQL candidate join and never from the Spark stage, so an oracle
+    cannot share the bug it checks."""
+    s = SEMANTIC_SCHEDULES[schedule]
     inc = (f"AND c.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW} "
-           if incoming_only else "")
+           if form == "incremental" else "")
+    refresh = form == "suite_refresh"
+
+    def count(pred: str) -> str:
+        if s.distinct:
+            return f"COUNT(DISTINCT CASE WHEN {pred} THEN s_vec END)"
+        return f"SUM(CASE WHEN {pred} THEN 1 ELSE 0 END)"
+    hit = f"cosine >= {SEMANTIC_COSINE_THRESHOLD}"
+    counts = f"CAST({count(hit)} AS BIGINT) AS n_hits"
+    phase = new_col = ""
+    if refresh:
+        counts += (f",\n         CAST({count(hit + ' AND s_new')} AS BIGINT)"
+                   f" AS n_hits_new_suite")
+        phase = (f"\n       CASE WHEN c.vec_id % {INCREMENTAL_MOD} >= "
+                 f"{INCREMENTAL_NEW} THEN 'ingest' ELSE 'backfill' END"
+                 f" AS phase,")
+        new_col = ("\n       CAST(COALESCE(h.n_hits_new_suite, 0) AS BIGINT)"
+                   " AS n_hits_new_suite,")
     return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_lsh_weight_ctes()},
-{_lsh_band_ctes()},
+WITH {_semantic_ctes(schedule)},
 scored AS (
   SELECT c.vec_id, s.vec_id AS s_vec,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM bandrows cb
-  JOIN bandrows sb ON sb.band_id = cb.band_id
-                  AND sb.band_val = cb.band_val
-  JOIN n c ON c.vec_id = cb.vec_id
-  JOIN n s ON s.vec_id = sb.vec_id AND s.is_suite
+         s.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW} AS s_new,
+         {H.cosine_sql('c', 's')} AS cosine
+  FROM {s.join}
   WHERE NOT c.is_suite {inc}),
 hits AS (
-  SELECT vec_id,
-         CAST(COUNT(DISTINCT CASE WHEN cosine >=
-                {SEMANTIC_COSINE_THRESHOLD} THEN s_vec END) AS BIGINT)
-           AS n_hits,
-         MAX(cosine) AS max_cosine
+  SELECT vec_id, MAX(cosine) AS max_cosine,
+         {counts}
   FROM scored GROUP BY vec_id)
-SELECT c.vec_id,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
+SELECT c.vec_id,{phase}
+       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,{new_col}
        COALESCE(h.max_cosine, CAST({_NO_CANDIDATE} AS DOUBLE))
          AS max_cosine,
        COALESCE(h.n_hits, 0) >= 1 AS contaminated
@@ -6241,40 +5655,213 @@ ORDER BY c.vec_id
 """
 
 
-QUERIES["decontaminate_embedding_lsh"] = decontaminate_embedding_lsh
-ORACLES["decontaminate_embedding_lsh"] = _lsh_screen_oracle(False)
-QUERIES["decontaminate_embedding_lsh_incremental"] = \
-    decontaminate_embedding_lsh_incremental
-ORACLES["decontaminate_embedding_lsh_incremental"] = \
-    _lsh_screen_oracle(True)
-QUERIES["decontaminate_embedding_lsh_suite_refresh"] = \
-    decontaminate_embedding_lsh_suite_refresh
-ORACLES["decontaminate_embedding_lsh_suite_refresh"] = \
-    _lsh_refresh_oracle()
+def _semantic_entry(fn: Callable) -> Callable:
+    """Make a docstring-only ``decontaminate_embedding*`` definition a
+    registry query: its schedule and form come from SEMANTIC_SCHEDULES
+    by name, the body is _semantic_screen and the oracle
+    semantic_screen_oracle."""
+    schedule, form = _SEMANTIC_FORMS[fn.__name__]
+
+    @functools.wraps(fn)
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _semantic_screen(spark, sf_dir, schedule, form)
+    QUERIES[fn.__name__] = query
+    ORACLES[fn.__name__] = semantic_screen_oracle(schedule, form)
+    return query
+
+
+@_semantic_entry
+def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semantic test-set decontamination: flag corpus entities whose
+    EMBEDDING is close to a held-out benchmark embedding. The lexical
+    screens (decontaminate_ngram_overlap / _multi_suite / strip_spans)
+    are exact-surface-form by construction — an eval document that was
+    paraphrased or re-tokenized shares no 3-gram and sails through all
+    of them; in embedding space the paraphrase stays near its source,
+    which is what this screen keys on (the standard embedding-similarity
+    decontamination pass run alongside the n-gram one for LLM training
+    sets). The two screens share the benchmark membership function, so
+    a training pipeline unions their contaminated sets per entity.
+
+    Scale shape: the suite side is an eval benchmark — thousands of
+    rows in a deployment (the ~5% hash sample is the self-contained
+    test-data stand-in, same convention as the lexical screens) — so
+    it broadcasts; the corpus side streams once through an equi-join
+    on the coarse cell (label = IVF cell, the blocking the whole
+    embedding family shares). No pair space, no self-join: cost is one
+    corpus scan regardless of corpus size. If the suite ever outgrows
+    broadcast, the salted (label, salt) equi-join
+    dedup_embedding_cosine uses applies unchanged.
+
+    Recall caveat (inherent to IVF-style blocking): a paraphrase
+    quantized into a DIFFERENT cell than its suite source escapes this
+    screen; the multiprobe, suite-top-k, exact and LSH schedules are
+    the remedies, priced by semantic_screen_recall_audit."""
+
+
+@_semantic_entry
+def decontaminate_embedding_incremental(spark: SparkSession,
+                                        sf_dir: str) -> DataFrame:
+    """Delta-ingest form of decontaminate_embedding: only the incoming
+    batch is screened against the fixed suite (_semantic_screen)."""
+
+
+@_semantic_entry
+def decontaminate_embedding_multiprobe(spark: SparkSession,
+                                       sf_dir: str) -> DataFrame:
+    """decontaminate_embedding probing each corpus vector's own cell
+    AND its most-confusable neighbor cell — exactly where
+    ivf_cell_similarity_matrix says single-probe recall leaks, and the
+    same own+nearest schedule ann_lsh_multiprobe uses on the LSH side.
+    The probe map is n_cells^2 centroid math (corpus-size independent,
+    memoized centroids); the corpus side fans out 2x before the SAME
+    broadcast suite join — still one corpus scan, no pair space."""
+
+
+@_semantic_entry
+def decontaminate_embedding_recallk(spark: SparkSession,
+                                    sf_dir: str) -> DataFrame:
+    """The deployable semantic decontamination screen: cell blocking
+    audits at 13% recall — the paraphrases the screen exists to catch
+    sit barely inside the cosine threshold, so they land in a DIFFERENT
+    cell than their suite source ~9 times in 10. This form
+    multi-assigns each SUITE vector to its SEMANTIC_PROBE_K
+    most-plausible cells (rank by centroid cosine — classic IVF
+    multi-probe applied to the query side) so a corpus vector anywhere
+    in those cells sees it. Audited recall 0.905 (sf0.01) / 0.883
+    (sf0.1) >= SEMANTIC_RECALL_TARGET; semantic_probe_recall_sweep
+    shows the whole probes-vs-recall frontier and semantic_screen_policy
+    picks the schedule per corpus.
+
+    Scale shape: the fan-out is k x |suite| BROADCAST rows (an eval
+    benchmark is thousands of vectors; the corpus side is untouched) —
+    one corpus scan, single-cell equi-join, no pair space; candidate
+    volume O(corpus x k x |suite| / n_cells)."""
+
+
+@_semantic_entry
+def decontaminate_embedding_recallk_incremental(
+        spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Delta-ingest form of decontaminate_embedding_recallk, against
+    the SAME multi-assigned suite artifact (fixed per benchmark
+    release: the expansion is computed once per suite x quantizer, not
+    per ingest)."""
+
+
+@_semantic_entry
+def decontaminate_embedding_exact(spark: SparkSession,
+                                  sf_dir: str) -> DataFrame:
+    """The unblocked semantic screen as a deployment artifact: every
+    corpus vector against every suite vector — recall 1.0 by
+    construction. semantic_screen_policy dispatches it when the
+    candidate volume at the recall target approaches the exact pair
+    space, so blocking is bookkeeping without savings. Still one corpus
+    scan with a broadcast suite — O(corpus x |suite|) dot products,
+    embarrassingly parallel, no shuffle beyond the verdict roll-up."""
+
+
+@_semantic_entry
+def decontaminate_embedding_exact_incremental(
+        spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Delta-ingest form of decontaminate_embedding_exact: incoming
+    batch x full suite, O(batch x |suite|)."""
+
+
+@_semantic_entry
+def decontaminate_embedding_suite_refresh(spark: SparkSession,
+                                          sf_dir: str) -> DataFrame:
+    """The suite-top-k screen's release event: a benchmark release adds
+    suite members after the corpus snapshot. Ingest rows are the
+    incoming batch against the full suite, backfill rows the existing
+    corpus re-screened — in a deployment only against the new members
+    (the fixed expansion artifact simply gains their rows), a bill of
+    O(corpus x |new members| x k / n_cells), never a full re-screen.
+    Every row is decontaminate_embedding_recallk's row plus (phase,
+    n_hits_new_suite)."""
+
+
+@_semantic_entry
+def decontaminate_embedding_exact_suite_refresh(
+        spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact screen's release event, phase-labeled like
+    decontaminate_embedding_suite_refresh: the backfill bill is
+    O(corpus x |new members|) exact dots, and recall stays 1.0 by
+    construction through the release, which is the point of
+    dispatching exact. Every row is decontaminate_embedding_exact's row
+    plus (phase, n_hits_new_suite)."""
+
+
+@_semantic_entry
+def decontaminate_embedding_lsh(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    """The angle-keyed semantic decontamination screen — the schedule
+    semantic_screen_policy dispatches when the quantizer's cells carry
+    no signal about the cosine threshold (this testdata's regime),
+    giving that regime a sub-exact option. n_hits counts DISTINCT suite
+    vectors scored at or above the threshold among band-matched
+    candidates (a blocked subset of the exact screen's —
+    semantic_screen_recall_audit measures what the blocking loses).
+
+    Scale shape: signatures are POOL exact-integer dots per vector —
+    scan-local, corpus- and suite-size independent (vs the exact
+    screen's |suite| dots per corpus vector); the band fan-out is
+    SEMANTIC_LSH_BANDS small rows per vector into a broadcast-suite
+    equi-join (candidate volume is the measured ~0.34 of the exact
+    pair space on this worst-case corpus, structurally lower on any
+    clustered one); one aggregate exchange total. In a deployment the
+    signature column persists next to the vectors (the _coded_corpus
+    convention) and the suite's band table is a fixed per-release
+    broadcast artifact.
+
+    The rescore stays the ``zip_with`` fold on measurement (SCALING.md
+    has the receipts): an int8/Hamming prefilter is structurally zero
+    — max_cosine is exact over ALL candidates, a sound estimate costs a
+    same-length integer dot, and Hamming on fixed hyperplanes has no
+    sound per-pair cosine bound; the index fold (aggregate over
+    sequence(1, dim) with element_at) looked 1.27x faster at sf0.1 but
+    was 1.25-1.6x SLOWER at rescore-dominant scale (94M/258M-dot walls)
+    — HOF lambdas are interpreted, so its two element_at calls per step
+    cost more than zip_with's single multiply plus one small array."""
+
+
+@_semantic_entry
+def decontaminate_embedding_lsh_incremental(
+        spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Delta-ingest form of decontaminate_embedding_lsh: only the
+    incoming batch signs and screens, against the SAME fixed suite band
+    artifact."""
+
+
+@_semantic_entry
+def decontaminate_embedding_lsh_suite_refresh(
+        spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The angle-keyed screen's release event, phase-labeled like
+    decontaminate_embedding_suite_refresh: the backfill bill is only
+    the NEW members' band rows against the PERSISTED corpus signatures
+    (new members sign — suite-sized math — and the standing corpus
+    never re-signs). Every row is decontaminate_embedding_lsh's row
+    plus (phase, n_hits_new_suite)."""
 
 
 def _semantic_true_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize-once exact-screen positive PAIRS (vec_id, label,
     s_vec) — the brute-force audit baseline shared by the recall
-    audit, the probe sweep, the band sweep, and the policy. Each
-    previously re-ran the corpus x broadcast-suite cross join per
-    consumer (the policy folded it twice); memoized per (session,
-    dataset) the corpus pays it once per sweep (the
-    _audit_topk_table / strip-spans convention). Bounded-corpus audit
-    machinery: at 100 TB the consumers sample, they never sweep."""
+    audit, the probe sweep, the band sweep, and the policy, so the
+    corpus pays the corpus x broadcast-suite dot stage once per
+    (session, dataset) (the _audit_topk_table / strip-spans
+    convention). Bounded-corpus audit machinery: at 100 TB the
+    consumers sample, they never sweep."""
     def build() -> DataFrame:
         n = _suite_flagged_embeddings(spark, sf_dir)
         suite_all = (n.filter("is_suite")
                      .select(F.col("vec_id").alias("s_vec"),
                              F.col("v").alias("sv"),
                              F.col("nrm").alias("snrm")))
-        dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-               "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-        # fan_out (r15): see semantic_screen_frame — the full-pair-space
-        # dot stage is the most compute-dense stage in the family.
+        # fanned out like the exact schedule: the full-pair-space dot
+        # stage is the most compute-dense stage in the family
         return (fan_out(n.filter(~F.col("is_suite")))
                 .crossJoin(F.broadcast(suite_all))
-                .filter((F.expr(dot) / (F.col("nrm") * F.col("snrm")))
+                .filter((F.expr(_SV_DOT) / (F.col("nrm") * F.col("snrm")))
                         >= SEMANTIC_COSINE_THRESHOLD)
                 .select("vec_id", "label", "s_vec")
                 .transform(cut_lineage))
@@ -6287,12 +5874,10 @@ def _lsh_first_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     would candidate, with its first matching band id — the
     _semantic_true_pairs convention applied to the banded side, shared
     by the band sweep (per-b cumulative folds) and the policy
-    (candidate volume + caught counts). One band join + one pair-level
-    min aggregate per (session, dataset); the consumers previously
-    re-ran the band join per term (and the policy additionally re-ran
-    the full zip_with rescore the true-pair artifact already encodes).
-    Bounded-corpus audit machinery like the true-pair table: at 100 TB
-    the sweep/policy consumers sample, they never sweep."""
+    (candidate volume + caught counts): one band join + one pair-level
+    min aggregate per (session, dataset). Bounded-corpus audit
+    machinery like the true-pair table: at 100 TB the sweep/policy
+    consumers sample, they never sweep."""
     def build() -> DataFrame:
         signed = _lsh_signed(spark, sf_dir)
         suite_b = (_lsh_band_frame(signed.filter("is_suite"))
@@ -6370,29 +5955,13 @@ def semantic_lsh_band_sweep(spark: SparkSession,
 
 
 SEMANTIC_LSH_SWEEP_SQL = f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_lsh_weight_ctes()},
-{_lsh_band_ctes()},
+WITH {_semantic_ctes("lsh")},
 firstband AS (
-  SELECT cb.vec_id, sb.vec_id AS s_vec,
+  SELECT c.vec_id, s.vec_id AS s_vec,
          CAST(MIN(cb.band_id) AS BIGINT) AS fb
-  FROM bandrows cb
-  JOIN bandrows sb ON sb.band_id = cb.band_id
-                  AND sb.band_val = cb.band_val
-  JOIN n c ON c.vec_id = cb.vec_id
-  JOIN n s ON s.vec_id = sb.vec_id AND s.is_suite
+  FROM {SEMANTIC_SCHEDULES["lsh"].join}
   WHERE NOT c.is_suite
-  GROUP BY cb.vec_id, sb.vec_id),
+  GROUP BY c.vec_id, s.vec_id),
 bs AS (SELECT CAST(range AS INT) AS b
        FROM range(1, {SEMANTIC_LSH_BANDS + 1})),
 cand AS (
@@ -6400,12 +5969,9 @@ cand AS (
   FROM firstband f JOIN bs ON f.fb < bs.b GROUP BY bs.b),
 tp AS (
   SELECT c.vec_id, s.vec_id AS s_vec
-  FROM n c JOIN n s ON s.is_suite
+  FROM {SEMANTIC_SCHEDULES["exact"].join}
   WHERE NOT c.is_suite
-    AND list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-        (acc, x) -> acc + x) / (c.nrm * s.nrm)
-        >= {SEMANTIC_COSINE_THRESHOLD}),
+    AND {H.cosine_sql('c', 's')} >= {SEMANTIC_COSINE_THRESHOLD}),
 nt AS (SELECT CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_true FROM tp),
 efb AS (
   SELECT t.vec_id, MIN(f.fb) AS efb
@@ -6444,7 +6010,7 @@ PHASH_NO_HIT = -1
 
 def decontaminate_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual decontamination — the screen family completed across
-    modalities (VERDICT r11 item 7): eval suites increasingly contain
+    modalities: eval suites increasingly contain
     IMAGES, and a re-encoded/resized suite asset shares no bytes with
     its source (every exact screen passes it) while its perceptual hash
     stays within a few bits — the pixel-side analog of the paraphrase
@@ -6805,7 +6371,7 @@ def decontaminate_vfp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (frame_idx, band) join emits the pair — recall 1.0 structurally,
     no recall schedule. Scale shape: per-frame signature rows only
     (VFP_FRAMES x 16 bytes/clip), suite side broadcast, frame arrays
-    folded clip-level before the verify (the r10 strip-spans-style
+    folded clip-level before the verify (the strip-spans-style
     collapse dedup's verify uses)."""
     return _perceptual_screen(spark, sf_dir, "vfp")
 
@@ -7008,11 +6574,11 @@ ORACLES["decontaminate_vfp_suite_refresh"] = \
 def perceptual_screen_recall_audit(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """Measured recall of every perceptual screen against its EXACT
-    unblocked baseline (VERDICT r12 item 8 — semantic_screen_recall_
-    audit's role for the pixel/audio/video families, closing the
-    "every screen's loss is measured" story). Per row: the production
-    screen's flags vs an exact screen with NO banding (every corpus
-    signature against every broadcast suite signature):
+    unblocked baseline (semantic_screen_recall_audit's role for the
+    pixel/audio/video families, so every screen's loss is measured).
+    Per row: the production screen's flags vs an exact screen with NO
+    banding (every corpus signature against every broadcast suite
+    signature):
 
     - image / audio: the banded join is pigeonhole-EXACT by
       construction (hamming_max < n_bands); these rows measure the
@@ -7259,7 +6825,7 @@ def _contamination_manifest(spark: SparkSession, sf_dir: str,
         "doc_id", F.col("contaminated").alias("flagged_audio"))
     vid = _perceptual_screen(spark, sf_dir, "vfp", pred).select(
         "doc_id", F.col("contaminated").alias("flagged_video"))
-    # r16: the delta-ingest form's five verdict frames are O(batch) by
+    # the delta-ingest form's five verdict frames are O(batch) by
     # construction (every screen restricts its corpus side to the
     # incoming slice — the same bound the screens' own broadcast joins
     # rely on), so the assembly broadcasts them instead of paying four
@@ -7488,8 +7054,8 @@ def suite_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_b = F.expr(key_hash("doc_id")) < BENCH_RATE
     suite_ids = docs.filter(is_b).select(F.col("doc_id").alias("s_doc"))
 
-    # r15: the memoized shingle artifact — both attribution branches
-    # (corpus + suite) re-tokenized the corpus per invocation before.
+    # the memoized shingle artifact: both attribution branches
+    # (corpus + suite) read it instead of re-tokenizing the corpus.
     sh = _bench_shingled(spark, sf_dir)
     c_sh = (sh.filter(~F.col("is_bench"))
             .select("doc_id", F.explode_outer("sh").alias("s"))
@@ -7510,13 +7076,11 @@ def suite_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _full_centroid_arrays(spark, sf_dir)
     ranks = _suite_probe_expansion(n.filter("is_suite"), cents,
                                    SEMANTIC_PROBE_K, keep_id=True)
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
     sem_hits = (
-        fan_out(n.filter(~F.col("is_suite")))   # r15: see semantic_screen_frame
+        fan_out(n.filter(~F.col("is_suite")))   # as the topk schedule
         .join(F.broadcast(ranks), F.col("label") == F.col("s_label"))
         .select("vec_id", "s_vec",
-                (F.expr(dot) / (F.col("nrm") * F.col("snrm")))
+                (F.expr(_SV_DOT) / (F.col("nrm") * F.col("snrm")))
                 .alias("cosine"))
         .filter(F.col("cosine") >= SEMANTIC_COSINE_THRESHOLD)
         .groupBy(F.col("s_vec").alias("s_doc"))
@@ -7607,27 +7171,11 @@ tp AS (
 text_hits AS (
   SELECT s_doc, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_text_hits
   FROM tp WHERE ov >= {CONTAMINATION_MIN_SHINGLES} GROUP BY s_doc),
-pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_centroid_core_ctes()},
-{_sprobe_cte(SEMANTIC_PROBE_K)},
+{_semantic_ctes("topk")},
 sem_pairs AS (
   SELECT c.vec_id, s.vec_id AS s_vec,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM n c
-  JOIN sprobe p ON p.probe_label = c.label
-  JOIN n s ON s.vec_id = p.vec_id AND s.is_suite
+         {H.cosine_sql('c', 's')} AS cosine
+  FROM {SEMANTIC_SCHEDULES["topk"].join}
   WHERE NOT c.is_suite),
 sem_hits AS (
   SELECT s_vec AS s_doc,
@@ -8045,11 +7593,11 @@ ORACLES["contamination_by_source"] = _contamination_by_source_oracle()
 def contamination_manifest_diff(spark: SparkSession, sf_dir: str,
                                 prior: "DataFrame | None" = None
                                 ) -> DataFrame:
-    """What a SUITE RELEASE changed in the manifest (VERDICT r12 item
-    7) — the report a training pipeline reads when a benchmark ships
-    new members: which entities' exclusion verdicts moved, keyed by
-    release. The PRIOR-release manifest is reconstructed exactly from
-    the five screens' suite-refresh decompositions (each screen's
+    """What a SUITE RELEASE changed in the manifest — the report a
+    training pipeline reads when a benchmark ships new members: which
+    entities' exclusion verdicts moved, keyed by release. The
+    PRIOR-release manifest is reconstructed exactly from the five
+    screens' suite-refresh decompositions (each screen's
     refresh form splits its hit count into persisted-old +
     new-release members, and membership is disjoint, so
     old = total - new is the prior screen's verdict bit-for-bit —
@@ -8065,14 +7613,14 @@ def contamination_manifest_diff(spark: SparkSession, sf_dir: str,
     plus a conditional aggregate column), two manifest-sized frames,
     ONE full-outer doc_id join (keyed_diff), output O(changes).
 
-    ``prior`` (VERDICT r13 item 8): a deployment persists each
+    ``prior``: a deployment persists each
     release's manifest (the training_set_manifest memo convention), so
     the prior side is a TABLE READ, not a reconstruction — pass it
     here and the five refresh screens never run; the diff is one scan
     per side plus the keyed_diff join. The reconstruction default
     stays for the self-contained registry form (and IS the prior's
     definition — the pytest pins that a materialized prior yields
-    row-identical diffs). Measured both ways in SCALING.md round-14."""
+    row-identical diffs). Measured both ways in SCALING.md."""
     from qucosa_fcrepo_reportingdb_spark.operators.maintenance import (
         keyed_diff,
     )
@@ -8135,7 +7683,8 @@ WITH praw AS (
          (a.n_hits - a.n_hits_new_suite) >= 1 AS flagged_audio,
          (v.n_hits - v.n_hits_new_suite) >= 1 AS flagged_video
   FROM ({DECONTAMINATE_REFRESH_SQL}) t
-  LEFT JOIN ({SEMANTIC_SUITE_REFRESH_SQL}) s ON s.vec_id = t.doc_id
+  LEFT JOIN ({ORACLES["decontaminate_embedding_suite_refresh"]}) s
+    ON s.vec_id = t.doc_id
   LEFT JOIN ({{PH_REFRESH}}) i ON i.doc_id = t.doc_id
   LEFT JOIN ({{AFP_REFRESH}}) a ON a.doc_id = t.doc_id
   LEFT JOIN ({{VFP_REFRESH}}) v ON v.doc_id = t.doc_id),
@@ -8183,11 +7732,11 @@ def suite_self_dedup_report(spark: SparkSession,
     min-id-canonical rule, so dropping exactly the redundant rows
     leaves one representative per detected near-dup group chain).
 
-    The probe-detected pair set is SYMMETRIZED before the roll-up
-    (ADVICE r12): the probe schedule detects (a, b) when b's top-k
-    cells include a's home cell, which is directional — without the
-    flip a pair seen only from the smaller-id side would leave BOTH
-    members non-redundant, breaking the one-representative rule on
+    The probe-detected pair set is SYMMETRIZED before the roll-up:
+    the probe schedule detects (a, b) when b's top-k cells include
+    a's home cell, which is directional — without the flip a pair
+    seen only from the smaller-id side would leave BOTH members
+    non-redundant, breaking the one-representative rule on
     exactly the pairs the schedule half-sees. Cosine is symmetric, so
     the flipped rows carry the same score and the threshold commutes
     with the flip.
@@ -8204,14 +7753,12 @@ def suite_self_dedup_report(spark: SparkSession,
     cents = _full_centroid_arrays(spark, sf_dir)
     exp = _suite_probe_expansion(suite, cents, SEMANTIC_PROBE_K,
                                  keep_id=True)
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
     pairs = (
         suite.join(F.broadcast(exp),
                    F.col("label") == F.col("s_label"))
         .filter(F.col("vec_id") != F.col("s_vec"))
         .select("vec_id", "s_vec",
-                (F.expr(dot) / (F.col("nrm") * F.col("snrm")))
+                (F.expr(_SV_DOT) / (F.col("nrm") * F.col("snrm")))
                 .alias("cosine"))
         .filter(F.col("cosine") >= SEMANTIC_COSINE_THRESHOLD))
     sym = pairs.unionByName(
@@ -8234,27 +7781,11 @@ def suite_self_dedup_report(spark: SparkSession,
 
 def _suite_self_dedup_oracle() -> str:
     return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_centroid_core_ctes()},
-{_sprobe_cte(SEMANTIC_PROBE_K)},
+WITH {_semantic_ctes("topk")},
 pairs AS (
   SELECT c.vec_id, s.vec_id AS s_vec,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-             (acc, x) -> acc + x) / (c.nrm * s.nrm) AS cosine
-  FROM n c
-  JOIN sprobe p ON p.probe_label = c.label
-  JOIN n s ON s.vec_id = p.vec_id AND s.is_suite
+         {H.cosine_sql('c', 's')} AS cosine
+  FROM {SEMANTIC_SCHEDULES["topk"].join}
   WHERE c.is_suite AND c.vec_id != s.vec_id),
 sym AS (
   SELECT vec_id, s_vec, cosine FROM pairs
@@ -8531,7 +8062,7 @@ def importance_resampled_selection(spark: SparkSession,
     is a pure function of the key — stable across engines,
     partitionings, and reruns (the deterministic_sample convention),
     while matching Bernoulli importance resampling in distribution.
-    The rescale matters (ADVICE r12): corpus membership is itself
+    The rescale matters: corpus membership is itself
     key_hash >= BENCH_RATE, so the RAW hash/MOD draw is uniform on
     [BENCH_RATE/MOD, 1) over corpus docs — every keep probability
     deflated ~5 points, and any doc with p_keep <= BENCH_RATE/MOD
@@ -8549,7 +8080,7 @@ def importance_resampled_selection(spark: SparkSession,
 
 def importance_resampled_selection_incremental(
         spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-ingest form of the resampler (VERDICT r12 item 5): only
+    """Delta-ingest form of the resampler: only
     the incoming batch (doc_id % {INCREMENTAL_MOD} >=
     {INCREMENTAL_NEW}, the corpus-wide convention) scores and draws,
     against the STANDING importance-vocab artifact — the memoized
@@ -8615,8 +8146,8 @@ ORACLES["importance_resampled_selection_incremental"] = \
 def importance_resampled_selection_target_refresh(
         spark: SparkSession, sf_dir: str) -> DataFrame:
     """The resampler's SECOND growth event — a TARGET-distribution
-    release (VERDICT r13 item 4: the target is a per-release artifact
-    exactly like a screen's suite). A new benchmark release adds
+    release (the target is a per-release artifact exactly like a
+    screen's suite). A new benchmark release adds
     target documents after the corpus was scored and drawn, which
     moves the target vocab artifact (top-V counts AND total mass), so
     every standing document's importance — and possibly its selection
@@ -8796,43 +8327,33 @@ ORACLES["importance_resampled_selection_target_refresh"] = \
 
 def semantic_screen_recall_audit(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    """Measured recall cost of the semantic screen's coarse-cell
-    blocking — jaccard_cap_recall_audit's role transplanted to the
-    embedding side, and the number that decides whether the screen
-    needs the multiprobe schedule before a training run trusts it. Per
-    method (cell_blocked = decontaminate_embedding, cell_multiprobe =
-    own+nearest cell, lsh_bands = the angle-keyed
-    decontaminate_embedding_lsh, suite_topk_probe = the
-    recall-targeted decontaminate_embedding_recallk): flagged count,
-    overlap with the EXACT unblocked screen (every corpus vector
-    against every suite vector — the audit-only baseline,
+    """Measured recall cost of the semantic screen's blocking —
+    jaccard_cap_recall_audit's role transplanted to the embedding side,
+    and the number that decides which schedule a training run can
+    trust. Per blocked schedule (its SEMANTIC_SCHEDULES audit label:
+    cell_blocked, cell_multiprobe, lsh_bands, suite_topk_probe):
+    flagged count, overlap with the EXACT unblocked screen (every
+    corpus vector against every suite vector — the audit-only baseline,
     ann_bruteforce_topk's role), miss count, and recall. The exact
     side is bounded-corpus machinery: at 100 TB the audit samples, it
     never sweeps.
 
-    The suite_topk_probe row is the round-12 recall fix's receipt:
-    0.905 / 0.883 at sf0.01 / sf0.1 — at or above
-    SEMANTIC_RECALL_TARGET — vs 0.13 cell-blocked / 0.27 multiprobe
-    (the r11 weak finding); semantic_probe_recall_sweep shows the full
-    frontier this point sits on.
+    The suite_topk_probe row is the recall fix's receipt: 0.905 /
+    0.883 at sf0.01 / sf0.1 — at or above SEMANTIC_RECALL_TARGET — vs
+    0.13 cell-blocked / 0.27 multiprobe; semantic_probe_recall_sweep
+    shows the full frontier this point sits on.
 
     Structurally every blocked method's flags are subsets of the exact
-    screen's (same scoring, fewer candidate cells), so n_missed is
-    pure blocking loss — the audit measures it rather than assumes
-    it."""
+    screen's (same scoring, fewer candidates), so n_missed is pure
+    blocking loss — the audit measures it rather than assumes it."""
     exact = (_semantic_true_pairs(spark, sf_dir)
              .select("vec_id").distinct()
              .withColumn("in_true", F.lit(1)))
     n_true = exact.agg(F.count(F.lit(1)).cast("long").alias("n_true"))
     out = None
-    for method, fn in (("cell_blocked", decontaminate_embedding),
-                       ("cell_multiprobe",
-                        decontaminate_embedding_multiprobe),
-                       ("lsh_bands", decontaminate_embedding_lsh),
-                       ("suite_topk_probe",
-                        decontaminate_embedding_recallk)):
-        flagged = (fn(spark, sf_dir).filter("contaminated")
-                   .select("vec_id"))
+    for method, schedule in _audited_schedules():
+        flagged = (_semantic_screen(spark, sf_dir, schedule, "batch")
+                   .filter("contaminated").select("vec_id"))
         row = (flagged.join(exact, "vec_id", "left")
                .agg(F.count(F.lit(1)).cast("long").alias("n_flagged"),
                     F.count("in_true").cast("long").alias("n_common"))
@@ -8850,76 +8371,29 @@ def semantic_screen_recall_audit(spark: SparkSession,
     )
 
 
+def _audited_schedules() -> "list[tuple[str, str]]":
+    """(audit label, schedule) of every blocked schedule, by label."""
+    return sorted((s.audit, name) for name, s in SEMANTIC_SCHEDULES.items()
+                  if s.audit)
+
+
 def _semantic_recall_oracle() -> str:
-    score = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(range(1, len(c.v) + 1), "
-             "i -> c.v[i] * s.v[i])), (acc, x) -> acc + x)"
-             " / (c.nrm * s.nrm)")
+    audited = _audited_schedules()
+    flagged = ",\n".join(f"f_{name} AS ({_flagged_sql(name)})"
+                         for _, name in audited)
+    rows = "\n  UNION ALL\n".join(
+        f"""  SELECT '{method}' AS method,
+         CAST((SELECT COUNT(*) FROM f_{name}) AS BIGINT) AS n_flagged,
+         CAST((SELECT COUNT(*) FROM f_{name} f
+               JOIN exact e ON e.vec_id = f.vec_id) AS BIGINT) AS n_common"""
+        for method, name in audited)
     return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_centroid_probe_ctes()},
-{_sprobe_cte(SEMANTIC_PROBE_K)},
-{_lsh_weight_ctes()},
-{_lsh_band_ctes()},
-exact AS (
-  SELECT DISTINCT c.vec_id
-  FROM n c JOIN n s ON s.is_suite
-  WHERE NOT c.is_suite AND {score} >= {SEMANTIC_COSINE_THRESHOLD}),
-blocked AS (
-  SELECT DISTINCT c.vec_id
-  FROM n c JOIN n s ON s.is_suite AND s.label = c.label
-  WHERE NOT c.is_suite AND {score} >= {SEMANTIC_COSINE_THRESHOLD}),
-multi AS (
-  SELECT DISTINCT c.vec_id
-  FROM n c
-  JOIN probe_map p ON p.label = c.label
-  JOIN n s ON s.is_suite AND s.label = p.probe_label
-  WHERE NOT c.is_suite AND {score} >= {SEMANTIC_COSINE_THRESHOLD}),
-lshf AS (
-  SELECT DISTINCT c.vec_id
-  FROM bandrows cb
-  JOIN bandrows sb ON sb.band_id = cb.band_id
-                  AND sb.band_val = cb.band_val
-  JOIN n c ON c.vec_id = cb.vec_id
-  JOIN n s ON s.vec_id = sb.vec_id AND s.is_suite
-  WHERE NOT c.is_suite AND {score} >= {SEMANTIC_COSINE_THRESHOLD}),
-topk AS (
-  SELECT DISTINCT c.vec_id
-  FROM n c
-  JOIN sprobe sp ON sp.probe_label = c.label
-  JOIN n s ON s.vec_id = sp.vec_id AND s.is_suite
-  WHERE NOT c.is_suite AND {score} >= {SEMANTIC_COSINE_THRESHOLD}),
+WITH {_semantic_ctes(*SEMANTIC_SCHEDULES)},
+exact AS ({_flagged_sql("exact")}),
+{flagged},
 tp AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM exact),
 rows_m AS (
-  SELECT 'cell_blocked' AS method,
-         CAST((SELECT COUNT(*) FROM blocked) AS BIGINT) AS n_flagged,
-         CAST((SELECT COUNT(*) FROM blocked b
-               JOIN exact e ON e.vec_id = b.vec_id) AS BIGINT) AS n_common
-  UNION ALL
-  SELECT 'cell_multiprobe' AS method,
-         CAST((SELECT COUNT(*) FROM multi) AS BIGINT) AS n_flagged,
-         CAST((SELECT COUNT(*) FROM multi m
-               JOIN exact e ON e.vec_id = m.vec_id) AS BIGINT) AS n_common
-  UNION ALL
-  SELECT 'lsh_bands' AS method,
-         CAST((SELECT COUNT(*) FROM lshf) AS BIGINT) AS n_flagged,
-         CAST((SELECT COUNT(*) FROM lshf l
-               JOIN exact e ON e.vec_id = l.vec_id) AS BIGINT) AS n_common
-  UNION ALL
-  SELECT 'suite_topk_probe' AS method,
-         CAST((SELECT COUNT(*) FROM topk) AS BIGINT) AS n_flagged,
-         CAST((SELECT COUNT(*) FROM topk t
-               JOIN exact e ON e.vec_id = t.vec_id) AS BIGINT) AS n_common)
+{rows})
 SELECT method, tp.n_true, n_flagged, n_common,
        tp.n_true - n_common AS n_missed,
        CAST(n_common AS DOUBLE)
@@ -8936,14 +8410,14 @@ ORACLES["semantic_screen_recall_audit"] = _semantic_recall_oracle()
 def semantic_probe_recall_sweep(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """The probes-vs-recall frontier of the suite-top-k screen — the
-    lsh_banding_sweep pattern transplanted (VERDICT r11 item 1): per
-    probe count k, the candidate volume the schedule pays and the
-    recall it buys, so SEMANTIC_PROBE_K is a measured choice and
-    semantic_screen_policy a data-driven dispatch instead of a
-    constant. Per k = 1..n_cells: candidate_pairs (corpus rows visible
-    to the k-expanded suite), n_true (exact-screen positives — the
-    audit-only brute-force baseline), n_caught (positives whose first
-    catching cell ranks <= k), recall, meets_target.
+    lsh_banding_sweep pattern transplanted: per probe count k, the
+    candidate volume the schedule pays and the recall it buys, so
+    SEMANTIC_PROBE_K is a measured choice and semantic_screen_policy a
+    data-driven dispatch instead of a constant. Per k = 1..n_cells:
+    candidate_pairs (corpus rows visible to the k-expanded suite),
+    n_true (exact-screen positives — the audit-only brute-force
+    baseline), n_caught (positives whose first catching cell ranks
+    <= k), recall, meets_target.
 
     On this near-isotropic testdata the frontier is nearly linear
     (recall ~ k/n_cells + a small geometry lift): true matches sit
@@ -9006,48 +8480,25 @@ def semantic_probe_recall_sweep(spark: SparkSession,
 
 def _semantic_sweep_ctes() -> str:
     """DuckDB CTE chain shared by the sweep oracle and the policy
-    oracle: pre/n -> centroid core -> per-suite cell ranks -> per-k
-    candidate volume + first-catching-rank recall."""
-    score = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(range(1, len(c.v) + 1), "
-             "i -> c.v[i] * s.v[i])), (acc, x) -> acc + x)"
-             " / (c.nrm * s.nrm)")
-    cdot = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-            "list_transform(range(1, len(s.v) + 1), "
-            "i -> s.v[i] * cc.c[i])), (acc, x) -> acc + x)"
-            " / (s.nrm * cc.nrm)")
-    return f"""pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} < {BENCH_RATE} AS is_suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, is_suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
-{_centroid_core_ctes()},
-ranked AS (
-  SELECT s.vec_id AS s_vec, cc.label AS s_label,
-         ROW_NUMBER() OVER (PARTITION BY s.vec_id
-                            ORDER BY {cdot} DESC, cc.label) AS rk
-  FROM n s CROSS JOIN cn cc WHERE s.is_suite),
-ks AS (SELECT DISTINCT rk AS k FROM ranked),
+    oracle, after _semantic_ctes("topk"): per-k candidate volume over
+    the suite cell ranks (srank) + first-catching-rank recall over the
+    exact schedule's positive pairs."""
+    return f"""ks AS (SELECT DISTINCT rk AS k FROM srank),
 cellcnt AS (
   SELECT label AS s_label, COUNT(*) AS cnt
   FROM n WHERE NOT is_suite GROUP BY label),
 cand AS (
   SELECT ks.k, CAST(SUM(cnt) AS BIGINT) AS candidate_pairs
-  FROM ranked r JOIN cellcnt cc2 ON cc2.s_label = r.s_label
+  FROM srank r JOIN cellcnt cc2 ON cc2.s_label = r.s_label
   JOIN ks ON r.rk <= ks.k GROUP BY ks.k),
 tp AS (
   SELECT c.vec_id, c.label, s.vec_id AS s_vec
-  FROM n c JOIN n s ON s.is_suite
-  WHERE NOT c.is_suite AND {score} >= {SEMANTIC_COSINE_THRESHOLD}),
+  FROM {SEMANTIC_SCHEDULES["exact"].join}
+  WHERE NOT c.is_suite
+    AND {H.cosine_sql('c', 's')} >= {SEMANTIC_COSINE_THRESHOLD}),
 firstk AS (
   SELECT t.vec_id, MIN(r.rk) AS first_k
-  FROM tp t JOIN ranked r ON r.s_vec = t.s_vec AND r.s_label = t.label
+  FROM tp t JOIN srank r ON r.s_vec = t.s_vec AND r.s_label = t.label
   GROUP BY t.vec_id),
 nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM firstk),
 caught AS (
@@ -9070,7 +8521,8 @@ sweep AS (
 
 
 SEMANTIC_SWEEP_SQL = f"""
-WITH {_semantic_sweep_ctes()}
+WITH {_semantic_ctes("topk")},
+{_semantic_sweep_ctes()}
 SELECT * FROM sweep ORDER BY k
 """
 
@@ -9081,8 +8533,7 @@ ORACLES["semantic_probe_recall_sweep"] = SEMANTIC_SWEEP_SQL
 
 def semantic_screen_policy(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
-    """The semantic screen's deployment decision (VERDICT r11 item 2,
-    extended to THREE schedules in r13 per VERDICT r12 item 1 — the
+    """The semantic screen's deployment decision (the
     band_blocking_policy pattern): read the measured frontier and emit
     the schedule this corpus should run.
 
@@ -9100,20 +8551,19 @@ def semantic_screen_policy(spark: SparkSession,
     bookkeeping without savings — dispatch 'exact_screen'. On this
     near-isotropic testdata the top-k schedule prices AT the exact
     volume (cells are signal-free) while the LSH bands price at ~1/3
-    of it with recall above target, so the policy now dispatches
-    'lsh_bands' where round 12 had only the exact fallback — the
-    sub-linear option VERDICT r12 asked for.
+    of it with recall above target, so the policy dispatches
+    'lsh_bands', a sub-linear option where the cell schedules have
+    only the exact fallback.
 
     semantic_screen_artifacts(action) maps the decision to the
     concrete registry queries / stream / actuator seam, pinned
     resolvable by pytest — the same audit -> decision -> deployment
     loop as the banded dedup families.
 
-    Scale shape: one census query by design (r12 verdict's read of the
-    19-shuffle plan stands) — the sweep's exact baseline and the LSH
-    recall's exact baseline are bounded-corpus audit machinery,
-    sampled at 100 TB; the LSH terms reuse the memoized signature
-    table."""
+    Scale shape: one census query by design — the sweep's exact
+    baseline and the LSH recall's exact baseline are bounded-corpus
+    audit machinery, sampled at 100 TB; the LSH terms reuse the
+    memoized signature table."""
     # the sweep output is n_cells rows consumed twice (best row +
     # max-k); materialize it once instead of unrolling the whole sweep
     # plan under each consumer (guide §2.4)
@@ -9126,17 +8576,16 @@ def semantic_screen_policy(spark: SparkSession,
         F.sum(F.when(~F.col("is_suite"), 1).otherwise(0))
         .cast("long").alias("n_corpus"))
     ncells = sweep.agg(F.max("k").cast("int").alias("n_cells"))
-    # LSH pricing off the memoized pair artifacts (VERDICT r15 item 3,
-    # guide §2.4): the band-matched pair table and the exact-positive
-    # pair table already hold everything the two counters need — a
-    # band-matched pair is a candidate, and a band-matched TRUE pair
-    # (cosine >= threshold, the same zip_with fold over the same
-    # arrays) is exactly a pair the screen catches. Set equality, not
-    # approximation: the screen's contaminated set is
-    # {v : EXISTS s. band(v,s) AND cos(v,s) >= t}, every hit is a true
-    # positive by construction, so intersecting with the exact ids (the
-    # old form) is the identity; re-running the banded screen + rescore
-    # here only re-derived rows these artifacts encode.
+    # LSH pricing off the memoized pair artifacts: the
+    # band-matched pair table and the exact-positive pair table already
+    # hold everything the two counters need — a band-matched pair is a
+    # candidate, and a band-matched TRUE pair (cosine >= threshold, the
+    # same zip_with fold over the same arrays) is exactly a pair the
+    # screen catches. Set equality, not approximation: the screen's
+    # contaminated set is {v : EXISTS s. band(v,s) AND cos(v,s) >= t},
+    # every hit is a true positive by construction, so re-running the
+    # banded screen + rescore here would only re-derive rows these
+    # artifacts encode.
     first_band = _lsh_first_band(spark, sf_dir)
     lsh_cand = first_band.agg(
         F.count(F.lit(1)).cast("long").alias("lsh_cand_pairs"))
@@ -9181,9 +8630,8 @@ def semantic_screen_policy(spark: SparkSession,
 
 
 SEMANTIC_POLICY_SQL = f"""
-WITH {_semantic_sweep_ctes()},
-{_lsh_weight_ctes()},
-{_lsh_band_ctes()},
+WITH {_semantic_ctes("topk", "lsh")},
+{_semantic_sweep_ctes()},
 best AS (SELECT * FROM sweep WHERE meets_target ORDER BY k LIMIT 1),
 sizes AS (
   SELECT CAST(SUM(CASE WHEN is_suite THEN 1 ELSE 0 END) AS BIGINT)
@@ -9194,31 +8642,23 @@ sizes AS (
 nc AS (SELECT CAST(MAX(k) AS INT) AS n_cells FROM sweep),
 lshcand AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS lsh_cand_pairs FROM (
-    SELECT DISTINCT cb.vec_id, sb.vec_id AS s_vec
-    FROM bandrows cb
-    JOIN bandrows sb ON sb.band_id = cb.band_id
-                    AND sb.band_val = cb.band_val
-    JOIN n c ON c.vec_id = cb.vec_id
-    JOIN n s ON s.vec_id = sb.vec_id AND s.is_suite
+    SELECT DISTINCT c.vec_id, s.vec_id AS s_vec
+    FROM {SEMANTIC_SCHEDULES["lsh"].join}
     WHERE NOT c.is_suite) x),
 exactids AS (SELECT DISTINCT vec_id FROM tp),
-lshflag AS (
-  SELECT DISTINCT c.vec_id
-  FROM bandrows cb
-  JOIN bandrows sb ON sb.band_id = cb.band_id
-                  AND sb.band_val = cb.band_val
-  JOIN n c ON c.vec_id = cb.vec_id
-  JOIN n s ON s.vec_id = sb.vec_id AND s.is_suite
-  WHERE NOT c.is_suite
-    AND list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])),
-        (acc, x) -> acc + x) / (c.nrm * s.nrm)
-        >= {SEMANTIC_COSINE_THRESHOLD}),
+lshflag AS ({_flagged_sql("lsh")}),
 lcaught AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS lsh_n_caught
   FROM lshflag l JOIN exactids e ON e.vec_id = l.vec_id),
 j AS (
-  SELECT * FROM best CROSS JOIN sizes CROSS JOIN nc
+  SELECT *,
+         CAST(candidate_pairs AS DOUBLE)
+           / CAST(n_corpus * n_suite AS DOUBLE) AS cand_frac,
+         CAST(lsh_n_caught AS DOUBLE)
+           / CAST(NULLIF(n_true, 0) AS DOUBLE) AS lsh_recall,
+         CAST(lsh_cand_pairs AS DOUBLE)
+           / CAST(n_corpus * n_suite AS DOUBLE) AS lsh_frac
+  FROM best CROSS JOIN sizes CROSS JOIN nc
   CROSS JOIN lshcand CROSS JOIN lcaught)
 SELECT n_cells,
        CAST(k AS INT) AS k_star,
@@ -9226,35 +8666,19 @@ SELECT n_cells,
        n_caught,
        recall AS recall_at_k,
        candidate_pairs,
-       CAST(candidate_pairs AS DOUBLE)
-         / CAST(n_corpus * n_suite AS DOUBLE) AS cand_frac,
+       cand_frac,
        lsh_n_caught,
-       CAST(lsh_n_caught AS DOUBLE)
-         / CAST(NULLIF(n_true, 0) AS DOUBLE) AS lsh_recall,
+       lsh_recall,
        lsh_cand_pairs,
-       CAST(lsh_cand_pairs AS DOUBLE)
-         / CAST(n_corpus * n_suite AS DOUBLE) AS lsh_frac,
+       lsh_frac,
        n_corpus * n_suite AS exact_pairs,
-       CASE WHEN (CASE WHEN CAST(lsh_n_caught AS DOUBLE)
-                            / CAST(NULLIF(n_true, 0) AS DOUBLE)
-                            >= {SEMANTIC_RECALL_TARGET}
-                        AND CAST(lsh_cand_pairs AS DOUBLE)
-                            / CAST(n_corpus * n_suite AS DOUBLE)
-                            < CAST(candidate_pairs AS DOUBLE)
-                              / CAST(n_corpus * n_suite AS DOUBLE)
-                   THEN CAST(lsh_cand_pairs AS DOUBLE)
-                        / CAST(n_corpus * n_suite AS DOUBLE)
-                   ELSE CAST(candidate_pairs AS DOUBLE)
-                        / CAST(n_corpus * n_suite AS DOUBLE) END)
+       CASE WHEN (CASE WHEN lsh_recall >= {SEMANTIC_RECALL_TARGET}
+                        AND lsh_frac < cand_frac
+                   THEN lsh_frac ELSE cand_frac END)
                  >= {SEMANTIC_EXACT_CUTOVER}
             THEN 'exact_screen'
-            WHEN CAST(lsh_n_caught AS DOUBLE)
-                 / CAST(NULLIF(n_true, 0) AS DOUBLE)
-                 >= {SEMANTIC_RECALL_TARGET}
-             AND CAST(lsh_cand_pairs AS DOUBLE)
-                 / CAST(n_corpus * n_suite AS DOUBLE)
-                 < CAST(candidate_pairs AS DOUBLE)
-                   / CAST(n_corpus * n_suite AS DOUBLE)
+            WHEN lsh_recall >= {SEMANTIC_RECALL_TARGET}
+             AND lsh_frac < cand_frac
             THEN 'lsh_bands'
             ELSE 'topk_probe' END AS action
 FROM j
@@ -9267,37 +8691,23 @@ ORACLES["semantic_screen_policy"] = SEMANTIC_POLICY_SQL
 
 # Policy action -> the CONCRETE deployment artifacts, the
 # FAMILY_REMEDY_DISPATCH convention transplanted to the semantic screen:
-# batch/incremental are oracle-paired registry queries, stream names a
-# callable in streaming.jobs (the recallk stream's k=None IS the exact
-# screen), actuator entries are (function, call-args string) — the seam
-# a deployment calls to reconfigure. semantic_screen_artifacts() is the
-# tested accessor.
+# batch/incremental/suite_refresh are the action's schedule's registry
+# forms, stream names a callable in streaming.jobs (the recallk stream's
+# k=None IS the exact screen), actuator entries are (function, call-args
+# string) — the seam a deployment calls to reconfigure.
+# semantic_screen_artifacts() is the tested accessor.
 SEMANTIC_SCREEN_DISPATCH = {
-    "topk_probe": {
-        "policy": "semantic_screen_policy",
-        "batch": "decontaminate_embedding_recallk",
-        "incremental": "decontaminate_embedding_recallk_incremental",
-        "suite_refresh": "decontaminate_embedding_suite_refresh",
-        "stream": "stream_semantic_recallk_decontaminate",
-        "actuator": ("_suite_probe_expansion",
-                     "suite, cents, k=SEMANTIC_PROBE_K"),
-    },
-    "exact_screen": {
-        "policy": "semantic_screen_policy",
-        "batch": "decontaminate_embedding_exact",
-        "incremental": "decontaminate_embedding_exact_incremental",
-        "suite_refresh": "decontaminate_embedding_exact_suite_refresh",
-        "stream": "stream_semantic_recallk_decontaminate",
-        "actuator": ("_suite_probe_expansion", "suite, cents, k=None"),
-    },
-    "lsh_bands": {
-        "policy": "semantic_screen_policy",
-        "batch": "decontaminate_embedding_lsh",
-        "incremental": "decontaminate_embedding_lsh_incremental",
-        "suite_refresh": "decontaminate_embedding_lsh_suite_refresh",
-        "stream": "stream_semantic_lsh_decontaminate",
-        "actuator": ("_lsh_sign_frame", "spark, frame, dim"),
-    },
+    action: {"policy": "semantic_screen_policy",
+             **SEMANTIC_SCHEDULES[schedule].forms,
+             "stream": stream, "actuator": actuator}
+    for action, schedule, stream, actuator in (
+        ("topk_probe", "topk", "stream_semantic_recallk_decontaminate",
+         ("_suite_probe_expansion", "suite, cents, k=SEMANTIC_PROBE_K")),
+        ("exact_screen", "exact", "stream_semantic_recallk_decontaminate",
+         ("_suite_probe_expansion", "suite, cents, k=None")),
+        ("lsh_bands", "lsh", "stream_semantic_lsh_decontaminate",
+         ("_lsh_sign_frame", "spark, frame, dim")),
+    )
 }
 
 
@@ -9333,8 +8743,7 @@ def _embedding_suite_hits(spark: SparkSession, sf_dir: str,
     the NEW suite, prior old-suite columns recomputed as the
     deterministic stand-in) — so the incremental output IS the batch
     output plus the phase label, computed in the SAME single-join plan
-    (the strip-spans r10 collapse applied from birth instead of
-    retrofitted)."""
+    (the strip-spans collapse)."""
     n = _multisuite_flagged_embeddings(spark, sf_dir)
     suites = (n.filter(F.col("suite") < N_BENCH_SUITES)
               .select(F.col("suite").alias("s_suite"),
@@ -9353,14 +8762,12 @@ def semantic_multisuite_frame(corpus: DataFrame, suites: DataFrame,
     s_label, sv, snrm): one broadcast same-cell join, one conditional
     aggregate with a per-suite hit column, for the batch, incremental
     and streaming forms."""
-    dot = ("aggregate(zip_with(v, sv, (x, y) -> x * y), "
-           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
     scored = (
         corpus.join(F.broadcast(suites),
                     F.col("label") == F.col("s_label"), "left")
         .select("vec_id", "s_suite",
                 F.when(F.col("snrm").isNotNull(),
-                       F.expr(dot) / (F.col("nrm") * F.col("snrm")))
+                       F.expr(_SV_DOT) / (F.col("nrm") * F.col("snrm")))
                 .alias("cosine")))
     cols = [f"n_hits_suite{k}" for k in range(N_BENCH_SUITES)]
     agg = (
@@ -9411,10 +8818,7 @@ def decontaminate_embedding_multisuite_incremental(
 def _embedding_multisuite_oracle(with_phase: bool) -> str:
     cols = [f"n_hits_suite{k}" for k in range(N_BENCH_SUITES)]
     sums = ",\n         ".join(
-        f"CAST(SUM(CASE WHEN s.suite = {k} AND "
-        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(range(1, len(c.v) + 1), i -> c.v[i] * s.v[i])), "
-        f"(acc, x) -> acc + x) / (c.nrm * s.nrm)"
+        f"CAST(SUM(CASE WHEN s.suite = {k} AND {H.cosine_sql('c', 's')}"
         f" >= {SEMANTIC_COSINE_THRESHOLD} THEN 1 ELSE 0 END) AS BIGINT)"
         f" AS {cols[k]}" for k in range(N_BENCH_SUITES))
     any_pred = " OR ".join(f"COALESCE(h.{c}, 0) >= 1" for c in cols)
@@ -9422,17 +8826,7 @@ def _embedding_multisuite_oracle(with_phase: bool) -> str:
              f"{INCREMENTAL_NEW} THEN 'ingest' ELSE 'backfill' END"
              " AS phase,\n       " if with_phase else "")
     return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         {key_hash('vec_id')} % {SUITE_SLICE_MOD} AS suite
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v, suite,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
+WITH {H.normed_ctes(suite=f"{key_hash('vec_id')} % {SUITE_SLICE_MOD}")},
 hits AS (
   SELECT c.vec_id,
          {sums}

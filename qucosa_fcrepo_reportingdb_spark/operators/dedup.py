@@ -517,8 +517,7 @@ def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normed_embedding_frame(t(spark, sf_dir, "embeddings"))
 
 
-_DOT = ("aggregate(zip_with(a.v, b.v, (x, y) -> x * y), "
-        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
+_DOT = H.dot("a.v", "b.v", "spark")
 
 
 # Pair-space salt: the block id (label) has LOW cardinality by design —
@@ -602,24 +601,11 @@ def cosine_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_COSINE_SQL = f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0)
+WITH {H.normed_ctes()}
 SELECT a.vec_id AS v1, b.vec_id AS v2,
-       list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])),
-           (acc, x) -> acc + x) / (a.nrm * b.nrm) AS cosine
+       {H.cosine_sql('a', 'b')} AS cosine
 FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])),
-          (acc, x) -> acc + x) / (a.nrm * b.nrm) >= {COSINE_THRESHOLD}
+WHERE {H.cosine_sql('a', 'b')} >= {COSINE_THRESHOLD}
 ORDER BY v1, v2
 """
 
@@ -709,8 +695,7 @@ def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label", "vec_id", F.col("a.v").alias("v"),
             F.col("a.nrm").alias("nrm"),
-            (F.expr("aggregate(zip_with(a.v, c.c, (x, y) -> x * y), "
-                    "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
+            (F.expr(H.dot("a.v", "c.c", "spark"))
              / (F.col("a.nrm") * F.col("c.cnrm"))).alias("cos_centroid"),
         )
         # both the keeper branch and the verdict join consume scored;
@@ -729,8 +714,7 @@ def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(keepers.alias("k")), "label")
         .select(
             "vec_id", "label", "cos_centroid", "keeper_id",
-            (F.expr("aggregate(zip_with(s.v, k.kv, (x, y) -> x * y), "
-                    "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
+            (F.expr(H.dot("s.v", "k.kv", "spark"))
              / (F.col("s.nrm") * F.col("k.knrm"))).alias("cos_keeper"),
         )
         .withColumn(
@@ -746,16 +730,7 @@ def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The centroid CTEs mirror plans/advanced.IVF_CENTROIDS_SQL's exact
 # split-integer mean so the array values are bit-identical to Spark's.
 SEMDEDUP_SQL = f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
+WITH {H.normed_ctes()},
 split AS (
   SELECT label, CAST(u.i - 1 AS INT) AS dim,
          CAST(CAST(floor(CAST(u.x AS DOUBLE) * {2 ** 22}.0) AS BIGINT)
@@ -782,9 +757,7 @@ cn AS (
   FROM carr),
 scored AS (
   SELECT n.vec_id, n.label, n.v, n.nrm,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(n.v) + 1), i -> n.v[i] * cn.c[i])),
-             (acc, x) -> acc + x) / (n.nrm * cn.cnrm) AS cos_centroid
+         {H.dot('n.v', 'cn.c', 'duck')} / (n.nrm * cn.cnrm) AS cos_centroid
   FROM n JOIN cn USING (label)),
 keeper AS (
   SELECT label, vec_id AS keeper_id, v AS kv, nrm AS knrm
@@ -792,14 +765,9 @@ keeper AS (
                   ORDER BY cos_centroid DESC, vec_id) AS r FROM scored)
   WHERE r = 1)
 SELECT s.vec_id, s.label, s.cos_centroid, k.keeper_id,
-       list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           list_transform(range(1, len(s.v) + 1), i -> s.v[i] * k.kv[i])),
-           (acc, x) -> acc + x) / (s.nrm * k.knrm) AS cos_keeper,
+       {H.dot('s.v', 'k.kv', 'duck')} / (s.nrm * k.knrm) AS cos_keeper,
        CAST(CASE WHEN s.vec_id = k.keeper_id
-                   OR list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                        list_transform(range(1, len(s.v) + 1),
-                                       i -> s.v[i] * k.kv[i])),
-                        (acc, x) -> acc + x) / (s.nrm * k.knrm)
+                   OR {H.dot('s.v', 'k.kv', 'duck')} / (s.nrm * k.knrm)
                       < {SEMDEDUP_THRESHOLD}
             THEN 1 ELSE 0 END AS BIGINT) AS keep
 FROM scored s JOIN keeper k USING (label)
@@ -2479,22 +2447,11 @@ def cosine_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COSINE_SCORED_CTES = """
-pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-nn AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
+_COSINE_SCORED_CTES = f"""
+{H.normed_ctes("nn")},
 scored AS (
   SELECT a.vec_id AS v1, b.vec_id AS v2,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])),
-             (acc, x) -> acc + x) / (a.nrm * b.nrm) AS cosine
+         {H.cosine_sql('a', 'b')} AS cosine
   FROM nn a JOIN nn b ON a.label = b.label AND a.vec_id < b.vec_id)
 """
 
@@ -3858,28 +3815,15 @@ def dedup_embedding_incremental(spark: SparkSession,
 
 
 DEDUP_EMBEDDING_INCREMENTAL_SQL = f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0)
+WITH {H.normed_ctes()}
 SELECT a.vec_id AS new_id, b.vec_id AS dup_of,
-       list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])),
-           (acc, x) -> acc + x) / (a.nrm * b.nrm) AS cosine
+       {H.cosine_sql('a', 'b')} AS cosine
 FROM n a JOIN n b ON a.label = b.label
  AND a.vec_id != b.vec_id
  AND a.vec_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}
  AND (b.vec_id % {INCREMENTAL_MOD} < {INCREMENTAL_NEW}
       OR a.vec_id < b.vec_id)
-WHERE list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i])),
-          (acc, x) -> acc + x) / (a.nrm * b.nrm) >= {COSINE_THRESHOLD}
+WHERE {H.cosine_sql('a', 'b')} >= {COSINE_THRESHOLD}
 ORDER BY new_id, dup_of
 """
 

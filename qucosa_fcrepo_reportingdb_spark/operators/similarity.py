@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from qucosa_fcrepo_reportingdb_spark.functions import hashing as H
 from qucosa_fcrepo_reportingdb_spark.memo import (
     cut_lineage,
     session_memo,
@@ -30,8 +31,7 @@ from qucosa_fcrepo_reportingdb_spark.plans.common import fan_out, t
 TOP_K = 10
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 
-_DOT = ("aggregate(zip_with(q.v, c.v, (x, y) -> x * y), "
-        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
+_DOT = H.dot("q.v", "c.v", "spark")
 
 _NORMED = (
     "sqrt(aggregate(transform(v, x -> x * x), CAST(0 AS DOUBLE), "
@@ -87,21 +87,10 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle(cell_filter: str) -> str:
     return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
+WITH {H.normed_ctes()},
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i])),
-             (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cosine
+         {H.cosine_sql('q', 'c')} AS cosine
   FROM n q JOIN n c ON q.vec_id != c.vec_id {cell_filter}
   WHERE q.vec_id < {N_QUERIES}),
 ranked AS (
@@ -215,23 +204,12 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_LSH_SQL = f"""
-WITH pre AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-n AS (
-  SELECT vec_id, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
+WITH {H.normed_ctes()},
 coded AS (
   SELECT vec_id, v, nrm, {_lsh_code('duck')} AS code FROM n),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i])),
-             (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cosine
+         {H.cosine_sql('q', 'c')} AS cosine
   FROM coded q JOIN coded c
     ON q.code = c.code AND q.vec_id != c.vec_id
   WHERE q.vec_id < {N_QUERIES}),
@@ -316,16 +294,7 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_LSH_MULTIPROBE_SQL = f"""
-WITH pre AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-n AS (
-  SELECT vec_id, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
+WITH {H.normed_ctes()},
 coded AS (
   SELECT vec_id, v, nrm, {_lsh_code('duck')} AS code FROM n),
 probes AS (
@@ -333,9 +302,7 @@ probes AS (
   FROM coded WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i])),
-             (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cosine
+         {H.cosine_sql('q', 'c')} AS cosine
   FROM probes q JOIN coded c
     ON q.probe = c.code AND q.vec_id != c.vec_id),
 ranked AS (
@@ -914,23 +881,12 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 HARD_NEGATIVE_SQL = f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
+WITH {H.normed_ctes()},
 coded AS (
   SELECT vec_id, label, v, nrm, {_lsh_code('duck')} AS code FROM n),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i])),
-             (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cosine
+         {H.cosine_sql('q', 'c')} AS cosine
   FROM coded q JOIN coded c
     ON q.code = c.code AND q.vec_id != c.vec_id AND q.label != c.label
   WHERE q.vec_id < {N_QUERIES}),
@@ -1134,24 +1090,13 @@ def _sampled_audit_oracle() -> str:
 
     pred = (f"(({key_hash('vec_id')}) % {ANN_SAMPLE_MOD} = 0 "
             f"OR vec_id < {N_QUERIES})")
-    dot = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-           "list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i])), "
-           "(acc, x) -> acc + x) / (q.nrm * c.nrm)")
+    dot = H.cosine_sql("q", "c")
     rank_tail = (
         "SELECT query_id, neighbor_id FROM (SELECT *, ROW_NUMBER() OVER "
         "(PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank "
         "FROM {src}) r WHERE rank <= " + str(TOP_K))
     return f"""
-WITH pre AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-n0 AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
-  FROM pre
-  WHERE nrm > 0),
+WITH {H.normed_ctes("n0")},
 n AS (SELECT * FROM n0 WHERE {pred}),
 coded AS (SELECT vec_id, label, v, nrm, {_lsh_code('duck')} AS code FROM n),
 s_exact AS (
@@ -1277,9 +1222,7 @@ def assign_to_centroids(vecs: DataFrame, cents: DataFrame) -> DataFrame:
         .selectExpr(
             "q.vec_id AS vec_id", "q.src_label AS src_label",
             "c.label AS cell",
-            "aggregate(zip_with(q.v, c.c, (x, y) -> x * y),"
-            " CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-            " / (q.nrm * c.cnrm) AS cosine"))
+            f"{H.dot('q.v', 'c.c', 'spark')} / (q.nrm * c.cnrm) AS cosine"))
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"),
                                              F.asc("cell"))
     return (
@@ -1360,9 +1303,7 @@ incn AS (
   WHERE nrm > 0),
 scored AS (
   SELECT q.vec_id, q.src_label, c.label AS cell,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.c[i])),
-             (acc, x) -> acc + x) / (q.nrm * c.cnrm) AS cosine
+         {H.dot('q.v', 'c.c', 'duck')} / (q.nrm * c.cnrm) AS cosine
   FROM incn q CROSS JOIN cn c),
 ranked AS (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1442,9 +1383,7 @@ def ivf_cell_similarity_matrix(spark: SparkSession,
         .filter(F.col("cell_a") < F.col("cell_b"))
         .selectExpr(
             "cell_a", "cell_b",
-            "aggregate(zip_with(ca, cb, (x, y) -> x * y),"
-            " CAST(0 AS DOUBLE), (acc, x) -> acc + x) / (na * nb)"
-            " AS centroid_cosine")
+            f"{H.dot('ca', 'cb', 'spark')} / (na * nb) AS centroid_cosine")
         .orderBy("cell_a", "cell_b")
     )
 
@@ -1474,9 +1413,7 @@ cn AS (
               list_transform(c, x -> x * x)), (acc, x) -> acc + x)) AS nrm
   FROM cents)
 SELECT a.label AS cell_a, b.label AS cell_b,
-       list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           list_transform(range(1, len(a.c) + 1), i -> a.c[i] * b.c[i])),
-           (acc, x) -> acc + x) / (a.nrm * b.nrm) AS centroid_cosine
+       {H.dot('a.c', 'b.c', 'duck')} / (a.nrm * b.nrm) AS centroid_cosine
 FROM cn a JOIN cn b ON a.label < b.label
 ORDER BY cell_a, cell_b
 """
@@ -1532,9 +1469,7 @@ def ivf_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cell") != F.col("other"))
         .selectExpr(
             "cell", "other",
-            "aggregate(zip_with(ca, cb, (x, y) -> x * y),"
-            " CAST(0 AS DOUBLE), (acc, x) -> acc + x) / (na * nb)"
-            " AS cosine")
+            f"{H.dot('ca', 'cb', 'spark')} / (na * nb) AS cosine")
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") == 1)
         .select(F.col("cell").alias("label"),
@@ -1597,9 +1532,7 @@ cn AS (
   FROM cents),
 pairs AS (
   SELECT a.label AS cell, b.label AS other,
-         list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, len(a.c) + 1), i -> a.c[i] * b.c[i])),
-             (acc, x) -> acc + x) / (a.nrm * b.nrm) AS cosine
+         {H.dot('a.c', 'b.c', 'duck')} / (a.nrm * b.nrm) AS cosine
   FROM cn a JOIN cn b ON a.label <> b.label),
 nearest AS (
   SELECT cell AS label, other AS nearest_cell, cosine AS nearest_cosine

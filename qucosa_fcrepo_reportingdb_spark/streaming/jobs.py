@@ -1687,7 +1687,8 @@ def stream_semantic_decontaminate(spark: SparkSession, source_dir: str,
                                   schema: "T.StructType | None" = None):
     """Streaming twin of corpus.decontaminate_embedding: suite vectors
     merge into the state, corpus vectors screen against it through
-    semantic_screen_frame, the batch operator's join body. The suite is
+    semantic_screen_frame, which runs the batch operator's verdict body
+    (semantic_verdicts). The suite is
     an eval benchmark and broadcasts; only the batch's vectors are
     normed."""
     def verdict(n: DataFrame, state: DataFrame) -> DataFrame:

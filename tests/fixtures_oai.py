@@ -74,6 +74,18 @@ ERROR_BAD_TOKEN = f"""<?xml version="1.0" encoding="UTF-8"?>
 </OAI-PMH>
 """
 
+# Shape per multipleErrors.xml: one page carrying four error codes.
+ERROR_MULTIPLE = f"""<?xml version="1.0" encoding="UTF-8"?>
+<OAI-PMH {OAI_NS}>
+  <responseDate>2016-07-26T18:07:24Z</responseDate>
+  <request verb="ListIdentifiers">http://localhost:8080/fedora/oai</request>
+  <error code="badArgument">Illegal or missing argument.</error>
+  <error code="badVerb">Illegal verb.</error>
+  <error code="cannotDisseminateFormat">Unsupported metadataPrefix.</error>
+  <error code="noSetHierarchy">Sets are not supported.</error>
+</OAI-PMH>
+"""
+
 # Filter corpus: mix of real documents and Fedora system objects
 # (shape per ListIdentifiersToFilter.xml: regex .+qucosa:\d+ keeps 6 of 13).
 def filter_corpus() -> str:

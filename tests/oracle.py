@@ -20,6 +20,7 @@ math, deterministic tie-breaks)."""
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import math
 from decimal import Decimal
 
@@ -115,6 +116,10 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> dict:
               "banned_types": banned}
     sc, srows = _canonical_pdf(s_pdf)
     dc, drows = _canonical_pdf(d_pdf)
+    # short fingerprint of the oracle's canonical rows: two trees whose
+    # oracle SQL differs in text must still print the same digest
+    result["digest"] = hashlib.sha256(
+        repr((dc, drows)).encode()).hexdigest()[:16]
     result["columns_match"] = sc == dc
     result["count_match"] = len(srows) == len(drows)
     result["values_match"] = srows == drows

@@ -1,6 +1,8 @@
 """Standalone oracle-check runner: python tests/run_oracle_check.py [sf_dir]
 Compares every registered query against its DuckDB oracle and prints a
-one-line verdict per query."""
+one-line verdict per query, with a short sha256 digest of the oracle's
+canonical rows (``digest=``): diffing the digests of two trees shows
+whether an oracle rewrite changed any output."""
 
 import os
 import sys
@@ -36,7 +38,8 @@ def main():
             r = compare(df, con, oracles[name])
             status = "OK " if r["ok"] else "FAIL"
             line = (f"{name:36s} {status} rows={r['rows_spark']}/"
-                    f"{r['rows_duckdb']} ({time.time()-t0:.1f}s)")
+                    f"{r['rows_duckdb']} digest={r['digest']} "
+                    f"({time.time()-t0:.1f}s)")
             if not r["ok"]:
                 failures += 1
                 line += "\n    " + r.get("detail", "")[:500]

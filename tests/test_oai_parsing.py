@@ -3,6 +3,7 @@
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from qucosa_fcrepo_reportingdb_spark.functions.filters import qucosa_document_filter
@@ -12,6 +13,9 @@ from qucosa_fcrepo_reportingdb_spark.functions.mets_xml import (
 from qucosa_fcrepo_reportingdb_spark.functions.oai_xml import (
     explode_headers,
     parse_oai_pages,
+)
+from qucosa_fcrepo_reportingdb_spark.functions.timestamps import (
+    parse_xsd_datetime,
 )
 from tests import fixtures_oai as fx
 
@@ -29,6 +33,17 @@ def test_x1_headers_extracted(spark):
         ("oai:example.org:qucosa:1234", datetime(2016, 7, 12, 17, 33, 25),
          ["test:11", "test:22"], True),
     ]
+
+
+def test_x2_bad_token_and_multiple_errors(spark):
+    """The reference's other error pages (errorBadResumptionToken.xml,
+    multipleErrors.xml, asserted at OaiHarvesterTest.java): every code
+    of a page lands in the errors map."""
+    bad = parse(spark, fx.ERROR_BAD_TOKEN).collect()[0]
+    assert list(bad.errors) == ["badResumptionToken"]
+    multi = parse(spark, fx.ERROR_MULTIPLE).collect()[0]
+    assert set(multi.errors) == {"badArgument", "badVerb",
+                                 "cannotDisseminateFormat", "noSetHierarchy"}
 
 
 def test_x3_response_date(spark):
@@ -241,3 +256,35 @@ def test_mets_extraction_ignores_foreign_namespace_collisions(spark):
     row2 = extract_mets_metadata(df2, "xml").collect()[0]
     assert (row2.mandator, row2.document_type,
             row2.distribution_date_raw) == ("SLUB", "issue", "2008-08-04")
+
+
+# The reference's METS golden tuples (MetsProcessorTest.java:91-306,
+# FIXTURES.md sections 3 and 5): mandator, document type and the UTC
+# distribution date of qucosa13, qucosa22, qucosa7455 (no-colon offset
+# +0200) and qucosa31790.
+@pytest.mark.parametrize("mandator,doc_type,raw,expected", [
+    ("SLUB", "issue", "2008-08-04", datetime(2008, 8, 4)),
+    ("TU Dresden", "issue", "2011-03-31", datetime(2011, 3, 31)),
+    ("slub", "in_book", "2016-05-24T12:33:56+0200",
+     datetime(2016, 5, 24, 10, 33, 56)),
+    ("slub", "article", "2016-10-10T11:27:33+0200",
+     datetime(2016, 10, 10, 9, 27, 33)),
+], ids=["qucosa13", "qucosa22", "qucosa7455", "qucosa31790"])
+def test_mets_golden_tuples(spark, mandator, doc_type, raw, expected):
+    xml = fx.mets_document(mandator, doc_type, raw, mods_prefix="mods")
+    df = spark.createDataFrame([(xml,)], "xml string")
+    raw_date = F.col("distribution_date_raw")
+    row = (extract_mets_metadata(df, "xml")
+           .withColumn("dd", parse_xsd_datetime(raw_date)).collect()[0])
+    assert (row.mandator, row.document_type, row.dd) == \
+        (mandator, doc_type, expected)
+
+
+def test_mets_incomplete_document_rejected(spark):
+    """qucosa31789 lacks metsHdr and div/@TYPE: neither field extracts
+    (FIXTURES.md section 5: such a record is rejected, not stored with
+    nulls)."""
+    xml = fx.mets_document(None, None, "2016-10-10")
+    df = spark.createDataFrame([(xml,)], "xml string")
+    row = extract_mets_metadata(df, "xml").collect()[0]
+    assert row.mandator is None and row.document_type is None

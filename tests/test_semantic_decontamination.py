@@ -104,17 +104,36 @@ def test_semantic_no_candidate_sentinel(spark, tmp_path):
     assert not rows[1].contaminated
 
 
-def test_incremental_equals_batch_on_incoming(spark):
+def test_every_semantic_schedule_form_is_registered():
+    """Each (schedule, form) of the schedule table is a registry query
+    with a DuckDB oracle: a form added to the table without its named
+    entry fails here."""
+    assert len(C._SEMANTIC_FORMS) == 12
+    for name in C._SEMANTIC_FORMS:
+        assert name in C.QUERIES and name in C.ORACLES, name
+        assert C.QUERIES[name].__name__ == name
+    # each release form has its own named path-equivalence test below
+    assert {name for name, s in C.SEMANTIC_SCHEDULES.items()
+            if "suite_refresh" in s.forms} == {"topk", "exact", "lsh"}
+
+
+@pytest.mark.parametrize("schedule", [
+    name for name, s in C.SEMANTIC_SCHEDULES.items()
+    if "incremental" in s.forms])
+def test_semantic_incremental_equals_batch_on_incoming(spark, schedule):
+    """Every semantic schedule's delta-ingest form: each row is the
+    batch screen's row for an incoming id, and the output covers EVERY
+    incoming corpus vector."""
+    forms = C.SEMANTIC_SCHEDULES[schedule].forms
     batch = {r.vec_id: r for r in
-             C.decontaminate_embedding(spark, SF_DIR).collect()}
-    inc = C.decontaminate_embedding_incremental(spark, SF_DIR).collect()
+             C.QUERIES[forms["batch"]](spark, SF_DIR).collect()}
+    inc = C.QUERIES[forms["incremental"]](spark, SF_DIR).collect()
     assert len(inc) > 0
     for r in inc:
         assert r.vec_id % C.INCREMENTAL_MOD >= C.INCREMENTAL_NEW
         b = batch[r.vec_id]
         assert (r.n_hits, r.max_cosine, r.contaminated) == \
             (b.n_hits, b.max_cosine, b.contaminated)
-    # and the incremental output covers EVERY incoming corpus vector
     incoming_ids = {v for v in batch
                     if v % C.INCREMENTAL_MOD >= C.INCREMENTAL_NEW}
     assert {r.vec_id for r in inc} == incoming_ids
@@ -345,27 +364,10 @@ def test_recallk_catches_cross_cell_paraphrase(spark, tmp_path):
     assert recallk[1].asDict().keys() == single[1].asDict().keys()
 
 
-def test_recallk_incremental_equals_batch_on_incoming(spark):
-    batch = {r.vec_id: r for r in
-             C.decontaminate_embedding_recallk(spark, SF_DIR).collect()}
-    inc = C.decontaminate_embedding_recallk_incremental(
-        spark, SF_DIR).collect()
-    assert len(inc) > 0
-    for r in inc:
-        assert r.vec_id % C.INCREMENTAL_MOD >= C.INCREMENTAL_NEW
-        b = batch[r.vec_id]
-        assert (r.n_hits, r.max_cosine, r.contaminated) == \
-            (b.n_hits, b.max_cosine, b.contaminated)
-    incoming_ids = {v for v in batch
-                    if v % C.INCREMENTAL_MOD >= C.INCREMENTAL_NEW}
-    assert {r.vec_id for r in inc} == incoming_ids
-
-
 def test_exact_screen_is_recall_one_and_contains_every_schedule(spark):
     """decontaminate_embedding_exact IS the audit's brute-force truth:
     its flag set equals the exact positives (recall 1.0 by
-    construction), and every blocked schedule's flags are a subset.
-    Its incremental form is row-identical on incoming ids."""
+    construction), and every blocked schedule's flags are a subset."""
     exact = {r.vec_id for r in
              C.decontaminate_embedding_exact(spark, SF_DIR).collect()
              if r.contaminated}
@@ -379,15 +381,6 @@ def test_exact_screen_is_recall_one_and_contains_every_schedule(spark):
         flagged = {r.vec_id for r in fn(spark, SF_DIR).collect()
                    if r.contaminated}
         assert flagged <= exact, fn.__name__
-    batch = {r.vec_id: r for r in
-             C.decontaminate_embedding_exact(spark, SF_DIR).collect()}
-    inc = C.decontaminate_embedding_exact_incremental(
-        spark, SF_DIR).collect()
-    assert len(inc) > 0
-    for r in inc:
-        b = batch[r.vec_id]
-        assert (r.n_hits, r.max_cosine, r.contaminated) == \
-            (b.n_hits, b.max_cosine, b.contaminated)
 
 
 def test_exact_family_keeps_corpus_on_empty_suite(spark, tmp_path):
@@ -546,48 +539,6 @@ def test_lsh_band_sweep_frontier_and_production_point(spark):
     pol = C.semantic_screen_policy(spark, SF_DIR).collect()[0]
     assert last.candidate_pairs == pol.lsh_cand_pairs
     assert last.n_true == pol.n_true
-
-
-def test_lsh_incremental_equals_batch_on_incoming(spark):
-    batch = {r.vec_id: r for r in
-             C.decontaminate_embedding_lsh(spark, SF_DIR).collect()}
-    inc = C.decontaminate_embedding_lsh_incremental(
-        spark, SF_DIR).collect()
-    assert len(inc) > 0
-    for r in inc:
-        assert r.vec_id % C.INCREMENTAL_MOD >= C.INCREMENTAL_NEW
-        b = batch[r.vec_id]
-        assert (r.n_hits, r.max_cosine, r.contaminated) == \
-            (b.n_hits, b.max_cosine, b.contaminated)
-    incoming_ids = {v for v in batch
-                    if v % C.INCREMENTAL_MOD >= C.INCREMENTAL_NEW}
-    assert {r.vec_id for r in inc} == incoming_ids
-
-
-def test_lsh_suite_refresh_is_batch_plus_phase(spark):
-    """Path equivalence for the angle-keyed screen's suite-refresh
-    form (both growth events now covered for every policy schedule):
-    each row equals the batch LSH screen's row plus the phase label
-    and the new-release attribution, the attribution never exceeds the
-    total (disjoint old/new suite split — n_hits decomposes exactly),
-    and both phases plus both attribution outcomes are exercised."""
-    batch = {r.vec_id: r for r in
-             C.decontaminate_embedding_lsh(spark, SF_DIR).collect()}
-    ref = C.decontaminate_embedding_lsh_suite_refresh(
-        spark, SF_DIR).collect()
-    assert len(ref) == len(batch) > 0
-    for r in ref:
-        b = batch[r.vec_id]
-        assert (r.n_hits, r.max_cosine, r.contaminated) == \
-            (b.n_hits, b.max_cosine, b.contaminated)
-        assert 0 <= r.n_hits_new_suite <= r.n_hits
-        want = ("ingest" if r.vec_id % C.INCREMENTAL_MOD
-                >= C.INCREMENTAL_NEW else "backfill")
-        assert r.phase == want
-    assert {r.phase for r in ref} == {"ingest", "backfill"}
-    assert any(r.n_hits_new_suite >= 1 for r in ref)
-    assert any(r.n_hits > r.n_hits_new_suite >= 0 for r in ref
-               if r.contaminated)
 
 
 def test_lsh_weights_and_bands_pin(spark):
@@ -752,58 +703,6 @@ def test_stream_recallk_matches_batch_and_exact_via_k_none(
     expected_exact = sorted(map(tuple, C.decontaminate_embedding_exact(
         spark, SF_DIR).collect()))
     assert got_exact == expected_exact and len(got_exact) > 0
-
-
-def test_suite_refresh_is_recallk_batch_plus_phase(spark):
-    """Path equivalence for the single-suite refresh (VERDICT r11 item
-    6): every row equals the batch recallk screen's row plus the phase
-    label and the new-suite attribution — the disjoint old/new suite
-    split loses nothing — and the backfill bill decomposes onto
-    n_hits_new_suite (what a deployment actually recomputes on a
-    benchmark release)."""
-    batch = {r.vec_id: r for r in
-             C.decontaminate_embedding_recallk(spark, SF_DIR).collect()}
-    ref = C.decontaminate_embedding_suite_refresh(spark, SF_DIR).collect()
-    assert len(ref) == len(batch) > 0
-    for r in ref:
-        b = batch[r.vec_id]
-        assert (r.n_hits, r.max_cosine, r.contaminated) == \
-            (b.n_hits, b.max_cosine, b.contaminated)
-        assert 0 <= r.n_hits_new_suite <= r.n_hits
-        want = ("ingest" if r.vec_id % C.INCREMENTAL_MOD
-                >= C.INCREMENTAL_NEW else "backfill")
-        assert r.phase == want
-    # both growth events and both attribution outcomes are exercised
-    assert {r.phase for r in ref} == {"ingest", "backfill"}
-    assert any(r.n_hits_new_suite >= 1 for r in ref)
-    assert any(r.n_hits > r.n_hits_new_suite >= 0 for r in ref
-               if r.contaminated)
-
-
-def test_exact_suite_refresh_is_exact_batch_plus_phase(spark):
-    """The same pins for the EXACT schedule's release event (VERDICT
-    r13 item 4's sweep — the last semantic schedule without one):
-    every row equals the batch exact screen's row plus the phase label
-    and new-suite attribution, the disjoint old/new split decomposes
-    n_hits exactly, and recall stays 1.0 by construction (every flag
-    the batch exact screen raises survives the refresh form)."""
-    batch = {r.vec_id: r for r in
-             C.decontaminate_embedding_exact(spark, SF_DIR).collect()}
-    ref = C.decontaminate_embedding_exact_suite_refresh(
-        spark, SF_DIR).collect()
-    assert len(ref) == len(batch) > 0
-    for r in ref:
-        b = batch[r.vec_id]
-        assert (r.n_hits, r.max_cosine, r.contaminated) == \
-            (b.n_hits, b.max_cosine, b.contaminated)
-        assert 0 <= r.n_hits_new_suite <= r.n_hits
-        want = ("ingest" if r.vec_id % C.INCREMENTAL_MOD
-                >= C.INCREMENTAL_NEW else "backfill")
-        assert r.phase == want
-    assert {r.phase for r in ref} == {"ingest", "backfill"}
-    assert any(r.n_hits_new_suite >= 1 for r in ref)
-    assert any(r.n_hits > r.n_hits_new_suite >= 0 for r in ref
-               if r.contaminated)
 
 
 def test_phash_screen_catches_reencoded_asset_exactly(spark):
@@ -1153,31 +1052,69 @@ def test_stream_perceptual_decontaminate_matches_batch(
 ])
 def test_suite_refresh_is_batch_plus_phase_all_modalities(
         spark, batch_fn, refresh_fn, count_col, new_col, ingest_mod):
-    """The suite-refresh story completed across every screen modality
-    (the embedding test's pins transplanted): each refresh row equals
-    the batch screen's row plus the phase label and the new-release
-    attribution, the attribution never exceeds the total (the old/new
-    suite split is disjoint — n decomposes exactly), and both growth
-    events plus both attribution outcomes are exercised."""
+    """The suite-refresh story across every screen modality: each
+    refresh row equals the batch screen's row plus the phase label and
+    the new-release attribution, the attribution never exceeds the
+    total (the old/new suite split is disjoint — n decomposes exactly),
+    and both growth events plus both attribution outcomes are
+    exercised."""
+    _assert_refresh_is_batch_plus_phase(
+        spark, batch_fn, refresh_fn, count_col, new_col, ingest_mod)
+
+
+def _assert_semantic_refresh_is_batch_plus_phase(spark, schedule):
+    forms = C.SEMANTIC_SCHEDULES[schedule].forms
+    _assert_refresh_is_batch_plus_phase(
+        spark, forms["batch"], forms["suite_refresh"],
+        "n_hits", "n_hits_new_suite", 10)
+
+
+def test_suite_refresh_is_recallk_batch_plus_phase(spark):
+    """Path equivalence for the top-k schedule's single-suite refresh:
+    every row equals the batch recallk screen's row plus the phase
+    label and the new-suite attribution — the disjoint old/new suite
+    split loses nothing — and the backfill bill decomposes onto
+    n_hits_new_suite (what a deployment actually recomputes on a
+    benchmark release)."""
+    _assert_semantic_refresh_is_batch_plus_phase(spark, "topk")
+
+
+def test_exact_suite_refresh_is_exact_batch_plus_phase(spark):
+    """The same pins for the exact schedule's release event: the
+    disjoint old/new split decomposes n_hits exactly, and recall stays
+    1.0 by construction (every flag the batch exact screen raises
+    survives the refresh form)."""
+    _assert_semantic_refresh_is_batch_plus_phase(spark, "exact")
+
+
+def test_lsh_suite_refresh_is_batch_plus_phase(spark):
+    """The same pins for the angle-keyed screen's release event."""
+    _assert_semantic_refresh_is_batch_plus_phase(spark, "lsh")
+
+
+def _assert_refresh_is_batch_plus_phase(
+        spark, batch_fn, refresh_fn, count_col, new_col, ingest_mod):
+    """Each refresh row equals the batch row in every batch column plus
+    the phase label and new-release attribution. The entity id is the
+    first column (doc_id, or vec_id for embeddings)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         INCREMENTAL_MOD,
         INCREMENTAL_NEW,
     )
-    batch = {r.doc_id: r.asDict() for r in
-             getattr(C, batch_fn)(spark, SF_DIR).collect()}
-    ref = getattr(C, refresh_fn)(spark, SF_DIR).collect()
+    batch = {r[0]: r.asDict() for r in
+             C.QUERIES[batch_fn](spark, SF_DIR).collect()}
+    ref = C.QUERIES[refresh_fn](spark, SF_DIR).collect()
     assert len(ref) == len(batch) > 0
     for r in ref:
-        b = batch[r.doc_id]
+        b = batch[r[0]]
         d = r.asDict()
         for k, v in b.items():
-            if k != "doc_id":
-                assert d[k] == v, (r.doc_id, k)
+            assert d[k] == v, (r[0], k)
         assert 0 <= d[new_col] <= d[count_col]
         if ingest_mod == 4:
-            want = "ingest" if r.doc_id % 4 == 1 else "backfill"
+            want = "ingest" if r[0] % 4 == 1 else "backfill"
         else:
-            want = ("ingest" if r.doc_id % INCREMENTAL_MOD
+            want = ("ingest" if r[0] % INCREMENTAL_MOD
                     >= INCREMENTAL_NEW else "backfill")
         assert r.phase == want
     assert {r.phase for r in ref} == {"ingest", "backfill"}
