@@ -260,3 +260,19 @@ def normed_ctes(name: str = "n", **member: str) -> str:
               list_transform(v, x -> x * x)), (acc, x) -> acc + x)) AS nrm
   FROM pre
   WHERE nrm > 0)"""
+
+
+def shingle_ctes(nonempty: bool = False, **member: str) -> str:
+    """DuckDB CTE chain ``toks``/``th``/``shl``: (doc_id, sh, *member)
+    from the ``documents`` table — tokens, token hashes, then the
+    distinct 3-gram shingle hashes (the Spark side's shingled_docs).
+    Each keyword adds a membership column computed from the row, e.g.
+    ``is_bench="<expr>"``; ``nonempty`` keeps only docs with at least
+    one shingle (the minhash convention)."""
+    extra = "".join(f", {expr} AS {col}" for col, expr in member.items())
+    shl = f"SELECT doc_id, {shingle_hashes('th', 'duck')} AS sh{extra} FROM th"
+    if nonempty:
+        shl = f"SELECT * FROM ({shl}) WHERE len(sh) > 0"
+    return f"""toks AS (SELECT doc_id, {tokens('text', 'duck')} AS toks FROM documents),
+th AS (SELECT doc_id, {token_hashes('toks', 'duck')} AS th FROM toks),
+shl AS ({shl})"""

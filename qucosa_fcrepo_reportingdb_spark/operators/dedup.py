@@ -104,9 +104,9 @@ def shingled_docs(docs: DataFrame, non_empty: bool = False) -> DataFrame:
 def _shingled(spark: SparkSession, sf_dir: str,
               non_empty: bool = False) -> DataFrame:
     """(doc_id, sh) view over the shared materialized shingle artifact
-    (corpus._bench_shingled) — r16: previously every signature-family
-    build (minhash, simhash32, simhash64, the exploded index) re-ran
-    its own tokenize+shingle pipeline over the corpus; now one pipeline
+    (corpus._bench_shingled): every signature-family build (minhash,
+    simhash32, simhash64, the exploded index) would otherwise re-run
+    its own tokenize+shingle pipeline over the corpus; one pipeline
     materializes per (session, dataset) and the families derive from
     its blocks. The non-empty filter moves onto the STORED sh column,
     where it is a plain attribute predicate (the pushdown-blowup
@@ -142,10 +142,10 @@ def _exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall audit, and pagerank all consume it — without the memo a full
     registry sweep re-materializes the corpus-sized index per caller.
 
-    r16: _shingled now reads the shared _bench_shingled artifact (one
+    _shingled reads the shared _bench_shingled artifact (one
     tokenize+shingle pipeline per session across the dedup AND
     contamination families), so this cold build explodes materialized
-    blocks instead of re-tokenizing the corpus; rows identical."""
+    blocks instead of re-tokenizing the corpus."""
     def build() -> DataFrame:
         sh = _shingled(spark, sf_dir)
         return (sh.select("doc_id", F.explode_outer("sh").alias("s"))
@@ -158,7 +158,7 @@ def _hot_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized hot-shingle list (df > SHINGLE_DF_MAX) over the
     materialized inverted index — index METADATA a deployment persists
     next to the index itself (the df cap is part of the index build,
-    not of any one query). r16: the audited jaccard plan ran this
+    not of any one query). Unmemoized, the audited jaccard plan ran this
     full-index df shuffle once under EACH consumer of the df-capped
     universe (3x per call — both self-join sides and the sizes
     aggregate inline the anti-join and the aggregate below it);
@@ -269,9 +269,7 @@ def jaccard_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The toks..cm candidate CTE chain shared by the jaccard and containment
 # oracles — SQL twin of df_capped_candidate_pairs.
 _CANDIDATE_CTES = f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
+WITH {H.shingle_ctes()},
 ex AS (SELECT doc_id, unnest(sh) AS s FROM shl),
 hot AS (SELECT s FROM ex GROUP BY s HAVING COUNT(*) > {SHINGLE_DF_MAX}),
 kept AS (SELECT doc_id, s FROM ex WHERE s NOT IN (SELECT s FROM hot)),
@@ -310,13 +308,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shingled frame feeds THREE consumers (banding + both verify-side
     joins); it is memoized per (session, dataset) as a lazy non-empty
-    view over the shared _bench_shingled artifact (r16, see _shingled —
+    view over the shared _bench_shingled artifact (see _shingled —
     one tokenize+shingle pipeline per session across the dedup and
     contamination families, and no second corpus-sized checkpoint
     copy: the view filters the artifact's blocks per consumer)."""
     sh = session_memo(spark, ("shingled_nonempty", sf_dir),
                       lambda: _shingled(spark, sf_dir, non_empty=True))
-    # r16: the band join probes the memoized LSH index instead of
+    # the band join probes the memoized LSH index instead of
     # recomputing the N_PERM minhash fold per call (minhash_band_table)
     return _minhash_pairs_from_bands(minhash_band_table(spark, sf_dir), sh)
 
@@ -383,7 +381,7 @@ def minhash_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the index the incremental form's docstring describes a
     deployment persisting ("the steady-state join probes precomputed
     buckets"); the N_PERM-permutation fold over every shingle array is
-    the family's dominant map cost (r16, guide §2.4)."""
+    the family's dominant map cost (guide §2.4)."""
     def build() -> DataFrame:
         sh = session_memo(spark, ("shingled_nonempty", sf_dir),
                           lambda: _shingled(spark, sf_dir, non_empty=True))
@@ -403,7 +401,7 @@ def minhash_pairs_from_shingles(sh: DataFrame) -> DataFrame:
 def _minhash_pairs_from_bands(bands: DataFrame, sh: DataFrame) -> DataFrame:
     """Candidate join + exact-Jaccard verify over an already-built band
     index — shared by the stateless form above and the memoized-index
-    batch query (r16)."""
+    batch query."""
     a = bands.select(F.col("doc_id").alias("d1"), "band_idx", "signature")
     b = bands.select(F.col("doc_id").alias("d2"), "band_idx", "signature")
     cand_ids = (
@@ -426,10 +424,7 @@ def _minhash_lsh_oracle() -> str:
         f"{H.lsh_band(mcols, bi, 'duck')} AS signature FROM mh"
         for bi in range(H.LSH_BANDS))
     return f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT * FROM (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh
-                       FROM th) WHERE len(sh) > 0),
+WITH {H.shingle_ctes(nonempty=True)},
 mh AS (SELECT doc_id, sh,
        {mh_cols}
        FROM shl),
@@ -475,9 +470,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_oracle() -> str:
     return f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
+WITH {H.shingle_ctes()},
 sim AS (SELECT doc_id, {H.simhash('sh', 'duck')} AS simhash FROM shl),
 {banded_pairs_sql('sim', 'simhash', SIMHASH32_BANDS)}
 {_verified_sql(HAMMING_MAX)}"""
@@ -553,8 +546,8 @@ def _blocked_cosine_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     to sweep them).
 
     The (label, salt) exchanges are EXPLICIT repartitions to the
-    session's shuffle parallelism, not ENSURE_REQUIREMENTS exchanges
-    (r15): this stage's cost is the quadratic per-cell pair scoring, not
+    session's shuffle parallelism, not ENSURE_REQUIREMENTS exchanges:
+    this stage's cost is the quadratic per-cell pair scoring, not
     its bytes — vectors are narrow, so AQE's byte-based partition
     coalescing (1 MB min-size floor) squeezed the dot-product stage onto
     6 of 32 cores at sf0.1 (measured 2.2 s -> 1.2 s with the pin). The
@@ -1124,9 +1117,7 @@ def jaccard_cap_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # SQL twin of uncapped_jaccard_pairs: the capped chain minus hot/kept.
 _UNCAPPED_JACCARD_SQL = f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
+WITH {H.shingle_ctes()},
 ex AS (SELECT doc_id, unnest(sh) AS s FROM shl),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
 cm AS (
@@ -1255,7 +1246,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BEFORE the exchange, the full side is exchanged once, and
     # (not new2) or (d1 < d2) keeps exactly incoming x existing plus
     # the incoming batch's own ordered self-pairs.
-    # r16: probe the memoized LSH index (minhash_band_table) — the
+    # probe the memoized LSH index (minhash_band_table) — the
     # precomputed-buckets steady state this docstring describes
     bands = minhash_band_table(spark, sf_dir).withColumn(
         "is_new", (F.col("doc_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW)
@@ -1286,10 +1277,7 @@ def _incremental_minhash_oracle() -> str:
         f"{H.lsh_band(mcols, bi, 'duck')} AS signature FROM mh"
         for bi in range(H.LSH_BANDS))
     return f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT * FROM (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh
-                       FROM th) WHERE len(sh) > 0),
+WITH {H.shingle_ctes(nonempty=True)},
 mh AS (SELECT doc_id, sh,
        {mh_cols}
        FROM shl),
@@ -1415,9 +1403,8 @@ def lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature) and ONE per-config roll-up — and exact-Jaccard verify
     runs once over the DISTINCT candidate pair set instead of per
     config (a pair's jaccard is config-independent; the configs'
-    candidate sets overlap heavily). The strip-spans collapse applied
-    to the r10 verdict's third-widest plan; outputs and oracle
-    unchanged. The ground-truth side is the audit-only uncapped pair
+    candidate sets overlap heavily) — the strip-spans collapse. The
+    ground-truth side is the audit-only uncapped pair
     pipeline (bounded corpus; see uncapped_jaccard_pairs)."""
     sh = session_memo(spark, ("shingled_nonempty", sf_dir),
                       lambda: _shingled(spark, sf_dir, non_empty=True))
@@ -1501,13 +1488,7 @@ def _banding_sweep_oracle() -> str:
     mcols = [f"m{j}" for j in range(H.N_PERM)]
     per_config = []
     ctes = [
-        f"toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks "
-        f"FROM documents)",
-        f"th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th "
-        f"FROM toks)",
-        f"shl AS (SELECT * FROM (SELECT doc_id, "
-        f"{H.shingle_hashes('th', 'duck')} AS sh FROM th) "
-        f"WHERE len(sh) > 0)",
+        H.shingle_ctes(nonempty=True),
         f"mh AS (SELECT doc_id, sh,\n       {mh_cols}\n       FROM shl)",
         f"tp AS (SELECT COUNT(*) AS n_true "
         f"FROM ({_UNCAPPED_JACCARD_SQL}))",
@@ -2119,11 +2100,11 @@ def band_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = _banded_family_rows(spark, sf_dir)
     sizes = (rows.groupBy("family", "band_idx", "key")
              .agg(F.count(F.lit(1)).cast("long").alias("k")))
-    # materialized once per call (r15): hist feeds BOTH the decile
+    # materialized once per call: hist feeds BOTH the decile
     # window branch and the totals branch — without the cut the whole
     # four-family union + banding + bucket-size subtree (the dominant
-    # map work) executes twice in the audited plan (plans/r15: the
-    # 28-operator sizes pipeline appeared verbatim under each branch).
+    # map work) executes twice in the audited plan (the 28-operator
+    # sizes pipeline appeared verbatim under each branch).
     # hist is bounded (distinct (family, bucket-size) pairs — tens of
     # rows at any corpus size), so the cut costs one tiny eager job.
     hist = (sizes.groupBy("family", "k")
@@ -2190,11 +2171,7 @@ def _banded_family_sizes_sql(extra_ctes: str = "",
         "CAST(band_val AS VARCHAR) AS key FROM "
         f"({band_rows_sql('vft', 'vfh', PROD_BANDS56, ['frame_idx'])})")
     return f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks
-              FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT * FROM (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh
-                       FROM th) WHERE len(sh) > 0),
+WITH {H.shingle_ctes(nonempty=True)},
 mh AS (SELECT doc_id, sh,
        {mh_cols}
        FROM shl),
@@ -2356,7 +2333,7 @@ def jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     to quality_threshold_sweep's knob and lsh_banding_sweep's knob).
     Binning is EXACT integer arithmetic on the pair's own counts:
     b = (common * STEPS) DIV (n1 + n2 - common) — no FP rounding at
-    grid boundaries (the same fix the quality sweep got in round 7).
+    grid boundaries (the quality sweep's binning).
 
     Scale shape: one pass over the df-capped candidate pairs (the
     machinery jaccard/containment share — NOT the thresholded pair
@@ -2558,7 +2535,7 @@ def dedup_minhash_lsh_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape)."""
     sh = session_memo(spark, ("shingled_nonempty", sf_dir),
                       lambda: _shingled(spark, sf_dir, non_empty=True))
-    # r16: salt the memoized LSH index (minhash_band_table)
+    # salt the memoized LSH index (minhash_band_table)
     cand = salted_band_candidates(
         minhash_band_table(spark, sf_dir), ["band_idx", "signature"])
     return verified_jaccard_pairs(join_shingles_onto_pairs(cand, sh))
@@ -2894,8 +2871,8 @@ def dedup_video_fingerprint_incremental(spark: SparkSession,
     """Delta-ingest video dedup — the incremental asymmetry of the
     minhash/phash/afp forms applied to the per-frame hash: an incoming
     batch's (frame, band) rows join the EXISTING corpus's rows plus the
-    batch's OWN rows (d1 < d2 — the intra-batch join is the shared
-    convention since round 8); existing x existing never materializes.
+    batch's OWN rows (d1 < d2 — the shared intra-batch convention);
+    existing x existing never materializes.
     The growth convention doc_id % 4 == 1 puts the LATER member of every
     designed pair in the batch, so the designed near-dups all cross the
     boundary and must be caught by the cross join.
@@ -3226,7 +3203,7 @@ def _simhash64_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     census (the same signature-only-shuffle discipline as the other
     families).
 
-    non_empty=True (the minhash convention, ADVICE r10): a zero-token
+    non_empty=True (the minhash convention): a zero-token
     doc has no shingles, and the majority vote '2*ones >= n' with n=0
     sets EVERY bit — all empty docs would share the all-ones signature
     and emit O(n_empty^2) hamming-0 "duplicates" from the hottest
@@ -3275,9 +3252,7 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SIM64_CTES = f"""
-toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
+{H.shingle_ctes()},
 sim AS (SELECT doc_id,
         {H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)}
         AS simhash FROM shl WHERE len(sh) > 0)"""
@@ -3328,12 +3303,7 @@ def simhash_width_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_width_oracle() -> str:
     base = (
-        f"toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks "
-        f"FROM documents),\n"
-        f"th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th "
-        f"FROM toks),\n"
-        f"shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh "
-        f"FROM th),\n"
+        f"{H.shingle_ctes()},\n"
         f"sim32 AS (SELECT doc_id, {H.simhash('sh', 'duck')} AS simhash "
         f"FROM shl),\n"
         f"sim64 AS (SELECT doc_id, "
@@ -3537,8 +3507,8 @@ def blocking_exprs_for(action: str, sig_col: str) -> "list[str] | None":
     raise ValueError(f"unknown blocking action: {action!r}")
 
 
-# Census action -> the CONCRETE deployment artifacts (VERDICT r10 gap 4:
-# "the action column stops at naming the remedy"). Keys are registry
+# Census action -> the CONCRETE deployment artifacts, so the action
+# column does not stop at naming the remedy. Keys are registry
 # query names unless suffixed: stream entries name functions in
 # streaming.jobs; actuator entries are (function, call-args string) —
 # rendered as ``function(args)`` in the bench warning — the deployment
@@ -3646,7 +3616,7 @@ def band_blocking_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
          _vfp_signatures(spark, sf_dir).select(
              F.col("frame_idx").alias("align"), F.col("vfh").alias("sig"))),
     ]
-    # r15 note: a rewrite folding the six per-(family, scheme) branches
+    # a rewrite folding the six per-(family, scheme) branches
     # into one tagged union + single grouped aggregation chain (12 -> 2
     # exchanges, one scan per artifact) measured ~1.8x SLOWER at sf0.1
     # (1.9 -> 3.4-4.2 s, noop sink, fresh-session medians) — the six
@@ -4006,9 +3976,7 @@ def simhash_rollover_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rollover_oracle() -> str:
     return f"""
-WITH toks AS (SELECT doc_id, {H.tokens('text', 'duck')} AS toks FROM documents),
-th AS (SELECT doc_id, {H.token_hashes('toks', 'duck')} AS th FROM toks),
-shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
+WITH {H.shingle_ctes()},
 sim32 AS (SELECT doc_id, {H.simhash('sh', 'duck')} AS simhash FROM shl),
 sim64 AS (SELECT doc_id,
           {H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)}

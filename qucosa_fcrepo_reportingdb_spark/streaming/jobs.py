@@ -1797,7 +1797,7 @@ def stream_phash_decontaminate(spark: SparkSession, source_dir: str,
     """Streaming twin of corpus.decontaminate_phash: each batch's assets
     are signed once (image_phash_frame — the PNG round-trip, the one
     Python stage), suite signatures merge into the state, and corpus
-    assets screen through phash_screen_frame. Pigeonhole keeps the
+    assets screen through _sig56_screen_frame. Pigeonhole keeps the
     banded screen exact, so the stream needs no recall schedule."""
     return _perceptual_stream(
         spark, source_dir, store, checkpoint_dir, "phash_decontaminate",
@@ -1814,14 +1814,14 @@ def _perceptual_stream(spark: SparkSession, source_dir: str,
     keep the suite members' signatures as state, screen the corpus
     members with the family's batch verdict body
     (corpus.PERCEPTUAL_SCREENS)."""
-    screen, cols, _ = PERCEPTUAL_SCREENS[family]
+    p = PERCEPTUAL_SCREENS[family]
     return _suite_screen_stream(
         spark, source_dir, store, checkpoint_dir, subdir,
         schema or _ASSET_IDS, "doc_id",
         prepare=lambda b: _bench_split(sign(b)),
         suite_rows=lambda sig: perceptual_suite_rows(sig, family),
-        verdict=lambda sig, state: screen(
-            sig.filter(~F.col("is_suite")).select("doc_id", *cols), state),
+        verdict=lambda sig, state: p.screen(
+            sig.filter(~F.col("is_suite")).select("doc_id", *p.cols), state),
         suite=suite, verdicts=verdicts)
 
 
@@ -1893,7 +1893,7 @@ def stream_afp_decontaminate(spark: SparkSession, source_dir: str,
                              schema: "T.StructType | None" = None):
     """Streaming twin of corpus.decontaminate_afp: each batch's clips
     are signed once (audio_fingerprint_frame — the WAV round-trip) and
-    corpus clips screen through afp_screen_frame, the batch form's
+    corpus clips screen through _sig56_screen_frame, the batch form's
     pigeonhole-exact banded broadcast join."""
     return _perceptual_stream(
         spark, source_dir, store, checkpoint_dir, "afp_decontaminate",

@@ -105,13 +105,18 @@ def test_semantic_no_candidate_sentinel(spark, tmp_path):
 
 
 def test_every_semantic_schedule_form_is_registered():
-    """Each (schedule, form) of the schedule table is a registry query
-    with a DuckDB oracle: a form added to the table without its named
-    entry fails here."""
-    assert len(C._SEMANTIC_FORMS) == 12
-    for name in C._SEMANTIC_FORMS:
-        assert name in C.QUERIES and name in C.ORACLES, name
-        assert C.QUERIES[name].__name__ == name
+    """Each form of every screen family's spec table — the semantic
+    schedules, the perceptual screens and the lexical screens — is a
+    registry query with a DuckDB oracle: a form added to a table
+    without its named entry fails here."""
+    for specs, n_forms in ((C.SEMANTIC_SCHEDULES, 12),
+                           (C.PERCEPTUAL_SCREENS, 9),
+                           (C.LEXICAL_SCREENS, 8)):
+        names = [name for s in specs.values() for name in s.forms.values()]
+        assert len(set(names)) == n_forms
+        for name in names:
+            assert name in C.QUERIES and name in C.ORACLES, name
+            assert C.QUERIES[name].__name__ == name
     # each release form has its own named path-equivalence test below
     assert {name for name, s in C.SEMANTIC_SCHEDULES.items()
             if "suite_refresh" in s.forms} == {"topk", "exact", "lsh"}
@@ -733,26 +738,11 @@ def test_phash_screen_catches_reencoded_asset_exactly(spark):
         assert rows[d].min_hamming == C.PHASH_NO_HIT
 
 
-def test_phash_incremental_equals_batch_on_incoming(spark):
-    batch = {r.doc_id: r for r in
-             C.decontaminate_phash(spark, SF_DIR).collect()}
-    inc = C.decontaminate_phash_incremental(spark, SF_DIR).collect()
-    assert len(inc) > 0
-    for r in inc:
-        assert r.doc_id % 4 == 1
-        b = batch[r.doc_id]
-        assert (r.n_hits, r.min_hamming, r.contaminated) == \
-            (b.n_hits, b.min_hamming, b.contaminated)
-    incoming_ids = {d for d in batch if d % 4 == 1}
-    assert {r.doc_id for r in inc} == incoming_ids
-    assert any(r.contaminated for r in inc)
-
-
 def test_stream_phash_decontaminate_matches_batch(spark, store, tmp_path):
     """Suite assets first, corpus assets over two microbatches: the
     streaming perceptual screen's merged verdicts must equal the batch
     decontaminate_phash rows — one signing stage, one banded join body
-    (phash_screen_frame), so the parity is structural."""
+    (_sig56_screen_frame), so the parity is structural."""
     from pyspark.sql import functions as F
 
     from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
@@ -915,41 +905,37 @@ def test_contamination_manifest_unions_all_screens(spark):
     assert 0 < sum(r.excluded for r in man.values()) < len(man)
 
 
-@pytest.mark.parametrize("batch_fn,inc_fn", [
-    ("decontaminate_afp", "decontaminate_afp_incremental"),
-    ("decontaminate_vfp", "decontaminate_vfp_incremental"),
-])
-def test_perceptual_incremental_equals_batch_on_incoming(
-        spark, batch_fn, inc_fn):
-    batch = {r.doc_id: tuple(r)[1:] for r in
-             getattr(C, batch_fn)(spark, SF_DIR).collect()}
-    inc = getattr(C, inc_fn)(spark, SF_DIR).collect()
-    assert len(inc) > 0
-    for r in inc:
-        assert r.doc_id % 4 == 1
-        assert tuple(r)[1:] == batch[r.doc_id]
-    assert {r.doc_id for r in inc} == {d for d in batch if d % 4 == 1}
-    assert any(r.contaminated for r in inc)
+# family -> (forms, ingest predicate, a flagged incoming row expected)
+# for every spec whose incremental form screens only the incoming batch.
+# The lexical multi-suite and strip-spans "incremental" forms keep every
+# corpus row (ingest + new-suite backfill); tests/test_corpus.py pins
+# them.
+_INCREMENTAL_PAIRS = {
+    **{family: (p.forms, lambda d, r=p.ingest: d % 4 == r, True)
+       for family, p in C.PERCEPTUAL_SCREENS.items()},
+    "ngram": (C.LEXICAL_SCREENS["ngram"].forms,
+              lambda d: d % C.INCREMENTAL_MOD >= C.INCREMENTAL_NEW, False),
+}
 
 
-def test_ngram_incremental_equals_batch_on_incoming(spark):
-    """The lexical screen's delta-ingest form (the text family's
-    two-form completion): incoming rows identical to the batch
-    screen's, coverage exactly the shared ingest convention."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        INCREMENTAL_MOD,
-        INCREMENTAL_NEW,
-    )
+@pytest.mark.parametrize("family", list(_INCREMENTAL_PAIRS))
+def test_screen_incremental_equals_batch_on_incoming(spark, family):
+    """A screen's delta-ingest form: each row is the batch screen's row
+    for an incoming id, and the output covers exactly the family's
+    ingest convention (perceptual: doc_id % 4 == its residue; n-gram:
+    the corpus-wide convention); the perceptual ingest slices also
+    carry a flagged asset."""
+    forms, is_new, flagged = _INCREMENTAL_PAIRS[family]
     batch = {r.doc_id: tuple(r)[1:] for r in
-             C.decontaminate_ngram_overlap(spark, SF_DIR).collect()}
-    inc = C.decontaminate_ngram_overlap_incremental(
-        spark, SF_DIR).collect()
+             C.QUERIES[forms["batch"]](spark, SF_DIR).collect()}
+    inc = C.QUERIES[forms["incremental"]](spark, SF_DIR).collect()
     assert len(inc) > 0
     for r in inc:
-        assert r.doc_id % INCREMENTAL_MOD >= INCREMENTAL_NEW
+        assert is_new(r.doc_id)
         assert tuple(r)[1:] == batch[r.doc_id]
-    assert {r.doc_id for r in inc} == \
-        {d for d in batch if d % INCREMENTAL_MOD >= INCREMENTAL_NEW}
+    assert {r.doc_id for r in inc} == {d for d in batch if is_new(d)}
+    if flagged:
+        assert any(r.contaminated for r in inc)
 
 
 def test_manifest_incremental_equals_batch_on_incoming(spark):
@@ -1040,15 +1026,12 @@ def test_stream_perceptual_decontaminate_matches_batch(
 
 
 @pytest.mark.parametrize("batch_fn,refresh_fn,count_col,new_col,ingest_mod", [
-    ("decontaminate_ngram_overlap",
-     "decontaminate_ngram_overlap_suite_refresh",
-     "n_overlap", "n_overlap_new_suite", 10),
-    ("decontaminate_phash", "decontaminate_phash_suite_refresh",
-     "n_hits", "n_hits_new_suite", 4),
-    ("decontaminate_afp", "decontaminate_afp_suite_refresh",
-     "n_hits", "n_hits_new_suite", 4),
-    ("decontaminate_vfp", "decontaminate_vfp_suite_refresh",
-     "n_hits", "n_hits_new_suite", 4),
+    *[(s.forms["batch"], s.forms["suite_refresh"],
+       "n_overlap", "n_overlap_new_suite", 10)
+      for s in C.LEXICAL_SCREENS.values() if "suite_refresh" in s.forms],
+    *[(p.forms["batch"], p.forms["suite_refresh"],
+       "n_hits", "n_hits_new_suite", 4)
+      for p in C.PERCEPTUAL_SCREENS.values()],
 ])
 def test_suite_refresh_is_batch_plus_phase_all_modalities(
         spark, batch_fn, refresh_fn, count_col, new_col, ingest_mod):

@@ -23,15 +23,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from qucosa_fcrepo_reportingdb_spark.session import get_spark  # noqa: E402
-
-# Iterative driver-loop operators execute eagerly on plan access and
-# their per-round plans are audited by their own tests; the final-round
-# plan here would be misleading.
-ITERATIVE = {
-    "dedup_connected_components", "dedup_keep_canonical",
-    "clean_corpus_manifest", "training_sample_weights",
-    "pagerank_dup_graph",
-}
+from tools.plan_hashes import ITERATIVE  # noqa: E402
 
 
 def audit(plan: str) -> dict:
@@ -73,7 +65,7 @@ def main():
     out = ["# PLANS — physical-plan audit of the query registry",
            "",
            f"Generated by `python tools/plan_audit.py {sf_dir}` "
-           "(pre-execution AQE plans, local[32]).",
+           f"(pre-execution AQE plans, {spark.sparkContext.master}).",
            "",
            "| query | shuffles | broadcasts | python | scans "
            "| SMJ | BHJ | SHJ | top-k | cartesian |",

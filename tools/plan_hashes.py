@@ -1,8 +1,9 @@
 """Dump a normalized physical-plan hash per registry query.
 
-Used by the optimization rounds to decide _TOUCHED membership exactly:
-run on two trees (the last driver-attested commit vs the working tree),
-diff the hash tables, and every differing name gets a touched entry.
+Proves plan identity between a parent commit and a change: run on both
+trees (same ``SPARK_GRAFT_CPUS``, ``PYTHONHASHSEED=0``) and diff the
+hash tables. A refactor that keeps every plan leaves them identical;
+every differing name is a query whose plan the change touched.
 
 Normalization strips the unstable bits of a plan string: expression ids
 (#123), plan ids, common-subexpression counters, checkpoint/memo RDD
@@ -30,6 +31,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from qucosa_fcrepo_reportingdb_spark.session import get_spark  # noqa: E402
 
+# Iterative driver-loop operators execute eagerly on plan access and
+# their per-round plans are audited by their own tests; the final-round
+# plan would be misleading (tools/plan_audit.py skips the same names).
 ITERATIVE = {
     "dedup_connected_components", "dedup_keep_canonical",
     "clean_corpus_manifest", "training_sample_weights",
