@@ -34,25 +34,16 @@ from qucosa_fcrepo_reportingdb_spark.operators.banding import (
     explode_bands,
 )
 from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-    AFP_HAMMING_MAX,
-    AFP_INCREMENTAL_NEW,
-    AFP_N_BANDS,
+    BANDED_FAMILIES,
     DEDUP_JACCARD_SQL,
     INCREMENTAL_MOD,
     INCREMENTAL_NEW,
     JACCARD_THRESHOLD,
     ORACLE_BANDS56,
-    PHASH_HAMMING_MAX,
-    PHASH_INCREMENTAL_NEW,
-    PHASH_N_BANDS,
-    VFP_HAMMING_MAX,
-    VFP_INCREMENTAL_NEW,
-    VFP_MIN_FRAMES,
-    _afp_signatures,
+    BandedFamily,
     _normed_embeddings,
-    _phash_signatures,
+    _screen_entry,
     _vfp_bands,
-    _vfp_signatures,
     jaccard_pair_table,
     shingled_docs,
     uncapped_jaccard_pairs,
@@ -63,6 +54,10 @@ from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
     VFP_ORACLE_CTES,
 )
 from qucosa_fcrepo_reportingdb_spark.plans.common import fan_out, t
+
+# the perceptual families' signature, banding and gate specs
+_IMAGE, _AUDIO, _VIDEO = (BANDED_FAMILIES[k] for k in (
+    "image_phash", "audio_afp", "video_vfh_frame"))
 
 # Deterministic multiplicative hashing (same constants as
 # plans/advanced.deterministic_sample): the subset is a pure function of
@@ -122,33 +117,9 @@ NGRAM_TOP_K = 20
 # ---------------------------------------------------------------------------
 # The registry: query name -> Spark query, and -> DuckDB oracle SQL. The
 # decontamination screens' forms register at their definitions
-# (_screen_entry), the other queries in blocks.
+# (dedup._screen_entry), the other queries in blocks.
 QUERIES: "dict[str, Callable]" = {}
 ORACLES: "dict[str, str]" = {}
-
-
-def _screen_entry(specs: dict, oracle: Callable,
-                  body: "Callable | None" = None) -> Callable:
-    """Decorator over one screen family's spec table ``specs`` (key ->
-    spec with ``forms``: form -> registry name). It registers the
-    decorated definition under its own name, the oracle as
-    ``oracle(key, form)``. A docstring-only definition runs
-    ``body(spark, sf_dir, key, form)``; otherwise its own body is the
-    query."""
-    forms = {name: (key, form) for key, s in specs.items()
-             for form, name in s.forms.items()}
-
-    def entry(fn: Callable) -> Callable:
-        key, form = forms[fn.__name__]
-        query = fn
-        if body is not None:
-            @functools.wraps(fn)
-            def query(spark: SparkSession, sf_dir: str) -> DataFrame:
-                return body(spark, sf_dir, key, form)
-        QUERIES[fn.__name__] = query
-        ORACLES[fn.__name__] = oracle(key, form)
-        return query
-    return entry
 
 
 def _phase_sql(is_new: str) -> str:
@@ -362,7 +333,8 @@ LEXICAL_SCREENS = {
         _strip_spans_oracle),
 }
 _lexical_entry = _screen_entry(
-    LEXICAL_SCREENS, lambda screen, form: LEXICAL_SCREENS[screen].oracle(form))
+    (QUERIES, ORACLES), LEXICAL_SCREENS,
+    lambda screen, form: LEXICAL_SCREENS[screen].oracle(form))
 
 
 @_lexical_entry
@@ -451,7 +423,7 @@ def _bench_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized bench-flagged shingle frame (doc_id, sh, is_bench) —
     the lexical arm of the manifest-reconstruction path: the other
     four refresh screens ride memoized signature artifacts
-    (_phash_signatures and friends), and the lexical refresh plan
+    (BandedFamily.signatures), and the lexical refresh plan
     consumes the frame on BOTH sides (bench + corpus), so without the
     memo even a single reconstruction paid the shingle pipeline twice.
     Materialized once per (session, dataset), it is read as
@@ -3912,7 +3884,7 @@ WITH RECURSIVE
 {banded_pairs_sql('ph', 'phash', ORACLE_BANDS56)},
 image_pairs AS (
   SELECT DISTINCT d1, d2 FROM cand
-  WHERE {H.hamming('s1', 's2', 'duck')} <= {PHASH_HAMMING_MAX}),
+  WHERE {H.hamming('s1', 's2', 'duck')} <= {_IMAGE.hamming_max}),
 text_pairs AS (SELECT d1, d2 FROM ({DEDUP_JACCARD_SQL}) jp),
 pairs AS (SELECT d1, d2 FROM text_pairs
           UNION SELECT d1, d2 FROM image_pairs),
@@ -5557,8 +5529,8 @@ ORDER BY c.vec_id
 
 # the docstring-only decontaminate_embedding* definitions below: body
 # _semantic_screen, oracle semantic_screen_oracle
-_semantic_entry = _screen_entry(SEMANTIC_SCHEDULES, semantic_screen_oracle,
-                                _semantic_screen)
+_semantic_entry = _screen_entry((QUERIES, ORACLES), SEMANTIC_SCHEDULES,
+                                semantic_screen_oracle, _semantic_screen)
 
 
 @_semantic_entry
@@ -5898,7 +5870,7 @@ ORACLES["semantic_lsh_band_sweep"] = SEMANTIC_LSH_SWEEP_SQL
 # valid [0, 56] hamming range, the _NO_CANDIDATE convention).
 PHASH_NO_HIT = -1
 # No-candidate sentinel for the video screen's max_frames_matched
-# (frames_matched lives in [0, VFP_FRAMES]; hits carry >= VFP_MIN_FRAMES).
+# (frames_matched lives in [0, VFP_FRAMES]; hits carry >= min_frames).
 VFP_NO_HIT = -1
 
 
@@ -6035,14 +6007,14 @@ def _vfp_matched_clips(corpus: DataFrame,
                   F.collect_list(F.struct("frame_idx", "vfh")))
                   .alias("f2")))
     in_gate = (f"CASE WHEN {H.hamming('x.vfh', 'y.vfh', 'spark')}"
-               f" <= {VFP_HAMMING_MAX} THEN 1 ELSE 0 END")
+               f" <= {_VIDEO.hamming_max} THEN 1 ELSE 0 END")
     matched = (
         cand.join(c_docs, "doc_id").join(F.broadcast(s_docs), "s_doc")
         .withColumn(
             "frames_matched",
             F.expr(f"CAST(aggregate(zip_with(f1, f2, (x, y) -> {in_gate}),"
                    f" 0, (acc, v) -> acc + v) AS BIGINT)"))
-        .filter(F.col("frames_matched") >= VFP_MIN_FRAMES))
+        .filter(F.col("frames_matched") >= _VIDEO.min_frames))
     return c_docs, matched
 
 
@@ -6063,28 +6035,16 @@ class PerceptualScreen(NamedTuple):
     """One perceptual screen family — image (phash), audio (afp) or
     video (vfp) signatures against the key_hash suite — in both engines.
     Its batch, incremental and suite_refresh forms, their oracles and
-    its recall-audit rows come from here."""
+    its recall-audit rows come from here; the signatures, their DuckDB
+    CTEs, the banding gate (a suite asset is a hit when >= min_frames
+    aligned hashes are within hamming_max) and the ingest predicate
+    come from the dedup family ``fam``."""
     # Spark verdict body: (corpus, suite, ingest_pred) -> verdicts
     screen: Callable
     # corpus signature columns after doc_id, and their suite-side names
     cols: list
     suite_cols: list
-    # (spark, sf_dir) -> the memoized signature table (doc_id, *cols)
-    signatures: Callable
-    # doc_id % 4 residue of the family's incoming batch (the LATER
-    # member of each designed re-encode pair, so the screen is
-    # exercised across the batch boundary)
-    ingest: int
-    # DuckDB: the signature CTEs and the table they leave (doc_id, *cols)
-    ctes: str
-    src: str
-    # DuckDB candidate fragment: the 56-bit hash column and the keys
-    # aligned before banding (video: frame_idx); a suite asset is a hit
-    # when >= min_frames aligned hashes are within hamming_max
-    sig: str
-    keys: list
-    hamming_max: int
-    min_frames: int
+    fam: BandedFamily
     # verdict score over the hits: (column, DuckDB aggregate, no-hit value)
     score: tuple
     # form -> registry query name
@@ -6093,46 +6053,38 @@ class PerceptualScreen(NamedTuple):
     audit: dict
 
 
-def _sig56(col: str, n_bands: int, hamming_max: int,
-           **spec) -> PerceptualScreen:
-    """A one-hash-per-asset family: _sig56_screen_frame on ``col``."""
+def _sig56(fam: BandedFamily, **spec) -> PerceptualScreen:
+    """A one-hash-per-asset family: _sig56_screen_frame on its hash."""
     return PerceptualScreen(
-        functools.partial(_sig56_screen_frame, col=col, n_bands=n_bands,
-                          hamming_max=hamming_max),
-        [col], [f"s_{col}"], sig=col, keys=[], hamming_max=hamming_max,
-        min_frames=1, score=("min_hamming", "MIN(hamming)", PHASH_NO_HIT),
-        **spec)
+        functools.partial(_sig56_screen_frame, col=fam.sig,
+                          n_bands=fam.layout.n_bands,
+                          hamming_max=fam.hamming_max),
+        [fam.sig], [f"s_{fam.sig}"], fam,
+        score=("min_hamming", "MIN(hamming)", PHASH_NO_HIT), **spec)
 
 
 PERCEPTUAL_SCREENS = {
     "phash": _sig56(
-        "phash", PHASH_N_BANDS, PHASH_HAMMING_MAX,
-        signatures=_phash_signatures, ingest=PHASH_INCREMENTAL_NEW,
-        ctes=PHASH_ORACLE_CTES, src="ph",
+        _IMAGE,
         forms={"batch": "decontaminate_phash",
                "incremental": "decontaminate_phash_incremental",
                "suite_refresh": "decontaminate_phash_suite_refresh"},
         audit={"image": 1}),
     "afp": _sig56(
-        "afp", AFP_N_BANDS, AFP_HAMMING_MAX,
-        signatures=_afp_signatures, ingest=AFP_INCREMENTAL_NEW,
-        ctes=AFP_ORACLE_CTES, src="afpt",
+        _AUDIO,
         forms={"batch": "decontaminate_afp",
                "incremental": "decontaminate_afp_incremental",
                "suite_refresh": "decontaminate_afp_suite_refresh"},
         audit={"audio": 1}),
     "vfp": PerceptualScreen(
-        vfp_screen_frame, ["frame_idx", "vfh"], ["frame_idx", "vfh"],
-        signatures=_vfp_signatures, ingest=VFP_INCREMENTAL_NEW,
-        ctes=VFP_ORACLE_CTES, src="vft", sig="vfh", keys=["frame_idx"],
-        hamming_max=VFP_HAMMING_MAX, min_frames=VFP_MIN_FRAMES,
+        vfp_screen_frame, ["frame_idx", "vfh"], ["frame_idx", "vfh"], _VIDEO,
         score=("max_frames_matched", "MAX(frames_matched)", VFP_NO_HIT),
         forms={"batch": "decontaminate_vfp",
                "incremental": "decontaminate_vfp_incremental",
                "suite_refresh": "decontaminate_vfp_suite_refresh"},
         # video_gate: vs the ANY-frame (M=1) baseline, the family's one
         # designed loss; video_mofk: vs the exact join under the SAME gate
-        audit={"video_gate": 1, "video_mofk": VFP_MIN_FRAMES}),
+        audit={"video_gate": 1, "video_mofk": _VIDEO.min_frames}),
 }
 
 
@@ -6141,14 +6093,14 @@ def _perceptual_screen(spark: SparkSession, sf_dir: str, family: str,
                        corpus_pred: "F.Column | None" = None) -> DataFrame:
     """Shared setup of every form of the image, audio and video
     screens: the family's memoized signature table, the key_hash suite
-    split, and the family's doc_id % 4 ingest residue, which restricts
+    split, and the family's ingest predicate, which restricts
     the corpus side (``incremental``) or labels the suite-refresh
     phases (``suite_refresh``, see _sig56_screen_frame).
     ``corpus_pred`` restricts the corpus side by another convention
     (the manifest's)."""
     p = PERCEPTUAL_SCREENS[family]
-    new = (F.col("doc_id") % 4) == p.ingest
-    sigs = _bench_split(p.signatures(spark, sf_dir))
+    new = F.expr(p.fam.ingest)
+    sigs = _bench_split(p.fam.signatures(spark, sf_dir))
     corpus = sigs.filter(~F.col("is_suite"))
     if form == "incremental":
         corpus_pred = new
@@ -6173,11 +6125,11 @@ def perceptual_suite_rows(sigs: DataFrame, family: str) -> DataFrame:
 def _perceptual_fl(p: PerceptualScreen) -> str:
     """DuckDB: the family's signature CTEs, then ``fl`` — its signature
     rows flagged with the key_hash suite membership."""
-    return f"""{p.ctes.strip()},
+    return f"""{p.fam.ctes.strip()},
 fl AS (
   SELECT doc_id, {", ".join(p.cols)},
          {key_hash('doc_id')} < {BENCH_RATE} AS is_suite
-  FROM {p.src})"""
+  FROM {p.fam.src})"""
 
 
 def perceptual_screen_oracle(family: str, form: str) -> str:
@@ -6188,15 +6140,16 @@ def perceptual_screen_oracle(family: str, form: str) -> str:
     exact banding), the aligned-hash gate per candidate pair, then one
     hits -> verdict tail for every family."""
     p = PERCEPTUAL_SCREENS[family]
+    f = p.fam
     score, agg, no_hit = p.score
-    new = f"doc_id % 4 = {p.ingest}"
+    new = f.ingest
     inc = form == "incremental"
     refresh = form == "suite_refresh"
-    on_keys = "".join(f"s.{k} = c.{k} AND " for k in p.keys)
-    y_keys = "".join(f" AND y.{k} = x.{k}" for k in p.keys)
-    ham = H.hamming(f"x.{p.sig}", f"y.{p.sig}", "duck")
-    band_rows = band_rows_sql("fl", p.sig, ORACLE_BANDS56,
-                              ["doc_id", *p.keys, "is_suite"])
+    on_keys = "".join(f"s.{k} = c.{k} AND " for k in f.keys)
+    y_keys = "".join(f" AND y.{k} = x.{k}" for k in f.keys)
+    ham = H.hamming(f"x.{f.sig}", f"y.{f.sig}", "duck")
+    band_rows = band_rows_sql("fl", f.sig, ORACLE_BANDS56,
+                              ["doc_id", *f.keys, "is_suite"])
     new_hits = (f"CAST(SUM(CASE WHEN s_doc % {INCREMENTAL_MOD} >= "
                 f"{INCREMENTAL_NEW} THEN 1 ELSE 0 END) AS BIGINT) "
                 "AS n_hits_new_suite," if refresh else "")
@@ -6213,7 +6166,7 @@ cand AS (
    AND s.is_suite AND NOT c.is_suite {f"AND c.{new}" if inc else ""}),
 matched AS (
   SELECT cd.doc_id, cd.s_doc, MIN({ham}) AS hamming,
-         CAST(SUM(CASE WHEN {ham} <= {p.hamming_max} THEN 1 ELSE 0 END)
+         CAST(SUM(CASE WHEN {ham} <= {f.hamming_max} THEN 1 ELSE 0 END)
               AS BIGINT) AS frames_matched
   FROM cand cd
   JOIN fl x ON x.doc_id = cd.doc_id
@@ -6222,7 +6175,7 @@ matched AS (
 hits AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits, {new_hits}
          {agg} AS {score}
-  FROM matched WHERE frames_matched >= {p.min_frames}
+  FROM matched WHERE frames_matched >= {f.min_frames}
   GROUP BY doc_id)
 SELECT f.doc_id, {phase}
        CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits, {new_col}
@@ -6238,7 +6191,8 @@ ORDER BY f.doc_id
 # the docstring-only decontaminate_{phash,afp,vfp}* definitions below:
 # body _perceptual_screen, oracle perceptual_screen_oracle
 _perceptual_entry = _screen_entry(
-    PERCEPTUAL_SCREENS, perceptual_screen_oracle, _perceptual_screen)
+    (QUERIES, ORACLES), PERCEPTUAL_SCREENS, perceptual_screen_oracle,
+    _perceptual_screen)
 
 
 @_perceptual_entry
@@ -6249,7 +6203,7 @@ def decontaminate_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     its source (every exact screen passes it) while its perceptual hash
     stays within a few bits — the pixel-side analog of the paraphrase
     the embedding screen catches. Per corpus asset: n_hits = suite
-    assets within hamming <= {PHASH_HAMMING_MAX} of its 56-bit dHash,
+    assets within hamming <= 3 of its 56-bit dHash,
     min_hamming (the reviewer's rank score — 0 is a byte-respin, 3 is
     the gate's edge; {PHASH_NO_HIT} when no suite asset hits),
     contaminated = n_hits >= 1.
@@ -6261,7 +6215,7 @@ def decontaminate_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity.
 
     Unlike the embedding screen, this blocking needs NO recall remedy:
-    with hamming_max {PHASH_HAMMING_MAX} < {PHASH_N_BANDS} bands the
+    with hamming_max 3 < 4 bands the
     pigeonhole guarantee makes the banded join EXACT — recall 1.0
     structurally, the property the whole banded-dedup family rests on
     (dedup.dedup_image_phash), here with the suite side broadcast so
@@ -6302,7 +6256,7 @@ def decontaminate_phash_suite_refresh(spark: SparkSession,
 def decontaminate_afp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-side perceptual decontamination: corpus audio assets whose
     56-bit energy-sign fingerprint sits within hamming <=
-    {AFP_HAMMING_MAX} of a held-out suite asset's — a re-encoded /
+    3 of a held-out suite asset's — a re-encoded /
     re-sampled eval clip shares no bytes with its source but keeps its
     energy profile, the audio analog of the re-encoded image
     decontaminate_phash catches. Same key_hash suite membership, same
@@ -6333,7 +6287,7 @@ def decontaminate_afp_suite_refresh(spark: SparkSession,
 @_perceptual_entry
 def decontaminate_vfp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-side perceptual decontamination — the screen family's last
-    modality: a corpus clip is contaminated when at least VFP_MIN_FRAMES
+    modality: a corpus clip is contaminated when at least min_frames
     of its frame-aligned 56-bit hashes sit within the hamming gate of a
     suite clip's (the M-of-K rule of dedup_video_fingerprint, pointed at
     a broadcast suite instead of a pair space). Per corpus clip: n_hits
@@ -6407,19 +6361,20 @@ def perceptual_screen_recall_audit(spark: SparkSession,
 
     rows = {}
     for family, p in PERCEPTUAL_SCREENS.items():
-        s = _bench_split(p.signatures(spark, sf_dir))
+        f = p.fam
+        s = _bench_split(f.signatures(spark, sf_dir))
         flagged = (_perceptual_screen(spark, sf_dir, family)
                    .filter("contaminated").select("doc_id"))
-        if p.keys:
+        if f.keys:
             # aligned hashes: exact key join, gate, frames per clip pair
             suite = s.filter("is_suite").select(
-                F.col("doc_id").alias("s_doc"), *p.keys,
-                F.col(p.sig).alias(f"s_{p.sig}"))
+                F.col("doc_id").alias("s_doc"), *f.keys,
+                F.col(f.sig).alias(f"s_{f.sig}"))
             matches = (
                 s.filter(~F.col("is_suite"))
-                .join(F.broadcast(suite), p.keys)
-                .filter(F.expr(H.hamming(p.sig, f"s_{p.sig}", "spark"))
-                        <= p.hamming_max)
+                .join(F.broadcast(suite), list(f.keys))
+                .filter(F.expr(H.hamming(f.sig, f"s_{f.sig}", "spark"))
+                        <= f.hamming_max)
                 .groupBy("doc_id", "s_doc")
                 .agg(F.count(F.lit(1)).alias("frames_matched")))
             exact = {label: matches
@@ -6428,11 +6383,11 @@ def perceptual_screen_recall_audit(spark: SparkSession,
                      for label, min_frames in p.audit.items()}
         else:
             suite = s.filter("is_suite").select(
-                F.col(p.sig).alias("s_sig"))
+                F.col(f.sig).alias("s_sig"))
             exact = {label: s.filter(~F.col("is_suite"))
                      .crossJoin(F.broadcast(suite))
-                     .filter(F.expr(H.hamming(p.sig, "s_sig", "spark"))
-                             <= p.hamming_max)
+                     .filter(F.expr(H.hamming(f.sig, "s_sig", "spark"))
+                             <= f.hamming_max)
                      .select("doc_id").distinct()
                      for label in p.audit}
         for label, exact_ids in exact.items():
@@ -6455,8 +6410,9 @@ def _perceptual_recall_oracle() -> str:
     keys, under its gate) against the form's own oracle flags."""
     rows = []
     for p in PERCEPTUAL_SCREENS.values():
-        ham = H.hamming(f"c.{p.sig}", f"s.{p.sig}", "duck")
-        keys = "".join(f" AND s.{k} = c.{k}" for k in p.keys)
+        f = p.fam
+        ham = H.hamming(f"c.{f.sig}", f"s.{f.sig}", "duck")
+        keys = "".join(f" AND s.{k} = c.{k}" for k in f.keys)
         for label, min_frames in p.audit.items():
             rows.append(f"""
 SELECT '{label}' AS family, n_true, n_flagged, n_common FROM (
@@ -6464,7 +6420,7 @@ SELECT '{label}' AS family, n_true, n_flagged, n_common FROM (
   ex AS (
     SELECT DISTINCT c.doc_id
     FROM fl c JOIN fl s ON s.is_suite{keys}
-    WHERE NOT c.is_suite AND {ham} <= {p.hamming_max}
+    WHERE NOT c.is_suite AND {ham} <= {f.hamming_max}
     GROUP BY c.doc_id, s.doc_id HAVING COUNT(*) >= {min_frames}),
   flg AS (SELECT doc_id FROM ({ORACLES[p.forms["batch"]]}) q
           WHERE q.contaminated)
@@ -6865,12 +6821,14 @@ def suite_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("s_doc")
                 .agg(F.countDistinct("doc_id").alias(out)))
 
-    img_hits = sig_hits(_phash_signatures(spark, sf_dir), "phash",
-                        PHASH_N_BANDS, PHASH_HAMMING_MAX, "n_image_hits")
-    aud_hits = sig_hits(_afp_signatures(spark, sf_dir), "afp",
-                        AFP_N_BANDS, AFP_HAMMING_MAX, "n_audio_hits")
+    img_hits = sig_hits(_IMAGE.signatures(spark, sf_dir), "phash",
+                        _IMAGE.layout.n_bands, _IMAGE.hamming_max,
+                        "n_image_hits")
+    aud_hits = sig_hits(_AUDIO.signatures(spark, sf_dir), "afp",
+                        _AUDIO.layout.n_bands, _AUDIO.hamming_max,
+                        "n_audio_hits")
 
-    vf = _vfp_signatures(spark, sf_dir).withColumn(
+    vf = _VIDEO.signatures(spark, sf_dir).withColumn(
         "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
     _, matched = _vfp_matched_clips(
         vf.filter(~F.col("is_suite"))
@@ -6940,7 +6898,7 @@ ipairs AS (
   FROM ibands c JOIN ibands s
     ON s.band_idx = c.band_idx AND s.band_val = c.band_val
    AND s.is_suite AND NOT c.is_suite
-  WHERE {iham} <= {PHASH_HAMMING_MAX}),
+  WHERE {iham} <= {_IMAGE.hamming_max}),
 img_hits AS (
   SELECT s_doc, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_image_hits
   FROM ipairs GROUP BY s_doc),
@@ -6954,7 +6912,7 @@ apairs AS (
   FROM abands c JOIN abands s
     ON s.band_idx = c.band_idx AND s.band_val = c.band_val
    AND s.is_suite AND NOT c.is_suite
-  WHERE {aham} <= {AFP_HAMMING_MAX}),
+  WHERE {aham} <= {_AUDIO.hamming_max}),
 aud_hits AS (
   SELECT s_doc, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_audio_hits
   FROM apairs GROUP BY s_doc),
@@ -6973,7 +6931,7 @@ vcand AS (
 vmatched AS (
   SELECT cd.doc_id, cd.s_doc,
          CAST(SUM(CASE WHEN {H.hamming('x.vfh', 'y.vfh', 'duck')}
-                       <= {VFP_HAMMING_MAX} THEN 1 ELSE 0 END)
+                       <= {_VIDEO.hamming_max} THEN 1 ELSE 0 END)
               AS BIGINT) AS frames_matched
   FROM vcand cd
   JOIN vfl x ON x.doc_id = cd.doc_id
@@ -6981,7 +6939,7 @@ vmatched AS (
   GROUP BY cd.doc_id, cd.s_doc),
 vid_hits AS (
   SELECT s_doc, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_video_hits
-  FROM vmatched WHERE frames_matched >= {VFP_MIN_FRAMES}
+  FROM vmatched WHERE frames_matched >= {_VIDEO.min_frames}
   GROUP BY s_doc),
 suite AS (
   SELECT doc_id AS s_doc FROM documents
@@ -8436,7 +8394,7 @@ ORACLES["semantic_screen_policy"] = SEMANTIC_POLICY_SQL
 
 
 # Policy action -> the CONCRETE deployment artifacts, the
-# FAMILY_REMEDY_DISPATCH convention transplanted to the semantic screen:
+# BandedFamily.dispatch convention transplanted to the semantic screen:
 # batch/incremental/suite_refresh are the action's schedule's registry
 # forms, stream names a callable in streaming.jobs (the recallk stream's
 # k=None IS the exact screen), actuator entries are (function, call-args

@@ -19,6 +19,9 @@ DuckDB oracles replicate them bit-for-bit.
 
 from __future__ import annotations
 
+import functools
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +30,7 @@ from qucosa_fcrepo_reportingdb_spark.memo import (
     cut_lineage,
     session_memo,
 )
+from qucosa_fcrepo_reportingdb_spark.operators import multimodal
 from qucosa_fcrepo_reportingdb_spark.operators.banding import (
     BAND_COLS,
     Layout,
@@ -375,8 +379,7 @@ def verified_jaccard_pairs(candidates: DataFrame) -> DataFrame:
 def minhash_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized LSH band index (doc_id, band_idx, signature) — the
     minhash family's signature artifact, closing the one gap in the
-    per-family convention (_phash_signatures, _afp_signatures,
-    _vfp_signatures, _simhash64_signatures all memoize their signature
+    per-family convention (every BandedFamily memoizes its signature
     stage; minhash recomputed N_PERM minhashes per call). This is
     exactly the index the incremental form's docstring describes a
     deployment persisting ("the steady-state join probes precomputed
@@ -455,7 +458,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     any equal 8-bit band — by pigeonhole a pair within hamming distance 3
     must agree on at least one of the 4 bands — then verify exact hamming.
 
-    SCALE CAP (the birthday-regime analysis, SCALING.md round 8 cont. 7):
+    SCALE CAP (SCALING.md, "the birthday regime, measured"):
     an 8-bit band has only 256 values, so bucket occupancy — and with it
     quadratic candidate growth — arrives ~60x earlier than for the
     56-bit families (and 2-of-5 band pairs over 32 bits would only reach
@@ -464,14 +467,19 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, no birthday cap) and df-capped n-gram Jaccard. A deployment
     needing simhash past ~10^5 docs widens the sketch (64-bit) before it
     re-bands — the phash_blocking_scheme_audit pattern then applies."""
-    return _sig_pairs(_simhash32_signatures(spark, sf_dir), "simhash",
-                      SIMHASH32_BANDS, HAMMING_MAX)
+    return _sig_pairs(
+        BANDED_FAMILIES["simhash32_band4x8"].signatures(spark, sf_dir),
+        "simhash", SIMHASH32_BANDS, HAMMING_MAX)
+
+
+_SIM32_CTES = f"""
+{H.shingle_ctes()},
+sim AS (SELECT doc_id, {H.simhash('sh', 'duck')} AS simhash FROM shl)"""
 
 
 def _simhash_oracle() -> str:
     return f"""
-WITH {H.shingle_ctes()},
-sim AS (SELECT doc_id, {H.simhash('sh', 'duck')} AS simhash FROM shl),
+WITH {_SIM32_CTES.strip()},
 {banded_pairs_sql('sim', 'simhash', SIMHASH32_BANDS)}
 {_verified_sql(HAMMING_MAX)}"""
 
@@ -1581,15 +1589,8 @@ ORACLES["near_dup_review_sample"] = NEAR_DUP_REVIEW_SQL
 
 
 # ---------------------------------------------------------------------------
-# perceptual-hash image dedup (dHash + simhash-style banding)
+# banded hamming dedup families: one spec per family
 # ---------------------------------------------------------------------------
-PHASH_N_BANDS = 4
-PHASH_BAND_BITS = 14          # 4 x 14 = the full 56-bit dHash
-PHASH_HAMMING_MAX = 3         # < PHASH_N_BANDS, so banding is EXACT
-                              # (pigeonhole: <=3 differing bits cannot
-                              # touch all 4 bands)
-PHASH_C2_N_SUB = 5   # 5 strided sub-bands; hamming<=3 leaves >=2 intact
-
 # Band layouts of the 56-bit perceptual signatures (image dHash, audio
 # energy-sign fingerprint, per-frame video hash). PRODUCTION is STRIDED:
 # all three have spatially/temporally CORRELATED adjacent bits, so a
@@ -1597,161 +1598,306 @@ PHASH_C2_N_SUB = 5   # 5 strided sub-bands; hamming<=3 leaves >=2 intact
 # band i mod 4) decorrelates each band at zero recall cost. Measured by
 # phash_band_layout_audit on the designed corpora: image candidates
 # 264 -> 160 (max bucket 6 -> 4), audio 220 -> 145, identical verified
-# counts. Verified-pair oracles band contiguously (banding.py).
-PROD_BANDS56 = Layout("strided", PHASH_N_BANDS)
-ORACLE_BANDS56 = Layout("contiguous", PHASH_N_BANDS)
+# counts. Verified-pair oracles band contiguously (banding.py). With
+# hamming_max 3 < 4 bands every single-band layout is EXACT (pigeonhole:
+# <=3 differing bits cannot touch all 4 bands).
+PROD_BANDS56 = Layout("strided", 4)
+ORACLE_BANDS56 = Layout("contiguous", 4)
 # The combinatorial 2-of-5 band pairs (the birthday-regime remedy): key
 # space per pair ~2^22-2^23 vs 2^14 for a single 14-bit band, keeping
 # average bucket occupancy << 1 once the corpus outgrows the
 # 16,384-value single-band space (SCALING.md). Cost: 10 rows/unit, not 4.
+PHASH_C2_N_SUB = 5   # 5 strided sub-bands; hamming<=3 leaves >=2 intact
 PAIRS56 = Layout("pairs", PHASH_C2_N_SUB)
+# The widened simhash: 62 informative bits (2x31, rehash64) blocked on
+# 2-of-5 band pairs; its oracles band on 4 contiguous 16-bit bands.
+SIMHASH64_BITS = H.SIMHASH64_BITS
+PAIRS62 = Layout("pairs", PHASH_C2_N_SUB, SIMHASH64_BITS)
+SIMHASH64_ORACLE_BANDS = Layout("contiguous", 4, 64)
+# (n_bands, bits_per_band) regroupings of a 56-bit signature for the
+# banding sweeps; the production band count's row is exact for d <= 3
+SWEEP56_CONFIGS = [(2, 28), (4, 14), (7, 8)]
+
+_SIM64_CTES = f"""
+{H.shingle_ctes()},
+sim AS (SELECT doc_id,
+        {H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)}
+        AS simhash FROM shl WHERE len(sh) > 0)"""
 
 
-def _phash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (doc_id, phash) — the decode+resize+hash Python stage runs
-    ONCE per (session, dataset); both sides of the band self-join and the
-    banding sweep consume the materialized frame (the same
-    signature-only-shuffle discipline as the minhash/simhash paths)."""
-    from qucosa_fcrepo_reportingdb_spark.operators import multimodal
+def _screen_entry(registry: tuple, specs: dict, oracle: Callable,
+                  body: "Callable | None" = None) -> Callable:
+    """Decorator over one family's spec table ``specs`` (key -> spec
+    with ``forms``: form -> registry name). It registers the decorated
+    definition under its own name in ``registry`` (a module's QUERIES
+    and ORACLES), the oracle as ``oracle(key, form)``. A docstring-only
+    definition runs ``body(spark, sf_dir, key, form)``; otherwise its
+    own body is the query."""
+    queries, oracles = registry
+    forms = {name: (key, form) for key, s in specs.items()
+             for form, name in s.forms.items()}
 
-    def build() -> DataFrame:
-        return multimodal.image_phash_table(spark, sf_dir) \
-            .transform(cut_lineage)
-    return session_memo(spark, ("image_phash", sf_dir), build)
-
-
-def _sig_pairs(sigs: DataFrame, sig: str, layout: Layout, hamming_max: int,
-               is_new: "F.Column | None" = None) -> DataFrame:
-    """Verified hamming pairs of one signature frame (doc_id, ``sig``):
-    (d1, d2, hamming) in the batch form; (new_id, dup_of, hamming) in the
-    incremental form."""
-    keep = None
-    if is_new is not None:
-        keep = [F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                "hamming"]
-    out = banded_pairs(
-        explode_bands(sigs, band_exprs(sig, layout, "spark"), "doc_id", sig),
-        sig, is_new=is_new, hamming_max=hamming_max, keep=keep)
-    return out.orderBy(*out.columns[:2])
+    def entry(fn: Callable) -> Callable:
+        key, form = forms[fn.__name__]
+        query = fn
+        if body is not None:
+            @functools.wraps(fn)
+            def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+                return body(spark, sf_dir, key, form)
+        queries[fn.__name__] = query
+        oracles[fn.__name__] = oracle(key, form)
+        return query
+    return entry
 
 
-def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs: decoded pixels -> 8x8 normalized
-    grayscale -> 56-bit dHash (multimodal.dhash56, the only Python stage,
-    scan-local) -> 14-bit band explode -> bucketed candidate self-join ->
-    exact hamming verify. With hamming_max 3 < 4 bands the pigeonhole
-    guarantee makes the banded join EXACT over the d<=3 pair set — same
-    blocking theorem dedup_simhash uses, applied to pixel content instead
-    of token content.
+class BandedFamily(NamedTuple):
+    """One banded dedup family, keyed in BANDED_FAMILIES by its census
+    name. The hamming families' registry forms and their DuckDB
+    oracles, the band audits, policies and census over every family,
+    and the signature side of corpus.PERCEPTUAL_SCREENS come from here.
+    minhash_lsh carries only the census and remedy fields."""
+    # band rows each blocking unit (doc, or frame for video)
+    # contributes: the census divisor from band rows to units
+    bands_per_unit: int
+    # census remedy when the tripwire fires, and its deployment: the
+    # policy query that prices it, the (batch, incremental) forms it
+    # deploys (of family ``deploys``, default this one), the streaming
+    # twin and the actuator seam (function, call-args string)
+    remedy: str
+    dispatch: tuple
+    # form -> registry query name
+    forms: dict
+    deploys: str = ""
+    # (spark, sf_dir) -> the signature frame (doc_id, *keys, sig),
+    # memoized per session under ``memo``
+    build: "Callable | None" = None
+    memo: str = ""
+    sig: str = ""
+    # keys each signature is aligned on before banding (video:
+    # frame_idx; the band join is keyed (frame_idx, band_idx, band_val))
+    keys: tuple = ()
+    # production blocking, and the blocking of the verified-pair
+    # oracles (the pair set does not depend on it, see banding.py)
+    layout: "Layout | None" = None
+    oracle_layout: "Layout | None" = None
+    # DuckDB: the signature CTEs and the table they leave
+    ctes: str = ""
+    src: str = ""
+    # a pair is a near-dup when >= min_frames aligned signatures are
+    # within hamming_max
+    hamming_max: int = HAMMING_MAX
+    min_frames: int = 1
+    # the incoming batch of the incremental forms: a predicate over
+    # doc_id in both engines' SQL
+    ingest: str = ""
 
-    Scale shape: signatures are 16 bytes/doc; the join shuffles
-    (band_idx, band_val) keyed signature rows only — pixels never leave
-    the scan stage. Candidates are O(colliding pairs), never all pairs."""
-    return _sig_pairs(_phash_signatures(spark, sf_dir), "phash",
-                      PROD_BANDS56, PHASH_HAMMING_MAX)
-
-
-def _sig_pairs_oracle(ctes: str, src: str, sig: str, hamming_max: int,
-                      is_new: "str | None" = None,
-                      layout: Layout = ORACLE_BANDS56) -> str:
-    """The oracle of _sig_pairs over table ``src``: contiguous blocking."""
-    names = ("d1", "d2") if is_new is None else ("new_id", "dup_of")
-    return (f"WITH {ctes.strip()},\n"
-            f"{banded_pairs_sql(src, sig, layout, is_new=is_new)}\n"
-            f"{_verified_sql(hamming_max, names)}")
-
-
-def _image_phash_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        PHASH_ORACLE_CTES,
-    )
-    return _sig_pairs_oracle(PHASH_ORACLE_CTES, "ph", "phash",
-                             PHASH_HAMMING_MAX)
-
-
-QUERIES["dedup_image_phash"] = dedup_image_phash
-ORACLES["dedup_image_phash"] = _image_phash_oracle()
-
-
-# ---------------------------------------------------------------------------
-# phash banding sweep (recall/precision S-curve for the hamming blocking)
-# ---------------------------------------------------------------------------
-PHASH_SWEEP_CONFIGS = [(2, 28), (4, 14), (7, 8)]   # n_bands x bits = 56
-
-
-def phash_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banding S-curve for the image-hash blocking, mirroring
-    lsh_banding_sweep: for each (n_bands, bits_per_band) regrouping of the
-    SAME 56-bit dHash, the candidate count, the hamming<=3-verified count,
-    candidate precision, and recall. Ground truth needs NO all-pairs scan:
-    the (4, 14) config is EXACT for d<=3 by pigeonhole (3 differing bits
-    cannot touch all 4 bands), so its verified count IS n_true — the
-    (2, 28) row shows the recall a coarser (cheaper) scheme loses on
-    d in {2, 3} pairs, the (7, 8) row the candidate cost a finer scheme
-    pays for the same recall.
-
-    Scale shape: one decode+hash pass (memoized signature table); each
-    config pays only its own 16-bytes-per-row band join."""
-    return _banding_sweep(_phash_signatures(spark, sf_dir), "phash",
-                          PHASH_SWEEP_CONFIGS, PHASH_HAMMING_MAX)
+    def signatures(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The memoized signature frame: the signing stage (decode or
+        synth in Python, or the shingle fold) runs once per (session,
+        dataset), and both sides of every band self-join read the
+        materialized frame — signature rows shuffle, content never
+        does."""
+        return session_memo(
+            spark, (self.memo, sf_dir),
+            lambda: self.build(spark, sf_dir).transform(cut_lineage))
 
 
-def _banding_sweep(sigs: DataFrame, sig: str, configs, hamming_max: int
-                   ) -> DataFrame:
-    """The 56-bit banding sweep body shared by the image and audio
-    families: one contiguous band join per (n_bands, bits) config."""
-    per_config = {}
-    for n_bands, bits in configs:
-        cand = banded_pairs(
-            explode_bands(sigs, band_exprs(sig, Layout("contiguous", n_bands),
-                                           "spark"), "doc_id", sig),
-            sig).withColumn("hamming", F.expr(H.hamming("s1", "s2", "spark")))
-        per_config[(n_bands, bits)] = (
-            cand.agg(
-                F.count(F.lit(1)).alias("n_candidates"),
-                F.sum(F.when(F.col("hamming") <= hamming_max, 1)
-                      .otherwise(0)).alias("n_verified"))
-            .selectExpr(f"{n_bands} AS n_bands", f"{bits} AS bits_per_band",
-                        "n_candidates", "n_verified"))
-    n_true = (per_config[(PHASH_N_BANDS, PHASH_BAND_BITS)]
-              .selectExpr("n_verified AS n_true"))
-    out = None
-    for row in per_config.values():
-        out = row if out is None else out.unionByName(row)
-    return (
-        out.crossJoin(F.broadcast(n_true))
-        .selectExpr(
-            "n_bands", "bits_per_band",
-            "CAST(n_candidates AS BIGINT) AS n_candidates",
-            "CAST(n_verified AS BIGINT) AS n_verified",
-            "CAST(n_true AS BIGINT) AS n_true",
-            "CAST(n_verified AS DOUBLE)"
-            " / CAST(nullif(n_candidates, 0) AS DOUBLE)"
-            " AS candidate_precision",
-            "CAST(n_verified AS DOUBLE) / CAST(nullif(n_true, 0) AS DOUBLE)"
-            " AS recall")
-        .orderBy("n_bands")
-    )
+def _media56(sig: str, stream: str, **spec) -> BandedFamily:
+    """A 56-bit perceptual family: strided single bands in production,
+    the 2-of-5 band pairs as the remedy once its 2^14-value bands
+    saturate. The incoming batch is doc_id % 4 == 1, the LATER member
+    of each designed (4k, 4k+1) near-dup pair (multimodal's synthetic
+    corpora), so every designed pair crosses the batch boundary and
+    must be caught by the cross join, not the intra-batch one."""
+    return BandedFamily(
+        PROD_BANDS56.n_bands, "reblock_band_pairs",
+        ("band_blocking_policy", ("bandpairs", "incremental_bandpairs"),
+         stream, ("blocking_exprs_for", f"'band_pairs', '{sig}'")),
+        sig=sig, layout=PROD_BANDS56, oracle_layout=ORACLE_BANDS56,
+        ingest="doc_id % 4 = 1", **spec)
 
 
-def _banding_sweep_sql(ctes: str, src: str, sig: str, configs,
-                       hamming_max: int) -> str:
-    parts = [ctes.strip()]
+def _simhash_frame(non_empty: bool, *width: int) -> Callable:
+    """A simhash family's signature function over the shingled corpus:
+    32 bits over the shingle hashes, or ``width`` bits over their
+    rehash64 widening (two independent 31-bit streams per shingle)."""
+    sh = H.rehash64("sh", "spark") if width else "sh"
+    return lambda spark, sf_dir: _shingled(spark, sf_dir, non_empty) \
+        .selectExpr("doc_id", f"{H.simhash(sh, 'spark', *width)} AS simhash")
+
+
+BANDED_FAMILIES = {
+    "image_phash": _media56(
+        "phash", "stream_image_phash_policy_dedupe",
+        forms={"batch": "dedup_image_phash",
+               "sweep": "phash_banding_sweep",
+               "layout_audit": "phash_band_layout_audit",
+               "incremental": "dedup_image_phash_incremental",
+               "salted": "dedup_image_phash_salted",
+               "bandpairs": "dedup_image_phash_bandpairs",
+               "scheme_audit": "phash_blocking_scheme_audit",
+               "incremental_bandpairs":
+                   "dedup_image_phash_incremental_bandpairs"},
+        build=multimodal.image_phash_table, memo="image_phash",
+        ctes=multimodal.PHASH_ORACLE_CTES, src="ph"),
+    "audio_afp": _media56(
+        "afp", "stream_audio_fingerprint_dedupe",
+        forms={"batch": "dedup_audio_fingerprint",
+               "sweep": "afp_banding_sweep",
+               "incremental": "dedup_audio_fingerprint_incremental",
+               "bandpairs": "dedup_audio_fingerprint_bandpairs",
+               "incremental_bandpairs":
+                   "dedup_audio_fingerprint_incremental_bandpairs"},
+        build=multimodal.audio_fingerprint_table, memo="audio_afp",
+        ctes=multimodal.AFP_ORACLE_CTES, src="afpt"),
+    "video_vfh_frame": _media56(
+        "vfh", "stream_video_fingerprint_dedupe",
+        forms={"batch": "dedup_video_fingerprint",
+               "sweep": "vfp_frame_match_sweep",
+               "incremental": "dedup_video_fingerprint_incremental",
+               "bandpairs": "dedup_video_fingerprint_bandpairs",
+               "incremental_bandpairs":
+                   "dedup_video_fingerprint_incremental_bandpairs"},
+        build=multimodal.video_fingerprint_table, memo="video_vfp",
+        keys=("frame_idx",), min_frames=3,   # M of the VFP_FRAMES frames
+        ctes=multimodal.VFP_ORACLE_CTES, src="vft"),
+    # The documented coarse text prefilter: 8-bit bands have 2^8 values,
+    # so no banding fix exists at 32 bits (pairs only reach ~2^13) —
+    # the remedy widens the sketch itself. It bands ALL docs.
+    "simhash32_band4x8": BandedFamily(
+        4, "widen_sketch",
+        ("simhash_width_audit", ("batch", "incremental"),
+         "stream_simhash64_dedupe", ("simhash64_frame", "docs")),
+        {}, deploys="simhash64_bandpairs_2of5",
+        build=_simhash_frame(False), memo="simhash_signatures",
+        sig="simhash", layout=SIMHASH32_BANDS, oracle_layout=SIMHASH32_BANDS,
+        ctes=_SIM32_CTES, src="sim"),
+    # ~2^25-26 pair keys: overflow only via hot keys -> salt. Zero-token
+    # docs are excluded (the minhash convention): with n = 0 the
+    # majority vote '2*ones >= n' sets EVERY bit, so all empty docs
+    # would share one signature and emit O(n_empty^2) hamming-0 pairs
+    # from the hottest bucket; empty docs are dedup_exact's job.
+    "simhash64_bandpairs_2of5": BandedFamily(
+        PHASH_C2_N_SUB * (PHASH_C2_N_SUB - 1) // 2, "salt",
+        ("band_salting_policy", ("batch", "incremental"),
+         "stream_simhash64_dedupe",
+         ("salted_band_candidates", "cap=SALT_BUCKET_CAP")),
+        {"batch": "dedup_simhash64",
+         "incremental": "dedup_simhash64_incremental"},
+        build=_simhash_frame(True, SIMHASH64_BITS),
+        memo="simhash64_signatures", sig="simhash", layout=PAIRS62,
+        oracle_layout=SIMHASH64_ORACLE_BANDS, ctes=_SIM64_CTES, src="sim",
+        ingest=f"doc_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}"),
+    # unbounded key space (band signature strings): overflow only via
+    # hot keys -> salt
+    "minhash_lsh": BandedFamily(
+        H.LSH_BANDS, "salt",
+        ("band_salting_policy", ("salted", "incremental"),
+         "stream_minhash_dedupe",
+         ("salted_band_candidates", "cap=SALT_BUCKET_CAP")),
+        {"salted": "dedup_minhash_lsh_salted",
+         "incremental": "dedup_incremental_minhash"}),
+}
+# the 56-bit perceptual families, in spec order
+_MEDIA56 = tuple(k for k, f in BANDED_FAMILIES.items()
+                 if f.layout == PROD_BANDS56)
+
+# The image family's blocking audits: form -> (label column, whether a
+# row carries n_band_rows, its (name, layout) rows, Spark's verify
+# column). Each row is the shape of that layout's own band self-join.
+_SCHEME_AUDITS = {
+    "layout_audit": ("layout", False, (("contiguous", ORACLE_BANDS56),
+                                       ("strided", PROD_BANDS56)),
+                     "hamming"),
+    "scheme_audit": ("scheme", True, (("band4x14_strided", PROD_BANDS56),
+                                      ("bandpairs_2of5", PAIRS56)), "hm"),
+}
+
+
+def banded_oracle(family: str, form: str) -> str:
+    """DuckDB oracle of a banded family's form, composed from the
+    spec's SQL templates and never from the Spark body. A form whose
+    output is the verified pair set bands on ``oracle_layout``: under
+    any exact blocking the pair set is the same (banding.py), so the
+    bandpairs and salted forms share the batch or incremental oracle
+    and the hash gate proves the re-blocking loses nothing. Sweeps and
+    audits, whose output is the candidate set's shape, mirror Spark's
+    layouts."""
+    f = BANDED_FAMILIES[family]
+    if form in _SCHEME_AUDITS:
+        label, n_band_rows, schemes, _ = _SCHEME_AUDITS[form]
+        return _scheme_audit_sql(
+            f.ctes, [(name, f.src, f.sig, layout) for name, layout in schemes],
+            f.hamming_max, label, n_band_rows)
+    if form == "sweep" and not f.keys:
+        return _banding_sweep_sql(f)
+    inc = form.startswith("incremental")
+    is_new = "{}." + f.ingest if inc else None
+    names = ("new_id", "dup_of") if inc else ("d1", "d2")
+    if not f.keys:
+        cand = banded_pairs_sql(f.src, f.sig, f.oracle_layout, is_new=is_new)
+        return (f"WITH {f.ctes.strip()},\n{cand}\n"
+                f"{_verified_sql(f.hamming_max, names)}")
+    # aligned signatures: doc candidates of the keyed band join, then
+    # the in-gate count of each candidate's aligned signature pairs
+    sweep = form == "sweep"
+    cand = banded_pairs_sql(
+        f.src, f.sig, f.layout if sweep else f.oracle_layout, keys=f.keys,
+        has_sig=False, is_new=is_new)
+    ham = H.hamming(f"x.{f.sig}", f"y.{f.sig}", "duck")
+    aligned = "".join(f" AND y.{k} = x.{k}" for k in f.keys)
+    head = f"""
+WITH {f.ctes.strip()},
+{cand},
+matched AS (
+  SELECT c.d1, c.d2,
+         CAST(SUM(CASE WHEN {ham} <= {f.hamming_max} THEN 1 ELSE 0 END)
+              AS BIGINT) AS frames_matched
+  FROM cand c
+  JOIN {f.src} x ON x.doc_id = c.d1
+  JOIN {f.src} y ON y.doc_id = c.d2{aligned}
+  GROUP BY c.d1, c.d2)"""
+    if sweep:
+        return head + f""",
+per_m AS (SELECT frames_matched, CAST(COUNT(*) AS BIGINT) AS n
+          FROM matched GROUP BY frames_matched),
+grid AS (SELECT CAST(unnest(range(0, {multimodal.VFP_FRAMES} + 1)) AS BIGINT)
+                AS min_frames),
+cum AS (SELECT g.min_frames, COALESCE(p.n, 0) AS n
+        FROM grid g LEFT JOIN per_m p ON p.frames_matched = g.min_frames)
+SELECT min_frames,
+       CAST(SUM(n) OVER (ORDER BY min_frames DESC
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            AS BIGINT) AS n_pairs_ge
+FROM cum
+ORDER BY min_frames
+"""
+    return head + f"""
+SELECT d1 AS {names[0]}, d2 AS {names[1]}, frames_matched FROM matched
+WHERE frames_matched >= {f.min_frames}
+ORDER BY {names[0]}, {names[1]}
+"""
+
+
+def _banding_sweep_sql(f: BandedFamily) -> str:
+    """Oracle of _banding_sweep: one contiguous band self-join per
+    SWEEP56_CONFIGS row; the production band count's row is n_true."""
+    parts = [f.ctes.strip()]
     per_config = []
-    for n_bands, bits in configs:
+    for n_bands, bits in SWEEP56_CONFIGS:
         tag = f"_{n_bands}x{bits}"
-        parts.append(banded_pairs_sql(src, sig, Layout("contiguous", n_bands),
-                                      tag=tag))
+        parts.append(banded_pairs_sql(f.src, f.sig,
+                                      Layout("contiguous", n_bands), tag=tag))
         parts.append(
             f"agg{tag} AS (SELECT COUNT(*) AS n_candidates, "
             f"SUM(CASE WHEN {H.hamming('s1', 's2', 'duck')} <= "
-            f"{hamming_max} THEN 1 ELSE 0 END) AS n_verified "
+            f"{f.hamming_max} THEN 1 ELSE 0 END) AS n_verified "
             f"FROM cand{tag})")
         per_config.append(
             f"SELECT {n_bands} AS n_bands, {bits} AS bits_per_band, "
             f"CAST(n_candidates AS BIGINT) AS n_candidates, "
             f"CAST(n_verified AS BIGINT) AS n_verified FROM agg{tag}")
-    exact_tag = f"_{PHASH_N_BANDS}x{PHASH_BAND_BITS}"
+    exact_tag = f"_{f.layout.n_bands}x{f.layout.bits // f.layout.n_bands}"
     return (
         "WITH " + ",\n".join(parts)
         + f",\nunioned AS ({' UNION ALL '.join(per_config)}),\n"
@@ -1766,74 +1912,12 @@ def _banding_sweep_sql(ctes: str, src: str, sig: str, configs,
         + "FROM unioned CROSS JOIN tp ORDER BY n_bands")
 
 
-def _phash_sweep_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        PHASH_ORACLE_CTES,
-    )
-    return _banding_sweep_sql(PHASH_ORACLE_CTES, "ph", "phash",
-                              PHASH_SWEEP_CONFIGS, PHASH_HAMMING_MAX)
-
-
-QUERIES["phash_banding_sweep"] = phash_banding_sweep
-ORACLES["phash_banding_sweep"] = _phash_sweep_oracle()
-
-
-# ---------------------------------------------------------------------------
-# band-layout audit (contiguous vs strided bit->band assignment)
-# ---------------------------------------------------------------------------
-def phash_band_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contiguous vs strided band LAYOUT for the 4x14 image-hash
-    blocking — the knob for CORRELATED-BIT signatures. dHash bits are
-    gradient signs of spatially adjacent pixels, so neighboring bits
-    correlate; a contiguous 14-bit band is then a low-entropy key
-    (few populated buckets, hot buckets, more candidate pairs), while
-    the strided layout (bit i -> band i mod 4) spreads each band across
-    the whole image and decorrelates its bits. Pigeonhole exactness is
-    LAYOUT-INDEPENDENT — any partition of the 56 bits into 4 classes
-    catches every hamming<=3 pair — so n_verified MUST agree across
-    layouts (pytest-pinned) and the audit isolates pure candidate-
-    volume/skew cost: n_buckets, max_bucket_size, n_candidates,
-    candidate_precision per layout.
-
-    This is the measurement that decides the production layout before
-    100 TB: same recall, whichever layout shows the smaller max bucket
-    and candidate count wins the band join.
-
-    Scale shape: one memoized signature pass; per layout one band join
-    over 16-byte rows and one bucket-histogram aggregation."""
-    ph = _phash_signatures(spark, sf_dir)
-    out = None
-    for layout_name, layout in (("contiguous", ORACLE_BANDS56),
-                                ("strided", PROD_BANDS56)):
-        bands = explode_bands(ph, band_exprs("phash", layout, "spark"),
-                              "doc_id", "phash")
-        buckets = (bands.groupBy("band_idx", "band_val")
-                   .agg(F.count(F.lit(1)).alias("sz"))
-                   .agg(F.count(F.lit(1)).cast("long").alias("n_buckets"),
-                        F.max("sz").cast("long").alias("max_bucket_size")))
-        cand = (banded_pairs(bands, "phash")
-                .withColumn("hamming",
-                            F.expr(H.hamming("s1", "s2", "spark")))
-                .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"),
-                     F.sum(F.when(
-                         F.col("hamming") <= PHASH_HAMMING_MAX, 1)
-                         .otherwise(0)).cast("long").alias("n_verified")))
-        row = (buckets.crossJoin(cand)
-               .selectExpr(f"'{layout_name}' AS layout", "n_buckets",
-                           "max_bucket_size", "n_candidates", "n_verified",
-                           "CAST(n_verified AS DOUBLE)"
-                           " / CAST(nullif(n_candidates, 0) AS DOUBLE)"
-                           " AS candidate_precision"))
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("layout")
-
-
 def _scheme_audit_sql(ctes: str, schemes, hamming_max: int, label: str,
                       n_band_rows: bool = True) -> str:
-    """Oracle of the per-scheme blocking audits: for each (name, src,
-    sig, layout), bucket shape and candidate/verified counts of its own
-    band self-join (the layout mirrors Spark's — the audit's output IS
-    the candidate set's shape)."""
+    """Oracle of _scheme_audit: for each (name, src, sig, layout),
+    bucket shape and candidate/verified counts of its own band
+    self-join (the layout mirrors Spark's — the audit's output IS the
+    candidate set's shape)."""
     parts = [ctes.strip()]
     selects = []
     for i, (name, src, sig, layout) in enumerate(schemes):
@@ -1864,27 +1948,164 @@ def _scheme_audit_sql(ctes: str, schemes, hamming_max: int, label: str,
             + "\nUNION ALL\n".join(selects) + f"\nORDER BY {label}")
 
 
-def _band_layout_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        PHASH_ORACLE_CTES,
+def _sig_pairs(sigs: DataFrame, sig: str, layout: Layout, hamming_max: int,
+               is_new: "F.Column | None" = None) -> DataFrame:
+    """Verified hamming pairs of one signature frame (doc_id, ``sig``):
+    (d1, d2, hamming) in the batch form; (new_id, dup_of, hamming) in the
+    incremental form."""
+    keep = None
+    if is_new is not None:
+        keep = [F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
+                "hamming"]
+    out = banded_pairs(
+        explode_bands(sigs, band_exprs(sig, layout, "spark"), "doc_id", sig),
+        sig, is_new=is_new, hamming_max=hamming_max, keep=keep)
+    return out.orderBy(*out.columns[:2])
+
+
+def _banded_form(spark: SparkSession, sf_dir: str, family: str,
+                 form: str) -> DataFrame:
+    """Shared Spark body of the banded families' forms, over the
+    family's memoized signatures. The batch forms block on the
+    production layout, the *bandpairs forms on the 2-of-5 band pairs
+    (the same pair set: both are exact for hamming <= 3). The
+    incremental forms filter the incoming side (the ``ingest``
+    predicate) before the exchange, exchange the full side once, and
+    keep incoming x existing plus the batch's own ordered pairs
+    (banded_pairs); existing x existing never materializes — it was
+    checked when those docs arrived. In a deployment the existing
+    side's band rows are a persisted artifact written at each doc's own
+    ingest, so per-ingest cost is O(batch + matched buckets)."""
+    f = BANDED_FAMILIES[family]
+    sigs = f.signatures(spark, sf_dir)
+    if form in _SCHEME_AUDITS:
+        label, n_band_rows, schemes, hm = _SCHEME_AUDITS[form]
+        return _scheme_audit(
+            [(name, sigs, f.sig, layout) for name, layout in schemes],
+            f.hamming_max, label, n_band_rows, hm)
+    if form == "sweep":
+        if f.keys:
+            return _frame_match_sweep(spark, f, sigs)
+        return _banding_sweep(f, sigs)
+    if form == "salted":
+        return _salted_pairs(f, sigs)
+    layout = PAIRS56 if form.endswith("bandpairs") else f.layout
+    is_new = F.expr(f.ingest) if form.startswith("incremental") else None
+    if not f.keys:
+        return _sig_pairs(sigs, f.sig, layout, f.hamming_max, is_new)
+    out = _vfp_matches(sigs, f, layout, is_new)
+    if is_new is not None:
+        out = out.select(F.col("d1").alias("new_id"),
+                         F.col("d2").alias("dup_of"), "frames_matched")
+    return out.orderBy(*out.columns[:2])
+
+
+# the docstring-only forms below: body _banded_form, oracle banded_oracle
+_banded_entry = _screen_entry((QUERIES, ORACLES), BANDED_FAMILIES,
+                              banded_oracle, _banded_form)
+
+
+@_banded_entry
+def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image near-duplicate pairs: decoded pixels -> 8x8 normalized
+    grayscale -> 56-bit dHash (multimodal.dhash56, the only Python stage,
+    scan-local) -> 14-bit band explode -> bucketed candidate self-join ->
+    exact hamming verify. With hamming_max 3 < 4 bands the pigeonhole
+    guarantee makes the banded join EXACT over the d<=3 pair set — same
+    blocking theorem dedup_simhash uses, applied to pixel content instead
+    of token content.
+
+    Scale shape: signatures are 16 bytes/doc; the join shuffles
+    (band_idx, band_val) keyed signature rows only — pixels never leave
+    the scan stage. Candidates are O(colliding pairs), never all pairs."""
+
+
+# ---------------------------------------------------------------------------
+# banding sweep (recall/precision S-curve for the hamming blocking)
+# ---------------------------------------------------------------------------
+@_banded_entry
+def phash_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banding S-curve for the image-hash blocking, mirroring
+    lsh_banding_sweep: for each (n_bands, bits_per_band) regrouping of the
+    SAME 56-bit dHash, the candidate count, the hamming<=3-verified count,
+    candidate precision, and recall. Ground truth needs NO all-pairs scan:
+    the (4, 14) config is EXACT for d<=3 by pigeonhole (3 differing bits
+    cannot touch all 4 bands), so its verified count IS n_true — the
+    (2, 28) row shows the recall a coarser (cheaper) scheme loses on
+    d in {2, 3} pairs, the (7, 8) row the candidate cost a finer scheme
+    pays for the same recall.
+
+    Scale shape: one decode+hash pass (memoized signature table); each
+    config pays only its own 16-bytes-per-row band join."""
+
+
+def _banding_sweep(f: BandedFamily, sigs: DataFrame) -> DataFrame:
+    """The 56-bit banding sweep body: one contiguous band join per
+    SWEEP56_CONFIGS row; the production band count's row is n_true."""
+    per_config = {}
+    for n_bands, bits in SWEEP56_CONFIGS:
+        exprs = band_exprs(f.sig, Layout("contiguous", n_bands), "spark")
+        cand = banded_pairs(
+            explode_bands(sigs, exprs, "doc_id", f.sig), f.sig
+        ).withColumn("hamming", F.expr(H.hamming("s1", "s2", "spark")))
+        per_config[(n_bands, bits)] = (
+            cand.agg(
+                F.count(F.lit(1)).alias("n_candidates"),
+                F.sum(F.when(F.col("hamming") <= f.hamming_max, 1)
+                      .otherwise(0)).alias("n_verified"))
+            .selectExpr(f"{n_bands} AS n_bands", f"{bits} AS bits_per_band",
+                        "n_candidates", "n_verified"))
+    exact = (f.layout.n_bands, f.layout.bits // f.layout.n_bands)
+    n_true = per_config[exact].selectExpr("n_verified AS n_true")
+    out = None
+    for row in per_config.values():
+        out = row if out is None else out.unionByName(row)
+    return (
+        out.crossJoin(F.broadcast(n_true))
+        .selectExpr(
+            "n_bands", "bits_per_band",
+            "CAST(n_candidates AS BIGINT) AS n_candidates",
+            "CAST(n_verified AS BIGINT) AS n_verified",
+            "CAST(n_true AS BIGINT) AS n_true",
+            "CAST(n_verified AS DOUBLE)"
+            " / CAST(nullif(n_candidates, 0) AS DOUBLE)"
+            " AS candidate_precision",
+            "CAST(n_verified AS DOUBLE) / CAST(nullif(n_true, 0) AS DOUBLE)"
+            " AS recall")
+        .orderBy("n_bands")
     )
-    return _scheme_audit_sql(
-        PHASH_ORACLE_CTES,
-        [("contiguous", "ph", "phash", ORACLE_BANDS56),
-         ("strided", "ph", "phash", PROD_BANDS56)],
-        PHASH_HAMMING_MAX, "layout", n_band_rows=False)
 
 
-QUERIES["phash_band_layout_audit"] = phash_band_layout_audit
-ORACLES["phash_band_layout_audit"] = _band_layout_oracle()
+# ---------------------------------------------------------------------------
+# band-layout audit (contiguous vs strided bit->band assignment)
+# ---------------------------------------------------------------------------
+@_banded_entry
+def phash_band_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contiguous vs strided band LAYOUT for the 4x14 image-hash
+    blocking — the knob for CORRELATED-BIT signatures. dHash bits are
+    gradient signs of spatially adjacent pixels, so neighboring bits
+    correlate; a contiguous 14-bit band is then a low-entropy key
+    (few populated buckets, hot buckets, more candidate pairs), while
+    the strided layout (bit i -> band i mod 4) spreads each band across
+    the whole image and decorrelates its bits. Pigeonhole exactness is
+    LAYOUT-INDEPENDENT — any partition of the 56 bits into 4 classes
+    catches every hamming<=3 pair — so n_verified MUST agree across
+    layouts (pytest-pinned) and the audit isolates pure candidate-
+    volume/skew cost: n_buckets, max_bucket_size, n_candidates,
+    candidate_precision per layout.
+
+    This is the measurement that decides the production layout before
+    100 TB: same recall, whichever layout shows the smaller max bucket
+    and candidate count wins the band join.
+
+    Scale shape: one memoized signature pass; per layout one band join
+    over 16-byte rows and one bucket-histogram aggregation."""
 
 
 # ---------------------------------------------------------------------------
 # incremental image-phash dedup (delta-ingest form)
 # ---------------------------------------------------------------------------
-PHASH_INCREMENTAL_NEW = 1   # doc_id % 4 == 1 -> incoming batch
-
-
+@_banded_entry
 def dedup_image_phash_incremental(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """Delta-ingest image dedup — dedup_incremental_minhash's asymmetry
@@ -1908,46 +2129,12 @@ def dedup_image_phash_incremental(spark: SparkSession,
     Output: (new_id, dup_of, hamming) — incoming docs near-duplicating
     an existing doc or an earlier-id doc of the same batch,
     hamming-verified."""
-    return _sig_pairs(_phash_signatures(spark, sf_dir), "phash",
-                      PROD_BANDS56, PHASH_HAMMING_MAX,
-                      is_new=(F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW)
-
-
-def _image_phash_incremental_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        PHASH_ORACLE_CTES,
-    )
-    return _sig_pairs_oracle(
-        PHASH_ORACLE_CTES, "ph", "phash", PHASH_HAMMING_MAX,
-        is_new=f"{{}}.doc_id % 4 = {PHASH_INCREMENTAL_NEW}")
-
-
-QUERIES["dedup_image_phash_incremental"] = dedup_image_phash_incremental
-ORACLES["dedup_image_phash_incremental"] = _image_phash_incremental_oracle()
 
 
 # ---------------------------------------------------------------------------
 # audio fingerprint dedup family (energy-sign signature; phash parity)
 # ---------------------------------------------------------------------------
-AFP_N_BANDS = 4               # 4 x 14 bits = the full 56-bit fingerprint
-AFP_HAMMING_MAX = 3           # < AFP_N_BANDS -> banding EXACT (pigeonhole)
-AFP_INCREMENTAL_NEW = 1       # doc_id % 4 == 1 -> incoming batch
-
-
-def _afp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (doc_id, afp) — the synth+WAV-round-trip+fingerprint
-    Python stage runs ONCE per (session, dataset); the band self-join,
-    the incremental form, and the banding sweep all consume the
-    materialized frame (the signature-only-shuffle discipline shared
-    with the minhash/simhash/phash paths)."""
-    from qucosa_fcrepo_reportingdb_spark.operators import multimodal
-
-    def build() -> DataFrame:
-        return multimodal.audio_fingerprint_table(spark, sf_dir) \
-            .transform(cut_lineage)
-    return session_memo(spark, ("audio_afp", sf_dir), build)
-
-
+@_banded_entry
 def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-duplicate pairs: decoded PCM -> 57-window energy
     profile -> 56-bit energy-sign fingerprint (multimodal.
@@ -1962,24 +2149,9 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band_idx, band_val) keyed signature rows only — samples never
     leave the scan stage. Candidates measured ~2.7/doc on the synthetic
     corpus (banding sweep quantifies the configs)."""
-    return _sig_pairs(_afp_signatures(spark, sf_dir), "afp",
-                      PROD_BANDS56, AFP_HAMMING_MAX)
 
 
-def _audio_fingerprint_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        AFP_ORACLE_CTES,
-    )
-    return _sig_pairs_oracle(AFP_ORACLE_CTES, "afpt", "afp", AFP_HAMMING_MAX)
-
-
-QUERIES["dedup_audio_fingerprint"] = dedup_audio_fingerprint
-ORACLES["dedup_audio_fingerprint"] = _audio_fingerprint_oracle()
-
-
-AFP_SWEEP_CONFIGS = [(2, 28), (4, 14), (7, 8)]   # n_bands x bits = 56
-
-
+@_banded_entry
 def afp_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banding S-curve for the audio-fingerprint blocking, mirroring
     phash_banding_sweep: for each (n_bands, bits_per_band) regrouping of
@@ -1990,22 +2162,9 @@ def afp_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one synth+decode+fingerprint pass (memoized signature
     table); each config pays only its own 16-bytes-per-row band join."""
-    return _banding_sweep(_afp_signatures(spark, sf_dir), "afp",
-                          AFP_SWEEP_CONFIGS, AFP_HAMMING_MAX)
 
 
-def _afp_sweep_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        AFP_ORACLE_CTES,
-    )
-    return _banding_sweep_sql(AFP_ORACLE_CTES, "afpt", "afp",
-                              AFP_SWEEP_CONFIGS, AFP_HAMMING_MAX)
-
-
-QUERIES["afp_banding_sweep"] = afp_banding_sweep
-ORACLES["afp_banding_sweep"] = _afp_sweep_oracle()
-
-
+@_banded_entry
 def dedup_audio_fingerprint_incremental(spark: SparkSession,
                                         sf_dir: str) -> DataFrame:
     """Delta-ingest audio dedup — the incremental asymmetry shared with
@@ -2019,64 +2178,38 @@ def dedup_audio_fingerprint_incremental(spark: SparkSession,
     At 100 TB the existing side's (doc_id, afp, band) rows are a
     persisted artifact written at each doc's own ingest; per-ingest cost
     is O(batch + matched buckets). Output: (new_id, dup_of, hamming)."""
-    return _sig_pairs(_afp_signatures(spark, sf_dir), "afp",
-                      PROD_BANDS56, AFP_HAMMING_MAX,
-                      is_new=(F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW)
-
-
-def _audio_fingerprint_incremental_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        AFP_ORACLE_CTES,
-    )
-    return _sig_pairs_oracle(
-        AFP_ORACLE_CTES, "afpt", "afp", AFP_HAMMING_MAX,
-        is_new=f"{{}}.doc_id % 4 = {AFP_INCREMENTAL_NEW}")
-
-
-QUERIES["dedup_audio_fingerprint_incremental"] = \
-    dedup_audio_fingerprint_incremental
-ORACLES["dedup_audio_fingerprint_incremental"] = \
-    _audio_fingerprint_incremental_oracle()
 
 
 # ---------------------------------------------------------------------------
 # band-skew audit: hot-bucket histogram for the banded joins
 # ---------------------------------------------------------------------------
-# video-family banding constants (the family itself lives further down;
-# the import-time oracle builders here need the constants already bound)
-VFP_N_BANDS = 4               # 4 x 14 bits = the full 56-bit frame hash
-VFP_HAMMING_MAX = 3           # < VFP_N_BANDS -> per-frame banding EXACT
-VFP_MIN_FRAMES = 3            # M of K aligned frames must match
-VFP_INCREMENTAL_NEW = 1       # doc_id % 4 == 1 -> incoming batch
+def _family_band_rows(spark: SparkSession, sf_dir: str,
+                      family: str) -> DataFrame:
+    """(family, band_idx, key) rows of one family's production band
+    join over its memoized signatures. Keys are the exact join keys it
+    shuffles on: band values, qualified by the aligned keys where the
+    join is keyed on them (video: (frame_idx, band_idx, band_val))."""
+    f = BANDED_FAMILIES[family]
+    key = "CAST(band_val AS STRING)"
+    for k in f.keys:
+        key = f"CONCAT(CAST({k} AS STRING), ':', {key})"
+    return explode_bands(
+        f.signatures(spark, sf_dir), band_exprs(f.sig, f.layout, "spark"),
+        *f.keys
+    ).selectExpr(f"'{family}' AS family",
+                 "CAST(band_idx AS INT) AS band_idx", f"{key} AS key")
 
 
 def _banded_family_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(family, band_idx, key) for every production banded join — the
-    shared input of band_skew_audit and band_salting_policy. Keys are
-    the exact join keys each family shuffles on: LSH band signature
-    strings for minhash, strided band values for image/audio, and
-    frame-qualified strided band values for video (its join is keyed
-    (frame_idx, band_idx, band_val))."""
+    """(family, band_idx, key) for the minhash LSH join (band signature
+    strings) and the 56-bit families' — the shared input of
+    band_skew_audit and band_salting_policy."""
     mh = minhash_band_table(spark, sf_dir).selectExpr(
         "'minhash_lsh' AS family", "CAST(band_idx AS INT) AS band_idx",
         "CAST(signature AS STRING) AS key")
-    ph_rows = explode_bands(
-        _phash_signatures(spark, sf_dir),
-        band_exprs("phash", PROD_BANDS56, "spark"), "doc_id"
-    ).selectExpr("'image_phash' AS family", "CAST(band_idx AS INT)"
-                 " AS band_idx", "CAST(band_val AS STRING) AS key")
-    af_rows = explode_bands(
-        _afp_signatures(spark, sf_dir),
-        band_exprs("afp", PROD_BANDS56, "spark"), "doc_id", "afp"
-    ).selectExpr(
-        "'audio_afp' AS family", "CAST(band_idx AS INT) AS band_idx",
-        "CAST(band_val AS STRING) AS key")
-    vf_rows = _vfp_bands(_vfp_signatures(spark, sf_dir)).selectExpr(
-        "'video_vfh_frame' AS family", "CAST(band_idx AS INT) AS band_idx",
-        "CONCAT(CAST(frame_idx AS STRING), ':',"
-        " CAST(band_val AS STRING)) AS key")
-    return (mh.unionByName(ph_rows).unionByName(af_rows)
-            .unionByName(vf_rows))
+    return functools.reduce(
+        DataFrame.unionByName,
+        [mh, *(_family_band_rows(spark, sf_dir, fam) for fam in _MEDIA56)])
 
 
 def band_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2144,19 +2277,11 @@ def band_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _banded_family_sizes_sql(extra_ctes: str = "",
-                             extra_arms: str = "") -> str:
-    """The DuckDB mirror of _banded_family_rows + the bucket-size
+def _banded_family_sizes_sql(families) -> str:
+    """The DuckDB mirror of the band-row unions and the bucket-size
     aggregation: a WITH-clause prefix ending in `sizes(family,
-    band_idx, key, k)`, shared by the skew-audit and salting-policy
-    oracles. extra_ctes/extra_arms let the candidate-volume census
-    append additional banded families (the simhash pair) without
-    duplicating the four base families' CTE chain."""
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        AFP_ORACLE_CTES,
-        PHASH_ORACLE_CTES,
-        VFP_ORACLE_CTES,
-    )
+    band_idx, key, k)` over minhash_lsh and ``families``. Each
+    family's band rows are a subquery over its own signature CTEs."""
     params = H.minhash_params()
     mh_cols = ",\n       ".join(
         f"{H.minhash('sh', a, b, 'duck')} AS m{j}"
@@ -2166,41 +2291,33 @@ def _banded_family_sizes_sql(extra_ctes: str = "",
         f"SELECT {bi} AS band_idx, "
         f"CAST({H.lsh_band(mcols, bi, 'duck')} AS VARCHAR) AS key FROM mh"
         for bi in range(H.LSH_BANDS))
-    vband_rows = (
-        "SELECT band_idx, CAST(frame_idx AS VARCHAR) || ':' || "
-        "CAST(band_val AS VARCHAR) AS key FROM "
-        f"({band_rows_sql('vft', 'vfh', PROD_BANDS56, ['frame_idx'])})")
-    return f"""
+    arms = [f"""SELECT 'minhash_lsh' AS family, band_idx, key FROM (
 WITH {H.shingle_ctes(nonempty=True)},
 mh AS (SELECT doc_id, sh,
        {mh_cols}
-       FROM shl),
-{PHASH_ORACLE_CTES.strip()},
-{AFP_ORACLE_CTES.strip()},
-{VFP_ORACLE_CTES.strip()},
-{extra_ctes}rows_all AS (
-  SELECT 'minhash_lsh' AS family, band_idx, key FROM ({mband_rows})
-  UNION ALL
-  SELECT 'image_phash' AS family, band_idx, key FROM ({_band_keys_sql('ph', 'phash', PROD_BANDS56)})
-  UNION ALL
-  SELECT 'audio_afp' AS family, band_idx, key FROM ({_band_keys_sql('afpt', 'afp', PROD_BANDS56)})
-  UNION ALL
-  SELECT 'video_vfh_frame' AS family, band_idx, key FROM ({vband_rows})
-  {extra_arms}),
+       FROM shl)
+{mband_rows})"""]
+    for fam in families:
+        f = BANDED_FAMILIES[fam]
+        key = "CAST(band_val AS VARCHAR)"
+        for k in f.keys:
+            key = f"CAST({k} AS VARCHAR) || ':' || {key}"
+        arms.append(
+            f"SELECT '{fam}' AS family, band_idx, {key} AS key FROM (\n"
+            f"WITH {f.ctes.strip()}\n"
+            f"{band_rows_sql(f.src, f.sig, f.layout, f.keys)})")
+    arms = "\n  UNION ALL\n  ".join(arms)
+    return f"""
+WITH rows_all AS (
+  {arms}),
 sizes AS (
   SELECT family, band_idx, key, CAST(COUNT(*) AS BIGINT) AS k
   FROM rows_all GROUP BY family, band_idx, key)
 """
 
 
-def _band_keys_sql(src: str, sig: str, layout: Layout) -> str:
-    """(band_idx, key) rows of table ``src`` for the bucket-size oracles."""
-    return (f"SELECT band_idx, CAST(band_val AS VARCHAR) AS key "
-            f"FROM ({band_rows_sql(src, sig, layout)})")
-
-
 def _band_skew_oracle() -> str:
-    return _banded_family_sizes_sql() + f""",
+    return _banded_family_sizes_sql(_MEDIA56) + f""",
 hist AS (
   SELECT family, k, CAST(COUNT(*) AS BIGINT) AS n_k,
          CAST(COUNT(*) AS BIGINT) * ((k * (k - 1)) // 2) AS pairs_k
@@ -2293,7 +2410,7 @@ def band_salting_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _band_salting_policy_oracle() -> str:
     t = SALT_TARGET_BUCKET_DOCS
-    return _banded_family_sizes_sql() + f""",
+    return _banded_family_sizes_sql(_MEDIA56) + f""",
 per AS (SELECT family, k, (k + {t} - 1) // {t} AS sk FROM sizes)
 SELECT family,
        CAST(COUNT(*) AS BIGINT) AS n_buckets,
@@ -2545,6 +2662,7 @@ QUERIES["dedup_minhash_lsh_salted"] = dedup_minhash_lsh_salted
 ORACLES["dedup_minhash_lsh_salted"] = _minhash_lsh_oracle()
 
 
+@_banded_entry
 def dedup_image_phash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_image_phash with the hot-bucket salted band join swapped in
     — the claim in dedup_minhash_lsh_salted's docstring ("the generic
@@ -2559,28 +2677,30 @@ def dedup_image_phash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     band_val) — the 8-byte signatures are joined onto the PAIR table
     after the salted shuffle, the signature-only-shuffle discipline
     shared with the minhash path."""
-    ph = _phash_signatures(spark, sf_dir)
-    bands = explode_bands(ph, band_exprs("phash", PROD_BANDS56, "spark"),
+
+
+def _salted_pairs(f: BandedFamily, sigs: DataFrame) -> DataFrame:
+    """The salted form's body: salted_band_candidates over the
+    production band rows (doc_id, band_idx, band_val), signatures
+    joined onto the candidate pairs, hamming verify."""
+    bands = explode_bands(sigs, band_exprs(f.sig, f.layout, "spark"),
                           "doc_id")
     cand = salted_band_candidates(bands, BAND_COLS)
-    p1 = ph.select(F.col("doc_id").alias("d1"), F.col("phash").alias("p1"))
-    p2 = ph.select(F.col("doc_id").alias("d2"), F.col("phash").alias("p2"))
+    p1 = sigs.select(F.col("doc_id").alias("d1"), F.col(f.sig).alias("p1"))
+    p2 = sigs.select(F.col("doc_id").alias("d2"), F.col(f.sig).alias("p2"))
     return (
         cand.join(p1, "d1").join(p2, "d2")
         .withColumn("hamming", F.expr(H.hamming("p1", "p2", "spark")))
-        .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
+        .filter(F.col("hamming") <= f.hamming_max)
         .select("d1", "d2", "hamming")
         .orderBy("d1", "d2")
     )
 
 
-QUERIES["dedup_image_phash_salted"] = dedup_image_phash_salted
-ORACLES["dedup_image_phash_salted"] = _image_phash_oracle()
-
-
 # ---------------------------------------------------------------------------
 # combinatorial (2-of-5) banding: the birthday-regime remedy
 # ---------------------------------------------------------------------------
+@_banded_entry
 def dedup_image_phash_bandpairs(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """dedup_image_phash re-blocked on combinatorial 2-of-5 band pairs —
@@ -2591,42 +2711,42 @@ def dedup_image_phash_bandpairs(spark: SparkSession,
     the ~2^23 composite key space defers that cliff by ~500x corpus
     growth. phash_blocking_scheme_audit carries the per-scheme numbers;
     the scale probe measures them at 500k docs."""
-    return _sig_pairs(_phash_signatures(spark, sf_dir), "phash", PAIRS56,
-                      PHASH_HAMMING_MAX)
 
 
-QUERIES["dedup_image_phash_bandpairs"] = dedup_image_phash_bandpairs
-ORACLES["dedup_image_phash_bandpairs"] = _image_phash_oracle()
-
-
-def _scheme_audit(schemes, hamming_max: int) -> DataFrame:
+def _scheme_audit(schemes, hamming_max: int, label: str = "scheme",
+                  n_band_rows: bool = True, hm: str = "hm") -> DataFrame:
     """Per (scheme, signature frame, sig column, layout): n_band_rows,
     n_buckets, max_bucket_size, n_candidates, n_verified and
-    candidate_precision of the scheme's own band self-join."""
+    candidate_precision of the scheme's own band self-join (``hm``
+    names the verify column)."""
     out = None
     for scheme, sigs, sig, layout in schemes:
         bands = explode_bands(sigs, band_exprs(sig, layout, "spark"),
                               "doc_id", sig)
+        rows = [F.sum("sz").cast("long").alias("n_band_rows")] \
+            if n_band_rows else []
         buckets = (bands.groupBy("band_idx", "band_val")
                    .agg(F.count(F.lit(1)).alias("sz"))
-                   .agg(F.sum("sz").cast("long").alias("n_band_rows"),
+                   .agg(*rows,
                         F.count(F.lit(1)).cast("long").alias("n_buckets"),
                         F.max("sz").cast("long").alias("max_bucket_size")))
         cand = (banded_pairs(bands, sig)
-                .withColumn("hm", F.expr(H.hamming("s1", "s2", "spark")))
+                .withColumn(hm, F.expr(H.hamming("s1", "s2", "spark")))
                 .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"),
-                     F.sum(F.when(F.col("hm") <= hamming_max, 1)
+                     F.sum(F.when(F.col(hm) <= hamming_max, 1)
                            .otherwise(0)).cast("long").alias("n_verified")))
         row = (buckets.crossJoin(cand).selectExpr(
-            f"'{scheme}' AS scheme", "n_band_rows", "n_buckets",
-            "max_bucket_size", "n_candidates", "n_verified",
+            f"'{scheme}' AS {label}", *(["n_band_rows"] if n_band_rows
+                                        else []),
+            "n_buckets", "max_bucket_size", "n_candidates", "n_verified",
             "CAST(n_verified AS DOUBLE)"
             " / CAST(nullif(n_candidates, 0) AS DOUBLE)"
             " AS candidate_precision"))
         out = row if out is None else out.unionByName(row)
-    return out.orderBy("scheme")
+    return out.orderBy(label)
 
 
+@_banded_entry
 def phash_blocking_scheme_audit(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Single-band (strided 4x14) vs combinatorial band-pair (2-of-5)
@@ -2642,53 +2762,18 @@ def phash_blocking_scheme_audit(spark: SparkSession,
     << 1 (SCALING.md, 100x probe). This table is what a 100 TB
     deployment consults (on a sample) to pick the blocking BEFORE the
     join ships."""
-    ph = _phash_signatures(spark, sf_dir)
-    return _scheme_audit([("band4x14_strided", ph, "phash", PROD_BANDS56),
-                          ("bandpairs_2of5", ph, "phash", PAIRS56)],
-                         PHASH_HAMMING_MAX)
-
-
-def _blocking_scheme_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        PHASH_ORACLE_CTES,
-    )
-    return _scheme_audit_sql(
-        PHASH_ORACLE_CTES,
-        [("band4x14_strided", "ph", "phash", PROD_BANDS56),
-         ("bandpairs_2of5", "ph", "phash", PAIRS56)],
-        PHASH_HAMMING_MAX, "scheme")
-
-
-QUERIES["phash_blocking_scheme_audit"] = phash_blocking_scheme_audit
-ORACLES["phash_blocking_scheme_audit"] = _blocking_scheme_oracle()
 
 
 # ---------------------------------------------------------------------------
 # video fingerprint dedup family (per-frame dHash + M-of-K frame match)
-# (constants live above the band-skew section, which uses them at import)
 # ---------------------------------------------------------------------------
-
-
-def _vfp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (doc_id, frame_idx, vfh) — the synth+PNG-round-trip+hash
-    Python stage runs ONCE per (session, dataset); the band self-join,
-    the verify joins, the incremental form, and the match sweep all
-    consume the materialized frame (VFP_FRAMES rows per doc — the
-    signature-only-shuffle discipline shared with the other families)."""
-    from qucosa_fcrepo_reportingdb_spark.operators import multimodal
-
-    def build() -> DataFrame:
-        return multimodal.video_fingerprint_table(spark, sf_dir) \
-            .transform(cut_lineage)
-    return session_memo(spark, ("video_vfp", sf_dir), build)
-
-
 def _vfp_bands(vf: DataFrame, layout: Layout = PROD_BANDS56) -> DataFrame:
     return explode_bands(vf, band_exprs("vfh", layout, "spark"),
                          "doc_id", "frame_idx")
 
 
-def _vfp_frame_match_counts(cand: DataFrame, vf: DataFrame) -> DataFrame:
+def _vfp_frame_match_counts(cand: DataFrame, vf: DataFrame,
+                            hamming_max: int) -> DataFrame:
     """(d1, d2) candidates -> (d1, d2, frames_matched): join both clips'
     frame-hash ARRAYS (one row per doc, frames sorted by frame_idx) and
     count in-gate frames with a zip_with fold — no per-frame join rows.
@@ -2706,7 +2791,7 @@ def _vfp_frame_match_counts(cand: DataFrame, vf: DataFrame) -> DataFrame:
     v1 = docs.select(F.col("doc_id").alias("d1"), F.col("fr").alias("f1"))
     v2 = docs.select(F.col("doc_id").alias("d2"), F.col("fr").alias("f2"))
     in_gate = (f"CASE WHEN {H.hamming('x.vfh', 'y.vfh', 'spark')}"
-               f" <= {VFP_HAMMING_MAX} THEN 1 ELSE 0 END")
+               f" <= {hamming_max} THEN 1 ELSE 0 END")
     return (
         cand.join(v1, "d1").join(v2, "d2")
         .withColumn(
@@ -2717,26 +2802,28 @@ def _vfp_frame_match_counts(cand: DataFrame, vf: DataFrame) -> DataFrame:
     )
 
 
-def _vfp_matches(vf: DataFrame, layout: Layout = PROD_BANDS56,
+def _vfp_matches(vf: DataFrame, f: BandedFamily,
+                 layout: Layout = PROD_BANDS56,
                  is_new: "F.Column | None" = None) -> DataFrame:
     """(d1, d2, frames_matched) for pairs meeting the M-of-K rule: the
     per-frame band join keyed (frame_idx, band_idx, band_val) yields doc
     candidates, the frame-aligned fold verifies them; ``is_new`` selects
     the incremental form. Unordered."""
-    cand = banded_pairs(_vfp_bands(vf, layout), keys=["frame_idx"],
+    cand = banded_pairs(_vfp_bands(vf, layout), keys=list(f.keys),
                         is_new=is_new, keep=["d1", "d2"])
-    return (_vfp_frame_match_counts(cand, vf)
-            .filter(F.col("frames_matched") >= VFP_MIN_FRAMES))
+    return (_vfp_frame_match_counts(cand, vf, f.hamming_max)
+            .filter(F.col("frames_matched") >= f.min_frames))
 
 
+@_banded_entry
 def dedup_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video near-duplicate pairs: per-frame decoded pixels -> per-frame
     56-bit dHash (multimodal.video_fingerprint_frame, the only Python
     stage, scan-local) -> per-(frame, band) explode -> bucketed candidate
     self-join keyed (frame_idx, band_idx, band_val) -> frame-aligned
     hamming verify -> M-of-K rule: a pair is a near-dup iff at least
-    VFP_MIN_FRAMES of its VFP_FRAMES aligned frames are within
-    VFP_HAMMING_MAX.
+    min_frames (3) of its VFP_FRAMES aligned frames are within the
+    family's hamming gate (3).
 
     EXACTNESS: M >= 1, so every qualifying pair has some frame with
     hamming <= 3 < 4 bands; by pigeonhole that frame shares a band value
@@ -2751,57 +2838,18 @@ def dedup_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: signatures are VFP_FRAMES x 16 bytes/doc; the band join
     shuffles (frame, band) keyed id rows only — frames never leave the
     scan stage. Candidates stay O(colliding frame pairs)."""
-    return _vfp_matches(_vfp_signatures(spark, sf_dir)).orderBy("d1", "d2")
 
 
-def _vfp_oracle_prefix(layout: Layout = ORACLE_BANDS56,
-                       is_new: "str | None" = None) -> str:
-    """The video oracles' CTE prefix: doc candidates of the per-frame
-    band join (``cand``) and their frame-aligned match counts
-    (``matched``). Verified-pair oracles band contiguously; oracles whose
-    OUTPUT depends on the candidate set (vfp_frame_match_sweep) pass the
-    production layout."""
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        VFP_ORACLE_CTES,
-    )
-    cand = banded_pairs_sql("vft", "vfh", layout, keys=["frame_idx"],
-                            has_sig=False, is_new=is_new)
-    return f"""
-WITH {VFP_ORACLE_CTES.strip()},
-{cand},
-matched AS (
-  SELECT c.d1, c.d2,
-         CAST(SUM(CASE WHEN {H.hamming('x.vfh', 'y.vfh', 'duck')}
-                       <= {VFP_HAMMING_MAX} THEN 1 ELSE 0 END)
-              AS BIGINT) AS frames_matched
-  FROM cand c
-  JOIN vft x ON x.doc_id = c.d1
-  JOIN vft y ON y.doc_id = c.d2 AND y.frame_idx = x.frame_idx
-  GROUP BY c.d1, c.d2)
-"""
-
-
-def _video_fingerprint_oracle() -> str:
-    return (_vfp_oracle_prefix()
-            + f"""
-SELECT d1, d2, frames_matched FROM matched
-WHERE frames_matched >= {VFP_MIN_FRAMES}
-ORDER BY d1, d2
-""")
-
-
-QUERIES["dedup_video_fingerprint"] = dedup_video_fingerprint
-ORACLES["dedup_video_fingerprint"] = _video_fingerprint_oracle()
-
-
+@_banded_entry
 def vfp_frame_match_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """What VFP_MIN_FRAMES actually buys — for each M in 0..VFP_FRAMES,
-    how many candidate pairs match at least M frames: the sensitivity
-    table for the M-of-K knob (the analog of jaccard_threshold_sweep for
-    the frame-match rule; the banding knob already has three sweeps, the
-    match-count knob has none). On the synthetic corpus the M=4 row
-    collapsing to ~0 while M=3 holds the designed pairs is the visible
-    proof the threshold sits on a cliff, not a plateau.
+    """What the video family's min_frames actually buys — for each M in
+    0..VFP_FRAMES, how many candidate pairs match at least M frames: the
+    sensitivity table for the M-of-K knob (the analog of
+    jaccard_threshold_sweep for the frame-match rule; the banding knob
+    already has three sweeps, the match-count knob has none). On the
+    synthetic corpus the M=4 row collapsing to ~0 while M=3 holds the
+    designed pairs is the visible proof the threshold sits on a cliff,
+    not a plateau.
 
     The candidate set is the PRODUCTION (strided) band join, so the
     low-M rows count real production candidates — unlike the verified
@@ -2811,16 +2859,18 @@ def vfp_frame_match_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one pass over the candidate frame-match counts, then a
     cumulative sum over a (VFP_FRAMES+1)-row grid. O(K) post-scan
     state."""
-    vf = _vfp_signatures(spark, sf_dir)
-    cand = banded_pairs(_vfp_bands(vf), keys=["frame_idx"],
+
+
+def _frame_match_sweep(spark: SparkSession, f: BandedFamily,
+                       vf: DataFrame) -> DataFrame:
+    """vfp_frame_match_sweep's body: the production candidates' frame
+    match counts, cumulated over the min_frames grid."""
+    cand = banded_pairs(_vfp_bands(vf), keys=list(f.keys),
                         keep=["d1", "d2"])
-    per_m = (_vfp_frame_match_counts(cand, vf)
+    per_m = (_vfp_frame_match_counts(cand, vf, f.hamming_max)
              .groupBy("frames_matched")
              .agg(F.count(F.lit(1)).cast("long").alias("n")))
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        VFP_FRAMES,
-    )
-    grid = spark.range(0, VFP_FRAMES + 1).select(
+    grid = spark.range(0, multimodal.VFP_FRAMES + 1).select(
         F.col("id").cast("long").alias("min_frames"))
     w = Window.orderBy(F.col("min_frames").desc()) \
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -2833,39 +2883,7 @@ def vfp_frame_match_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _vfp_sweep_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        VFP_FRAMES,
-    )
-    return (_vfp_oracle_prefix(PROD_BANDS56)
-            + f""",
-per_m AS (SELECT frames_matched, CAST(COUNT(*) AS BIGINT) AS n
-          FROM matched GROUP BY frames_matched),
-grid AS (SELECT CAST(unnest(range(0, {VFP_FRAMES} + 1)) AS BIGINT)
-                AS min_frames),
-cum AS (SELECT g.min_frames, COALESCE(p.n, 0) AS n
-        FROM grid g LEFT JOIN per_m p ON p.frames_matched = g.min_frames)
-SELECT min_frames,
-       CAST(SUM(n) OVER (ORDER BY min_frames DESC
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_pairs_ge
-FROM cum
-ORDER BY min_frames
-""")
-
-
-QUERIES["vfp_frame_match_sweep"] = vfp_frame_match_sweep
-ORACLES["vfp_frame_match_sweep"] = _vfp_sweep_oracle()
-
-
-def _vfp_incremental(vf: DataFrame, layout: Layout) -> DataFrame:
-    return (_vfp_matches(vf, layout,
-                         is_new=(F.col("doc_id") % 4) == VFP_INCREMENTAL_NEW)
-            .select(F.col("d1").alias("new_id"), F.col("d2").alias("dup_of"),
-                    "frames_matched")
-            .orderBy("new_id", "dup_of"))
-
-
+@_banded_entry
 def dedup_video_fingerprint_incremental(spark: SparkSession,
                                         sf_dir: str) -> DataFrame:
     """Delta-ingest video dedup — the incremental asymmetry of the
@@ -2882,23 +2900,6 @@ def dedup_video_fingerprint_incremental(spark: SparkSession,
     ingest); per-ingest cost is O(batch + matched buckets). Output:
     (new_id, dup_of, frames_matched) under the same M-of-K rule as the
     batch form."""
-    return _vfp_incremental(_vfp_signatures(spark, sf_dir), PROD_BANDS56)
-
-
-def _video_fingerprint_incremental_oracle() -> str:
-    return (_vfp_oracle_prefix(
-        is_new=f"{{}}.doc_id % 4 = {VFP_INCREMENTAL_NEW}")
-        + f"""
-SELECT d1 AS new_id, d2 AS dup_of, frames_matched FROM matched
-WHERE frames_matched >= {VFP_MIN_FRAMES}
-ORDER BY new_id, dup_of
-""")
-
-
-QUERIES["dedup_video_fingerprint_incremental"] = \
-    dedup_video_fingerprint_incremental
-ORACLES["dedup_video_fingerprint_incremental"] = \
-    _video_fingerprint_incremental_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -2921,65 +2922,57 @@ def multimodal_method_agreement(spark: SparkSession,
     the band joins are the same candidate-bounded shapes as the batch
     queries, the two full-outer joins are pair-table-sized, and the
     output is a <= 7-row combinable aggregation."""
-    def pair_ids(sigs: DataFrame, sig: str, hamming_max: int) -> DataFrame:
-        return banded_pairs(
-            explode_bands(sigs, band_exprs(sig, PROD_BANDS56, "spark"),
-                          "doc_id", sig),
-            sig, hamming_max=hamming_max, keep=["d1", "d2"])
-    img = pair_ids(_phash_signatures(spark, sf_dir), "phash",
-                   PHASH_HAMMING_MAX).withColumn("bi", F.lit(1))
-    aud = pair_ids(_afp_signatures(spark, sf_dir), "afp",
-                   AFP_HAMMING_MAX).withColumn("ba", F.lit(1))
-    vid = (_vfp_matches(_vfp_signatures(spark, sf_dir))
-           .select("d1", "d2").withColumn("bv", F.lit(1)))
-    merged = (img.join(aud, ["d1", "d2"], "full_outer")
-              .join(vid, ["d1", "d2"], "full_outer"))
+    def flags(family: str) -> DataFrame:
+        f = BANDED_FAMILIES[family]
+        sigs = f.signatures(spark, sf_dir)
+        if f.keys:
+            pairs = _vfp_matches(sigs, f).select("d1", "d2")
+        else:
+            pairs = banded_pairs(
+                explode_bands(sigs, band_exprs(f.sig, f.layout, "spark"),
+                              "doc_id", f.sig),
+                f.sig, hamming_max=f.hamming_max, keep=["d1", "d2"])
+        return pairs.withColumn(_flag(family), F.lit(1))
+    merged = functools.reduce(
+        lambda a, b: a.join(b, ["d1", "d2"], "full_outer"),
+        map(flags, _MEDIA56))
+    by = [f"by_{_modality(fam)}" for fam in _MEDIA56]
     return (
-        merged.select(
-            (F.coalesce("bi", F.lit(0)) == 1).alias("by_image"),
-            (F.coalesce("ba", F.lit(0)) == 1).alias("by_audio"),
-            (F.coalesce("bv", F.lit(0)) == 1).alias("by_video"))
-        .groupBy("by_image", "by_audio", "by_video")
+        merged.select(*[(F.coalesce(_flag(fam), F.lit(0)) == 1).alias(b)
+                        for fam, b in zip(_MEDIA56, by)])
+        .groupBy(*by)
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-        .orderBy(F.desc("by_image"), F.desc("by_audio"),
-                 F.desc("by_video"))
+        .orderBy(*map(F.desc, by))
     )
+
+
+def _modality(family: str) -> str:
+    """The media family's output-column label: its key's first word."""
+    return family.split("_")[0]
+
+
+def _flag(family: str) -> str:
+    return f"b{_modality(family)[0]}"
 
 
 def _multimodal_agreement_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        AFP_ORACLE_CTES,
-        PHASH_ORACLE_CTES,
-    )
-    ham = H.hamming("s1", "s2", "duck")
-    return _vfp_oracle_prefix() + f""",
-{PHASH_ORACLE_CTES.strip()},
-{AFP_ORACLE_CTES.strip()},
-{banded_pairs_sql('ph', 'phash', ORACLE_BANDS56, tag='_i')},
-{banded_pairs_sql('afpt', 'afp', ORACLE_BANDS56, tag='_a')},
-ip AS (SELECT DISTINCT d1, d2 FROM cand_i
-       WHERE {ham} <= {PHASH_HAMMING_MAX}),
-ap AS (SELECT DISTINCT d1, d2 FROM cand_a
-       WHERE {ham} <= {AFP_HAMMING_MAX}),
-vp AS (SELECT d1, d2 FROM matched
-       WHERE frames_matched >= {VFP_MIN_FRAMES}),
-allp AS (
-  SELECT d1, d2 FROM ip UNION
-  SELECT d1, d2 FROM ap UNION
-  SELECT d1, d2 FROM vp),
+    mods = [_modality(fam) for fam in _MEDIA56]
+    pairs = ",\n".join(
+        f"p_{m} AS (SELECT d1, d2 FROM ({banded_oracle(fam, 'batch')}) q)"
+        for m, fam in zip(mods, _MEDIA56))
+    by = [f"by_{m}" for m in mods]
+    return f"""
+WITH {pairs},
+allp AS ({" UNION ".join(f"SELECT d1, d2 FROM p_{m}" for m in mods)}),
 flagged AS (
-  SELECT (i.d1 IS NOT NULL) AS by_image,
-         (a.d1 IS NOT NULL) AS by_audio,
-         (v.d1 IS NOT NULL) AS by_video
+  SELECT {", ".join(f"(p_{m}.d1 IS NOT NULL) AS by_{m}" for m in mods)}
   FROM allp p
-  LEFT JOIN ip i ON i.d1 = p.d1 AND i.d2 = p.d2
-  LEFT JOIN ap a ON a.d1 = p.d1 AND a.d2 = p.d2
-  LEFT JOIN vp v ON v.d1 = p.d1 AND v.d2 = p.d2)
-SELECT by_image, by_audio, by_video,
-       CAST(COUNT(*) AS BIGINT) AS n_pairs
+  {" ".join(f"LEFT JOIN p_{m} ON p_{m}.d1 = p.d1 AND p_{m}.d2 = p.d2"
+            for m in mods)})
+SELECT {", ".join(by)}, CAST(COUNT(*) AS BIGINT) AS n_pairs
 FROM flagged
-GROUP BY by_image, by_audio, by_video
-ORDER BY by_image DESC, by_audio DESC, by_video DESC
+GROUP BY {", ".join(by)}
+ORDER BY {", ".join(f"{b} DESC" for b in by)}
 """
 
 
@@ -3013,22 +3006,13 @@ def band_layout_audit_multimodal(spark: SparkSession,
     feeding ONE bucket histogram, ONE band self-join keyed on (family,
     layout, align, band_idx, band_val), and one roll-up each, instead
     of 6 per-combination shuffle trees. No pixels/samples move."""
-    fams = [
-        ("audio_afp",
-         _afp_signatures(spark, sf_dir).select(
-             "doc_id", F.lit(0).alias("align"), F.col("afp").alias("sig")),
-         AFP_N_BANDS, AFP_HAMMING_MAX),
-        ("image_phash",
-         _phash_signatures(spark, sf_dir).select(
-             "doc_id", F.lit(0).alias("align"),
-             F.col("phash").alias("sig")),
-         PHASH_N_BANDS, PHASH_HAMMING_MAX),
-        ("video_vfh_frame",
-         _vfp_signatures(spark, sf_dir).select(
-             "doc_id", F.col("frame_idx").alias("align"),
-             F.col("vfh").alias("sig")),
-         VFP_N_BANDS, VFP_HAMMING_MAX),
-    ]
+    fams = []
+    for family in sorted(_MEDIA56):   # the plan's union order
+        f = BANDED_FAMILIES[family]
+        align = F.col(f.keys[0]) if f.keys else F.lit(0)
+        fams.append((family, f.signatures(spark, sf_dir).select(
+            "doc_id", align.alias("align"), F.col(f.sig).alias("sig")),
+            f.layout.n_bands, f.hamming_max))
     bands = None
     hmax_expr = None
     for family, sigs, n_bands, hmax in fams:
@@ -3098,30 +3082,18 @@ def band_layout_audit_multimodal(spark: SparkSession,
 
 
 def _band_layout_multimodal_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        AFP_ORACLE_CTES,
-        PHASH_ORACLE_CTES,
-        VFP_ORACLE_CTES,
-    )
-    ctes = [PHASH_ORACLE_CTES.strip(), AFP_ORACLE_CTES.strip(),
-            VFP_ORACLE_CTES.strip()]
-    # normalize the three signature tables to (doc_id, align, sig)
-    ctes.append("u_image_phash AS (SELECT doc_id, 0 AS align, "
-                "phash AS sig FROM ph)")
-    ctes.append("u_audio_afp AS (SELECT doc_id, 0 AS align, "
-                "afp AS sig FROM afpt)")
-    ctes.append("u_video_vfh_frame AS (SELECT doc_id, frame_idx AS align, "
-                "vfh AS sig FROM vft)")
-    selects = []
-    for family, n_bands, hmax in (
-        ("image_phash", PHASH_N_BANDS, PHASH_HAMMING_MAX),
-        ("audio_afp", AFP_N_BANDS, AFP_HAMMING_MAX),
-        ("video_vfh_frame", VFP_N_BANDS, VFP_HAMMING_MAX),
-    ):
+    ctes, selects = [], []
+    for family in _MEDIA56:
+        f = BANDED_FAMILIES[family]
+        # the signature table as (doc_id, align, sig)
+        ctes += [f.ctes.strip(),
+                 f"u_{family} AS (SELECT doc_id, "
+                 f"{f.keys[0] if f.keys else 0} AS align, "
+                 f"{f.sig} AS sig FROM {f.src})"]
         for layout_name in ("contiguous", "strided"):
             tag = f"_{family}_{layout_name[:4]}"
             ctes.append(banded_pairs_sql(
-                f"u_{family}", "sig", Layout(layout_name, n_bands),
+                f"u_{family}", "sig", Layout(layout_name, f.layout.n_bands),
                 keys=["align"], carry=["align"], tag=tag))
             ctes.append(
                 f"bk{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
@@ -3131,7 +3103,7 @@ def _band_layout_multimodal_oracle() -> str:
             ctes.append(
                 f"agg{tag} AS (SELECT CAST(COUNT(*) AS BIGINT) AS "
                 f"n_candidates, CAST(SUM(CASE WHEN "
-                f"{H.hamming('s1', 's2', 'duck')} <= {hmax} "
+                f"{H.hamming('s1', 's2', 'duck')} <= {f.hamming_max} "
                 f"THEN 1 ELSE 0 END) AS BIGINT) AS n_verified "
                 f"FROM cand{tag})")
             selects.append(
@@ -3150,6 +3122,7 @@ QUERIES["band_layout_audit_multimodal"] = band_layout_audit_multimodal
 ORACLES["band_layout_audit_multimodal"] = _band_layout_multimodal_oracle()
 
 
+@_banded_entry
 def dedup_video_fingerprint_bandpairs(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     """dedup_video_fingerprint re-blocked on the combinatorial 2-of-5
@@ -3161,15 +3134,9 @@ def dedup_video_fingerprint_bandpairs(spark: SparkSession,
     oracle IS dedup_video_fingerprint's SQL — the hash gate proves the
     re-blocking loses nothing. The scale probe's video_vfh_c2 family
     measures what it buys at 100x."""
-    return (_vfp_matches(_vfp_signatures(spark, sf_dir), PAIRS56)
-            .orderBy("d1", "d2"))
 
 
-QUERIES["dedup_video_fingerprint_bandpairs"] = \
-    dedup_video_fingerprint_bandpairs
-ORACLES["dedup_video_fingerprint_bandpairs"] = _video_fingerprint_oracle()
-
-
+@_banded_entry
 def dedup_audio_fingerprint_bandpairs(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     """dedup_audio_fingerprint under the combinatorial 2-of-5 band-pair
@@ -3179,49 +3146,12 @@ def dedup_audio_fingerprint_bandpairs(spark: SparkSession,
     sub-bands intact), candidate volume on the band-pair curve. The
     same SCALING.md crossover guidance applies: single strided bands
     below ~16k-bucket occupancy, band pairs past it."""
-    return _sig_pairs(_afp_signatures(spark, sf_dir), "afp", PAIRS56,
-                      AFP_HAMMING_MAX)
-
-
-QUERIES["dedup_audio_fingerprint_bandpairs"] = \
-    dedup_audio_fingerprint_bandpairs
-ORACLES["dedup_audio_fingerprint_bandpairs"] = _audio_fingerprint_oracle()
 
 
 # ---------------------------------------------------------------------------
 # 64-bit simhash: the widened-sketch remedy for the 32-bit birthday cap
 # ---------------------------------------------------------------------------
-SIMHASH64_BITS = H.SIMHASH64_BITS   # 62 informative bits (2x31, rehash64)
-PAIRS62 = Layout("pairs", PHASH_C2_N_SUB, SIMHASH64_BITS)
-SIMHASH64_ORACLE_BANDS = Layout("contiguous", 4, 64)   # 4 x 16-bit bands
-
-
-def _simhash64_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (doc_id, simhash) at the widened width — per-element
-    rehash64 widening + one 62-counter fold, scan-local codegen; shared
-    by the dedup query, the width audit, and the candidate-volume
-    census (the same signature-only-shuffle discipline as the other
-    families).
-
-    non_empty=True (the minhash convention): a zero-token
-    doc has no shingles, and the majority vote '2*ones >= n' with n=0
-    sets EVERY bit — all empty docs would share the all-ones signature
-    and emit O(n_empty^2) hamming-0 "duplicates" from the hottest
-    bucket. A family positioned as a production near-dup detector
-    excludes them instead (empty docs are exact-dedup's job,
-    dedup_exact groups them in one hash bucket). The 32-bit family
-    keeps its band-all-docs semantics deliberately: it is the
-    DOCUMENTED coarse prefilter whose pathologies the width audit
-    exists to demonstrate."""
-    def build() -> DataFrame:
-        return _shingled(spark, sf_dir, non_empty=True).selectExpr(
-            "doc_id",
-            f"{H.simhash(H.rehash64('sh', 'spark'), 'spark', SIMHASH64_BITS)}"
-            " AS simhash",
-        ).transform(cut_lineage)
-    return session_memo(spark, ("simhash64_signatures", sf_dir), build)
-
-
+@_banded_entry
 def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_simhash with the sketch widened to 62 informative bits (two
     independent 31-bit streams per shingle — see hashing.rehash64) and
@@ -3247,37 +3177,6 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     than at 32 (more bits must agree), which is the point: the coarse
     prefilter becomes a usable near-dup detector once the sketch is
     wide enough to band."""
-    return _sig_pairs(_simhash64_signatures(spark, sf_dir), "simhash",
-                      PAIRS62, HAMMING_MAX)
-
-
-_SIM64_CTES = f"""
-{H.shingle_ctes()},
-sim AS (SELECT doc_id,
-        {H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)}
-        AS simhash FROM shl WHERE len(sh) > 0)"""
-
-
-def _simhash64_oracle() -> str:
-    return _sig_pairs_oracle(_SIM64_CTES, "sim", "simhash", HAMMING_MAX,
-                             layout=SIMHASH64_ORACLE_BANDS)
-
-
-QUERIES["dedup_simhash64"] = dedup_simhash64
-ORACLES["dedup_simhash64"] = _simhash64_oracle()
-
-
-def _simhash32_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (doc_id, simhash) at 32 bits, shared by dedup_simhash,
-    the width audit, the census and the rollover report: the band
-    self-join consumes BOTH sides of this frame, and without the
-    checkpoint each side re-evaluates the full tokenize->shingle->simhash
-    expression tree over the corpus."""
-    def build() -> DataFrame:
-        return _shingled(spark, sf_dir).selectExpr(
-            "doc_id", f"{H.simhash('sh', 'spark')} AS simhash"
-        ).transform(cut_lineage)
-    return session_memo(spark, ("simhash_signatures", sf_dir), build)
 
 
 def simhash_width_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3294,10 +3193,9 @@ def simhash_width_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     consults (on a sample) before choosing the text prefilter, the same
     role phash_blocking_scheme_audit plays for the image family."""
     return _scheme_audit(
-        [("simhash32_band4x8", _simhash32_signatures(spark, sf_dir),
-          "simhash", SIMHASH32_BANDS),
-         ("simhash64_bandpairs_2of5", _simhash64_signatures(spark, sf_dir),
-          "simhash", PAIRS62)],
+        [(fam, BANDED_FAMILIES[fam].signatures(spark, sf_dir), "simhash",
+          BANDED_FAMILIES[fam].layout)
+         for fam in ("simhash32_band4x8", "simhash64_bandpairs_2of5")],
         HAMMING_MAX)
 
 
@@ -3331,53 +3229,16 @@ ORACLES["simhash_width_audit"] = _simhash_width_oracle()
 # measured in SCALING.md (32-bit simhash crossed it below 5k docs).
 CANDIDATE_PAIRS_PER_UNIT_BUDGET = 8.0
 
-# Band rows each blocking unit contributes, per family — the divisor
-# that turns band-row counts into unit counts without a second scan.
-FAMILY_BANDS_PER_UNIT = {
-    "minhash_lsh": H.LSH_BANDS,
-    "image_phash": PHASH_N_BANDS,
-    "audio_afp": AFP_N_BANDS,
-    "video_vfh_frame": VFP_N_BANDS,
-    "simhash32_band4x8": 4,
-    "simhash64_bandpairs_2of5": PHASH_C2_N_SUB * (PHASH_C2_N_SUB - 1) // 2,
-}
-
 
 def _census_family_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_banded_family_rows extended with the two simhash schemes — every
+    """_banded_family_rows extended with the simhash schemes — every
     banded join the registry can deploy, under its production blocking,
     as (family, band_idx, key) rows over the memoized signatures."""
-    def rows(sigs: DataFrame, layout: Layout, family: str) -> DataFrame:
-        return explode_bands(
-            sigs, band_exprs("simhash", layout, "spark")
-        ).selectExpr(f"'{family}' AS family",
-                     "CAST(band_idx AS INT) AS band_idx",
-                     "CAST(band_val AS STRING) AS key")
-    return (_banded_family_rows(spark, sf_dir)
-            .unionByName(rows(_simhash32_signatures(spark, sf_dir),
-                              SIMHASH32_BANDS, "simhash32_band4x8"))
-            .unionByName(rows(_simhash64_signatures(spark, sf_dir),
-                              PAIRS62, "simhash64_bandpairs_2of5")))
-
-
-# Per-family remedy when the tripwire fires, derived from each
-# blocking's key-space structure: an UNBOUNDED or huge key space
-# (minhash signature strings, the ~2^25-26 simhash64/56-bit pair keys)
-# can only overflow via hot keys -> 'salt' (band_salting_policy /
-# salted_band_candidates deploy it); a SATURATED small space needs a
-# bigger one — the 56-bit single-band families re-block onto their
-# measured-crossover band pairs ('reblock_band_pairs',
-# band_blocking_policy + the *_bandpairs batch/incremental/stream
-# forms), and 32-bit simhash widens the sketch itself ('widen_sketch'
-# -> dedup_simhash64, since pairs over 32 bits would only reach ~2^13).
-FAMILY_SATURATION_REMEDY = {
-    "minhash_lsh": "salt",
-    "image_phash": "reblock_band_pairs",
-    "audio_afp": "reblock_band_pairs",
-    "video_vfh_frame": "reblock_band_pairs",
-    "simhash32_band4x8": "widen_sketch",
-    "simhash64_bandpairs_2of5": "salt",
-}
+    return functools.reduce(DataFrame.unionByName, [
+        _banded_family_rows(spark, sf_dir),
+        *(_family_band_rows(spark, sf_dir, fam)
+          for fam, f in BANDED_FAMILIES.items()
+          if f.build and fam not in _MEDIA56)])
 
 
 def candidate_volume_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3386,7 +3247,7 @@ def candidate_volume_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets of k*(k-1)/2 — the exact verify-stage fan-out the band join
     ships), pairs per unit, the over_budget tripwire against
     CANDIDATE_PAIRS_PER_UNIT_BUDGET, and the ACTION — the family's
-    structural remedy (FAMILY_SATURATION_REMEDY) when the wire trips,
+    structural remedy (BandedFamily.remedy) when the wire trips,
     'none' otherwise. bench.py runs this each round and emits it as the
     candidate_volume block, so the birthday cliff is an automated alarm
     with its fix attached instead of a probe-era memory: a corpus
@@ -3399,9 +3260,7 @@ def candidate_volume_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = (_census_family_rows(spark, sf_dir)
              .groupBy("family", "band_idx", "key")
              .agg(F.count(F.lit(1)).cast("long").alias("k")))
-    div = " ".join(
-        f"WHEN '{fam}' THEN {n}" for fam, n in
-        sorted(FAMILY_BANDS_PER_UNIT.items()))
+    div = _per_family_case("bands_per_unit")
     return (
         sizes.groupBy("family")
         .agg(F.sum("k").cast("long").alias("n_band_rows"),
@@ -3424,41 +3283,22 @@ def candidate_volume_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             " / CAST(nullif(n_band_rows div (CASE family"
             f" {div} END), 0) AS DOUBLE)"
             f" > {CANDIDATE_PAIRS_PER_UNIT_BUDGET}"
-            f" THEN CASE family {_remedy_case()} END"
+            f" THEN CASE family {_per_family_case('remedy')} END"
             " ELSE 'none' END AS action")
         .orderBy("family")
     )
 
 
-def _remedy_case() -> str:
-    return " ".join(
-        f"WHEN '{fam}' THEN '{r}'"
-        for fam, r in sorted(FAMILY_SATURATION_REMEDY.items()))
+def _per_family_case(field: str) -> str:
+    """The WHEN arms of a CASE over family: each family's spec ``field``."""
+    return " ".join(f"WHEN '{fam}' THEN {getattr(f, field)!r}"
+                    for fam, f in sorted(BANDED_FAMILIES.items()))
 
 
 def _candidate_volume_oracle() -> str:
-    sim32_rows = _band_keys_sql("c_sim32", "simhash", SIMHASH32_BANDS)
-    sim64_rows = _band_keys_sql("c_sim64", "simhash", PAIRS62)
-    # the base prefix's shl is filtered to non-empty (the minhash
-    # semantics); the 32-bit simhash family deliberately bands ALL docs
-    # (the documented coarse prefilter), so it gets its own unfiltered
-    # shingle CTE; the 64-bit family follows the minhash convention
-    # (see _simhash64_signatures on the all-ones empty-doc signature)
-    extra_ctes = f"""c_shl AS (SELECT doc_id, {H.shingle_hashes('th', 'duck')} AS sh FROM th),
-c_sim32 AS (SELECT doc_id, {H.simhash('sh', 'duck')} AS simhash FROM c_shl),
-c_sim64 AS (SELECT doc_id,
-  {H.simhash(H.rehash64('sh', 'duck'), 'duck', SIMHASH64_BITS)} AS simhash
-  FROM c_shl WHERE len(sh) > 0),
-"""
-    extra_arms = f"""UNION ALL
-  SELECT 'simhash32_band4x8' AS family, band_idx, key FROM ({sim32_rows})
-  UNION ALL
-  SELECT 'simhash64_bandpairs_2of5' AS family, band_idx, key
-  FROM ({sim64_rows})"""
-    div = " ".join(
-        f"WHEN '{fam}' THEN {n}" for fam, n in
-        sorted(FAMILY_BANDS_PER_UNIT.items()))
-    return _banded_family_sizes_sql(extra_ctes, extra_arms) + f"""
+    div = _per_family_case("bands_per_unit")
+    families = [fam for fam, f in BANDED_FAMILIES.items() if f.build]
+    return _banded_family_sizes_sql(families) + f"""
 SELECT family,
        n_band_rows // (CASE family {div} END) AS n_units,
        n_band_rows, n_buckets, max_bucket, candidate_pairs,
@@ -3473,7 +3313,7 @@ SELECT family,
          / CAST(NULLIF(n_band_rows // (CASE family {div} END), 0)
                 AS DOUBLE)
          > {CANDIDATE_PAIRS_PER_UNIT_BUDGET}
-            THEN CASE family {_remedy_case()} END
+            THEN CASE family {_per_family_case('remedy')} END
             ELSE 'none' END AS action
 FROM (
   SELECT family,
@@ -3507,79 +3347,24 @@ def blocking_exprs_for(action: str, sig_col: str) -> "list[str] | None":
     raise ValueError(f"unknown blocking action: {action!r}")
 
 
-# Census action -> the CONCRETE deployment artifacts, so the action
-# column does not stop at naming the remedy. Keys are registry
-# query names unless suffixed: stream entries name functions in
-# streaming.jobs; actuator entries are (function, call-args string) —
-# rendered as ``function(args)`` in the bench warning — the deployment
-# calls to reconfigure a topology. saturation_remedy_artifacts() is the
-# tested accessor — the last hop of the audit -> decision -> deployment
-# loop, so the bench warning can cite the exact thing to run instead of
-# prose.
-FAMILY_REMEDY_DISPATCH = {
-    "minhash_lsh": {
-        # unbounded key space: overflow only via hot keys -> salt
-        "policy": "band_salting_policy",
-        "batch": "dedup_minhash_lsh_salted",
-        "incremental": "dedup_incremental_minhash",
-        "stream": "stream_minhash_dedupe",
-        "actuator": ("salted_band_candidates", "cap=SALT_BUCKET_CAP"),
-    },
-    "image_phash": {
-        # saturated 2^14 single-band space -> re-block on 2-of-5 pairs
-        "policy": "band_blocking_policy",
-        "batch": "dedup_image_phash_bandpairs",
-        "incremental": "dedup_image_phash_incremental_bandpairs",
-        "stream": "stream_image_phash_policy_dedupe",
-        "actuator": ("blocking_exprs_for", "'band_pairs', 'phash'"),
-    },
-    "audio_afp": {
-        "policy": "band_blocking_policy",
-        "batch": "dedup_audio_fingerprint_bandpairs",
-        "incremental": "dedup_audio_fingerprint_incremental_bandpairs",
-        "stream": "stream_audio_fingerprint_dedupe",
-        "actuator": ("blocking_exprs_for", "'band_pairs', 'afp'"),
-    },
-    "video_vfh_frame": {
-        "policy": "band_blocking_policy",
-        "batch": "dedup_video_fingerprint_bandpairs",
-        "incremental": "dedup_video_fingerprint_incremental_bandpairs",
-        "stream": "stream_video_fingerprint_dedupe",
-        "actuator": ("blocking_exprs_for", "'band_pairs', 'vfh'"),
-    },
-    "simhash32_band4x8": {
-        # saturated 2^8 bands: no banding fix exists at 32 bits
-        # (pairs only reach ~2^13) -> widen the sketch itself
-        "policy": "simhash_width_audit",
-        "batch": "dedup_simhash64",
-        "incremental": "dedup_simhash64_incremental",
-        "stream": "stream_simhash64_dedupe",
-        "actuator": ("simhash64_frame", "docs"),
-    },
-    "simhash64_bandpairs_2of5": {
-        # ~2^25-26 pair keys: overflow only via hot keys -> salt
-        "policy": "band_salting_policy",
-        "batch": "dedup_simhash64",
-        "incremental": "dedup_simhash64_incremental",
-        "stream": "stream_simhash64_dedupe",
-        "actuator": ("salted_band_candidates", "cap=SALT_BUCKET_CAP"),
-    },
-}
-
-
 def saturation_remedy_artifacts(family: str) -> dict:
     """The deployment recipe for a census-flagged family: its remedy
-    action (FAMILY_SATURATION_REMEDY) joined with the concrete
-    artifacts that implement it — the policy/audit query that prices
-    the decision, the batch + incremental registry queries to deploy,
-    the streaming twin, and the actuator seam to reconfigure. Every
-    name is pinned resolvable by pytest (test_bench_gates), so the
-    bench warning's citation can never drift from the registry."""
-    if family not in FAMILY_SATURATION_REMEDY:
+    action joined with the concrete artifacts that implement it (its
+    spec's dispatch) — the policy/audit query that prices the
+    decision, the batch + incremental registry queries to deploy, the
+    streaming twin (a function in streaming.jobs), and the actuator
+    seam to reconfigure (rendered as ``function(args)`` in the bench
+    warning). Every name is pinned resolvable by pytest
+    (test_bench_gates), so the bench warning's citation can never drift
+    from the registry."""
+    if family not in BANDED_FAMILIES:
         raise ValueError(f"unknown banded family: {family!r}")
-    return {"family": family,
-            "action": FAMILY_SATURATION_REMEDY[family],
-            **FAMILY_REMEDY_DISPATCH[family]}
+    f = BANDED_FAMILIES[family]
+    policy, (batch, incremental), stream, actuator = f.dispatch
+    forms = BANDED_FAMILIES[f.deploys or family].forms
+    return {"family": family, "action": f.remedy, "policy": policy,
+            "batch": forms[batch], "incremental": forms[incremental],
+            "stream": stream, "actuator": actuator}
 
 
 def band_blocking_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3591,7 +3376,8 @@ def band_blocking_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECISION: action = 'band_pairs' once the single-band scheme's
     verify fan-out exceeds CANDIDATE_PAIRS_PER_UNIT_BUDGET per unit,
     else 'single_bands'. The budget is the verify-cost knob: SCALING.md
-    round 8 measured that cheapening the verify stage MOVES the
+    ("the birthday regime, measured") found that cheapening the verify
+    stage MOVES the
     crossover (single bands beat pairs at 500k docs once video verify
     collapsed to array folds), so the threshold is a deployment
     constant, not a universal truth — this query prices the corpus,
@@ -3605,17 +3391,12 @@ def band_blocking_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combinable bucket histogram per
     (family, scheme) over the memoized signature artifacts — counts
     only, no pair materialization, no joins."""
-    fams = [
-        ("audio_afp",
-         _afp_signatures(spark, sf_dir).select(
-             F.lit(0).alias("align"), F.col("afp").alias("sig"))),
-        ("image_phash",
-         _phash_signatures(spark, sf_dir).select(
-             F.lit(0).alias("align"), F.col("phash").alias("sig"))),
-        ("video_vfh_frame",
-         _vfp_signatures(spark, sf_dir).select(
-             F.col("frame_idx").alias("align"), F.col("vfh").alias("sig"))),
-    ]
+    fams = []
+    for family in sorted(_MEDIA56):   # the plan's union order
+        f = BANDED_FAMILIES[family]
+        align = F.col(f.keys[0]) if f.keys else F.lit(0)
+        fams.append((family, f.signatures(spark, sf_dir).select(
+            align.alias("align"), F.col(f.sig).alias("sig"))))
     # a rewrite folding the six per-(family, scheme) branches
     # into one tagged union + single grouped aggregation chain (12 -> 2
     # exchanges, one scan per artifact) measured ~1.8x SLOWER at sf0.1
@@ -3639,7 +3420,7 @@ def band_blocking_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
                                "n_band_rows", "max_bucket",
                                "candidate_pairs"))
             out = row if out is None else out.unionByName(row)
-    b = CANDIDATE_PAIRS_PER_UNIT_BUDGET
+    b, n_bands = CANDIDATE_PAIRS_PER_UNIT_BUDGET, PROD_BANDS56.n_bands
     return (
         out.groupBy("family")
         .agg(*[F.max(F.when(F.col("scheme") == s, F.col(c)))
@@ -3648,18 +3429,18 @@ def band_blocking_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
                for c in ("n_band_rows", "max_bucket", "candidate_pairs")])
         .selectExpr(
             "family",
-            f"single_n_band_rows div {PHASH_N_BANDS} AS n_units",
+            f"single_n_band_rows div {n_bands} AS n_units",
             "single_candidate_pairs", "single_max_bucket",
             "pairs_candidate_pairs", "pairs_max_bucket",
             f"CAST(single_candidate_pairs AS DOUBLE)"
-            f" / CAST(nullif(single_n_band_rows div {PHASH_N_BANDS}, 0)"
+            f" / CAST(nullif(single_n_band_rows div {n_bands}, 0)"
             " AS DOUBLE) AS single_pairs_per_unit",
             f"CAST(pairs_candidate_pairs AS DOUBLE)"
-            f" / CAST(nullif(single_n_band_rows div {PHASH_N_BANDS}, 0)"
+            f" / CAST(nullif(single_n_band_rows div {n_bands}, 0)"
             " AS DOUBLE) AS pairs_pairs_per_unit",
             f"CAST({b} AS DOUBLE) AS budget_pairs_per_unit",
             f"CASE WHEN CAST(single_candidate_pairs AS DOUBLE)"
-            f" / CAST(nullif(single_n_band_rows div {PHASH_N_BANDS}, 0)"
+            f" / CAST(nullif(single_n_band_rows div {n_bands}, 0)"
             f" AS DOUBLE) > {b} THEN 'band_pairs'"
             " ELSE 'single_bands' END AS action")
         .orderBy("family")
@@ -3667,22 +3448,13 @@ def band_blocking_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _band_blocking_policy_oracle() -> str:
-    from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-        AFP_ORACLE_CTES,
-        PHASH_ORACLE_CTES,
-        VFP_ORACLE_CTES,
-    )
-    ctes = [PHASH_ORACLE_CTES.strip(), AFP_ORACLE_CTES.strip(),
-            VFP_ORACLE_CTES.strip()]
-    ctes.append("p_image_phash AS (SELECT 0 AS align, phash AS sig "
-                "FROM ph)")
-    ctes.append("p_audio_afp AS (SELECT 0 AS align, afp AS sig "
-                "FROM afpt)")
-    ctes.append("p_video_vfh_frame AS (SELECT frame_idx AS align, "
-                "vfh AS sig FROM vft)")
-    arm_rows = []
-    for family in ("image_phash", "audio_afp", "video_vfh_frame"):
-        for scheme, layout in (("single", PROD_BANDS56), ("pairs", PAIRS56)):
+    ctes, arm_rows = [], []
+    for family in _MEDIA56:
+        f = BANDED_FAMILIES[family]
+        ctes += [f.ctes.strip(),
+                 f"p_{family} AS (SELECT {f.keys[0] if f.keys else 0} "
+                 f"AS align, {f.sig} AS sig FROM {f.src})"]
+        for scheme, layout in (("single", f.layout), ("pairs", PAIRS56)):
             tag = f"{family}_{scheme}"
             band_rows = band_rows_sql(f"p_{family}", "sig", layout, ["align"])
             ctes.append(f"bands_{tag} AS ({band_rows})")
@@ -3696,7 +3468,7 @@ def _band_blocking_policy_oracle() -> str:
                 f"(SELECT align, band_idx, band_val, COUNT(*) AS k "
                 f"FROM bands_{tag} GROUP BY align, band_idx, band_val) h)")
             arm_rows.append(f"SELECT * FROM agg_{tag}")
-    b = CANDIDATE_PAIRS_PER_UNIT_BUDGET
+    b, n_bands = CANDIDATE_PAIRS_PER_UNIT_BUDGET, PROD_BANDS56.n_bands
     ctes.append("allrows AS (" + "\nUNION ALL\n".join(arm_rows) + ")")
     pivots = ",\n       ".join(
         f"CAST(MAX(CASE WHEN scheme = '{s}' THEN {c} END) AS BIGINT)"
@@ -3705,18 +3477,18 @@ def _band_blocking_policy_oracle() -> str:
         for c in ("n_band_rows", "max_bucket", "candidate_pairs"))
     return ("WITH " + ",\n".join(ctes) + f"""
 SELECT family,
-       single_n_band_rows // {PHASH_N_BANDS} AS n_units,
+       single_n_band_rows // {n_bands} AS n_units,
        single_candidate_pairs, single_max_bucket,
        pairs_candidate_pairs, pairs_max_bucket,
        CAST(single_candidate_pairs AS DOUBLE)
-         / CAST(NULLIF(single_n_band_rows // {PHASH_N_BANDS}, 0)
+         / CAST(NULLIF(single_n_band_rows // {n_bands}, 0)
                 AS DOUBLE) AS single_pairs_per_unit,
        CAST(pairs_candidate_pairs AS DOUBLE)
-         / CAST(NULLIF(single_n_band_rows // {PHASH_N_BANDS}, 0)
+         / CAST(NULLIF(single_n_band_rows // {n_bands}, 0)
                 AS DOUBLE) AS pairs_pairs_per_unit,
        CAST({b} AS DOUBLE) AS budget_pairs_per_unit,
        CASE WHEN CAST(single_candidate_pairs AS DOUBLE)
-         / CAST(NULLIF(single_n_band_rows // {PHASH_N_BANDS}, 0)
+         / CAST(NULLIF(single_n_band_rows // {n_bands}, 0)
                 AS DOUBLE) > {b} THEN 'band_pairs'
             ELSE 'single_bands' END AS action
 FROM (SELECT family,
@@ -3736,8 +3508,8 @@ ORACLES["band_blocking_policy"] = _band_blocking_policy_oracle()
 def dedup_embedding_incremental(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Delta-ingest embedding dedup — the missing incremental form on
-    the semantic side (lexical dedup has had batch/incr/stream since
-    r5; embedding dedup was batch-only, so every delta-ingest re-paid
+    the semantic side (lexical dedup already had batch/incr/stream;
+    embedding dedup was batch-only, so every delta-ingest re-paid
     the full corpus). An incoming vector batch (vec_id %
     {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}) is checked against the
     existing corpus through the SAME coarse blocking the batch operator
@@ -3805,7 +3577,7 @@ ORACLES["dedup_embedding_incremental"] = DEDUP_EMBEDDING_INCREMENTAL_SQL
 def simhash64_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, simhash) at the widened width — the
     sign_frame the streaming twin plugs into the shared banded-signature
-    topology; bit-identical to _simhash64_signatures' batch expression
+    topology; bit-identical to the simhash64 family's batch signatures
     (same shingled_docs chain, same rehash64 widening, same
     non_empty exclusion of zero-token docs)."""
     return shingled_docs(docs, non_empty=True).selectExpr(
@@ -3814,11 +3586,14 @@ def simhash64_frame(docs: DataFrame) -> DataFrame:
         " AS simhash")
 
 
+# its own Spark body: it flags the incoming docs before the band explode,
+# the shared incremental body after it, and the plans differ
+@_screen_entry((QUERIES, ORACLES), BANDED_FAMILIES, banded_oracle)
 def dedup_simhash64_incremental(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Delta-ingest form of dedup_simhash64 — completing the widened
     family's batch/incremental/streaming parity (every other dedup
-    family has had all three since r8): ONE predicated band self-join
+    family has all three): ONE predicated band self-join
     over the 2-of-5 pair keys (the dedup_incremental_minhash shape —
     incoming filtered before the exchange, (not new2) OR (d1 < d2)
     keeps incoming x existing plus ordered intra-batch pairs), then the
@@ -3828,8 +3603,8 @@ def dedup_simhash64_incremental(spark: SparkSession,
 
     Output: (new_id, dup_of, hamming) — incoming docs near-duplicating
     an existing (or earlier-ordered same-batch) doc."""
-    sim = _simhash64_signatures(spark, sf_dir).withColumn(
-        "is_new", (F.col("doc_id") % INCREMENTAL_MOD) >= INCREMENTAL_NEW)
+    f = BANDED_FAMILIES["simhash64_bandpairs_2of5"]
+    sim = f.signatures(spark, sf_dir).withColumn("is_new", F.expr(f.ingest))
     return banded_pairs(
         explode_bands(sim, band_exprs("simhash", PAIRS62, "spark"),
                       "doc_id", "simhash", "is_new"),
@@ -3839,22 +3614,13 @@ def dedup_simhash64_incremental(spark: SparkSession,
     ).orderBy("new_id", "dup_of")
 
 
-def _simhash64_incremental_oracle() -> str:
-    return _sig_pairs_oracle(
-        _SIM64_CTES, "sim", "simhash", HAMMING_MAX,
-        is_new=f"{{}}.doc_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}",
-        layout=SIMHASH64_ORACLE_BANDS)
-
-
-QUERIES["dedup_simhash64_incremental"] = dedup_simhash64_incremental
-ORACLES["dedup_simhash64_incremental"] = _simhash64_incremental_oracle()
-
-
+@_banded_entry
 def dedup_image_phash_incremental_bandpairs(spark: SparkSession,
                                             sf_dir: str) -> DataFrame:
     """dedup_image_phash_incremental re-blocked on the 2-of-5 band
-    pairs — the past-crossover delta-ingest path: SCALING.md round 10
-    measured the single-band/band-pair flip at ~1M docs for this
+    pairs — the past-crossover delta-ingest path: SCALING.md ("band-pair
+    crossover MEASURED at 1-2M docs") measured the single-band/band-pair
+    flip at ~1M docs for this
     family, and a corpus past it saturates the INCREMENTAL join's
     single-band buckets exactly like the batch one (same keys, same
     birthday regime). Same predicated self-join (incoming filtered
@@ -3863,35 +3629,19 @@ def dedup_image_phash_incremental_bandpairs(spark: SparkSession,
     re-blocking loses nothing. This is what band_blocking_policy's
     action='band_pairs' deploys for the delta-ingest job (the stream
     twin already follows it via the band_exprs seam)."""
-    return _sig_pairs(_phash_signatures(spark, sf_dir), "phash", PAIRS56,
-                      PHASH_HAMMING_MAX,
-                      is_new=(F.col("doc_id") % 4) == PHASH_INCREMENTAL_NEW)
 
 
-QUERIES["dedup_image_phash_incremental_bandpairs"] = \
-    dedup_image_phash_incremental_bandpairs
-ORACLES["dedup_image_phash_incremental_bandpairs"] = \
-    _image_phash_incremental_oracle()
-
-
+@_banded_entry
 def dedup_audio_fingerprint_incremental_bandpairs(
         spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_audio_fingerprint_incremental under the 2-of-5 band-pair
     blocking — see dedup_image_phash_incremental_bandpairs; the audio
-    crossover was measured at the same ~1M docs (SCALING.md round 10:
-    dead heat at 1M, 1.9x at 2M). Oracle = the unchanged single-band
-    incremental SQL."""
-    return _sig_pairs(_afp_signatures(spark, sf_dir), "afp", PAIRS56,
-                      AFP_HAMMING_MAX,
-                      is_new=(F.col("doc_id") % 4) == AFP_INCREMENTAL_NEW)
+    crossover was measured at the same ~1M docs (SCALING.md, "band-pair
+    crossover MEASURED at 1-2M docs": dead heat at 1M, 1.9x at 2M).
+    Oracle = the unchanged single-band incremental SQL."""
 
 
-QUERIES["dedup_audio_fingerprint_incremental_bandpairs"] = \
-    dedup_audio_fingerprint_incremental_bandpairs
-ORACLES["dedup_audio_fingerprint_incremental_bandpairs"] = \
-    _audio_fingerprint_incremental_oracle()
-
-
+@_banded_entry
 def dedup_video_fingerprint_incremental_bandpairs(
         spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_video_fingerprint_incremental re-blocked on the per-frame
@@ -3905,13 +3655,6 @@ def dedup_video_fingerprint_incremental_bandpairs(
     theorem lifts identically, and the oracle IS the single-band
     incremental SQL — the hash gate proves the re-blocking loses
     nothing."""
-    return _vfp_incremental(_vfp_signatures(spark, sf_dir), PAIRS56)
-
-
-QUERIES["dedup_video_fingerprint_incremental_bandpairs"] = \
-    dedup_video_fingerprint_incremental_bandpairs
-ORACLES["dedup_video_fingerprint_incremental_bandpairs"] = \
-    _video_fingerprint_incremental_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -3940,8 +3683,9 @@ def simhash_rollover_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate volume — which is the quantity under audit, and the
     reason the report is worth running on a sample before a 100 TB
     rollover."""
-    sim32 = _simhash32_signatures(spark, sf_dir)
-    sim64 = _simhash64_signatures(spark, sf_dir)
+    sim32 = BANDED_FAMILIES["simhash32_band4x8"].signatures(spark, sf_dir)
+    sim64 = BANDED_FAMILIES["simhash64_bandpairs_2of5"].signatures(
+        spark, sf_dir)
     asserted = banded_pairs(
         explode_bands(sim32, band_exprs("simhash", SIMHASH32_BANDS, "spark"),
                       "doc_id", "simhash"),

@@ -288,14 +288,16 @@ def decode_features(assets: DataFrame) -> DataFrame:
     deterministic stub path with NULL dimensions — the seam production
     widens per codec.
 
-    r16 (guide §4.2): each payload's checksum is a numpy SIMD sum over
+    Arrow-vectorized (guide §4.2): each payload's checksum is a numpy
+    SIMD sum over
     a ZERO-COPY view of its Arrow buffer slice instead of a per-byte
     Python loop (`sum(bytes)` runs ~60 MB/s per core; `ndarray.sum`
     runs at memory speed — invisible on the 2 KB test payloads,
     proportional on production-sized blobs). A full-batch cumsum
     variant was measured and REJECTED: its 8x-widened int64 cumsum
     array thrashes memory bandwidth under 32 concurrent workers
-    (0.84 s vs 0.41 s at 2000x256 KB — see OPTIMIZATION_r16.md).
+    (0.84 s vs 0.41 s at 2000x256 KB — the optimization notes'
+    "Arrow-vectorized asset decode" section).
     decode_image (a per-row header parse) runs only for rows whose
     first byte is in _DECODABLE_FIRST_BYTES — every other payload
     raised NotImplementedError two bytes in, so the gate is
@@ -1088,7 +1090,7 @@ def vfp_synth_pixels(doc_id: int, frame_idx: int) -> "tuple[bytes, int, int]":
     offset of (doc_id % 4) * 97 mod 256 wraps ~38% of pixels and scatters
     ~half the comparison signs: designed pairs agree on frames
     0..{VFP_FRAMES-2} and (almost always) disagree on the last, so they
-    typically match exactly VFP_MIN_FRAMES = 3 of 4 frames — the M-of-K
+    typically match exactly min_frames = 3 of 4 frames — the M-of-K
     rule is exercised AT its threshold, not trivially above it (a rare
     pair's scattered last frame can still land inside the hamming gate,
     so frames_matched=4 appears in the tail; measured 124x3 + 1x4 at

@@ -197,8 +197,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per session and dataset), not a per-run expression: SCALING.md's
     100x probe measured the inline form at 5.6x growth — 8 hyperplane
     dots per CORPUS vector per run, slower than brute force at small
-    query counts — vs 0.71 s steady precoded. Since round 6 the named
-    default IS the deployment path; the code column is the artifact a
+    query counts — vs 0.71 s steady precoded. The named default IS the
+    deployment path; the code column is the artifact a
     production run persists next to the vectors."""
     return _lsh_bucket_topk(_coded_corpus(spark, sf_dir))
 
@@ -325,9 +325,10 @@ def _audit_topk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize-once (method, query_id, neighbor_id) union of the
     exact top-K and all three blocked methods' top-Ks — the shared
     subtree of the recall audit, memoized per (session, dataset) and
-    lineage-cut (the strip-spans collapse applied to the r10 verdict's
-    second-widest plan): the audit consumes the EXACT set twice (the
-    overlap join and the per-query denominator) and previously re-ran
+    lineage-cut (the strip-spans collapse applied to what was the
+    registry's second-widest plan): the audit consumes the EXACT set
+    twice (the overlap join and the per-query denominator) and
+    previously re-ran
     the brute-force scan per consumer branch; now each of the four
     corpus passes runs once and every downstream join/aggregate reads
     the 4 x N_QUERIES x K-row checkpoint."""

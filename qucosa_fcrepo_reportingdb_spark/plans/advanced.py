@@ -191,9 +191,9 @@ def approx_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle computes the exact columns and asserts the flags
     TRUE: if either engine-side sketch drifts out of bound the value
     hash diverges — this is the derived exact check that upgraded the
-    registry's one rows-only entry to full hash-green (round-8
-    directive). Scale shape: two map-side-combinable aggregations plus
-    one broadcast-able join of the tiny per-type frame back onto events."""
+    registry's one rows-only entry to full hash-green. Scale shape: two
+    map-side-combinable aggregations plus one broadcast-able join of the
+    tiny per-type frame back onto events."""
     ev = t(spark, sf_dir, "events")
     agg = (
         ev.groupBy("event_type")

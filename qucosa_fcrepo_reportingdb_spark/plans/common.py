@@ -42,8 +42,8 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     match DuckDB's naive reading bit-for-bit. The cast happens on top of
     the scan, so column pruning/filter pushdown still reach parquet.
 
-    The LAZY scan frame is memoized per (session, dataset, table) —
-    r15: every `spark.read.parquet` call re-lists the path and re-reads
+    The LAZY scan frame is memoized per (session, dataset, table):
+    every `spark.read.parquet` call re-lists the path and re-reads
     parquet footers on the driver (measured ~100-130 ms per call at
     sf0.1; at 100 TB the relisting is the multi-second driver stall
     guide §6/§7.3 warns about), and a query touching six tables paid it
@@ -52,7 +52,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     data is cached — the frame is an unexecuted scan, so every action
     still computes from parquet.
 
-    INVALIDATION CONTRACT (ADVICE r15): Spark snapshots the parquet
+    INVALIDATION CONTRACT: Spark snapshots the parquet
     file index when the DataFrame is created, so any writer that
     rewrites or appends to <sf_dir>/<name>.parquet IN PLACE must call
     memo.clear_session_memo(spark) (or end the session) before the next

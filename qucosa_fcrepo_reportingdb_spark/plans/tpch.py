@@ -42,16 +42,16 @@ from qucosa_fcrepo_reportingdb_spark.plans.common import (
 
 # --- Q1-style pricing summary: filter + groupBy + many aggregates -----------
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out (r15): the partial aggregation is 8 wide-decimal
+    # fan_out: the partial aggregation is 8 wide-decimal
     # (precision>18 -> BigDecimal-backed) accumulators per row — by far
     # the heaviest per-row compute in the TPC-H surface — and it runs on
     # the SCAN's partitioning. A single-row-group input (this testdata;
     # any skewed/unsplittable file at scale) serializes it; spreading
     # the rows first costs one narrow exchange and wins ~1.5x measured
-    # (plans/r15). At scale the guard makes it a no-op (scan splits
-    # already >= parallelism). q3/q5 measured SLOWER with the same
-    # treatment (cheap hash-probe per row, no heavy pre-exchange
-    # compute) and keep their scan-partitioned shape.
+    # (the plan snapshots under plans/). At scale the guard makes it a
+    # no-op (scan splits already >= parallelism). q3/q5 measured SLOWER
+    # with the same treatment (cheap hash-probe per row, no heavy
+    # pre-exchange compute) and keep their scan-partitioned shape.
     li = fan_out(t(spark, sf_dir, "lineitem"))
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))

@@ -261,7 +261,7 @@ def stale_verdict_ids(store: "TableStore", verdicts_table: str,
     the replay set. One comparison, no rescreen; the current count
     attaches as a broadcast 1-row aggregate like the producer side.
 
-    ``suite_epoch`` is COALESCEd to 0 before the compare (ADVICE r14):
+    ``suite_epoch`` is COALESCEd to 0 before the compare:
     a verdict table persisted before the epoch column existed reads it
     back as NULL (the store's tolerant reader), and ``NULL < count``
     is NULL — a genuinely stale pre-migration verdict would silently
@@ -966,7 +966,8 @@ def _banded_signature_dedupe_stream(
 
     ``band_exprs`` (optional list of SQL expressions over ``sig_col``)
     swaps the blocking scheme — e.g. the 2-of-5 band-pair keys for the
-    birthday regime (SCALING.md r8 cont. 7) — without forking the
+    birthday regime (SCALING.md, "the birthday regime, measured") —
+    without forking the
     topology; default is the production strided single bands."""
     doc_schema = schema or _ASSET_IDS
     sig_schema = T.StructType([
@@ -1040,14 +1041,14 @@ def stream_image_phash_dedupe(spark: SparkSession, source_dir: str,
     _banded_signature_dedupe_stream for the shared exactly-once
     argument and scale shape."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        PHASH_HAMMING_MAX,
-        PHASH_N_BANDS,
+        BANDED_FAMILIES,
     )
+    f = BANDED_FAMILIES["image_phash"]
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, schema,
         sign_frame=image_phash_frame, sig_col="phash",
-        n_bands=PHASH_N_BANDS,
-        hamming_max=PHASH_HAMMING_MAX, sigs_table=PHASH_SIGS_TABLE,
+        n_bands=f.layout.n_bands,
+        hamming_max=f.hamming_max, sigs_table=PHASH_SIGS_TABLE,
         bands_table=PHASH_BANDS_TABLE, pairs_table=PHASH_PAIRS_TABLE,
         checkpoint_name="phash_dedupe")
 
@@ -1070,15 +1071,15 @@ def stream_image_phash_bandpairs_dedupe(spark: SparkSession,
     the batch-equivalence pytest. State cost: 10 band rows per doc
     instead of 4, the trade phash_blocking_scheme_audit prices."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        BANDED_FAMILIES,
         PAIRS56,
-        PHASH_HAMMING_MAX,
-        PHASH_N_BANDS,
     )
+    f = BANDED_FAMILIES["image_phash"]
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, schema,
         sign_frame=image_phash_frame, sig_col="phash",
-        n_bands=PHASH_N_BANDS,
-        hamming_max=PHASH_HAMMING_MAX, sigs_table=PHASH_C2_SIGS_TABLE,
+        n_bands=f.layout.n_bands,
+        hamming_max=f.hamming_max, sigs_table=PHASH_C2_SIGS_TABLE,
         bands_table=PHASH_C2_BANDS_TABLE,
         pairs_table=PHASH_C2_PAIRS_TABLE,
         checkpoint_name="phash_c2_dedupe",
@@ -1105,15 +1106,15 @@ def stream_image_phash_policy_dedupe(spark: SparkSession,
     operator), only the band-state shape changes (4 vs 10 rows/doc,
     the cost/crossover trade band_blocking_policy prices)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        PHASH_HAMMING_MAX,
-        PHASH_N_BANDS,
+        BANDED_FAMILIES,
         blocking_exprs_for,
     )
+    f = BANDED_FAMILIES["image_phash"]
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, schema,
         sign_frame=image_phash_frame, sig_col="phash",
-        n_bands=PHASH_N_BANDS,
-        hamming_max=PHASH_HAMMING_MAX,
+        n_bands=f.layout.n_bands,
+        hamming_max=f.hamming_max,
         sigs_table=PHASH_POLICY_SIGS_TABLE,
         bands_table=PHASH_POLICY_BANDS_TABLE,
         pairs_table=PHASH_POLICY_PAIRS_TABLE,
@@ -1128,7 +1129,7 @@ def migrate_band_state(spark: SparkSession, store: TableStore,
                        sig_schema: "T.StructType | None" = None) -> dict:
     """Re-derive a DEPLOYED banded-dedup stream's band state under a new
     blocking scheme from its persisted signature table — the missing hop
-    of the band_blocking_policy loop (VERDICT r10 gap 2): the policy
+    of the band_blocking_policy loop: the policy
     decides and NEW streams follow it, but a stream already running
     single-band keeps its 4-row/doc state forever; this job recomputes
     the band rows from the 8-byte signatures the stream already
@@ -1195,14 +1196,14 @@ def stream_audio_fingerprint_dedupe(spark: SparkSession, source_dir: str,
     _banded_signature_dedupe_stream for the shared exactly-once
     argument and scale shape."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        AFP_HAMMING_MAX,
-        AFP_N_BANDS,
+        BANDED_FAMILIES,
     )
+    f = BANDED_FAMILIES["audio_afp"]
     return _banded_signature_dedupe_stream(
         spark, source_dir, store, checkpoint_dir, schema,
         sign_frame=audio_fingerprint_frame, sig_col="afp",
-        n_bands=AFP_N_BANDS,
-        hamming_max=AFP_HAMMING_MAX, sigs_table=AFP_SIGS_TABLE,
+        n_bands=f.layout.n_bands,
+        hamming_max=f.hamming_max, sigs_table=AFP_SIGS_TABLE,
         bands_table=AFP_BANDS_TABLE, pairs_table=AFP_PAIRS_TABLE,
         checkpoint_name="afp_dedupe")
 
@@ -1221,8 +1222,8 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
     hashes per clip) and the M-of-K verify: each microbatch's clips are
     signed per frame (scan-local), band-joined on (frame_idx, band_idx,
     band_val) intra-batch AND against the accumulated band state, then
-    frame-aligned hamming counts gate pairs at VFP_MIN_FRAMES matched
-    frames. Pairs append exactly once (anti-join against the recorded
+    frame-aligned hamming counts gate pairs at the family's min_frames
+    matched frames. Pairs append exactly once (anti-join against the recorded
     set); a pair is emitted in the batch where its second clip arrives —
     a clip's frames all travel in one batch, so the M-of-K count never
     sees a partial clip.
@@ -1234,10 +1235,9 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
     re-delivered clips overwrite their keyed rows and their re-found
     pairs drop in the anti-join (pinned by the replay pytest)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        VFP_HAMMING_MAX,
-        VFP_MIN_FRAMES,
-        VFP_N_BANDS,
+        BANDED_FAMILIES,
     )
+    f = BANDED_FAMILIES["video_vfh_frame"]
 
     doc_schema = schema or _ASSET_IDS
     sig_schema = T.StructType([
@@ -1261,7 +1261,7 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
     # (None = production strided single bands; the 2-of-5 pair keys swap
     # in) — per-frame exactness lifts unchanged, so the M-of-K verify
     # downstream is scheme-independent
-    exprs = band_exprs or _strided_exprs("vfh", VFP_N_BANDS)
+    exprs = band_exprs or _strided_exprs("vfh", f.layout.n_bands)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         sig_b = video_fingerprint_frame(
@@ -1288,10 +1288,10 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
                       ["d2", "frame_idx"])
                 .withColumn("hm", F.expr("CAST(bit_count(h1 ^ h2) AS INT)"))
                 .groupBy("d1", "d2")
-                .agg(F.sum(F.when(F.col("hm") <= VFP_HAMMING_MAX, 1)
+                .agg(F.sum(F.when(F.col("hm") <= f.hamming_max, 1)
                            .otherwise(0)).cast("long")
                      .alias("frames_matched"))
-                .filter(F.col("frames_matched") >= VFP_MIN_FRAMES)
+                .filter(F.col("frames_matched") >= f.min_frames)
             )
             recorded = store.read(VFP_PAIRS_TABLE, pair_schema) \
                 .select("d1", "d2")
@@ -1487,26 +1487,26 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
     Same doc_id-uniqueness-across-files precondition as the norm
     monitor (dropDuplicates is per-microbatch only)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        AFP_N_BANDS,
-        PHASH_N_BANDS,
-        VFP_N_BANDS,
+        BANDED_FAMILIES,
     )
+    img, aud, vid = (BANDED_FAMILIES[k].layout.n_bands for k in (
+        "image_phash", "audio_afp", "video_vfh_frame"))
 
     doc_schema = schema or _ASSET_IDS
 
     def band_rows_of(docs: DataFrame) -> DataFrame:
         ph = banding.explode_bands(
-            image_phash_frame(docs), _strided_exprs("phash", PHASH_N_BANDS)
+            image_phash_frame(docs), _strided_exprs("phash", img)
         ).selectExpr("'image_phash' AS family",
                      "CAST(band_idx AS INT) AS band_idx",
                      "CAST(band_val AS STRING) AS key")
         af = banding.explode_bands(
-            audio_fingerprint_frame(docs), _strided_exprs("afp", AFP_N_BANDS)
+            audio_fingerprint_frame(docs), _strided_exprs("afp", aud)
         ).selectExpr("'audio_afp' AS family",
                      "CAST(band_idx AS INT) AS band_idx",
                      "CAST(band_val AS STRING) AS key")
         vf = banding.explode_bands(
-            video_fingerprint_frame(docs), _strided_exprs("vfh", VFP_N_BANDS),
+            video_fingerprint_frame(docs), _strided_exprs("vfh", vid),
             "frame_idx"
         ).selectExpr("'video_vfh_frame' AS family",
                      "CAST(band_idx AS INT) AS band_idx",
@@ -1986,9 +1986,9 @@ def stream_contamination_manifest(
         spark: SparkSession, store: TableStore,
         semantic_table: str | None = None,
         allow_empty_semantic: bool = False) -> DataFrame:
-    """The manifest as a first-class streamed artifact (VERDICT r12
-    item 6): fold the five stream twins' persisted verdict tables —
-    lexical (stream_ngram_decontaminate), semantic
+    """The manifest as a first-class streamed artifact: fold the five
+    stream twins' persisted verdict tables — lexical
+    (stream_ngram_decontaminate), semantic
     (stream_semantic_recallk_decontaminate, the batch manifest's
     schedule), image/audio/video (stream_*_decontaminate) — through
     the SAME _manifest_assemble body the batch operator uses, and
@@ -2016,10 +2016,10 @@ def stream_contamination_manifest(
     almost always this wiring mistake (the dispatched stream wrote a
     different table than the manifest reads), and the resulting
     manifest would silently carry zero semantic exclusions — so that
-    case raises instead of folding (ADVICE r13).
+    case raises instead of folding.
 
     ``allow_empty_semantic=True`` is the explicit opt-out for the two
-    LEGITIMATE empty-semantic cases (ADVICE r14): a manifest folded
+    LEGITIMATE empty-semantic cases: a manifest folded
     during bootstrap before the semantic stream's first batch drains,
     and a deployment with no embedding modality at all. The caller is
     asserting "no semantic verdicts is expected here", so the manifest

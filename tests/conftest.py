@@ -1,3 +1,4 @@
+import operator
 import os
 import sys
 
@@ -25,6 +26,15 @@ def store(spark, tmp_path):
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+
+
+def ingest_pred(sql: str):
+    """A spec's SQL ingest predicate ('doc_id % m <op> v') as a Python
+    test on one doc_id."""
+    col, _, m, op, v = sql.split()
+    assert col == "doc_id", sql
+    cmp = {"=": operator.eq, ">=": operator.ge}[op]
+    return lambda d: cmp(d % int(m), int(v))
 
 
 # ---------------------------------------------------------------------------

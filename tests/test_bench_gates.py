@@ -31,24 +31,23 @@ def test_candidate_volume_tripwire(spark):
     blocking space is a strict subset of the information the 62-bit
     pair keys carry)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        BANDED_FAMILIES,
         CANDIDATE_PAIRS_PER_UNIT_BUDGET,
-        FAMILY_BANDS_PER_UNIT,
-        FAMILY_SATURATION_REMEDY,
         candidate_volume_census,
     )
     from tests.conftest import SF_DIR
 
     rows = {r["family"]: r.asDict()
             for r in candidate_volume_census(spark, SF_DIR).collect()}
-    assert set(rows) == set(FAMILY_BANDS_PER_UNIT)
+    assert set(rows) == set(BANDED_FAMILIES)
     for fam, r in rows.items():
         assert r["over_budget"] == (
             r["pairs_per_unit"] > CANDIDATE_PAIRS_PER_UNIT_BUDGET), fam
         assert r["n_band_rows"] == \
-            r["n_units"] * FAMILY_BANDS_PER_UNIT[fam], fam
+            r["n_units"] * BANDED_FAMILIES[fam].bands_per_unit, fam
         assert r["candidate_pairs"] >= 0
         assert r["action"] == (
-            FAMILY_SATURATION_REMEDY[fam] if r["over_budget"]
+            BANDED_FAMILIES[fam].remedy if r["over_budget"]
             else "none"), fam
     # empirical on the fixed driver corpus (2^8-value bands vs ~2^25
     # pair keys), not a cross-sketch theorem — see test_simhash64's
@@ -70,10 +69,10 @@ def test_remedy_dispatch_resolves_for_every_family():
 
     registry = em.queries()
     oracles = em.oracle_sql()
-    assert set(D.FAMILY_REMEDY_DISPATCH) == set(D.FAMILY_SATURATION_REMEDY)
-    for fam in D.FAMILY_SATURATION_REMEDY:
+    assert all(f.remedy and f.dispatch for f in D.BANDED_FAMILIES.values())
+    for fam, f in D.BANDED_FAMILIES.items():
         rec = D.saturation_remedy_artifacts(fam)
-        assert rec["action"] == D.FAMILY_SATURATION_REMEDY[fam]
+        assert rec["action"] == f.remedy
         for key in ("policy", "batch", "incremental"):
             assert rec[key] in registry, (fam, key, rec[key])
             assert rec[key] in oracles, (fam, key, rec[key])

@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from qucosa_fcrepo_reportingdb_spark.operators import dedup as D
 from qucosa_fcrepo_reportingdb_spark.operators import multimodal as M
+from tests.conftest import SF_DIR, ingest_pred
 
 
 def ppm_bytes(w, h, comment=False):
@@ -386,6 +388,25 @@ def test_dedup_image_phash_designed_pairs(spark):
     got = {(r.d1, r.d2) for r in rows}
     assert got == {(d, d + 1) for d in range(0, 499, 4)}
     assert all(r.hamming <= 2 for r in rows)
+
+
+@pytest.mark.parametrize(
+    "family", [k for k, f in D.BANDED_FAMILIES.items() if f.ingest])
+def test_incremental_is_batch_pairs_touching_incoming(spark, family):
+    """A hamming family's _incremental form reports exactly the batch
+    form's pairs that touch an incoming doc (the spec's ingest
+    predicate): incoming x existing and the batch's own pairs, each
+    once, with the same verify column (hamming, or video's
+    frames_matched). Both forms read the session-memoized signatures."""
+    f = D.BANDED_FAMILIES[family]
+    is_new = ingest_pred(f.ingest)
+    batch = {(frozenset(r[:2]), r[2]) for r in
+             D.QUERIES[f.forms["batch"]](spark, SF_DIR).collect()}
+    inc = D.QUERIES[f.forms["incremental"]](spark, SF_DIR).collect()
+    assert all(is_new(r[0]) for r in inc)
+    got = {(frozenset(r[:2]), r[2]) for r in inc}
+    assert len(got) == len(inc) > 0
+    assert got == {p for p in batch if any(map(is_new, p[0]))}
 
 
 def test_vfp_synth_pair_frame_distances():

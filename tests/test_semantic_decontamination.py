@@ -8,7 +8,7 @@ import duckdb
 import pytest
 
 from qucosa_fcrepo_reportingdb_spark.operators import corpus as C
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, ingest_pred
 from tests.oracle import compare
 
 
@@ -719,9 +719,7 @@ def test_phash_screen_catches_reencoded_asset_exactly(spark):
     hamming gate; nothing else is (the corpus is designed with zero
     accidental pairs), and the pigeonhole-exact blocking means this is
     recall 1.0 structurally — no remedy schedule needed."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        PHASH_HAMMING_MAX,
-    )
+    hamming_max = C.PERCEPTUAL_SCREENS["phash"].fam.hamming_max
 
     rows = {r.doc_id: r for r in
             C.decontaminate_phash(spark, SF_DIR).collect()}
@@ -732,7 +730,7 @@ def test_phash_screen_catches_reencoded_asset_exactly(spark):
     assert flagged == expected and len(expected) > 0
     for d in expected:
         assert rows[d].n_hits == 1
-        assert 0 <= rows[d].min_hamming <= PHASH_HAMMING_MAX
+        assert 0 <= rows[d].min_hamming <= hamming_max
     for d in corpus - expected:
         assert rows[d].n_hits == 0
         assert rows[d].min_hamming == C.PHASH_NO_HIT
@@ -819,9 +817,7 @@ def test_afp_screen_catches_reencoded_audio_exactly(spark):
     pairs (same energy motif through the real WAV round-trip) are
     caught iff the partner is in the suite; the exact-banding guarantee
     means nothing else is flagged on the zero-accidental corpus."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        AFP_HAMMING_MAX,
-    )
+    hamming_max = C.PERCEPTUAL_SCREENS["afp"].fam.hamming_max
     suite, corpus = _suite_split(spark, SF_DIR)
     rows = {r.doc_id: r for r in
             C.decontaminate_afp(spark, SF_DIR).collect()}
@@ -831,7 +827,7 @@ def test_afp_screen_catches_reencoded_audio_exactly(spark):
     assert flagged == expected and len(expected) > 0
     for d in expected:
         assert rows[d].n_hits == 1
-        assert 0 <= rows[d].min_hamming <= AFP_HAMMING_MAX
+        assert 0 <= rows[d].min_hamming <= hamming_max
     for d in corpus - expected:
         assert rows[d].min_hamming == C.PHASH_NO_HIT
 
@@ -839,15 +835,13 @@ def test_afp_screen_catches_reencoded_audio_exactly(spark):
 def test_vfp_screen_catches_reencoded_clip_at_m_of_k(spark):
     """Video analog, exercised AT the M-of-K threshold: designed pairs
     agree on 3 of 4 aligned frames by construction (the last frame
-    diverges), so a caught clip's max_frames_matched sits at
-    VFP_MIN_FRAMES (rarely 4 via in-gate scatter) — the rule is proven
-    at its cliff, not trivially above it."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        VFP_MIN_FRAMES,
-    )
+    diverges), so a caught clip's max_frames_matched sits at the
+    family's min_frames (rarely 4 via in-gate scatter) — the rule is
+    proven at its cliff, not trivially above it."""
     from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
         VFP_FRAMES,
     )
+    min_frames = C.PERCEPTUAL_SCREENS["vfp"].fam.min_frames
     suite, corpus = _suite_split(spark, SF_DIR)
     rows = {r.doc_id: r for r in
             C.decontaminate_vfp(spark, SF_DIR).collect()}
@@ -857,8 +851,8 @@ def test_vfp_screen_catches_reencoded_clip_at_m_of_k(spark):
     assert flagged == expected and len(expected) > 0
     for d in expected:
         assert rows[d].n_hits == 1
-        assert VFP_MIN_FRAMES <= rows[d].max_frames_matched <= VFP_FRAMES
-    assert any(rows[d].max_frames_matched == VFP_MIN_FRAMES
+        assert min_frames <= rows[d].max_frames_matched <= VFP_FRAMES
+    assert any(rows[d].max_frames_matched == min_frames
                for d in expected)
     for d in corpus - expected:
         assert rows[d].n_hits == 0
@@ -911,7 +905,7 @@ def test_contamination_manifest_unions_all_screens(spark):
 # corpus row (ingest + new-suite backfill); tests/test_corpus.py pins
 # them.
 _INCREMENTAL_PAIRS = {
-    **{family: (p.forms, lambda d, r=p.ingest: d % 4 == r, True)
+    **{family: (p.forms, ingest_pred(p.fam.ingest), True)
        for family, p in C.PERCEPTUAL_SCREENS.items()},
     "ngram": (C.LEXICAL_SCREENS["ngram"].forms,
               lambda d: d % C.INCREMENTAL_MOD >= C.INCREMENTAL_NEW, False),

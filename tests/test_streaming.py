@@ -1626,7 +1626,7 @@ def test_migrate_band_state_flips_live_stream(spark, store, tmp_path):
     single-band state matches no pair key, so every designed (4k, 4k+1)
     cross pair is lost."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        PHASH_N_BANDS,
+        BANDED_FAMILIES,
         blocking_exprs_for,
         dedup_image_phash,
     )
@@ -1655,7 +1655,7 @@ def test_migrate_band_state_flips_live_stream(spark, store, tmp_path):
     # phase 2: policy flips -> migrate the live state, signatures only
     report = migrate_band_state(
         spark, store, PHASH_POLICY_SIGS_TABLE, PHASH_POLICY_BANDS_TABLE,
-        "phash", PHASH_N_BANDS,
+        "phash", BANDED_FAMILIES["image_phash"].layout.n_bands,
         band_exprs=blocking_exprs_for("band_pairs", "phash"))
     assert report["n_units"] == n_units
     assert report["n_band_rows"] == 10 * n_units
@@ -1697,8 +1697,8 @@ def test_migrate_band_state_video_multirow(spark, store, tmp_path):
     family whose crossover measurement motivated it (SCALING.md r11:
     single bands lose 7.6x at 1M clips)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+        BANDED_FAMILIES,
         PAIRS56,
-        VFP_N_BANDS,
         dedup_video_fingerprint,
     )
     from qucosa_fcrepo_reportingdb_spark.operators.banding import band_exprs
@@ -1724,7 +1724,8 @@ def test_migrate_band_state_video_multirow(spark, store, tmp_path):
 
     report = migrate_band_state(
         spark, store, VFP_SIGS_TABLE, VFP_BANDS_TABLE, "vfh",
-        VFP_N_BANDS, band_exprs=band_exprs("vfh", PAIRS56, "spark"),
+        BANDED_FAMILIES["video_vfh_frame"].layout.n_bands,
+        band_exprs=band_exprs("vfh", PAIRS56, "spark"),
         extra_keys=("frame_idx",))
     assert report["n_units"] == n_frames
     assert report["rows_per_unit"] == 10.0

@@ -83,7 +83,8 @@ def run(cpus: int) -> None:
         ("minhash_bands_cold",
          lambda: noop(D.minhash_band_table(spark, ROOT))),
         ("simhash64_cold",
-         lambda: noop(D._simhash64_signatures(spark, ROOT))),
+         lambda: noop(D.BANDED_FAMILIES["simhash64_bandpairs_2of5"]
+                      .signatures(spark, ROOT))),
     ]:
         ts = []
         for _ in range(2):
@@ -116,7 +117,7 @@ def run(cpus: int) -> None:
     clear_session_memo(spark)
     spark.sparkContext.setJobDescription(f"vfp_cold@{cpus}")
     t0 = time.time()
-    noop(D._vfp_signatures(spark, ROOT))
+    noop(D.BANDED_FAMILIES["video_vfh_frame"].signatures(spark, ROOT))
     results["vfp_sign_cold"] = round(time.time() - t0, 2)
     print(f"{'vfp_sign_cold':24s} cpus={cpus:2d} "
           f"{results['vfp_sign_cold']:7.2f}s", flush=True)

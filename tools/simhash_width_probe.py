@@ -86,12 +86,13 @@ def main():
                     explode_bands,
                 )
                 from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+                    BANDED_FAMILIES,
                     PAIRS62,
-                    _simhash64_signatures,
                 )
                 from pyspark.sql import functions as FF
                 bands = explode_bands(
-                    _simhash64_signatures(spark, d),
+                    BANDED_FAMILIES["simhash64_bandpairs_2of5"]
+                    .signatures(spark, d),
                     band_exprs("simhash", PAIRS62, "spark"))
                 r = (bands.groupBy("band_idx", "band_val")
                      .agg(FF.count(FF.lit(1)).alias("k"))
