@@ -30,7 +30,6 @@ from qucosa_fcrepo_reportingdb_spark.operators.banding import (
     band_exprs,
     band_join,
     band_rows_sql,
-    banded_pairs_sql,
     explode_bands,
 )
 from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
@@ -41,17 +40,14 @@ from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     ORACLE_BANDS56,
     BandedFamily,
+    _modality,
     _normed_embeddings,
     _screen_entry,
     _vfp_bands,
+    banded_oracle,
     jaccard_pair_table,
     shingled_docs,
     uncapped_jaccard_pairs,
-)
-from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-    AFP_ORACLE_CTES,
-    PHASH_ORACLE_CTES,
-    VFP_ORACLE_CTES,
 )
 from qucosa_fcrepo_reportingdb_spark.plans.common import fan_out, t
 
@@ -3880,11 +3876,8 @@ def multimodal_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _multimodal_clusters_oracle() -> str:
     return f"""
 WITH RECURSIVE
-{PHASH_ORACLE_CTES.strip()},
-{banded_pairs_sql('ph', 'phash', ORACLE_BANDS56)},
 image_pairs AS (
-  SELECT DISTINCT d1, d2 FROM cand
-  WHERE {H.hamming('s1', 's2', 'duck')} <= {_IMAGE.hamming_max}),
+  SELECT DISTINCT d1, d2 FROM ({banded_oracle("image_phash", "batch")}) ip),
 text_pairs AS (SELECT d1, d2 FROM ({DEDUP_JACCARD_SQL}) jp),
 pairs AS (SELECT d1, d2 FROM text_pairs
           UNION SELECT d1, d2 FROM image_pairs),
@@ -6122,34 +6115,60 @@ def perceptual_suite_rows(sigs: DataFrame, family: str) -> DataFrame:
           for c, a in zip(p.cols, p.suite_cols)])
 
 
-def _perceptual_fl(p: PerceptualScreen) -> str:
-    """DuckDB: the family's signature CTEs, then ``fl`` — its signature
-    rows flagged with the key_hash suite membership."""
+def _perceptual_fl(p: PerceptualScreen, tag: str = "") -> str:
+    """DuckDB: the family's signature CTEs, then ``fl{tag}`` — its
+    signature rows flagged with the key_hash suite membership."""
     return f"""{p.fam.ctes.strip()},
-fl AS (
+fl{tag} AS (
   SELECT doc_id, {", ".join(p.cols)},
          {key_hash('doc_id')} < {BENCH_RATE} AS is_suite
   FROM {p.fam.src})"""
 
 
+def _perceptual_matched(p: PerceptualScreen, tag: str = "",
+                        new: str = "") -> str:
+    """DuckDB: the ``bands{tag}``, ``cand{tag}`` and ``matched{tag}``
+    CTEs over ``fl{tag}`` (_perceptual_fl). cand is each corpus asset's
+    (doc_id, s_doc) suite candidates under the contiguous banding (the
+    verified-pair oracle convention, see banding.py: hits are identical
+    under any exact banding), restricted to corpus assets meeting
+    ``new`` when given. matched carries each candidate pair's minimum
+    aligned-hash hamming and its count of in-gate aligned hashes
+    (frames_matched); a pair is a hit when that count reaches the
+    family's min_frames."""
+    f = p.fam
+    on_keys = "".join(f"s.{k} = c.{k} AND " for k in f.keys)
+    y_keys = "".join(f" AND y.{k} = x.{k}" for k in f.keys)
+    ham = H.hamming(f"x.{f.sig}", f"y.{f.sig}", "duck")
+    band_rows = band_rows_sql(f"fl{tag}", f.sig, ORACLE_BANDS56,
+                              ["doc_id", *f.keys, "is_suite"])
+    return f"""bands{tag} AS ({band_rows}),
+cand{tag} AS (
+  SELECT DISTINCT c.doc_id, s.doc_id AS s_doc
+  FROM bands{tag} c JOIN bands{tag} s
+    ON {on_keys}s.band_idx = c.band_idx AND s.band_val = c.band_val
+   AND s.is_suite AND NOT c.is_suite {f"AND c.{new}" if new else ""}),
+matched{tag} AS (
+  SELECT cd.doc_id, cd.s_doc, MIN({ham}) AS hamming,
+         CAST(SUM(CASE WHEN {ham} <= {f.hamming_max} THEN 1 ELSE 0 END)
+              AS BIGINT) AS frames_matched
+  FROM cand{tag} cd
+  JOIN fl{tag} x ON x.doc_id = cd.doc_id
+  JOIN fl{tag} y ON y.doc_id = cd.s_doc{y_keys}
+  GROUP BY cd.doc_id, cd.s_doc)"""
+
+
 def perceptual_screen_oracle(family: str, form: str) -> str:
     """DuckDB oracle of a perceptual family's form, composed from the
-    spec's SQL and never from the Spark body: candidates from the
-    contiguous banding (the verified-pair oracle convention, see
-    banding.py — the output carries only HITS, identical under any
-    exact banding), the aligned-hash gate per candidate pair, then one
-    hits -> verdict tail for every family."""
+    spec's SQL and never from the Spark body: the candidate pairs and
+    their aligned-hash gate (_perceptual_matched), then one hits ->
+    verdict tail for every family."""
     p = PERCEPTUAL_SCREENS[family]
     f = p.fam
     score, agg, no_hit = p.score
     new = f.ingest
     inc = form == "incremental"
     refresh = form == "suite_refresh"
-    on_keys = "".join(f"s.{k} = c.{k} AND " for k in f.keys)
-    y_keys = "".join(f" AND y.{k} = x.{k}" for k in f.keys)
-    ham = H.hamming(f"x.{f.sig}", f"y.{f.sig}", "duck")
-    band_rows = band_rows_sql("fl", f.sig, ORACLE_BANDS56,
-                              ["doc_id", *f.keys, "is_suite"])
     new_hits = (f"CAST(SUM(CASE WHEN s_doc % {INCREMENTAL_MOD} >= "
                 f"{INCREMENTAL_NEW} THEN 1 ELSE 0 END) AS BIGINT) "
                 "AS n_hits_new_suite," if refresh else "")
@@ -6158,20 +6177,7 @@ def perceptual_screen_oracle(family: str, form: str) -> str:
                "AS n_hits_new_suite," if refresh else "")
     return f"""
 WITH {_perceptual_fl(p)},
-bands AS ({band_rows}),
-cand AS (
-  SELECT DISTINCT c.doc_id, s.doc_id AS s_doc
-  FROM bands c JOIN bands s
-    ON {on_keys}s.band_idx = c.band_idx AND s.band_val = c.band_val
-   AND s.is_suite AND NOT c.is_suite {f"AND c.{new}" if inc else ""}),
-matched AS (
-  SELECT cd.doc_id, cd.s_doc, MIN({ham}) AS hamming,
-         CAST(SUM(CASE WHEN {ham} <= {f.hamming_max} THEN 1 ELSE 0 END)
-              AS BIGINT) AS frames_matched
-  FROM cand cd
-  JOIN fl x ON x.doc_id = cd.doc_id
-  JOIN fl y ON y.doc_id = cd.s_doc{y_keys}
-  GROUP BY cd.doc_id, cd.s_doc),
+{_perceptual_matched(p, new=new if inc else "")},
 hits AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits, {new_hits}
          {agg} AS {score}
@@ -6222,7 +6228,7 @@ def decontaminate_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     there is no pair space at all: one corpus signature scan, 4 band
     rows/asset against a broadcast suite band table, one roll-up.
     Signatures come from the memoized real-codec table
-    (multimodal.image_phash_table: PNG round-trip in the one Python
+    (multimodal.image_phash_frame: PNG round-trip in the one Python
     stage); this query shuffles 16-byte signature rows only."""
 
 
@@ -6806,47 +6812,32 @@ def suite_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("s_vec").alias("s_doc"))
         .agg(F.countDistinct("vec_id").alias("n_semantic_hits")))
 
-    def sig_hits(sig_df: DataFrame, sig_col: str, n_bands: int,
-                 hamming_max: int, out: str) -> DataFrame:
-        sg = sig_df.withColumn(
-            "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
-        scored = _sig56_scored(
-            sg.filter(~F.col("is_suite"))
-            .select("doc_id", F.col(sig_col).alias("sig")),
-            sg.filter("is_suite")
-            .select(F.col("doc_id").alias("s_doc"),
-                    F.col(sig_col).alias("s_sig")),
-            n_bands)
-        return (scored.filter(F.col("hamming") <= hamming_max)
-                .groupBy("s_doc")
-                .agg(F.countDistinct("doc_id").alias(out)))
+    def screen_hits(family: str, p: PerceptualScreen,
+                    out: str) -> DataFrame:
+        f = p.fam
+        sigs = _bench_split(f.signatures(spark, sf_dir))
+        corpus = sigs.filter(~F.col("is_suite"))
+        if f.keys:
+            _, hits = _vfp_matched_clips(corpus.select("doc_id", *p.cols),
+                                         perceptual_suite_rows(sigs, family))
+        else:
+            hits = _sig56_scored(
+                corpus.select("doc_id", F.col(f.sig).alias("sig")),
+                sigs.filter("is_suite")
+                .select(F.col("doc_id").alias("s_doc"),
+                        F.col(f.sig).alias("s_sig")),
+                f.layout.n_bands).filter(F.col("hamming") <= f.hamming_max)
+        return hits.groupBy("s_doc").agg(
+            F.countDistinct("doc_id").alias(out))
 
-    img_hits = sig_hits(_IMAGE.signatures(spark, sf_dir), "phash",
-                        _IMAGE.layout.n_bands, _IMAGE.hamming_max,
-                        "n_image_hits")
-    aud_hits = sig_hits(_AUDIO.signatures(spark, sf_dir), "afp",
-                        _AUDIO.layout.n_bands, _AUDIO.hamming_max,
-                        "n_audio_hits")
-
-    vf = _VIDEO.signatures(spark, sf_dir).withColumn(
-        "is_suite", F.expr(key_hash("doc_id")) < BENCH_RATE)
-    _, matched = _vfp_matched_clips(
-        vf.filter(~F.col("is_suite"))
-        .select("doc_id", "frame_idx", "vfh"),
-        vf.filter("is_suite")
-        .select(F.col("doc_id").alias("s_doc"), "frame_idx", "vfh"))
-    vid_hits = (matched.groupBy("s_doc")
-                .agg(F.countDistinct("doc_id").alias("n_video_hits")))
-
-    cols = ["n_text_hits", "n_semantic_hits", "n_image_hits",
-            "n_audio_hits", "n_video_hits"]
+    media = {f"n_{_perceptual_modality(p)}_hits": (k, p)
+             for k, p in PERCEPTUAL_SCREENS.items()}
+    hits = [text_hits, sem_hits,
+            *(screen_hits(k, p, out) for out, (k, p) in media.items())]
+    cols = ["n_text_hits", "n_semantic_hits", *media]
     return (
-        suite_ids
-        .join(text_hits, "s_doc", "left")
-        .join(sem_hits, "s_doc", "left")
-        .join(img_hits, "s_doc", "left")
-        .join(aud_hits, "s_doc", "left")
-        .join(vid_hits, "s_doc", "left")
+        functools.reduce(lambda acc, h: acc.join(h, "s_doc", "left"),
+                         hits, suite_ids)
         .selectExpr(
             "s_doc",
             *[f"CAST(COALESCE({c}, 0) AS BIGINT) AS {c}" for c in cols],
@@ -6856,15 +6847,28 @@ def suite_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _perceptual_modality(p: PerceptualScreen) -> str:
+    """The screen's modality label (image, audio, video): its family's."""
+    return next(_modality(k) for k, f in BANDED_FAMILIES.items()
+                if f is p.fam)
+
+
 def _suite_leakage_oracle() -> str:
-    iband_rows = band_rows_sql("ifl", "phash", ORACLE_BANDS56,
-                               ["doc_id", "phash", "is_suite"])
-    aband_rows = band_rows_sql("afl", "afp", ORACLE_BANDS56,
-                               ["doc_id", "afp", "is_suite"])
-    vband_rows = band_rows_sql("vfl", "vfh", ORACLE_BANDS56,
-                               ["doc_id", "frame_idx", "is_suite"])
-    iham = H.hamming("c.phash", "s.phash", "duck")
-    aham = H.hamming("c.afp", "s.afp", "duck")
+    media = [(_perceptual_modality(p), f"_{key}", p)
+             for key, p in PERCEPTUAL_SCREENS.items()]
+    media_ctes = "".join(f"""{_perceptual_fl(p, tag)},
+{_perceptual_matched(p, tag)},
+{m}_hits AS (
+  SELECT s_doc, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_{m}_hits
+  FROM matched{tag} WHERE frames_matched >= {p.fam.min_frames}
+  GROUP BY s_doc),
+""" for m, tag, p in media)
+    kinds = ["text", "semantic", *(m for m, _, _ in media)]
+    counts = [f"COALESCE(h_{k}.n_{k}_hits, 0)" for k in kinds]
+    per_kind = "".join(f"CAST({c} AS BIGINT) AS n_{k}_hits,\n       "
+                       for k, c in zip(kinds, counts))
+    joins = "".join(f"LEFT JOIN {k}_hits h_{k} ON h_{k}.s_doc = su.s_doc\n"
+                    for k in kinds)
     return f"""
 WITH {H.shingle_ctes(is_bench=f"{key_hash('doc_id')} < {BENCH_RATE}")},
 c_sh AS (SELECT DISTINCT doc_id, unnest(sh) AS s FROM shl WHERE NOT is_bench),
@@ -6883,83 +6887,18 @@ sem_pairs AS (
          {H.cosine_sql('c', 's')} AS cosine
   FROM {SEMANTIC_SCHEDULES["topk"].join}
   WHERE NOT c.is_suite),
-sem_hits AS (
+semantic_hits AS (
   SELECT s_vec AS s_doc,
          CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_semantic_hits
   FROM sem_pairs WHERE cosine >= {SEMANTIC_COSINE_THRESHOLD}
   GROUP BY s_vec),
-{PHASH_ORACLE_CTES},
-ifl AS (
-  SELECT doc_id, phash, {key_hash('doc_id')} < {BENCH_RATE} AS is_suite
-  FROM ph),
-ibands AS ({iband_rows}),
-ipairs AS (
-  SELECT DISTINCT c.doc_id, s.doc_id AS s_doc
-  FROM ibands c JOIN ibands s
-    ON s.band_idx = c.band_idx AND s.band_val = c.band_val
-   AND s.is_suite AND NOT c.is_suite
-  WHERE {iham} <= {_IMAGE.hamming_max}),
-img_hits AS (
-  SELECT s_doc, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_image_hits
-  FROM ipairs GROUP BY s_doc),
-{AFP_ORACLE_CTES},
-afl AS (
-  SELECT doc_id, afp, {key_hash('doc_id')} < {BENCH_RATE} AS is_suite
-  FROM afpt),
-abands AS ({aband_rows}),
-apairs AS (
-  SELECT DISTINCT c.doc_id, s.doc_id AS s_doc
-  FROM abands c JOIN abands s
-    ON s.band_idx = c.band_idx AND s.band_val = c.band_val
-   AND s.is_suite AND NOT c.is_suite
-  WHERE {aham} <= {_AUDIO.hamming_max}),
-aud_hits AS (
-  SELECT s_doc, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_audio_hits
-  FROM apairs GROUP BY s_doc),
-{VFP_ORACLE_CTES.strip()},
-vfl AS (
-  SELECT doc_id, frame_idx, vfh,
-         {key_hash('doc_id')} < {BENCH_RATE} AS is_suite
-  FROM vft),
-vbands AS ({vband_rows}),
-vcand AS (
-  SELECT DISTINCT c.doc_id, s.doc_id AS s_doc
-  FROM vbands c JOIN vbands s
-    ON s.frame_idx = c.frame_idx AND s.band_idx = c.band_idx
-   AND s.band_val = c.band_val
-   AND s.is_suite AND NOT c.is_suite),
-vmatched AS (
-  SELECT cd.doc_id, cd.s_doc,
-         CAST(SUM(CASE WHEN {H.hamming('x.vfh', 'y.vfh', 'duck')}
-                       <= {_VIDEO.hamming_max} THEN 1 ELSE 0 END)
-              AS BIGINT) AS frames_matched
-  FROM vcand cd
-  JOIN vfl x ON x.doc_id = cd.doc_id
-  JOIN vfl y ON y.doc_id = cd.s_doc AND y.frame_idx = x.frame_idx
-  GROUP BY cd.doc_id, cd.s_doc),
-vid_hits AS (
-  SELECT s_doc, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_video_hits
-  FROM vmatched WHERE frames_matched >= {_VIDEO.min_frames}
-  GROUP BY s_doc),
-suite AS (
+{media_ctes}suite AS (
   SELECT doc_id AS s_doc FROM documents
   WHERE {key_hash('doc_id')} < {BENCH_RATE})
 SELECT su.s_doc,
-       CAST(COALESCE(t.n_text_hits, 0) AS BIGINT) AS n_text_hits,
-       CAST(COALESCE(se.n_semantic_hits, 0) AS BIGINT) AS n_semantic_hits,
-       CAST(COALESCE(i.n_image_hits, 0) AS BIGINT) AS n_image_hits,
-       CAST(COALESCE(a.n_audio_hits, 0) AS BIGINT) AS n_audio_hits,
-       CAST(COALESCE(v.n_video_hits, 0) AS BIGINT) AS n_video_hits,
-       CAST(COALESCE(t.n_text_hits, 0) + COALESCE(se.n_semantic_hits, 0)
-            + COALESCE(i.n_image_hits, 0) + COALESCE(a.n_audio_hits, 0)
-            + COALESCE(v.n_video_hits, 0) AS BIGINT) AS n_total_hits
+       {per_kind}CAST({" + ".join(counts)} AS BIGINT) AS n_total_hits
 FROM suite su
-LEFT JOIN text_hits t ON t.s_doc = su.s_doc
-LEFT JOIN sem_hits se ON se.s_doc = su.s_doc
-LEFT JOIN img_hits i ON i.s_doc = su.s_doc
-LEFT JOIN aud_hits a ON a.s_doc = su.s_doc
-LEFT JOIN vid_hits v ON v.s_doc = su.s_doc
-ORDER BY su.s_doc
+{joins}ORDER BY su.s_doc
 """
 
 

@@ -1654,8 +1654,9 @@ class BandedFamily(NamedTuple):
     """One banded dedup family, keyed in BANDED_FAMILIES by its census
     name. The hamming families' registry forms and their DuckDB
     oracles, the band audits, policies and census over every family,
-    and the signature side of corpus.PERCEPTUAL_SCREENS come from here.
-    minhash_lsh carries only the census and remedy fields."""
+    the signature side of corpus.PERCEPTUAL_SCREENS and the banded
+    streams (streaming/jobs.py) come from here. minhash_lsh carries
+    only the census and remedy fields."""
     # band rows each blocking unit (doc, or frame for video)
     # contributes: the census divisor from band rows to units
     bands_per_unit: int
@@ -1668,8 +1669,13 @@ class BandedFamily(NamedTuple):
     # form -> registry query name
     forms: dict
     deploys: str = ""
-    # (spark, sf_dir) -> the signature frame (doc_id, *keys, sig),
-    # memoized per session under ``memo``
+    # the scan-local signer: a (doc_id[, text]) frame -> the signature
+    # frame (doc_id, *keys, sig); the streams sign each micro-batch
+    # with it, the media families' batch forms the documents table
+    frame: "Callable | None" = None
+    # (spark, sf_dir) -> the signature frame, where the batch forms
+    # do not sign with ``frame`` (the simhash families read the
+    # memoized shingles); memoized per session under ``memo``
     build: "Callable | None" = None
     memo: str = ""
     sig: str = ""
@@ -1699,7 +1705,13 @@ class BandedFamily(NamedTuple):
         does."""
         return session_memo(
             spark, (self.memo, sf_dir),
-            lambda: self.build(spark, sf_dir).transform(cut_lineage))
+            lambda: self._build(spark, sf_dir).transform(cut_lineage))
+
+    def _build(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        if self.build:
+            return self.build(spark, sf_dir)
+        return self.frame(fan_out(
+            t(spark, sf_dir, "documents").select("doc_id"), "doc_id"))
 
 
 def _media56(sig: str, stream: str, **spec) -> BandedFamily:
@@ -1726,6 +1738,17 @@ def _simhash_frame(non_empty: bool, *width: int) -> Callable:
         .selectExpr("doc_id", f"{H.simhash(sh, 'spark', *width)} AS simhash")
 
 
+def simhash64_frame(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (doc_id, simhash) at the widened width: the
+    simhash64 family's stream signer, bit-identical to its batch
+    signatures (same shingled_docs chain, same rehash64 widening, same
+    non_empty exclusion of zero-token docs)."""
+    return shingled_docs(docs, non_empty=True).selectExpr(
+        "doc_id",
+        f"{H.simhash(H.rehash64('sh', 'spark'), 'spark', SIMHASH64_BITS)}"
+        " AS simhash")
+
+
 BANDED_FAMILIES = {
     "image_phash": _media56(
         "phash", "stream_image_phash_policy_dedupe",
@@ -1738,7 +1761,7 @@ BANDED_FAMILIES = {
                "scheme_audit": "phash_blocking_scheme_audit",
                "incremental_bandpairs":
                    "dedup_image_phash_incremental_bandpairs"},
-        build=multimodal.image_phash_table, memo="image_phash",
+        frame=multimodal.image_phash_frame, memo="image_phash",
         ctes=multimodal.PHASH_ORACLE_CTES, src="ph"),
     "audio_afp": _media56(
         "afp", "stream_audio_fingerprint_dedupe",
@@ -1748,7 +1771,7 @@ BANDED_FAMILIES = {
                "bandpairs": "dedup_audio_fingerprint_bandpairs",
                "incremental_bandpairs":
                    "dedup_audio_fingerprint_incremental_bandpairs"},
-        build=multimodal.audio_fingerprint_table, memo="audio_afp",
+        frame=multimodal.audio_fingerprint_frame, memo="audio_afp",
         ctes=multimodal.AFP_ORACLE_CTES, src="afpt"),
     "video_vfh_frame": _media56(
         "vfh", "stream_video_fingerprint_dedupe",
@@ -1758,7 +1781,7 @@ BANDED_FAMILIES = {
                "bandpairs": "dedup_video_fingerprint_bandpairs",
                "incremental_bandpairs":
                    "dedup_video_fingerprint_incremental_bandpairs"},
-        build=multimodal.video_fingerprint_table, memo="video_vfp",
+        frame=multimodal.video_fingerprint_frame, memo="video_vfp",
         keys=("frame_idx",), min_frames=3,   # M of the VFP_FRAMES frames
         ctes=multimodal.VFP_ORACLE_CTES, src="vft"),
     # The documented coarse text prefilter: 8-bit bands have 2^8 values,
@@ -1784,7 +1807,7 @@ BANDED_FAMILIES = {
          ("salted_band_candidates", "cap=SALT_BUCKET_CAP")),
         {"batch": "dedup_simhash64",
          "incremental": "dedup_simhash64_incremental"},
-        build=_simhash_frame(True, SIMHASH64_BITS),
+        frame=simhash64_frame, build=_simhash_frame(True, SIMHASH64_BITS),
         memo="simhash64_signatures", sig="simhash", layout=PAIRS62,
         oracle_layout=SIMHASH64_ORACLE_BANDS, ctes=_SIM64_CTES, src="sim",
         ingest=f"doc_id % {INCREMENTAL_MOD} >= {INCREMENTAL_NEW}"),
@@ -2183,19 +2206,19 @@ def dedup_audio_fingerprint_incremental(spark: SparkSession,
 # ---------------------------------------------------------------------------
 # band-skew audit: hot-bucket histogram for the banded joins
 # ---------------------------------------------------------------------------
-def _family_band_rows(spark: SparkSession, sf_dir: str,
-                      family: str) -> DataFrame:
+def _family_band_rows(family: str, sigs: DataFrame) -> DataFrame:
     """(family, band_idx, key) rows of one family's production band
-    join over its memoized signatures. Keys are the exact join keys it
-    shuffles on: band values, qualified by the aligned keys where the
-    join is keyed on them (video: (frame_idx, band_idx, band_val))."""
+    join over its signature frame ``sigs`` (the memoized batch
+    signatures, or a stream's signed micro-batch). Keys are the exact
+    join keys it shuffles on: band values, qualified by the aligned
+    keys where the join is keyed on them (video: (frame_idx, band_idx,
+    band_val))."""
     f = BANDED_FAMILIES[family]
     key = "CAST(band_val AS STRING)"
     for k in f.keys:
         key = f"CONCAT(CAST({k} AS STRING), ':', {key})"
     return explode_bands(
-        f.signatures(spark, sf_dir), band_exprs(f.sig, f.layout, "spark"),
-        *f.keys
+        sigs, band_exprs(f.sig, f.layout, "spark"), *f.keys
     ).selectExpr(f"'{family}' AS family",
                  "CAST(band_idx AS INT) AS band_idx", f"{key} AS key")
 
@@ -2209,7 +2232,9 @@ def _banded_family_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(signature AS STRING) AS key")
     return functools.reduce(
         DataFrame.unionByName,
-        [mh, *(_family_band_rows(spark, sf_dir, fam) for fam in _MEDIA56)])
+        [mh, *(_family_band_rows(
+            fam, BANDED_FAMILIES[fam].signatures(spark, sf_dir))
+            for fam in _MEDIA56)])
 
 
 def band_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3236,9 +3261,9 @@ def _census_family_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     as (family, band_idx, key) rows over the memoized signatures."""
     return functools.reduce(DataFrame.unionByName, [
         _banded_family_rows(spark, sf_dir),
-        *(_family_band_rows(spark, sf_dir, fam)
+        *(_family_band_rows(fam, f.signatures(spark, sf_dir))
           for fam, f in BANDED_FAMILIES.items()
-          if f.build and fam not in _MEDIA56)])
+          if f.memo and fam not in _MEDIA56)])
 
 
 def candidate_volume_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3297,7 +3322,7 @@ def _per_family_case(field: str) -> str:
 
 def _candidate_volume_oracle() -> str:
     div = _per_family_case("bands_per_unit")
-    families = [fam for fam, f in BANDED_FAMILIES.items() if f.build]
+    families = [fam for fam, f in BANDED_FAMILIES.items() if f.memo]
     return _banded_family_sizes_sql(families) + f"""
 SELECT family,
        n_band_rows // (CASE family {div} END) AS n_units,
@@ -3572,18 +3597,6 @@ ORDER BY new_id, dup_of
 
 QUERIES["dedup_embedding_incremental"] = dedup_embedding_incremental
 ORACLES["dedup_embedding_incremental"] = DEDUP_EMBEDDING_INCREMENTAL_SQL
-
-
-def simhash64_frame(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) -> (doc_id, simhash) at the widened width — the
-    sign_frame the streaming twin plugs into the shared banded-signature
-    topology; bit-identical to the simhash64 family's batch signatures
-    (same shingled_docs chain, same rehash64 widening, same
-    non_empty exclusion of zero-token docs)."""
-    return shingled_docs(docs, non_empty=True).selectExpr(
-        "doc_id",
-        f"{H.simhash(H.rehash64('sh', 'spark'), 'spark', SIMHASH64_BITS)}"
-        " AS simhash")
 
 
 # its own Spark body: it flags the incoming docs before the band explode,

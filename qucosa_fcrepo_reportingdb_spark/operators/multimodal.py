@@ -765,8 +765,9 @@ def audio_fingerprint_frame(docs: DataFrame) -> DataFrame:
     (RIFF chunk walk + sample unpack), fingerprint the DECODED samples
     — in one scan-local Arrow-batched mapInPandas stage. The one Python
     stage of the audio-dedup plans; banding, candidate join, and
-    hamming verify downstream are pure JVM. Shared by the batch
-    signature table and the streaming dedupe's per-microbatch signing."""
+    hamming verify downstream are pure JVM. The audio family's
+    dedup.BandedFamily.frame: it signs the batch documents table and
+    each stream micro-batch."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -780,12 +781,6 @@ def audio_fingerprint_frame(docs: DataFrame) -> DataFrame:
 
     return docs.select("doc_id").mapInPandas(
         run, schema="doc_id long, afp long")
-
-
-def audio_fingerprint_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of audio_fingerprint_frame over the documents table."""
-    return audio_fingerprint_frame(
-        fan_out(t(spark, sf_dir, "documents").select("doc_id"), "doc_id"))
 
 
 # Shared oracle CTEs: recompute the synthetic samples, the window
@@ -1000,8 +995,9 @@ def image_phash_frame(docs: DataFrame) -> DataFrame:
     stage. Everything downstream (banding, candidate join, hamming
     verify) is pure JVM DataFrame work; this is the ONLY Python stage
     in the image-dedup plans, mirroring how a production pipeline
-    isolates codec work at the scan. Shared by the batch signature
-    table and the streaming dedupe's per-microbatch signing."""
+    isolates codec work at the scan. The image family's
+    dedup.BandedFamily.frame: it signs the batch documents table and
+    each stream micro-batch."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -1015,12 +1011,6 @@ def image_phash_frame(docs: DataFrame) -> DataFrame:
 
     return docs.select("doc_id").mapInPandas(
         run, schema="doc_id long, phash long")
-
-
-def image_phash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of image_phash_frame over the documents table."""
-    return image_phash_frame(
-        fan_out(t(spark, sf_dir, "documents").select("doc_id"), "doc_id"))
 
 
 # Shared oracle CTEs: recompute the synthetic pixels, the composed
@@ -1125,9 +1115,9 @@ def video_fingerprint_frame(docs: DataFrame) -> DataFrame:
     resize_nearest, hash with dhash56 — in one scan-local Arrow-batched
     mapInPandas stage emitting VFP_FRAMES rows per doc. The ONLY Python
     stage in the video-dedup plans; banding, candidate join, and the
-    M-of-K frame-match verify downstream are pure JVM. Shared by the
-    batch signature table and the streaming dedupe's per-microbatch
-    signing."""
+    M-of-K frame-match verify downstream are pure JVM. The video
+    family's dedup.BandedFamily.frame: it signs the batch documents
+    table and each stream micro-batch."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -1143,12 +1133,6 @@ def video_fingerprint_frame(docs: DataFrame) -> DataFrame:
 
     return docs.select("doc_id").mapInPandas(
         run, schema="doc_id long, frame_idx int, vfh long")
-
-
-def video_fingerprint_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of video_fingerprint_frame over the documents table."""
-    return video_fingerprint_frame(
-        fan_out(t(spark, sf_dir, "documents").select("doc_id"), "doc_id"))
 
 
 # Shared oracle CTEs: recompute the per-frame synthetic pixels, the

@@ -45,10 +45,33 @@ suite rows and the batch operator's own verdict body, run by one loop,
 - Checkpoint after data. Offsets commit only after the suite state and
   the verdicts are merged, so a failed batch replays into the same
   tables.
+
+The banded dedupe streams
+-------------------------
+The six ``stream_*_dedupe`` jobs over a hamming family (image phash
+under three blockings, audio, video and the 62-bit simhash) run one
+body, ``_banded_signature_dedupe_stream``. Each family's signer,
+signature column, aligned keys, band layout and gate come from
+dedup.BANDED_FAMILIES. Per micro-batch the documents are signed
+(scan-local), band-joined among themselves and against the
+accumulated band state, verified, and the pairs appended. A pair is
+emitted in the batch where its second document arrives. The contract:
+
+- State after pairs. The pairs append before the signature and band
+  state merge, and offsets commit after both (checkpoint after data),
+  so a failed batch replays.
+- Exactly-once pairs. A replayed or re-delivered document re-finds its
+  pairs; the anti-join against the recorded pair set drops them before
+  the append.
+- State keyed per aligned key. Signature rows are keyed (doc_id,
+  *keys) and band rows (doc_id, *keys, band_idx), so a re-delivered
+  document overwrites its own rows. The stored side is signed once, at
+  its own ingest: a batch signs only its own documents.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import uuid
 from collections.abc import Callable
@@ -82,13 +105,15 @@ from qucosa_fcrepo_reportingdb_spark.operators.corpus import (
     strip_spans_frame,
 )
 from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
+    _MEDIA56,
+    BANDED_FAMILIES,
+    PAIRS56,
+    SALT_TARGET_BUCKET_DOCS,
+    _family_band_rows,
+    _vfp_frame_match_counts,
+    blocking_exprs_for,
     normed_embedding_frame,
     shingled_docs,
-)
-from qucosa_fcrepo_reportingdb_spark.operators.multimodal import (
-    audio_fingerprint_frame,
-    image_phash_frame,
-    video_fingerprint_frame,
 )
 
 # Default source schemas: text documents, embeddings, media asset ids.
@@ -933,7 +958,7 @@ def quality_drift_state_profile(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# streaming image-phash dedupe (the incremental pixel-content form)
+# banded-signature dedupe streams (contract in the module docstring)
 # ---------------------------------------------------------------------------
 PHASH_SIGS_TABLE = "phash_sigs"
 PHASH_BANDS_TABLE = "phash_bands"
@@ -942,115 +967,95 @@ PHASH_PAIRS_TABLE = "phash_pairs"
 
 def _banded_signature_dedupe_stream(
         spark: SparkSession, source_dir: str, store: TableStore,
-        checkpoint_dir: str, schema: "T.StructType | None",
-        sign_frame, sig_col: str, n_bands: int,
-        hamming_max: int, sigs_table: str, bands_table: str,
-        pairs_table: str, checkpoint_name: str,
+        checkpoint_dir: str, schema: "T.StructType | None", family: str,
+        tables: "tuple[str, str, str]", checkpoint_name: str,
         band_exprs=None):
-    """Shared topology for streaming banded-signature dedup (image phash
-    and audio fingerprint are the same machine over a different one-
-    Python-stage signer): each microbatch of documents is signed
-    (scan-local), band-joined intra-batch AND against the ACCUMULATED
-    band state, and hamming-verified pairs append exactly once
-    (anti-join against the recorded pair set). A pair is emitted in the
-    batch where its second asset arrives.
-
-    Scale shape: per batch only the batch's assets decode and sign —
-    the stored side is 16-byte signatures + n_bands band rows per doc,
-    persisted at each doc's own ingest (never re-decoded); per-batch
-    cost is O(batch + matched buckets). Offsets commit only after
-    pairs + state are durable (checkpoint-after-data); re-delivered
-    docs overwrite their own keyed state rows and their re-found pairs
-    drop in the anti-join — the same at-least-once -> exactly-once
-    argument as the minhash job, pinned by the replay pytests.
-
-    ``band_exprs`` (optional list of SQL expressions over ``sig_col``)
-    swaps the blocking scheme — e.g. the 2-of-5 band-pair keys for the
-    birthday regime (SCALING.md, "the birthday regime, measured") —
-    without forking the
-    topology; default is the production strided single bands."""
-    doc_schema = schema or _ASSET_IDS
-    sig_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField(sig_col, T.LongType()),
-    ])
+    """The one body of the banded dedupe streams. ``family`` keys
+    BANDED_FAMILIES: its signer, signature column, aligned keys, gate
+    and production band layout (the default of ``band_exprs``, a list
+    of SQL expressions over the signature that swaps the blocking
+    scheme, e.g. the 2-of-5 band-pair keys of SCALING.md, "the birthday
+    regime, measured"). ``tables`` names the (signature, band, pair)
+    tables. A family without aligned keys writes (d1, d2, hamming) for
+    pairs within its hamming_max; the keyed family (video) writes (d1,
+    d2, frames_matched) for pairs with at least min_frames in-gate
+    aligned signatures, through the batch form's frame fold. A clip's
+    frames are signed together, so the count never sees a partial
+    clip."""
+    f = BANDED_FAMILIES[family]
+    sigs_table, bands_table, pairs_table = tables
+    unit = ["doc_id", *f.keys]
+    head = [T.StructField("doc_id", T.LongType()),
+            *(T.StructField(k, T.IntegerType()) for k in f.keys)]
+    sig_schema = T.StructType([*head, T.StructField(f.sig, T.LongType())])
     band_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("band_idx", T.IntegerType()),
-        T.StructField("band_val", T.LongType()),
-    ])
+        *head, T.StructField("band_idx", T.IntegerType()),
+        T.StructField("band_val", T.LongType())])
     pair_schema = T.StructType([
-        T.StructField("d1", T.LongType()),
-        T.StructField("d2", T.LongType()),
-        T.StructField("hamming", T.IntegerType()),
-    ])
+        T.StructField("d1", T.LongType()), T.StructField("d2", T.LongType()),
+        T.StructField("frames_matched", T.LongType()) if f.keys
+        else T.StructField("hamming", T.IntegerType())])
+    exprs = band_exprs or banding.band_exprs(f.sig, f.layout, "spark")
 
-    exprs = band_exprs or _strided_exprs(sig_col, n_bands)
+    def verified(cand: DataFrame, lookup: DataFrame) -> DataFrame:
+        if f.keys:
+            # fold the candidates' frames only, not every stored clip's;
+            # materialized once, as the fold reads the candidates thrice
+            cand = cand.transform(cut_lineage)
+            ids = cand.select(F.col("d1").alias("doc_id")).union(
+                cand.select(F.col("d2").alias("doc_id")))
+            return (_vfp_frame_match_counts(
+                        cand, lookup.join(ids, "doc_id", "left_semi"),
+                        f.hamming_max)
+                    .filter(F.col("frames_matched") >= f.min_frames))
+        return (
+            cand
+            .join(lookup.select(F.col("doc_id").alias("d1"),
+                                F.col(f.sig).alias("p1")), "d1")
+            .join(lookup.select(F.col("doc_id").alias("d2"),
+                                F.col(f.sig).alias("p2")), "d2")
+            .withColumn("hamming",
+                        F.expr("CAST(bit_count(p1 ^ p2) AS INT)"))
+            .filter(F.col("hamming") <= f.hamming_max)
+            .select("d1", "d2", "hamming"))
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        sig_b = sign_frame(batch.dropDuplicates(["doc_id"])).persist()
+        sig_b = f.frame(batch.dropDuplicates(["doc_id"])).persist()
         try:
-            new_bands = banding.explode_bands(sig_b, exprs, "doc_id")
-            stored_sigs = store.read(sigs_table, sig_schema)
-            stored_bands = store.read(bands_table, band_schema)
-            cand = banding.stream_candidates(new_bands, stored_bands)
+            new_bands = banding.explode_bands(sig_b, exprs, *unit)
+            cand = banding.stream_candidates(
+                new_bands, store.read(bands_table, band_schema), f.keys)
             # signature lookup: batch rows win over stored on re-delivery
             lookup = sig_b.unionByName(
-                stored_sigs.join(sig_b.select("doc_id"), "doc_id",
-                                 "left_anti"))
-            pairs = (
-                cand
-                .join(lookup.select(F.col("doc_id").alias("d1"),
-                                    F.col(sig_col).alias("p1")), "d1")
-                .join(lookup.select(F.col("doc_id").alias("d2"),
-                                    F.col(sig_col).alias("p2")), "d2")
-                .withColumn("hamming",
-                            F.expr("CAST(bit_count(p1 ^ p2) AS INT)"))
-                .filter(F.col("hamming") <= hamming_max)
-                .select("d1", "d2", "hamming")
-            )
+                store.read(sigs_table, sig_schema)
+                .join(sig_b.select("doc_id"), "doc_id", "left_anti"))
             recorded = store.read(pairs_table, pair_schema) \
                 .select("d1", "d2")
             store.append(pairs_table,
-                         pairs.join(recorded, ["d1", "d2"], "left_anti"),
+                         verified(cand, lookup)
+                         .join(recorded, ["d1", "d2"], "left_anti"),
                          schema=pair_schema)
-            # state AFTER pairs (replay re-finds, anti-join drops)
-            store.merge_keyed(sigs_table, sig_b,
-                              keys=["doc_id"], schema=sig_schema)
+            store.merge_keyed(sigs_table, sig_b, keys=unit,
+                              schema=sig_schema)
             store.merge_keyed(bands_table, new_bands,
-                              keys=["doc_id", "band_idx"],
-                              schema=band_schema)
+                              keys=[*unit, "band_idx"], schema=band_schema)
         finally:
             sig_b.unpersist()
 
-    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
-                        checkpoint_name, handle)
-
-
-def _strided_exprs(sig_col: str, n_bands: int) -> "list[str]":
-    """The production single-band exprs: strided over 56 bits."""
-    return banding.band_exprs(sig_col, banding.Layout("strided", n_bands),
-                              "spark")
+    return _drain_files(spark, source_dir, schema or _ASSET_IDS,
+                        checkpoint_dir, checkpoint_name, handle)
 
 
 def stream_image_phash_dedupe(spark: SparkSession, source_dir: str,
                               store: TableStore, checkpoint_dir: str,
                               schema: "T.StructType | None" = None):
-    """Incremental image near-duplicate detection — stream_minhash_dedupe's
-    topology applied to the pixel hash; see
-    _banded_signature_dedupe_stream for the shared exactly-once
-    argument and scale shape."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        BANDED_FAMILIES,
-    )
-    f = BANDED_FAMILIES["image_phash"]
+    """Incremental image near-duplicate detection under the production
+    single bands: each micro-batch is signed with the PNG round-trip
+    pixel hash."""
     return _banded_signature_dedupe_stream(
-        spark, source_dir, store, checkpoint_dir, schema,
-        sign_frame=image_phash_frame, sig_col="phash",
-        n_bands=f.layout.n_bands,
-        hamming_max=f.hamming_max, sigs_table=PHASH_SIGS_TABLE,
-        bands_table=PHASH_BANDS_TABLE, pairs_table=PHASH_PAIRS_TABLE,
-        checkpoint_name="phash_dedupe")
+        spark, source_dir, store, checkpoint_dir, schema, "image_phash",
+        (PHASH_SIGS_TABLE, PHASH_BANDS_TABLE, PHASH_PAIRS_TABLE),
+        "phash_dedupe")
 
 
 PHASH_C2_SIGS_TABLE = "phash_c2_sigs"
@@ -1063,27 +1068,15 @@ def stream_image_phash_bandpairs_dedupe(spark: SparkSession,
                                         checkpoint_dir: str,
                                         schema: "T.StructType | None" = None):
     """stream_image_phash_dedupe under the combinatorial 2-of-5
-    band-pair blocking — the birthday-regime remedy riding the SAME
-    topology via the band_exprs parameter (the blocking scheme is a
-    config, not a fork). Exactness is per-pair (hamming <= 3 leaves
-    >= 2 of 5 sub-bands intact), so the emitted pair set equals the
-    single-band stream's and the batch dedup_image_phash — pinned by
-    the batch-equivalence pytest. State cost: 10 band rows per doc
-    instead of 4, the trade phash_blocking_scheme_audit prices."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        BANDED_FAMILIES,
-        PAIRS56,
-    )
-    f = BANDED_FAMILIES["image_phash"]
+    band-pair blocking, the birthday-regime remedy. Exactness is
+    per-pair (hamming <= 3 leaves >= 2 of 5 sub-bands intact), so the
+    emitted pair set equals the single-band stream's and the batch
+    dedup_image_phash. State cost: 10 band rows per doc instead of 4,
+    the trade phash_blocking_scheme_audit prices."""
     return _banded_signature_dedupe_stream(
-        spark, source_dir, store, checkpoint_dir, schema,
-        sign_frame=image_phash_frame, sig_col="phash",
-        n_bands=f.layout.n_bands,
-        hamming_max=f.hamming_max, sigs_table=PHASH_C2_SIGS_TABLE,
-        bands_table=PHASH_C2_BANDS_TABLE,
-        pairs_table=PHASH_C2_PAIRS_TABLE,
-        checkpoint_name="phash_c2_dedupe",
-        band_exprs=banding.band_exprs("phash", PAIRS56, "spark"))
+        spark, source_dir, store, checkpoint_dir, schema, "image_phash",
+        (PHASH_C2_SIGS_TABLE, PHASH_C2_BANDS_TABLE, PHASH_C2_PAIRS_TABLE),
+        "phash_c2_dedupe", banding.band_exprs("phash", PAIRS56, "spark"))
 
 
 PHASH_POLICY_SIGS_TABLE = "phash_policy_sigs"
@@ -1095,31 +1088,19 @@ def stream_image_phash_policy_dedupe(spark: SparkSession,
                                      source_dir: str, store: TableStore,
                                      checkpoint_dir: str, action: str,
                                      schema: "T.StructType | None" = None):
-    """The policy-DRIVEN image dedup stream: the blocking scheme comes
+    """The policy-driven image dedup stream: the blocking scheme comes
     from a band_blocking_policy action row ('single_bands' or
-    'band_pairs') instead of being hard-coded per job — the actuator
-    that closes the audit -> decision -> deployment loop the same way
-    band_salting_policy closes the skew loop. blocking_exprs_for
-    translates the action into the band_exprs config on the shared
-    topology; the emitted pair set is action-INDEPENDENT (both schemes
-    are exact for hamming <= 3 — pytest-pinned against the batch
-    operator), only the band-state shape changes (4 vs 10 rows/doc,
-    the cost/crossover trade band_blocking_policy prices)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        BANDED_FAMILIES,
-        blocking_exprs_for,
-    )
-    f = BANDED_FAMILIES["image_phash"]
+    'band_pairs'), which blocking_exprs_for translates into the
+    band_exprs of the shared body. This closes the audit -> decision ->
+    deployment loop the way band_salting_policy closes the skew loop.
+    The emitted pair set does not depend on the action (both schemes
+    are exact for hamming <= 3); only the band-state shape does (4 vs
+    10 rows/doc, the trade band_blocking_policy prices)."""
     return _banded_signature_dedupe_stream(
-        spark, source_dir, store, checkpoint_dir, schema,
-        sign_frame=image_phash_frame, sig_col="phash",
-        n_bands=f.layout.n_bands,
-        hamming_max=f.hamming_max,
-        sigs_table=PHASH_POLICY_SIGS_TABLE,
-        bands_table=PHASH_POLICY_BANDS_TABLE,
-        pairs_table=PHASH_POLICY_PAIRS_TABLE,
-        checkpoint_name="phash_policy_dedupe",
-        band_exprs=blocking_exprs_for(action, "phash"))
+        spark, source_dir, store, checkpoint_dir, schema, "image_phash",
+        (PHASH_POLICY_SIGS_TABLE, PHASH_POLICY_BANDS_TABLE,
+         PHASH_POLICY_PAIRS_TABLE),
+        "phash_policy_dedupe", blocking_exprs_for(action, "phash"))
 
 
 def migrate_band_state(spark: SparkSession, store: TableStore,
@@ -1152,7 +1133,8 @@ def migrate_band_state(spark: SparkSession, store: TableStore,
     the matching band_exprs (the pytest drives exactly this sequence).
     Returns a small audit dict (units, band rows, rows per unit) —
     bounded driver-side counts, the numbers the operator logs."""
-    exprs = band_exprs or _strided_exprs(sig_col, n_bands)
+    exprs = band_exprs or banding.band_exprs(
+        sig_col, banding.Layout("strided", n_bands), "spark")
     keys = ["doc_id", *extra_keys]
     sigs = store.read(sigs_table, sig_schema)
     # The band state is LONG-keyed (every 56/62-bit family); a string-
@@ -1190,22 +1172,11 @@ AFP_PAIRS_TABLE = "afp_pairs"
 def stream_audio_fingerprint_dedupe(spark: SparkSession, source_dir: str,
                                     store: TableStore, checkpoint_dir: str,
                                     schema: "T.StructType | None" = None):
-    """Incremental audio near-duplicate detection — the same banded-
-    signature machine as the image job, signing each microbatch with the
-    energy-sign fingerprint over the real WAV round-trip; see
-    _banded_signature_dedupe_stream for the shared exactly-once
-    argument and scale shape."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        BANDED_FAMILIES,
-    )
-    f = BANDED_FAMILIES["audio_afp"]
+    """Incremental audio near-duplicate detection: each micro-batch is
+    signed with the energy-sign fingerprint over the WAV round-trip."""
     return _banded_signature_dedupe_stream(
-        spark, source_dir, store, checkpoint_dir, schema,
-        sign_frame=audio_fingerprint_frame, sig_col="afp",
-        n_bands=f.layout.n_bands,
-        hamming_max=f.hamming_max, sigs_table=AFP_SIGS_TABLE,
-        bands_table=AFP_BANDS_TABLE, pairs_table=AFP_PAIRS_TABLE,
-        checkpoint_name="afp_dedupe")
+        spark, source_dir, store, checkpoint_dir, schema, "audio_afp",
+        (AFP_SIGS_TABLE, AFP_BANDS_TABLE, AFP_PAIRS_TABLE), "afp_dedupe")
 
 
 VFP_SIGS_TABLE = "vfp_sigs"
@@ -1217,99 +1188,15 @@ def stream_video_fingerprint_dedupe(spark: SparkSession, source_dir: str,
                                     store: TableStore, checkpoint_dir: str,
                                     schema: "T.StructType | None" = None,
                                     band_exprs=None):
-    """Incremental video near-duplicate detection — the banded-signature
-    topology generalized to a MULTI-ROW signature (VFP_FRAMES per-frame
-    hashes per clip) and the M-of-K verify: each microbatch's clips are
-    signed per frame (scan-local), band-joined on (frame_idx, band_idx,
-    band_val) intra-batch AND against the accumulated band state, then
-    frame-aligned hamming counts gate pairs at the family's min_frames
-    matched frames. Pairs append exactly once (anti-join against the recorded
-    set); a pair is emitted in the batch where its second clip arrives —
-    a clip's frames all travel in one batch, so the M-of-K count never
-    sees a partial clip.
-
-    Scale shape and exactly-once argument are
-    _banded_signature_dedupe_stream's, with per-(doc, frame) keyed state:
-    stored side is VFP_FRAMES signature rows + VFP_FRAMES x n_bands band
-    rows per clip, written at the clip's own ingest (never re-decoded);
-    re-delivered clips overwrite their keyed rows and their re-found
-    pairs drop in the anti-join (pinned by the replay pytest)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        BANDED_FAMILIES,
-    )
-    f = BANDED_FAMILIES["video_vfh_frame"]
-
-    doc_schema = schema or _ASSET_IDS
-    sig_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("vfh", T.LongType()),
-    ])
-    band_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("band_idx", T.IntegerType()),
-        T.StructField("band_val", T.LongType()),
-    ])
-    pair_schema = T.StructType([
-        T.StructField("d1", T.LongType()),
-        T.StructField("d2", T.LongType()),
-        T.StructField("frames_matched", T.LongType()),
-    ])
-
-    # band_exprs: the same blocking-scheme seam as the shared topology
-    # (None = production strided single bands; the 2-of-5 pair keys swap
-    # in) — per-frame exactness lifts unchanged, so the M-of-K verify
-    # downstream is scheme-independent
-    exprs = band_exprs or _strided_exprs("vfh", f.layout.n_bands)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        sig_b = video_fingerprint_frame(
-            batch.dropDuplicates(["doc_id"])).persist()
-        try:
-            new_bands = banding.explode_bands(sig_b, exprs,
-                                              "doc_id", "frame_idx")
-            stored_sigs = store.read(VFP_SIGS_TABLE, sig_schema)
-            stored_bands = store.read(VFP_BANDS_TABLE, band_schema)
-            cand = banding.stream_candidates(new_bands, stored_bands,
-                                             ["frame_idx"])
-            # signature lookup: batch rows win over stored on re-delivery
-            lookup = sig_b.unionByName(
-                stored_sigs.join(sig_b.select("doc_id").distinct(),
-                                 "doc_id", "left_anti"))
-            pairs = (
-                cand
-                .join(lookup.select(F.col("doc_id").alias("d1"),
-                                    "frame_idx",
-                                    F.col("vfh").alias("h1")), "d1")
-                .join(lookup.select(F.col("doc_id").alias("d2"),
-                                    "frame_idx",
-                                    F.col("vfh").alias("h2")),
-                      ["d2", "frame_idx"])
-                .withColumn("hm", F.expr("CAST(bit_count(h1 ^ h2) AS INT)"))
-                .groupBy("d1", "d2")
-                .agg(F.sum(F.when(F.col("hm") <= f.hamming_max, 1)
-                           .otherwise(0)).cast("long")
-                     .alias("frames_matched"))
-                .filter(F.col("frames_matched") >= f.min_frames)
-            )
-            recorded = store.read(VFP_PAIRS_TABLE, pair_schema) \
-                .select("d1", "d2")
-            store.append(VFP_PAIRS_TABLE,
-                         pairs.join(recorded, ["d1", "d2"], "left_anti"),
-                         schema=pair_schema)
-            # state AFTER pairs (replay re-finds, anti-join drops)
-            store.merge_keyed(VFP_SIGS_TABLE, sig_b,
-                              keys=["doc_id", "frame_idx"],
-                              schema=sig_schema)
-            store.merge_keyed(VFP_BANDS_TABLE, new_bands,
-                              keys=["doc_id", "frame_idx", "band_idx"],
-                              schema=band_schema)
-        finally:
-            sig_b.unpersist()
-
-    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
-                        "vfp_dedupe", handle)
+    """Incremental video near-duplicate detection over the per-frame
+    hashes: band rows are keyed (frame_idx, band_idx, band_val) and a
+    pair needs the family's min_frames in-gate aligned frames.
+    ``band_exprs`` swaps the blocking scheme (per-frame exactness lifts
+    unchanged, so the M-of-K verify does not depend on it)."""
+    return _banded_signature_dedupe_stream(
+        spark, source_dir, store, checkpoint_dir, schema, "video_vfh_frame",
+        (VFP_SIGS_TABLE, VFP_BANDS_TABLE, VFP_PAIRS_TABLE), "vfp_dedupe",
+        band_exprs)
 
 
 # ---------------------------------------------------------------------------
@@ -1471,8 +1358,8 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
                              schema: "T.StructType | None" = None):
     """Streaming twin of band_skew_audit / band_salting_policy for the
     three 56-bit signature families: each microbatch of docs is signed
-    by the scan-local Python builders shared with the dedupe streams,
-    exploded to PRODUCTION strided band rows (PROD_BANDS56; video keyed
+    by each family's BandedFamily.frame, exploded to the batch audit's
+    band rows (dedup._family_band_rows: production blocking, video keyed
     by its frame-qualified triple), and the state table accumulates
     per-(family, band_idx, key) counts — the mergeable sketch is plain
     addition, so the folded profile (band_skew_state_profile) equals
@@ -1486,37 +1373,11 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
     key); a replayed batch rewrites its own rows with identical values.
     Same doc_id-uniqueness-across-files precondition as the norm
     monitor (dropDuplicates is per-microbatch only)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        BANDED_FAMILIES,
-    )
-    img, aud, vid = (BANDED_FAMILIES[k].layout.n_bands for k in (
-        "image_phash", "audio_afp", "video_vfh_frame"))
-
-    doc_schema = schema or _ASSET_IDS
-
-    def band_rows_of(docs: DataFrame) -> DataFrame:
-        ph = banding.explode_bands(
-            image_phash_frame(docs), _strided_exprs("phash", img)
-        ).selectExpr("'image_phash' AS family",
-                     "CAST(band_idx AS INT) AS band_idx",
-                     "CAST(band_val AS STRING) AS key")
-        af = banding.explode_bands(
-            audio_fingerprint_frame(docs), _strided_exprs("afp", aud)
-        ).selectExpr("'audio_afp' AS family",
-                     "CAST(band_idx AS INT) AS band_idx",
-                     "CAST(band_val AS STRING) AS key")
-        vf = banding.explode_bands(
-            video_fingerprint_frame(docs), _strided_exprs("vfh", vid),
-            "frame_idx"
-        ).selectExpr("'video_vfh_frame' AS family",
-                     "CAST(band_idx AS INT) AS band_idx",
-                     "CONCAT(CAST(frame_idx AS STRING), ':',"
-                     " CAST(band_val AS STRING)) AS key")
-        return ph.unionByName(af).unionByName(vf)
-
     def handle(batch: DataFrame, epoch_id: int) -> None:
         docs = batch.dropDuplicates(["doc_id"]).select("doc_id")
-        b = (band_rows_of(docs)
+        b = (functools.reduce(DataFrame.unionByName, [
+                _family_band_rows(fam, BANDED_FAMILIES[fam].frame(docs))
+                for fam in _MEDIA56])
              .groupBy("family", "band_idx", "key")
              .agg(F.count(F.lit(1)).cast("long").alias("n"))
              .withColumn("epoch", F.lit(epoch_id).cast("long")))
@@ -1524,8 +1385,8 @@ def stream_band_skew_monitor(spark: SparkSession, source_dir: str,
                           keys=["epoch", "family", "band_idx", "key"],
                           schema=b.schema)
 
-    return _drain_files(spark, source_dir, doc_schema, checkpoint_dir,
-                        "band_skew", handle)
+    return _drain_files(spark, source_dir, schema or _ASSET_IDS,
+                        checkpoint_dir, "band_skew", handle)
 
 
 def band_skew_state_profile(store: TableStore) -> DataFrame:
@@ -1533,9 +1394,6 @@ def band_skew_state_profile(store: TableStore) -> DataFrame:
     per-family shape band_salting_policy reads: bucket count, band
     rows, hottest bucket, hot-bucket count against the salting
     budget."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        SALT_TARGET_BUCKET_DOCS,
-    )
     sizes = (store.read(BAND_SKEW_STATE_TABLE)
              .groupBy("family", "band_idx", "key")
              .agg(F.sum("n").cast("long").alias("k")))
@@ -1638,30 +1496,16 @@ SIMHASH64_PAIRS_TABLE = "simhash64_pairs"
 def stream_simhash64_dedupe(spark: SparkSession, source_dir: str,
                             store: TableStore, checkpoint_dir: str,
                             schema: "T.StructType | None" = None):
-    """Streaming twin of dedup_simhash64 — completing the widened
-    sketch's batch/incremental/streaming parity on the shared
-    banded-signature topology: each text microbatch signs scan-locally
-    (tokens -> rehash64-widened shingles -> 62-bit simhash, all codegen
-    expressions), band-joins on the 2-of-5 pair keys intra-batch AND
-    against accumulated band state, and hamming-verified pairs append
-    exactly once. Same exactly-once argument as the image/audio/video
-    jobs; state cost 10 band rows + one 8-byte signature per doc."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        HAMMING_MAX,
-        PAIRS62,
-        simhash64_frame,
-    )
-
-    doc_schema = schema or _TEXT_DOCS
+    """Streaming twin of dedup_simhash64: each text micro-batch signs
+    scan-locally (tokens -> rehash64-widened shingles -> 62-bit
+    simhash, all codegen expressions) and band-joins on the family's
+    2-of-5 pair keys. State cost: 10 band rows and one 8-byte
+    signature per doc."""
     return _banded_signature_dedupe_stream(
-        spark, source_dir, store, checkpoint_dir, doc_schema,
-        sign_frame=simhash64_frame, sig_col="simhash",
-        n_bands=4, hamming_max=HAMMING_MAX,
-        sigs_table=SIMHASH64_SIGS_TABLE,
-        bands_table=SIMHASH64_BANDS_TABLE,
-        pairs_table=SIMHASH64_PAIRS_TABLE,
-        checkpoint_name="simhash64_dedupe",
-        band_exprs=banding.band_exprs("simhash", PAIRS62, "spark"))
+        spark, source_dir, store, checkpoint_dir, schema or _TEXT_DOCS,
+        "simhash64_bandpairs_2of5",
+        (SIMHASH64_SIGS_TABLE, SIMHASH64_BANDS_TABLE, SIMHASH64_PAIRS_TABLE),
+        "simhash64_dedupe")
 
 
 SEM_SUITE_TABLE = "semantic_suite_vectors"
@@ -1795,30 +1639,30 @@ def stream_phash_decontaminate(spark: SparkSession, source_dir: str,
                                store: TableStore, checkpoint_dir: str,
                                schema: "T.StructType | None" = None):
     """Streaming twin of corpus.decontaminate_phash: each batch's assets
-    are signed once (image_phash_frame — the PNG round-trip, the one
-    Python stage), suite signatures merge into the state, and corpus
-    assets screen through _sig56_screen_frame. Pigeonhole keeps the
-    banded screen exact, so the stream needs no recall schedule."""
+    are signed once (the PNG round-trip, the one Python stage), suite
+    signatures merge into the state, and corpus assets screen through
+    _sig56_screen_frame. Pigeonhole keeps the banded screen exact, so
+    the stream needs no recall schedule."""
     return _perceptual_stream(
         spark, source_dir, store, checkpoint_dir, "phash_decontaminate",
-        schema, "phash", image_phash_frame,
+        schema, "phash",
         (PH_SCREEN_SUITE_TABLE, PH_SCREEN_SUITE_SCHEMA, ["s_doc"]),
         (PH_SCREEN_VERDICTS_TABLE, PH_SCREEN_VERDICT_SCHEMA))
 
 
 def _perceptual_stream(spark: SparkSession, source_dir: str,
                        store: TableStore, checkpoint_dir: str, subdir: str,
-                       schema: "T.StructType | None", family: str, sign,
+                       schema: "T.StructType | None", family: str,
                        suite: tuple, verdicts: tuple):
-    """The image, audio and video twins: ``sign`` each batch's assets,
-    keep the suite members' signatures as state, screen the corpus
-    members with the family's batch verdict body
-    (corpus.PERCEPTUAL_SCREENS)."""
+    """The image, audio and video twins: sign each batch's assets with
+    the family's BandedFamily.frame, keep the suite members' signatures
+    as state, screen the corpus members with the family's batch verdict
+    body (corpus.PERCEPTUAL_SCREENS)."""
     p = PERCEPTUAL_SCREENS[family]
     return _suite_screen_stream(
         spark, source_dir, store, checkpoint_dir, subdir,
         schema or _ASSET_IDS, "doc_id",
-        prepare=lambda b: _bench_split(sign(b)),
+        prepare=lambda b: _bench_split(p.fam.frame(b)),
         suite_rows=lambda sig: perceptual_suite_rows(sig, family),
         verdict=lambda sig, state: p.screen(
             sig.filter(~F.col("is_suite")).select("doc_id", *p.cols), state),
@@ -1892,12 +1736,12 @@ def stream_afp_decontaminate(spark: SparkSession, source_dir: str,
                              store: TableStore, checkpoint_dir: str,
                              schema: "T.StructType | None" = None):
     """Streaming twin of corpus.decontaminate_afp: each batch's clips
-    are signed once (audio_fingerprint_frame — the WAV round-trip) and
-    corpus clips screen through _sig56_screen_frame, the batch form's
-    pigeonhole-exact banded broadcast join."""
+    are signed once (the WAV round-trip) and corpus clips screen
+    through _sig56_screen_frame, the batch form's pigeonhole-exact
+    banded broadcast join."""
     return _perceptual_stream(
         spark, source_dir, store, checkpoint_dir, "afp_decontaminate",
-        schema, "afp", audio_fingerprint_frame,
+        schema, "afp",
         (AFP_SCREEN_SUITE_TABLE, AFP_SCREEN_SUITE_SCHEMA, ["s_doc"]),
         (AFP_SCREEN_VERDICTS_TABLE, AFP_SCREEN_VERDICT_SCHEMA))
 
@@ -1906,13 +1750,13 @@ def stream_vfp_decontaminate(spark: SparkSession, source_dir: str,
                              store: TableStore, checkpoint_dir: str,
                              schema: "T.StructType | None" = None):
     """Streaming twin of corpus.decontaminate_vfp: each batch's clips
-    are signed per sampled frame (video_fingerprint_frame), suite frame
-    signatures are state keyed (s_doc, frame_idx), and corpus clips
-    screen through vfp_screen_frame — the batch form's per-frame banded
-    join and M-of-K verify."""
+    are signed per sampled frame, suite frame signatures are state
+    keyed (s_doc, frame_idx), and corpus clips screen through
+    vfp_screen_frame — the batch form's per-frame banded join and
+    M-of-K verify."""
     return _perceptual_stream(
         spark, source_dir, store, checkpoint_dir, "vfp_decontaminate",
-        schema, "vfp", video_fingerprint_frame,
+        schema, "vfp",
         (VFP_SCREEN_SUITE_TABLE, VFP_SCREEN_SUITE_SCHEMA,
          ["s_doc", "frame_idx"]),
         (VFP_SCREEN_VERDICTS_TABLE, VFP_SCREEN_VERDICT_SCHEMA))

@@ -62,12 +62,11 @@ SLOW_TIER = {
     "test_stream_recallk_matches_batch_and_exact_via_k_none",
     "test_stream_bloom_decontaminate_matches_batch",
     "test_stream_stream_interval_join_matches_batch",
-    "test_stream_vfp_dedupe_replay_exactly_once",
-    "test_stream_afp_dedupe_replay_exactly_once",
-    "test_stream_phash_dedupe_replay_exactly_once",
-    "test_stream_vfp_dedupe_matches_batch",
-    "test_stream_afp_dedupe_matches_batch",
-    "test_stream_phash_bandpairs_matches_batch",
+    "test_banded_stream_replay_exactly_once[phash]",
+    "test_banded_stream_replay_exactly_once[afp]",
+    "test_banded_stream_replay_exactly_once[vfp]",
+    "test_banded_stream_matches_batch[afp]",
+    "test_banded_stream_matches_batch[phash_bandpairs]",
     "test_stream_perceptual_decontaminate_matches_batch",
     "test_stream_lsh_late_suite_vec_flags_stale_verdicts",
     "test_stream_session_windows_matches_batch",

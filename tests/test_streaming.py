@@ -213,7 +213,7 @@ def test_stream_bloom_decontaminate_matches_batch(spark, store, tmp_path):
     assert got == expected and len(got) > 0
     assert any(r[2] for r in got), "fixture has no bloom-flagged docs"
     # bench docs delivered first -> every verdict saw the full bit
-    # state: one epoch, equal to the current bit count (r15 stamp)
+    # state: one epoch, equal to the current bit count (the epoch stamp)
     from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
         BLOOM_BITS_SCHEMA,
         BLOOM_BITS_TABLE,
@@ -223,7 +223,7 @@ def test_stream_bloom_decontaminate_matches_batch(spark, store, tmp_path):
 
     # restart (same checkpoint, no new files) + full reprocess (fresh
     # checkpoint, same store) leave bits and verdicts bit-identical —
-    # the screen-family posture (r15 closure sweep)
+    # the restart-and-replay posture every screen twin pins
     stream_bloom_decontaminate(
         spark, src, store, str(tmp_path / "ck")).awaitTermination(120)
     stream_bloom_decontaminate(
@@ -728,7 +728,7 @@ def test_stream_sessionize_correct_across_arrow_chunks(spark, tmp_path):
 
 def test_streaming_sink_file_count_bounded_by_auto_compaction(
         spark, tmp_path):
-    """Round-5 finding #3, streaming side: a many-batch stream appends
+    """The sink file-count bound, streaming side: a many-batch stream appends
     one file set per microbatch into the pairs sink; the store's
     auto-compaction must keep the table at O(threshold) files without
     changing the emitted pairs (exactly-once anti-join still holds
@@ -943,129 +943,84 @@ def test_content_drift_monitor_replay_is_idempotent(spark, store,
     assert store.read(QUALITY_DRIFT_STATE_TABLE).count() == n_qual
 
 
-def test_stream_phash_dedupe_matches_batch(spark, store, tmp_path):
-    """Streamed image-phash pairs over two microbatches must equal the
-    batch dedup_image_phash pair set — the designed (4k, 4k+1) pairs
-    split across the even/odd batch boundary, so every one must be
-    caught by the cross (stored x new) join, not the intra-batch one."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        dedup_image_phash,
-    )
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        PHASH_PAIRS_TABLE,
-        stream_image_phash_dedupe,
-    )
+# case -> (stream, its pairs table, the batch form, designed pair count)
+_BANDED_STREAMS = {
+    "phash": ("stream_image_phash_dedupe", "PHASH_PAIRS_TABLE",
+              "dedup_image_phash", 125),
+    "phash_bandpairs": ("stream_image_phash_bandpairs_dedupe",
+                        "PHASH_C2_PAIRS_TABLE", "dedup_image_phash", 125),
+    "afp": ("stream_audio_fingerprint_dedupe", "AFP_PAIRS_TABLE",
+            "dedup_audio_fingerprint", 125),
+    "vfp": ("stream_video_fingerprint_dedupe", "VFP_PAIRS_TABLE",
+            "dedup_video_fingerprint", 125),
+    "simhash64": ("stream_simhash64_dedupe", "SIMHASH64_PAIRS_TABLE",
+                  "dedup_simhash64", None),
+}
 
+
+def _evens_then_odds(spark, tmp_path, case: str) -> str:
+    """The sf0.001 documents as two source files, evens then odds: the
+    designed (4k, 4k+1) pairs, and simhash64's near-dup text pairs,
+    split across the batch boundary, so the cross (stored x new) join
+    has to catch them, not the intra-batch one."""
+    cols = ["doc_id", "text"] if case == "simhash64" else ["doc_id"]
     docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id")
+        "/root/testdata/sf0.001/documents.parquet").select(*cols)
     src = str(tmp_path / "docs")
-    for m in range(2):                    # evens arrive, then odds
+    for m in range(2):
         docs.filter(F.col("doc_id") % 2 == m) \
             .coalesce(1).write.parquet(src, mode="append")
+    return src
 
-    q = stream_image_phash_dedupe(spark, src, store,
-                                  str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
 
-    streamed = {(r.d1, r.d2, r.hamming) for r in
-                store.read(PHASH_PAIRS_TABLE).collect()}
-    batch = {(r.d1, r.d2, r.hamming) for r in
-             dedup_image_phash(spark, "/root/testdata/sf0.001").collect()}
+@pytest.mark.parametrize("case", list(_BANDED_STREAMS))
+def test_banded_stream_matches_batch(spark, store, tmp_path, case):
+    """Streamed pairs over two micro-batches must equal the batch
+    form's pair set. The 2-of-5 band-pair stream emits the single-band
+    batch set too: both schemes are exact for hamming <= 3."""
+    from qucosa_fcrepo_reportingdb_spark.operators import dedup
+    from qucosa_fcrepo_reportingdb_spark.streaming import jobs
+
+    stream, table, batch_form, n_designed = _BANDED_STREAMS[case]
+    src = _evens_then_odds(spark, tmp_path, case)
+    getattr(jobs, stream)(spark, src, store,
+                          str(tmp_path / "ckpt")).awaitTermination(120)
+
+    pairs = store.read(getattr(jobs, table))
+    streamed = set(map(tuple, pairs.collect()))
+    batch = set(map(tuple, getattr(dedup, batch_form)(
+        spark, "/root/testdata/sf0.001").select(*pairs.columns).collect()))
     assert streamed == batch
-    assert len(streamed) == 125           # the designed pairs, exactly
+    if n_designed is None:
+        assert len(streamed) > 0
+    else:
+        assert len(streamed) == n_designed    # the designed pairs, exactly
+    if case == "vfp":
+        # last-frame divergence pins most pairs AT the M=3 threshold; a
+        # rare pair's scattered frame can still land inside the hamming
+        # gate (the 97-offset flips ~half the comparison signs, not
+        # all), so 4 appears in the tail — never below 3.
+        counts = sorted(fm for _, _, fm in streamed)
+        assert counts[0] >= 3 and counts.count(3) > 100
 
 
-def test_stream_phash_dedupe_replay_exactly_once(spark, store, tmp_path):
+@pytest.mark.parametrize("case", ["phash", "afp", "vfp", "simhash64"])
+def test_banded_stream_replay_exactly_once(spark, store, tmp_path, case):
     """Full replay under a fresh checkpoint re-finds every pair; the
     anti-join against the recorded set must drop them all — pair table
     byte-identical, no duplicates."""
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        PHASH_PAIRS_TABLE,
-        stream_image_phash_dedupe,
-    )
+    from qucosa_fcrepo_reportingdb_spark.streaming import jobs
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    src = str(tmp_path / "docs")
-    for m in range(2):
-        docs.filter(F.col("doc_id") % 2 == m) \
-            .coalesce(1).write.parquet(src, mode="append")
+    stream, table, _, _ = _BANDED_STREAMS[case]
+    src = _evens_then_odds(spark, tmp_path, case)
+    run = getattr(jobs, stream)
+    run(spark, src, store, str(tmp_path / "ckpt1")).awaitTermination(120)
+    before = sorted(map(tuple, store.read(getattr(jobs, table)).collect()))
 
-    q = stream_image_phash_dedupe(spark, src, store,
-                                  str(tmp_path / "ckpt1"))
-    q.awaitTermination(120)
-    before = sorted(map(tuple, store.read(PHASH_PAIRS_TABLE).collect()))
-
-    q2 = stream_image_phash_dedupe(spark, src, store,
-                                   str(tmp_path / "ckpt2"))
-    q2.awaitTermination(120)
-    after = sorted(map(tuple, store.read(PHASH_PAIRS_TABLE).collect()))
-    assert after == before
+    run(spark, src, store, str(tmp_path / "ckpt2")).awaitTermination(120)
+    after = sorted(map(tuple, store.read(getattr(jobs, table)).collect()))
+    assert before and after == before
     assert len(after) == len({(a, b) for a, b, _ in after})
-
-
-def test_stream_afp_dedupe_matches_batch(spark, store, tmp_path):
-    """Streamed audio-fingerprint pairs over two microbatches must equal
-    the batch dedup_audio_fingerprint pair set — the designed (4k, 4k+1)
-    pairs split across the even/odd batch boundary, so every one must be
-    caught by the cross (stored x new) join, not the intra-batch one."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        dedup_audio_fingerprint,
-    )
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        AFP_PAIRS_TABLE,
-        stream_audio_fingerprint_dedupe,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    src = str(tmp_path / "docs")
-    for m in range(2):                    # evens arrive, then odds
-        docs.filter(F.col("doc_id") % 2 == m) \
-            .coalesce(1).write.parquet(src, mode="append")
-
-    q = stream_audio_fingerprint_dedupe(spark, src, store,
-                                        str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    streamed = {(r.d1, r.d2, r.hamming) for r in
-                store.read(AFP_PAIRS_TABLE).collect()}
-    batch = {(r.d1, r.d2, r.hamming) for r in
-             dedup_audio_fingerprint(
-                 spark, "/root/testdata/sf0.001").collect()}
-    assert streamed == batch
-    assert len(streamed) == 125           # the designed pairs, exactly
-
-
-def test_stream_afp_dedupe_replay_exactly_once(spark, store, tmp_path):
-    """Full replay under a fresh checkpoint re-finds every audio pair;
-    the anti-join against the recorded set must drop them all — pair
-    table byte-identical, no duplicates."""
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        AFP_PAIRS_TABLE,
-        stream_audio_fingerprint_dedupe,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    src = str(tmp_path / "docs")
-    for m in range(2):
-        docs.filter(F.col("doc_id") % 2 == m) \
-            .coalesce(1).write.parquet(src, mode="append")
-
-    q = stream_audio_fingerprint_dedupe(spark, src, store,
-                                        str(tmp_path / "ckpt1"))
-    q.awaitTermination(120)
-    before = sorted(map(tuple, store.read(AFP_PAIRS_TABLE).collect()))
-
-    q2 = stream_audio_fingerprint_dedupe(spark, src, store,
-                                         str(tmp_path / "ckpt2"))
-    q2.awaitTermination(120)
-    after = sorted(map(tuple, store.read(AFP_PAIRS_TABLE).collect()))
-    assert after == before
-    assert len(after) == len({(a, b) for a, b, _ in after})
-
-
 def test_stream_multi_suite_decontaminate_matches_batch(spark, store,
                                                         tmp_path):
     """Streamed multi-suite verdicts must equal the batch
@@ -1109,8 +1064,8 @@ def test_stream_multi_suite_decontaminate_matches_batch(spark, store,
     assert any(v[3] for v in streamed.values())   # contamination exists
     # suite docs delivered first -> every verdict saw the full suite
     # state: one epoch, equal to the current (suite, shingle) count
-    # (r15 stamp — the lexical multi-suite stream joins the epoch
-    # convention its semantic twin adopted in r14)
+    # (the epoch stamp — the lexical multi-suite stream follows the
+    # epoch convention of its semantic twin)
     from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
         SUITE_SHINGLES_TABLE,
     )
@@ -1122,7 +1077,7 @@ def test_stream_multi_suite_decontaminate_matches_batch(spark, store,
     # restart (same checkpoint, no new files) + full reprocess (fresh
     # checkpoint, same store) leave the verdict table bit-identical —
     # the screen-family posture, completing the lexical multi-suite
-    # stream's pins (VERDICT r14 item 4's closure sweep)
+    # stream's pins (every screen twin pins restart and replay)
     before = sorted(map(tuple,
                         store.read(MULTI_SUITE_VERDICTS_TABLE).collect()))
     stream_multi_suite_decontaminate(
@@ -1273,75 +1228,6 @@ def test_decode_health_monitor_replay_idempotent(spark, store, tmp_path):
     assert store.read(DECODE_HEALTH_STATE_TABLE).count() == n_state
 
 
-def test_stream_vfp_dedupe_matches_batch(spark, store, tmp_path):
-    """Streamed video-fingerprint pairs over two microbatches must equal
-    the batch dedup_video_fingerprint pair set — the designed (4k, 4k+1)
-    pairs split across the even/odd batch boundary, so every one must be
-    caught by the cross (stored x new) join; frames_matched must come out
-    3 (the synth corpus diverges on the last frame by design)."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        dedup_video_fingerprint,
-    )
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        VFP_PAIRS_TABLE,
-        stream_video_fingerprint_dedupe,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    src = str(tmp_path / "docs")
-    for m in range(2):                    # evens arrive, then odds
-        docs.filter(F.col("doc_id") % 2 == m) \
-            .coalesce(1).write.parquet(src, mode="append")
-
-    q = stream_video_fingerprint_dedupe(spark, src, store,
-                                        str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    streamed = {(r.d1, r.d2, r.frames_matched) for r in
-                store.read(VFP_PAIRS_TABLE).collect()}
-    batch = {(r.d1, r.d2, r.frames_matched) for r in
-             dedup_video_fingerprint(
-                 spark, "/root/testdata/sf0.001").collect()}
-    assert streamed == batch
-    assert len(streamed) == 125           # the designed pairs, exactly
-    # last-frame divergence pins most pairs AT the M=3 threshold; a rare
-    # pair's scattered frame can still land inside the hamming gate (the
-    # 97-offset flips ~half the comparison signs, not all), so 4 appears
-    # in the tail — never below 3.
-    counts = sorted(fm for _, _, fm in streamed)
-    assert counts[0] >= 3 and counts.count(3) > 100
-
-
-def test_stream_vfp_dedupe_replay_exactly_once(spark, store, tmp_path):
-    """Full replay under a fresh checkpoint re-finds every video pair;
-    the anti-join against the recorded set must drop them all — pair
-    table byte-identical, no duplicates."""
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        VFP_PAIRS_TABLE,
-        stream_video_fingerprint_dedupe,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    src = str(tmp_path / "docs")
-    for m in range(2):
-        docs.filter(F.col("doc_id") % 2 == m) \
-            .coalesce(1).write.parquet(src, mode="append")
-
-    q = stream_video_fingerprint_dedupe(spark, src, store,
-                                        str(tmp_path / "ckpt1"))
-    q.awaitTermination(120)
-    before = sorted(map(tuple, store.read(VFP_PAIRS_TABLE).collect()))
-
-    q2 = stream_video_fingerprint_dedupe(spark, src, store,
-                                         str(tmp_path / "ckpt2"))
-    q2.awaitTermination(120)
-    after = sorted(map(tuple, store.read(VFP_PAIRS_TABLE).collect()))
-    assert after == before
-    assert len(after) == len({(a, b) for a, b, _ in after})
-
-
 def test_stream_band_skew_matches_batch_policy(spark, store, tmp_path):
     """The folded band-skew state must equal band_salting_policy's
     bucket shape for the three signature families — bucket counts are
@@ -1400,38 +1286,6 @@ def test_stream_band_skew_replay_is_idempotent(spark, store, tmp_path):
     q2.awaitTermination(120)
     after = sorted(map(tuple, band_skew_state_profile(store).collect()))
     assert after == before
-
-
-def test_stream_phash_bandpairs_matches_batch(spark, store, tmp_path):
-    """The 2-of-5 band-pair stream must emit the same pair set as the
-    batch dedup (and therefore as the single-band stream): the blocking
-    scheme is a config on the shared topology, and both schemes are
-    exact for hamming <= 3."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        dedup_image_phash,
-    )
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        PHASH_C2_PAIRS_TABLE,
-        stream_image_phash_bandpairs_dedupe,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    src = str(tmp_path / "docs")
-    for m in range(2):
-        docs.filter(F.col("doc_id") % 2 == m) \
-            .coalesce(1).write.parquet(src, mode="append")
-
-    q = stream_image_phash_bandpairs_dedupe(spark, src, store,
-                                            str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    streamed = {(r.d1, r.d2, r.hamming) for r in
-                store.read(PHASH_C2_PAIRS_TABLE).collect()}
-    batch = {(r.d1, r.d2, r.hamming) for r in
-             dedup_image_phash(spark, "/root/testdata/sf0.001").collect()}
-    assert streamed == batch
-    assert len(streamed) == 125
 
 
 def test_stream_follows_band_blocking_policy(spark, store, tmp_path):
@@ -1536,7 +1390,8 @@ def test_stream_strip_spans_matches_batch(spark, store, tmp_path):
     assert streamed == batch
     assert any(v[1] > 0 for v in streamed.values())   # matches exist
     # suite docs delivered first -> every ledger saw the full suite
-    # gram state: one epoch, equal to the current gram count (r15 stamp)
+    # gram state: one epoch, equal to the current gram count (the
+    # epoch stamp)
     from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
         STRIP_SUITE_GRAMS_TABLE,
     )
@@ -1568,7 +1423,7 @@ def test_stream_strip_spans_replay_idempotent(spark, store, tmp_path):
                         store.read(STRIP_LEDGERS_TABLE).collect()))
 
     # restart on the ORIGINAL checkpoint (no new files) first — the
-    # third family pin (r15 closure sweep) — then the fresh-checkpoint
+    # restart pin every screen twin carries — then the fresh-checkpoint
     # full reprocess
     q1b = stream_strip_spans_decontaminate(spark, src, store,
                                            str(tmp_path / "ckpt1"))
@@ -1580,41 +1435,9 @@ def test_stream_strip_spans_replay_idempotent(spark, store, tmp_path):
     assert after == before
 
 
-def test_stream_simhash64_dedupe_matches_batch(spark, store, tmp_path):
-    """Streamed widened-simhash pairs over two microbatches must equal
-    the batch dedup_simhash64 pair set — near-dup text pairs split
-    across the even/odd batch boundary so the cross (stored x new)
-    join has to catch them."""
-    from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
-        dedup_simhash64,
-    )
-    from qucosa_fcrepo_reportingdb_spark.streaming.jobs import (
-        SIMHASH64_PAIRS_TABLE,
-        stream_simhash64_dedupe,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text")
-    src = str(tmp_path / "docs")
-    for m in range(2):
-        docs.filter(F.col("doc_id") % 2 == m) \
-            .coalesce(1).write.parquet(src, mode="append")
-
-    q = stream_simhash64_dedupe(spark, src, store,
-                                str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    streamed = {(r.d1, r.d2, r.hamming) for r in
-                store.read(SIMHASH64_PAIRS_TABLE).collect()}
-    batch = {(r.d1, r.d2, r.hamming) for r in
-             dedup_simhash64(spark, "/root/testdata/sf0.001").collect()}
-    assert streamed == batch
-    assert len(streamed) > 0
-
-
 def test_migrate_band_state_flips_live_stream(spark, store, tmp_path):
-    """Band-state migration end-to-end (VERDICT r10 gap 2): a stream
+    """Band-state migration end-to-end (the deployed-stream hop of the
+    blocking-policy loop): a stream
     deployed under single bands accumulates 4-row/doc state; when
     band_blocking_policy flips the family, migrate_band_state re-derives
     the 10-row/doc pair-key state from the persisted SIGNATURE table (no
@@ -1694,8 +1517,8 @@ def test_migrate_band_state_video_multirow(spark, store, tmp_path):
     to 2-of-5 pair keys from its persisted per-frame signature table,
     and the continued stream under the 2-of-5 band_exprs finds the
     full batch pair set — the same flip the image test pins, on the
-    family whose crossover measurement motivated it (SCALING.md r11:
-    single bands lose 7.6x at 1M clips)."""
+    family whose crossover measurement motivated it (SCALING.md,
+    video's measured crossover: single bands lose 7.6x at 1M clips)."""
     from qucosa_fcrepo_reportingdb_spark.operators.dedup import (
         BANDED_FAMILIES,
         PAIRS56,
@@ -1748,7 +1571,7 @@ def test_migrate_band_state_video_multirow(spark, store, tmp_path):
 
 def test_migrate_band_state_rejects_string_keyed_scheme(
         spark, store, tmp_path):
-    """ADVICE r11: the band state is LONG-keyed; a string-keyed scheme
+    """The band state is LONG-keyed; a string-keyed scheme
     (the minhash '_'-joined band signatures) must fail loudly instead
     of silently casting every band_val to NULL and corrupting the
     migrated state."""
